@@ -21,9 +21,8 @@ Parity target: ``MatrixCosineAnalyse``
   ours is a real strategy: ``"max"`` (divide each cell by its vector's max,
   MCA:96-99) or ``"none"``.
 * The reference's persist at MCA:220 is unpersisted at MCA:223 before any
-  action runs (a no-op); we persist the two genuinely multi-consumer
-  datasets (normalized elements; aligned pairs) and release them via
-  ``CosineModel.unpersist()``.
+  action runs (a no-op); we persist the genuinely multi-consumer normalized
+  elements and release them via ``CosineModel.unpersist()``.
 
 Everything stays in DataFrame/Column expressions — whole-stage codegen end
 to end, no Python UDFs.
@@ -164,50 +163,6 @@ class CosineAnalyser:
         )
         return schemas.conform(pairs, schemas.FACTOR_NORMALIZED_VALUE)
 
-    def _vector_mods(self, normalized: DataFrame) -> DataFrame:
-        """Per-vector L2 norm over all own elements (dense semantics).
-
-        Parity: genVectorMod (MCA:110-119, A2).
-        """
-        out = normalized.groupBy("vector").agg(
-            F.sqrt(F.sum(F.pow(F.col("normalized_value"), F.lit(2.0)))).alias("mod"))
-        return schemas.conform(out, schemas.VECTOR_MOD)
-
-    def _factor_mod_sparse(self, factor_pairs: DataFrame) -> DataFrame:
-        """Pair-dependent norms over shared coordinates only (sparse mode).
-
-        Parity: genFactorMod (MCA:68-78, A3) — the same vector gets a
-        *different* mod in different pairings (doc MCA:60-63). Non-standard
-        cosine; pinned by differential tests vs. dense mode.
-        """
-        out = factor_pairs.groupBy("vector0", "vector1").agg(
-            F.sqrt(F.sum(F.pow(F.col("value0"), F.lit(2.0)))).alias("mod0"),
-            F.sqrt(F.sum(F.pow(F.col("value1"), F.lit(2.0)))).alias("mod1"),
-        )
-        return schemas.conform(out, schemas.FACTOR_MOD)
-
-    def _factor_mod_dense(self, normalized: DataFrame) -> DataFrame:
-        """All n(n-1)/2 vector pairs with whole-vector norms (dense mode).
-
-        Parity: genVectorMod + genFactorMod2 (MCA:110-119, 129-160) — the J4
-        rewrite: the reference collect_lists every "vector:mod" into ONE row
-        and expands all pairs in a single task (its worst scalability hazard);
-        we cross-join the (tiny: one row per vector) mods table against
-        itself with the canonical-order predicate, which Catalyst executes
-        as a parallel broadcast nested-loop join.
-
-        Scale note: dense mode is inherently O(n^2) in *output*; at large
-        vector counts callers should use sparse mode + zero-fill off, or the
-        LSH operators in casf_spark.operators.similarity.
-        """
-        mods = self._vector_mods(normalized)
-        a = mods.select(F.col("vector").alias("vector0"), F.col("mod").alias("mod0"))
-        b = mods.select(F.col("vector").alias("vector1"), F.col("mod").alias("mod1"))
-        out = (a.crossJoin(b)
-                .where(F.col("vector0") > F.col("vector1"))
-                .select("vector0", "vector1", "mod0", "mod1"))
-        return schemas.conform(out, schemas.FACTOR_MOD)
-
     # ------------------------------------------------------------------ #
     # entry point
     # ------------------------------------------------------------------ #
@@ -218,24 +173,21 @@ class CosineAnalyser:
         """Build a CosineModel. Lazy unless ``materialize`` — no Spark job
         runs here.
 
-        Parity: simpleFit (MCA:218-242). ``is_sparse`` selects the norm
-        semantics (MCA:218-231): sparse = norms over shared coordinates only;
-        dense = textbook cosine with missing elements as zero, all pairs
-        emitted (zero-similarity pairs included, MM:63-69).
+        Parity: simpleFit (MCA:218-242). Builds the normalized elements and
+        their aligned pairs; ``is_sparse`` (MCA:218-231) is passed to the
+        model, which owns the norm semantics (see :class:`CosineModel`).
+
         ``pre_aggregated``: input is already unique per (y, x) — skips the
         defensive duplicate-summing shuffle.
-        ``materialize`` localCheckpoints the normalized table (r13
-        optimization, guide §2.4): the pair self-join's build side is a
-        BroadcastExchange, which cannot reuse the probe side's shuffle
-        subtree, so without it the element pipeline (scan -> cell agg ->
-        max-normalize join) runs once PER CONSUMER — 2x in the sparse
-        fused plan (interleaved A/B at sf0.1: best 4.75 -> 3.28 s, every
-        sample lower). Opt-in because a checkpointed RDD loses size
-        statistics, which flips the DENSE plan's downstream broadcast
-        joins to sort-merge (measured 6x worse) — dense-mode callers and
-        the bucketed zero-exchange plan must keep the pure expression
-        tree. Mutually exclusive with ``persist`` (the checkpoint IS the
-        materialization).
+        ``persist`` caches the normalized table, which every plan reads
+        more than once.
+        ``materialize`` localCheckpoints it instead: the pair self-join's
+        broadcast build side cannot reuse the probe side's shuffle, so
+        otherwise the element pipeline runs once per consumer (sparse
+        fused plan at sf0.1: best 4.75 -> 3.28 s). Opt-in because a
+        checkpoint loses size statistics, which flips the dense plan's
+        broadcast joins to sort-merge (measured 6x worse). Mutually
+        exclusive with ``persist``.
         """
         elements = self._canonical_elements(matrix_element, pre_aggregated)
         normalized = self._normalized(elements)
@@ -250,19 +202,8 @@ class CosineAnalyser:
             # measured at sf0.1, caching it doubled wall time.
             normalized = normalized.persist(StorageLevel.MEMORY_AND_DISK)
 
-        factor_pairs = self._factor_pairs(normalized)
-
-        if is_sparse:
-            factor_mod = self._factor_mod_sparse(factor_pairs)
-        else:
-            factor_mod = self._factor_mod_dense(normalized)
-
-        return CosineModel(
-            normalized=normalized,
-            factor_pairs=factor_pairs,
-            factor_mod=factor_mod,
-            is_sparse=is_sparse,
-        )
+        return CosineModel(normalized, self._factor_pairs(normalized),
+                           is_sparse)
 
     # reference-API aliases, so a Casf caller can switch with minimal edits:
     # `simpleFit` (MCA:218) and the stale README name `simpleMatrixModel`

@@ -27,71 +27,94 @@ from pyspark.storagelevel import StorageLevel
 from casf_spark import schemas
 
 
+#: threshold_similarity: the prune bound is widened by this slack so pairs
+#: that only cross the threshold after output rounding are still found
+PRUNE_SLACK = 1e-6
+#: threshold_similarity: above this many prefix candidates the prune has
+#: degenerated and rescoring switches to the plain pair self-join
+MAX_DIRECT_CANDIDATES = 200_000
+
+
+def _vector_mods(normalized: DataFrame) -> DataFrame:
+    """Per-vector L2 norm over all own elements (dense semantics).
+
+    Parity: genVectorMod (MCA:110-119, A2).
+    """
+    out = normalized.groupBy("vector").agg(
+        F.sqrt(F.sum(F.pow(F.col("normalized_value"), F.lit(2.0)))).alias("mod"))
+    return schemas.conform(out, schemas.VECTOR_MOD)
+
+
+def _ratio(agg: DataFrame) -> DataFrame:
+    """numerator / (mod0 * mod1); 0.0 where any factor is missing."""
+    out = agg.select(
+        "vector0", "vector1",
+        F.coalesce(
+            F.col("numerator") / (F.col("mod0") * F.col("mod1")),
+            F.lit(0.0),
+        ).alias("similarity_value"),
+    )
+    return schemas.conform(out, schemas.SIMILARITY_VALUE)
+
+
 class CosineModel:
-    #: GEMM fast-path bounds (see :meth:`_gemm_fits`): the dense working
-    #: matrix must stay under ``MAX_GEMM_CELLS`` float64 cells (~400 MB)
-    #: and the pair output under ``MAX_GEMM_VECTORS``^2/2 rows in one task.
-    MAX_GEMM_CELLS = 50_000_000
-    MAX_GEMM_VECTORS = 4096
+    """Similarity queries over a fitted matrix.
+
+    ``is_sparse`` selects the norm semantics, decided here and only here:
+    sparse = pair-dependent norms over the shared coordinates (MCA:68-78),
+    one fused aggregation over the aligned pairs; dense = textbook cosine
+    over whole-vector norms, every pair emitted, zero-filled where no
+    coordinate is shared (MM:63-69).
+    """
 
     def __init__(self, normalized: DataFrame, factor_pairs: DataFrame,
-                 factor_mod: DataFrame, is_sparse: bool) -> None:
+                 is_sparse: bool) -> None:
         #: NORMALIZED_ELEMENT — cells rescaled by vector max
         self.normalized = normalized
         #: FACTOR_NORMALIZED_VALUE — aligned element pairs per shared coord
         self.factor_pairs = factor_pairs
-        #: FACTOR_MOD — per-pair denominator factors
-        self.factor_mod = factor_mod
         self.is_sparse = is_sparse
         # intermediates persisted by query methods, released by unpersist()
         self._extra_caches: list[DataFrame] = []
-        self._gemm_ok: bool | None = None  # memoized auto-strategy probe
-
-    def _cache(self, df: DataFrame, materialize: bool = True) -> DataFrame:
-        """Persist a query intermediate and track it for unpersist().
-
-        ``materialize`` runs a count so downstream branches read the cache
-        instead of racing to fill it (a small planning action, like AQE
-        stats collection).
-        """
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        self._extra_caches.append(df)
-        if materialize:
-            df.count()
-        return df
 
     # ------------------------------------------------------------------ #
 
-    def _numerators(self, factor_pairs: DataFrame) -> DataFrame:
-        """Dot product per pair. Parity: MM:58-62 (A4)."""
-        return factor_pairs.groupBy("vector0", "vector1").agg(
-            F.sum(F.col("value0") * F.col("value1")).alias("numerator"))
+    def _pair_mods(self, cand: DataFrame | None = None) -> DataFrame:
+        """Dense-mode denominators (mod0, mod1): whole-vector norms per
+        canonical pair — every pair, or only the ``cand`` pairs.
+
+        Parity: genVectorMod + genFactorMod2 (MCA:110-119, 129-160) — the J4
+        rewrite: the reference collect_lists every "vector:mod" into ONE row
+        and expands all pairs in a single task (its worst scalability
+        hazard); we cross-join the (tiny: one row per vector) mods table
+        against itself with the canonical-order predicate, which Catalyst
+        executes as a parallel broadcast nested-loop join. Dense mode is
+        inherently O(n^2) in *output*; at large vector counts use sparse
+        mode or the LSH operators in casf_spark.operators.similarity.
+        """
+        mods = _vector_mods(self.normalized)
+        a = mods.select(F.col("vector").alias("vector0"), F.col("mod").alias("mod0"))
+        b = mods.select(F.col("vector").alias("vector1"), F.col("mod").alias("mod1"))
+        if cand is not None:
+            # attach via the candidate list — never the all-pairs cross-join
+            return cand.join(a, "vector0").join(b, "vector1")
+        out = (a.crossJoin(b)
+               .where(F.col("vector0") > F.col("vector1"))
+               .select("vector0", "vector1", "mod0", "mod1"))
+        return schemas.conform(out, schemas.FACTOR_MOD)
 
     def _compute_similarity(self, factor_mod: DataFrame,
                             factor_pairs: DataFrame) -> DataFrame:
-        """numerator / (mod0 * mod1), keeping every factor_mod pair.
+        """Dense mode: dot product per pair over ``factor_pairs``, right-
+        joined to the ``factor_mod`` denominators.
 
-        Parity: computeSimilarity (MM:56-73) — right join so dense-mode
-        pairs with no shared coordinates survive with similarity 0.0
-        (coalesce, MM:68-69, J2 + P3).
+        Parity: computeSimilarity (MM:56-73, A4) — right join so pairs with
+        no shared coordinates survive with similarity 0.0 (coalesce,
+        MM:68-69, J2 + P3).
         """
-        num = self._numerators(factor_pairs)
-        out = (
-            num.join(factor_mod, ["vector0", "vector1"], "right")
-            .select(
-                "vector0",
-                "vector1",
-                F.coalesce(
-                    F.col("numerator") / (F.col("mod0") * F.col("mod1")),
-                    F.lit(0.0),
-                ).alias("similarity_value"),
-            )
-        )
-        return schemas.conform(out, schemas.SIMILARITY_VALUE)
-
-    # ------------------------------------------------------------------ #
-    # reference API
-    # ------------------------------------------------------------------ #
+        num = factor_pairs.groupBy("vector0", "vector1").agg(
+            F.sum(F.col("value0") * F.col("value1")).alias("numerator"))
+        return _ratio(num.join(factor_mod, ["vector0", "vector1"], "right"))
 
     def _fused_sparse_similarity(self, factor_pairs: DataFrame) -> DataFrame:
         """Sparse-mode similarity in ONE aggregation.
@@ -103,135 +126,31 @@ class CosineModel:
         instead of two aggregations + an equi-join. At 100 TB that removes
         the largest redundant exchange in the pipeline.
         """
-        out = (
-            factor_pairs.groupBy("vector0", "vector1")
-            .agg(
-                F.sum(F.col("value0") * F.col("value1")).alias("numerator"),
-                F.sqrt(F.sum(F.pow(F.col("value0"), F.lit(2.0)))).alias("mod0"),
-                F.sqrt(F.sum(F.pow(F.col("value1"), F.lit(2.0)))).alias("mod1"),
-            )
-            .select(
-                "vector0", "vector1",
-                F.coalesce(
-                    F.col("numerator") / (F.col("mod0") * F.col("mod1")),
-                    F.lit(0.0),
-                ).alias("similarity_value"),
-            )
-        )
-        return schemas.conform(out, schemas.SIMILARITY_VALUE)
+        return _ratio(factor_pairs.groupBy("vector0", "vector1").agg(
+            F.sum(F.col("value0") * F.col("value1")).alias("numerator"),
+            F.sqrt(F.sum(F.pow(F.col("value0"), F.lit(2.0)))).alias("mod0"),
+            F.sqrt(F.sum(F.pow(F.col("value1"), F.lit(2.0)))).alias("mod1"),
+        ))
 
-    def _gemm_fits(self) -> bool:
-        """Probe whether the matrix fits the single-task GEMM fast path
-        (one small aggregation job, memoized per model — a planning action,
-        like AQE stats collection)."""
-        if self._gemm_ok is None:
-            row = self.normalized.agg(
-                F.countDistinct("vector").alias("nv"),
-                F.countDistinct("coord").alias("nc")).first()
-            self._gemm_ok = bool(
-                row.nv <= self.MAX_GEMM_VECTORS
-                and row.nv * row.nc <= self.MAX_GEMM_CELLS)
-        return self._gemm_ok
-
-    def _gemm_all_pairs(self) -> DataFrame:
-        """All-pairs similarity as ONE blocked matrix product in a single
-        executor task (mapInPandas over a 1-partition COO stream).
-
-        The join-based plans recompute each dot product as a shuffled
-        aggregation over aligned element pairs — the right shape at corpus
-        scale, but for a matrix that fits one executor's memory a numpy
-        GEMM does the same arithmetic at BLAS throughput with zero
-        shuffles. Strategy is picked by measured size (:meth:`_gemm_fits`),
-        exactly like the union-find fast path in operators.dedup.
-
-        Semantics preserved bit-for-bit with the join plans:
-
-        * dense — every vector pair emitted, norms over each vector's own
-          elements, zero-fill for disjoint pairs (num is 0 there anyway);
-        * sparse — only pairs sharing >= 1 STORED coordinate (presence
-          matrix, not nonzero-value matrix, so explicit zeros still pair),
-          per-pair norms over the shared coordinates;
-        * canonical ordering vector0 > vector1 via lexicographic sort.
-        """
-        sparse = self.is_sparse
-
-        def gen(batches):
-            import numpy as np
-            import pandas as pd
-
-            parts = [p for p in batches]
-            if not parts:
-                return
-            pdf = pd.concat(parts, ignore_index=True)
-            if pdf.empty:
-                return
-            vec_ids = np.sort(pdf["vector"].unique())
-            vmap = {v: k for k, v in enumerate(vec_ids)}
-            vcodes = pdf["vector"].map(vmap).to_numpy()
-            coord_codes = pd.factorize(pdf["coord"])[0]
-            n, m = len(vec_ids), int(coord_codes.max()) + 1
-            A = np.zeros((n, m))
-            A[vcodes, coord_codes] = pdf["normalized_value"].to_numpy()
-            num = A @ A.T
-            iu, ju = np.triu_indices(n, k=1)  # ids sorted asc: ju > iu
-            if sparse:
-                P = np.zeros((n, m))
-                P[vcodes, coord_codes] = 1.0  # presence, not nonzero
-                S = (A * A) @ P.T  # S[a,b] = sum of a's sq values on shared
-                mask = (P @ P.T)[iu, ju] > 0
-                i, j = iu[mask], ju[mask]
-                denom = np.sqrt(S[j, i] * S[i, j])
-            else:
-                mods = np.sqrt((A * A).sum(axis=1))
-                i, j = iu, ju
-                denom = mods[i] * mods[j]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sim = np.where(denom > 0, num[i, j] / denom, 0.0)
-            yield pd.DataFrame({
-                "vector0": vec_ids[j],  # the lexicographically greater id
-                "vector1": vec_ids[i],
-                "similarity_value": sim,
-            })
-
-        out = (self.normalized.select("vector", "coord", "normalized_value")
-               .repartition(1)
-               .mapInPandas(
-                   gen,
-                   "vector0 string, vector1 string, similarity_value double"))
-        return schemas.conform(out, schemas.SIMILARITY_VALUE)
+    # ------------------------------------------------------------------ #
+    # reference API
+    # ------------------------------------------------------------------ #
 
     @property
     def all_similarity_value(self) -> DataFrame:
         """Reference-API alias: ``MatrixModel.allSimilarityValue`` (MM:26-28)."""
         return self.all_similarity()
 
-    def all_similarity(self, method: str = "joins") -> DataFrame:
+    def all_similarity(self) -> DataFrame:
         """Cosine similarity for every canonical pair.
 
-        Parity: MatrixModel.allSimilarityValue (MM:26-28).
-
-        ``method``: ``"joins"`` (default) — the distributed plans: sparse
-        mode uses the fused single-aggregation plan; dense mode keeps the
-        right join against the all-pairs mods so zero-similarity pairs
-        survive. ``"gemm"`` forces the single-task numpy kernel,
-        ``"auto"`` picks gemm when the measured size allows.
-
-        Joins stay the default deliberately: measured at sf0.1 (1000
-        vectors x 20k coords, 591k nonzeros) the JVM join plans beat the
-        GEMM task even on a cached input (dense 1.55s vs 2.0s, sparse
-        2.1s vs 2.7s) — the Arrow transfer of the COO rows plus the
-        single-task serialization outweighs BLAS's arithmetic edge at
-        this shape, and at corpus scale joins are the only option anyway.
-        The kernel remains for repeated-query sessions on small fitted
-        models where the transfer amortizes.
+        Parity: MatrixModel.allSimilarityValue (MM:26-28). Sparse mode is
+        the fused single-aggregation plan; dense mode right-joins the
+        all-pairs mods so zero-similarity pairs survive.
         """
-        if method == "auto":
-            method = "gemm" if self._gemm_fits() else "joins"
-        if method == "gemm":
-            return self._gemm_all_pairs()
         if self.is_sparse:
             return self._fused_sparse_similarity(self.factor_pairs)
-        return self._compute_similarity(self.factor_mod, self.factor_pairs)
+        return self._compute_similarity(self._pair_mods(), self.factor_pairs)
 
     def similarity(self, vector_list: Sequence[str]) -> DataFrame:
         """Similarity restricted to pairs whose BOTH endpoints are in
@@ -243,13 +162,11 @@ class CosineModel:
         after it.
         """
         ids = [str(v) for v in vector_list]
-        fp = self.factor_pairs.where(
-            F.col("vector0").isin(ids) & F.col("vector1").isin(ids))
+        both = F.col("vector0").isin(ids) & F.col("vector1").isin(ids)
+        fp = self.factor_pairs.where(both)
         if self.is_sparse:
             return self._fused_sparse_similarity(fp)
-        fm = self.factor_mod.where(
-            F.col("vector0").isin(ids) & F.col("vector1").isin(ids))
-        return self._compute_similarity(fm, fp)
+        return self._compute_similarity(self._pair_mods().where(both), fp)
 
     # ------------------------------------------------------------------ #
     # extensions (absent from the reference — SURVEY.md §7 phase D)
@@ -282,21 +199,10 @@ class CosineModel:
               .select("vector0", "vector1", "coord", "value0", "value1"))
         if self.is_sparse:
             return self._fused_sparse_similarity(fp)
-        # dense: derive per-vector mods and attach via the candidate list —
-        # never materializes the all-pairs factor_mod cross-join
-        vm = self.normalized.groupBy("vector").agg(
-            F.sqrt(F.sum(F.pow(F.col("normalized_value"), F.lit(2.0))))
-            .alias("mod"))
-        fm = (cand
-              .join(vm.select(F.col("vector").alias("vector0"),
-                              F.col("mod").alias("mod0")), "vector0")
-              .join(vm.select(F.col("vector").alias("vector1"),
-                              F.col("mod").alias("mod1")), "vector1"))
-        return self._compute_similarity(fm, fp)
+        return self._compute_similarity(self._pair_mods(cand), fp)
 
-    def threshold_similarity(self, t: float, round_to: int | None = None,
-                             prune_slack: float = 1e-6,
-                             max_direct_candidates: int = 200_000) -> DataFrame:
+    def threshold_similarity(self, t: float,
+                             round_to: int | None = None) -> DataFrame:
         """Exact all-pairs similarity >= ``t`` WITHOUT full pair enumeration
         — prefix filtering in the style of Bayardo et al., "Scaling Up All
         Pairs Similarity Search" (WWW'07). Dense (textbook-cosine) mode
@@ -311,14 +217,11 @@ class CosineModel:
         coordinate finds every qualifying pair. Candidates then get the
         exact fused rescoring via :meth:`similarity_for_pairs`.
 
-        ``prune_slack`` widens the prune bound so pairs that only cross the
-        threshold after output rounding are still found.
-
         Degenerate-prune guard: prefix filtering only pays off when ``t`` is
         high relative to the similarity mass (long near-uniform vectors at a
         low threshold yield prefixes ≈ whole vectors). The candidate count
         is checked (one small job — a planning action, like AQE stats) and
-        above ``max_direct_candidates`` the exact rescoring switches from
+        above ``MAX_DIRECT_CANDIDATES`` the exact rescoring switches from
         candidate-driven expansion to the plain pair self-join with a
         post-filter, whose cost is bounded by brute force.
         """
@@ -328,15 +231,12 @@ class CosineModel:
                              "norms admit no prefix bound")
         if t <= 0:
             raise ValueError("threshold t must be > 0")
-        tb = float(t) - prune_slack
+        tb = float(t) - PRUNE_SLACK
 
         nv = self.normalized
-        norms = nv.groupBy("vector").agg(
-            F.sqrt(F.sum(F.pow(F.col("normalized_value"), F.lit(2.0))))
-            .alias("n2"))
-        unit = (nv.join(norms, "vector")
+        unit = (nv.join(_vector_mods(nv), "vector")
                 .select("vector", "coord",
-                        (F.col("normalized_value") / F.col("n2")).alias("x")))
+                        (F.col("normalized_value") / F.col("mod")).alias("x")))
         maxw = unit.groupBy("coord").agg(F.max("x").alias("maxw"))
         scored = unit.join(maxw, "coord")
         w = (Window.partitionBy("vector")
@@ -355,7 +255,7 @@ class CosineModel:
                     F.least("pv", "qv").alias("vector1"))
                 .distinct())
         cand = cand.persist()
-        if cand.count() > max_direct_candidates:
+        if cand.count() > MAX_DIRECT_CANDIDATES:
             # prune degenerated — rescore via the full pair stream instead
             # of expanding each candidate by its endpoints' elements
             cand.unpersist()
@@ -367,42 +267,36 @@ class CosineModel:
                                    F.round("similarity_value", round_to))
         return sims.where(F.col("similarity_value") >= t)
 
-    def top_k(self, k: int, round_to: int | None = None,
-              cache_sims: bool = True, method: str = "window") -> DataFrame:
+    def top_k(self, k: int, round_to: int | None = None) -> DataFrame:
         """Top-k most-similar neighbors per vector.
 
         The canonical pair table stores each unordered pair once; symmetrize
         (union both directions — a narrow transformation, no shuffle), then
-        reduce per vector. Output: (vector, neighbor, similarity_value,
-        rank); rank order is (similarity desc, neighbor asc).
-
-        ``method="window"`` (default) is the classic ``row_number`` window
-        — partitioned by vector, it streams sorted runs without
-        materializing per-group arrays. ``method="groupby"`` aggregates
-        ``slice(array_sort(collect_list(struct)), 1, k)`` + posexplode
-        instead — no partition sort, but the collected per-group arrays
-        are allocation-heavy: measured on a warmed 106-plan JVM (the bench
-        shape) window wins 2.5 s vs 3.3-5.9 s at sf0.1 and is far more
-        stable, so it is the default; both return identical rows (pinned
-        by a differential test).
+        keep a ``row_number`` window per vector. Output: (vector, neighbor,
+        similarity_value, rank); rank order is (similarity desc, neighbor
+        asc). The window streams sorted runs without materializing
+        per-vector arrays.
 
         ``round_to`` rounds similarities before ranking — makes rank order
         reproducible across engines whose float-sum orders differ (used by
         the oracle-checked queries).
 
-        ``cache_sims`` persists the pair-similarity table before the
-        symmetrizing union. Without it the union's two branches each carry
-        the ENTIRE similarity pipeline as a separate subtree — double the
-        compute if exchange reuse misses, and double the generated-code
-        compilation on every executor even when it hits (measured ~2x cold
-        wall time at sf0.1). The cache is released by :meth:`unpersist`.
+        The pair-similarity table is persisted before the symmetrizing
+        union. Without it the union's two branches each carry the ENTIRE
+        similarity pipeline as a separate subtree — double the compute if
+        exchange reuse misses, and double the generated-code compilation
+        even when it hits (measured ~2x cold wall time at sf0.1). The cache
+        is released by :meth:`unpersist`.
         """
         sims = self.all_similarity()
         if round_to is not None:
             sims = sims.withColumn(
                 "similarity_value", F.round("similarity_value", round_to))
-        if cache_sims:
-            sims = self._cache(sims)
+        sims = sims.persist(StorageLevel.MEMORY_AND_DISK)
+        self._extra_caches.append(sims)
+        # fill the cache now (a small planning action, like AQE stats) so
+        # the union's two branches read it instead of racing to fill it
+        sims.count()
         sym = sims.select(
             F.col("vector0").alias("vector"),
             F.col("vector1").alias("neighbor"),
@@ -412,31 +306,10 @@ class CosineModel:
             F.col("vector0").alias("neighbor"),
             "similarity_value",
         ))
-        if method == "window":
-            w = Window.partitionBy("vector").orderBy(
-                F.desc("similarity_value"), F.asc("neighbor"))
-            return (sym.withColumn("rank", F.row_number().over(w))
-                       .where(F.col("rank") <= k))
-        # sort key: struct fields compare in order -> (sim desc via negation,
-        # neighbor asc); Spark normalizes -0.0 == 0.0 in orderings, so the
-        # negation cannot split a tie that the window would have merged
-        top = (
-            sym.groupBy("vector")
-            .agg(F.slice(
-                F.array_sort(F.collect_list(F.struct(
-                    (-F.col("similarity_value")).alias("_ns"),
-                    F.col("neighbor").alias("neighbor"),
-                    F.col("similarity_value").alias("similarity_value")))),
-                1, k).alias("_top"))
-        )
-        return (
-            top.select("vector",
-                       F.posexplode("_top").alias("_pos", "_t"))
-            .select("vector",
-                    F.col("_t.neighbor").alias("neighbor"),
-                    F.col("_t.similarity_value").alias("similarity_value"),
-                    (F.col("_pos") + 1).cast("int").alias("rank"))
-        )
+        w = Window.partitionBy("vector").orderBy(
+            F.desc("similarity_value"), F.asc("neighbor"))
+        return (sym.withColumn("rank", F.row_number().over(w))
+                   .where(F.col("rank") <= k))
 
     def predict_missing(self, k: int = 10,
                         round_to: int | None = None) -> DataFrame:

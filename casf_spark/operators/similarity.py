@@ -163,8 +163,8 @@ def gemm_near_dup_pairs(df: DataFrame, id_col: str = "vec_id",
     the pairs above threshold with canonical id0 > id1 ordering.
 
     Foot-gun guard: raises when the corpus exceeds MAX_GEMM_COLLECT_ROWS
-    (one cheap count, the same measure-then-decide probe as
-    CosineModel._gemm_fits) instead of silently flooding the driver —
+    (one cheap count, a measure-then-decide probe) instead of silently
+    flooding the driver —
     callers at scale should use :func:`blocked_gemm_pairs`, which is
     exact-identical with no driver collect.
     """
@@ -1152,35 +1152,36 @@ def facility_location_select(emb: DataFrame, k: int = 4,
     gains are order-independent BIGINT sums and the argmax (ties to the
     smaller candidate id) is engine-exact.
 
-    Scale shape (the iterative-Spark rules): the corpus x candidates
-    similarity table (N x C rows, C bounded) materializes ONCE; each of
-    the k rounds is one candidate-grain gain aggregation over it joined
-    to the running per-row coverage (localCheckpointed, the
-    pagerank/BPE discipline) plus a 1-row argmax broadcast — bounded
-    scalars only to the driver, never row data. Output: (sel_rank,
-    sel_id, gain, coverage) — gain is the round's marginal coverage,
-    coverage the cumulative objective, both micro-exact 6dp.
+    Scale shape: the candidate pool is bounded (<= ``n_candidates``
+    unit vectors), so it is collected as a side input and each
+    candidate's micro-unit similarity becomes one COLUMN of a single
+    corpus-grain table, materialized once. Each of the k rounds is one
+    map-only scalar aggregation whose coverage term is greatest() over
+    the already-selected columns — bounded scalars only to the driver,
+    never row data. A NULL candidate vector has similarity 0 to every
+    row; duplicate candidate ids raise ``ValueError``. Output:
+    (sel_rank, sel_id, gain, coverage) — gain is the round's marginal
+    coverage, coverage the cumulative objective, both micro-exact 6dp.
     """
-    # r14 rewrite (guide §2.4 "remove shuffles outright" + §5 driver
-    # rules): the candidate dimension is BOUNDED (<= n_candidates), so
-    # the per-round cid-grain gain aggregation needs no N x C row table,
-    # no id-keyed join against a running coverage table, and no per-round
-    # coverage checkpoint. Collect the pool (<= n_candidates unit vectors
-    # — a bounded side input, the BPE-argmax rule), lay the per-candidate
-    # similarities out as COLUMNS of one materialized corpus-grain table,
-    # and each greedy round becomes ONE map-only scalar aggregation whose
-    # coverage term is greatest() over the already-selected columns.
-    # Every su value is computed by the identical expression as the old
-    # cross-join (same l2_normalize/dot/round/floor operand order), the
-    # gains are the same BIGINT sums, and the argmax keeps the
-    # (gain desc, cid asc) tie-break — output-identical (pinned by
-    # test_similarity classic==lazy and the oracle twin).
+    # Every su value is the same expression as the lazy variant's
+    # cross-join (l2_normalize/dot/round/floor in the same operand
+    # order) and the argmax keeps the (gain desc, cid asc) tie-break, so
+    # the two are output-identical (pinned by test_similarity
+    # classic==lazy and the oracle twin).
     cand = _fl_candidates(emb, k, n_candidates, id_col, vec_col,
                           "facility_location_select")
-    pool = sorted((int(r.cid), list(r.cv)) for r in cand.collect())
+    pool = sorted(((int(r.cid), r.cv) for r in cand.collect()),
+                  key=lambda p: p[0])
+    for (a, _), (b, _) in zip(pool, pool[1:]):
+        if a == b:
+            raise ValueError(
+                f"facility_location_select: duplicate candidate id {a} in "
+                f"{id_col!r} — candidate ids must be unique")
 
-    def su_col(cv: list) -> Column:
-        lit_v = F.array(*[F.lit(float(x)) for x in cv])
+    def su_col(cv: list | None) -> Column:
+        if cv is None:
+            return F.lit(0).cast("long")
+        lit_v = F.array(*[F.lit(x).cast("double") for x in cv])
         return F.greatest(
             F.lit(0).cast("long"),
             F.floor(F.round(V.dot(F.col("v"), lit_v), 6) * F.lit(1e6)

@@ -12,20 +12,64 @@ nothing — on a real cluster callers should size it to ~2-3x total cores).
 from __future__ import annotations
 
 import os
+import warnings
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
+
+#: the default driver heap is half of physical memory, at most this much
+MAX_DEFAULT_HEAP_MB = 16 * 1024
+#: the JVM code cache reserved below (-XX:ReservedCodeCacheSize=1g), which
+#: lives outside the heap
+CODE_CACHE_MB = 1024
+_JVM_UNITS_MB = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
+
+
+def _jvm_size_mb(size: str) -> float:
+    """A JVM memory size ("8g", "6144m", plain bytes) in MiB."""
+    size = size.strip().lower()
+    if size[-1] in _JVM_UNITS_MB:
+        return float(size[:-1]) * _JVM_UNITS_MB[size[-1]]
+    return int(size) / 2**20
+
+
+def host_sizing(env: Mapping[str, str], cpus: int,
+                mem_total_mb: int) -> tuple[int, str]:
+    """(local cores, driver heap) for a host with ``cpus`` usable CPUs and
+    ``mem_total_mb`` of physical memory.
+
+    ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_DRIVER_MEM`` in ``env`` override
+    the defaults: every usable CPU, and half of physical memory capped at
+    ``MAX_DEFAULT_HEAP_MB``, which leaves room for the code cache, Python
+    and the OS on a host without swap. Warns when the heap plus the code
+    cache exceeds physical memory, since the kernel then kills the JVM
+    once the heap fills.
+    """
+    n = int(env.get("SPARK_GRAFT_CPUS", cpus))
+    heap = env.get("SPARK_GRAFT_DRIVER_MEM",
+                   f"{min(mem_total_mb // 2, MAX_DEFAULT_HEAP_MB)}m")
+    if _jvm_size_mb(heap) + CODE_CACHE_MB > mem_total_mb:
+        warnings.warn(
+            f"get_spark: driver heap {heap} plus the {CODE_CACHE_MB} MB code "
+            f"cache exceeds this host's {mem_total_mb} MB of physical "
+            "memory; lower SPARK_GRAFT_DRIVER_MEM.",
+            RuntimeWarning, stacklevel=3)
+    return n, heap
 
 
 def get_spark(app_name: str = "casf_spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    Defaults target the test environment (single-JVM local mode). On a real
-    cluster, pass ``master=None`` with a pre-configured environment, or set
-    config externally via spark-submit — every knob here is a default, not
-    an override.
+    Defaults target the test environment (single-JVM local mode), sized
+    from this host by :func:`host_sizing`. On a real cluster, pass
+    ``master=None`` with a pre-configured environment, or set config
+    externally via spark-submit — every knob here is a default, not an
+    override.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus, heap = host_sizing(
+        os.environ, len(os.sched_getaffinity(0)),
+        os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20)
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -48,7 +92,7 @@ def get_spark(app_name: str = "casf_spark", master: str | None = None,
                 "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", heap)
         # A 100+-plan session (the driver-contract / bench shape) churns
         # through far more generated classes than the JVM's 240 MB default
         # code cache and Spark's 100-entry codegen class cache expect; when
@@ -106,8 +150,6 @@ def get_spark(app_name: str = "casf_spark", master: str | None = None,
     except Exception:  # noqa: BLE001 — conf absent on exotic builds
         applied_cache = "20000"
     if "ReservedCodeCacheSize" not in applied or applied_cache != "20000":
-        import warnings
-
         warnings.warn(
             "get_spark: this SparkSession's JVM was not launched with the "
             "requested code-cache/JIT driver options (an existing session "

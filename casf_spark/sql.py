@@ -2,8 +2,8 @@
 
 The reference exposes only the Dataset DSL (no ``spark.sql`` anywhere —
 SURVEY.md §2.9); a Spark-first engine should speak both. This module
-registers the corpus tables as temp views and builds the cosine pipeline
-as a single ANSI-ish SQL statement, so SQL-only consumers (BI tools,
+registers the corpus tables as temp views and spells the cosine pipeline
+in ANSI-ish SQL text, so SQL-only consumers (BI tools,
 notebooks, dbt-style models) can run the exact engine semantics through
 ``spark.sql(...)``. Catalyst compiles this SQL to the same physical plan
 family as the DataFrame pipeline — same self-join pair enumeration, same
@@ -26,33 +26,6 @@ def register_tables(spark: SparkSession, sf_dir: str,
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
-def sparse_cosine_sql(elem_cte: str, round_to: int = 6) -> str:
-    """Sparse-mode pairwise cosine as one SQL statement over an ``elem``
-    CTE with columns (vector, coord, val).
-
-    Semantics match CosineAnalyser(axis).fit(is_sparse=True) +
-    all_similarity(): max-normalization, canonical vector0 > vector1
-    ordering, pair-dependent norms over shared coordinates, the fused
-    single-aggregation form (casf_spark.matrix.model.
-    CosineModel._fused_sparse_similarity).
-    """
-    return f"""
-WITH {elem_cte},
-mx AS (SELECT vector, MAX(val) mv FROM elem GROUP BY vector),
-norm AS (SELECT e.vector, e.coord, e.val / m.mv AS nv
-         FROM elem e JOIN mx m USING (vector)),
-pairs AS (
-  SELECT a.vector v0, b.vector v1, a.coord, a.nv nv0, b.nv nv1
-  FROM norm a JOIN norm b ON a.coord = b.coord AND a.vector > b.vector),
-agg AS (
-  SELECT v0, v1, SQRT(SUM(nv0*nv0)) m0, SQRT(SUM(nv1*nv1)) m1,
-         SUM(nv0*nv1) num
-  FROM pairs GROUP BY v0, v1)
-SELECT v0 AS vector0, v1 AS vector1,
-       ROUND(num / (m0 * m1), {round_to}) AS similarity_value
-FROM agg"""
-
-
 #: supplier x part quantity matrix from lineitem, Spark SQL dialect. The
 #: REPARTITION hint is the SQL spelling of matrix_from_lineitem's
 #: pre-partition-by-vector: HashPartitioning(vector) satisfies this GROUP
@@ -69,10 +42,10 @@ elem AS (
 """
 
 
-#: normalized-element half of :func:`sparse_cosine_sql` — the part below
-#: runs once per CONSUMER when left as an inline CTE (Spark inlines WITH
-#: bodies; the pair self-join's broadcast build side cannot reuse the
-#: probe side's shuffle), so :func:`supplier_cosine` materializes it.
+#: normalized-element half of the pipeline — it would run once per CONSUMER
+#: as an inline CTE (Spark inlines WITH bodies; the pair self-join's
+#: broadcast build side cannot reuse the probe side's shuffle), so
+#: :func:`supplier_cosine` materializes it.
 NORM_SQL = """
 WITH {elem},
 mx AS (SELECT vector, MAX(val) mv FROM elem GROUP BY vector)
@@ -96,14 +69,14 @@ FROM agg"""
 def supplier_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship sparse cosine query via the SQL interface.
 
-    Both halves are SQL text compiled by Catalyst; between them the
-    normalized-element table is materialized once (r13 optimization,
-    guide §2.4) — Spark inlines CTE bodies, so the single-statement
-    spelling (:func:`sparse_cosine_sql`, still exported for one-shot
-    use) recomputes the lineitem cell pipeline once per ``norm``
-    consumer: 4 lineitem scans in the captured plan, 2x the front-half
-    work. Result rows are identical — the split is between, not inside,
-    the aggregations.
+    Semantics match CosineAnalyser(axis="y").fit(is_sparse=True) +
+    all_similarity(): max-normalization, canonical vector0 > vector1
+    ordering, pair-dependent norms over shared coordinates, the fused
+    single aggregation. Both halves are SQL text compiled by Catalyst;
+    between them the normalized-element table is materialized once —
+    Spark inlines CTE bodies, so a single statement would recompute the
+    lineitem cell pipeline once per ``norm`` consumer (2x the front-half
+    work).
     """
     register_tables(spark, sf_dir, ["lineitem"])
     norm = spark.sql(NORM_SQL.format(elem=SUPPLIER_ELEM_SQL)) \

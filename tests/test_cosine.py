@@ -184,34 +184,22 @@ def test_top_k_and_predict(spark):
     assert 0.0 < preds[("y1", "x4")] <= 1.0
 
 
-def test_top_k_methods_agree(spark, sf_dir):
-    """The grouped partial top-k (default) and the window row_number path
-    must produce identical rows — ties included — on real data."""
-    from casf_spark.sources.tables import matrix_from_lineitem
-
-    m = matrix_from_lineitem(spark, sf_dir)
-    model = CosineAnalyser(axis="y").fit(m, is_sparse=False,
-                                         pre_aggregated=True)
-    a = sorted(map(tuple, model.top_k(5, round_to=6,
-                                      method="groupby").collect()))
-    b = sorted(map(tuple, model.top_k(5, round_to=6,
-                                      method="window").collect()))
-    assert a == b and len(a) > 0
-
-
 def test_similarity_for_pairs_semi_join(spark):
     """Restricting to a candidate pair set returns exactly the full-run
-    values for those pairs and nothing else."""
-    df = _matrix_df(spark)
-    model = CosineAnalyser().fit(df, is_sparse=True)
-    full = _collect_sims(model)
+    values for those pairs and nothing else, in both norm modes. The
+    missing cell makes the dense whole-vector norms differ from the
+    sparse shared-coordinate ones."""
+    df = _matrix_df(spark, drop={("y1", "x4")})
     cand = spark.createDataFrame([("y2", "y1"), ("y3", "y1")],
                                  "vector0 string, vector1 string")
-    got = {(r.vector0, r.vector1): r.similarity_value
-           for r in model.similarity_for_pairs(cand).collect()}
-    assert set(got) == {("y2", "y1"), ("y3", "y1")}
-    for k, v in got.items():
-        assert v == pytest.approx(full[k], abs=1e-12)
+    for is_sparse in (True, False):
+        model = CosineAnalyser().fit(df, is_sparse=is_sparse)
+        full = _collect_sims(model)
+        got = {(r.vector0, r.vector1): r.similarity_value
+               for r in model.similarity_for_pairs(cand).collect()}
+        assert set(got) == {("y2", "y1"), ("y3", "y1")}, is_sparse
+        for k, v in got.items():
+            assert v == pytest.approx(full[k], abs=1e-12), (is_sparse, k)
 
 
 def test_threshold_similarity_equals_filtered_dense(spark):
@@ -243,34 +231,3 @@ def test_duplicate_cells_are_summed(spark):
     elems = {(r.vector, r.coord): r.normalized_value
              for r in model.normalized.collect()}
     assert elems[("a", "x1")] == 1.0  # (1+2)/max(3)=1
-
-
-def test_gemm_matches_joins_both_modes(spark):
-    """The single-task GEMM kernel must reproduce the join plans exactly
-    (same pairs, same canonical ordering, values to float tolerance) in
-    both norm modes — including a missing cell, which exercises the
-    sparse presence mask and the dense zero-treatment."""
-    m = _matrix_df(spark, drop=(("y2", "x1"), ("y3", "x4")))
-    for sparse in (True, False):
-        model = CosineAnalyser(axis="y").fit(m, is_sparse=sparse)
-        joins = {(r.vector0, r.vector1): r.similarity_value
-                 for r in model.all_similarity(method="joins").collect()}
-        gemm = {(r.vector0, r.vector1): r.similarity_value
-                for r in model.all_similarity(method="gemm").collect()}
-        assert set(joins) == set(gemm)
-        for k in joins:
-            assert gemm[k] == pytest.approx(joins[k], abs=1e-12), (sparse, k)
-
-
-def test_gemm_disjoint_pair_semantics(spark):
-    """Vectors sharing no coordinate: dense emits the pair with 0.0 (GEMM
-    numerator is naturally 0), sparse omits it entirely."""
-    m = spark.createDataFrame(
-        [("a", "x0", 1.0), ("a", "x1", 2.0), ("b", "x2", 3.0)],
-        "y string, x string, value double")
-    dense = CosineAnalyser(axis="y").fit(m, is_sparse=False)
-    got = {(r.vector0, r.vector1): r.similarity_value
-           for r in dense.all_similarity(method="gemm").collect()}
-    assert got == {("b", "a"): 0.0}
-    sparse = CosineAnalyser(axis="y").fit(m, is_sparse=True)
-    assert sparse.all_similarity(method="gemm").count() == 0

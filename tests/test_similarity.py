@@ -310,6 +310,36 @@ def test_facility_location_validates(spark):
         facility_location_select_lazy(three, k=4, n_candidates=8)
 
 
+def test_facility_location_null_candidate_vector_contributes_zero(spark):
+    """A NULL embedding in the candidate pool has similarity 0 to every
+    row, as in the lazy variant's cross-join: it is picked last with
+    zero gain instead of crashing the pool fold."""
+    from casf_spark.operators.similarity import (
+        facility_location_select, facility_location_select_lazy)
+
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, None), (3, [1.0, 1.0])],
+        "vec_id long, embedding array<double>")
+    got = [tuple(r) for r in facility_location_select(
+        emb, k=4, n_candidates=4).collect()]
+    lazy = [tuple(r) for r in facility_location_select_lazy(
+        emb, k=4, n_candidates=4).collect()]
+    assert got == lazy
+    assert [r[1] for r in got] == [3, 0, 1, 2]
+    assert got[0][2] == 2.414214 and got[3][2] == 0.0
+
+
+def test_facility_location_duplicate_candidate_id_raises(spark):
+    import pytest
+    from casf_spark.operators.similarity import facility_location_select
+
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [1.0, 1.0])],
+        "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="duplicate candidate id 1"):
+        facility_location_select(emb, k=2, n_candidates=3)
+
+
 def test_facility_location_lazy_matches_classic(spark, sf_dir):
     """Minoux lazy greedy must reproduce classic greedy EXACTLY —
     selection sequence, per-round gains, cumulative coverage — on the
