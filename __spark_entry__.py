@@ -3128,16 +3128,18 @@ def q_quality_propagate(spark, sf):
              .select(F.col("doc_id").cast("long").alias("doc_id"),
                      F.when(F.col("passes_gopher"), F.lit(1_000_000))
                      .otherwise(F.lit(0)).cast("long").alias("label_u")))
-    return DD.label_propagation(pairs, seeds, n_iter=3).orderBy("doc_id")
+    return (DD.label_propagation(pairs, seeds, n_iter=3)
+            .select("doc_id", "degree", "is_seed", "score")
+            .orderBy("doc_id"))
 
 
 def q_quality_propagate_conv(spark, sf):
     """Convergence-stopped label propagation (operators.dedup
-    .label_propagation_converged — the round-10 verdict's graph-family
+    .label_propagation with tol_u — the round-10 verdict's graph-family
     follow-through): same planted seeds/graph as quality_propagate, but
     the loop stops at the first iteration whose largest per-node
     movement drops below tol_u = 5000 micro-units (0.005 score),
-    bounded by max_iter = 8. The stopping rule is INTEGER (BIGINT
+    bounded by n_iter = 8. The stopping rule is INTEGER (BIGINT
     score deltas, integer MAX — order-independent), so the twin can
     replay it exactly: 8 unrolled CTE iterations, per-step integer
     max-deltas, and the SAME first-below-bound pick — n_iters is an
@@ -3154,15 +3156,14 @@ def q_quality_propagate_conv(spark, sf):
              .select(F.col("doc_id").cast("long").alias("doc_id"),
                      F.when(F.col("passes_gopher"), F.lit(1_000_000))
                      .otherwise(F.lit(0)).cast("long").alias("label_u")))
-    return (DD.label_propagation_converged(pairs, seeds,
-                                           tol_u=5000, max_iter=8)
+    return (DD.label_propagation(pairs, seeds, n_iter=8, tol_u=5000)
             .orderBy("doc_id"))
 
 
 def q_quality_propagate_weighted(spark, sf):
     """Edge-WEIGHTED label propagation (operators.dedup
-    .label_propagation_weighted over minhash_pair_weights — the NEXT.md
-    weighted-graph backlog item): each candidate edge carries the
+    .label_propagation with weight_col over minhash_pair_weights — the
+    NEXT.md weighted-graph backlog item): each candidate edge carries the
     INTEGER count of agreeing MinHash signature components (the raw
     Jaccard-estimate numerator — no float anywhere), so close
     near-duplicates pull harder than marginal band collisions. Same
@@ -3178,7 +3179,8 @@ def q_quality_propagate_weighted(spark, sf):
              .select(F.col("doc_id").cast("long").alias("doc_id"),
                      F.when(F.col("passes_gopher"), F.lit(1_000_000))
                      .otherwise(F.lit(0)).cast("long").alias("label_u")))
-    return (DD.label_propagation_weighted(pairs, seeds, n_iter=3)
+    return (DD.label_propagation(pairs, seeds, n_iter=3, weight_col="w")
+            .select("doc_id", "degree", "is_seed", "score")
             .orderBy("doc_id"))
 
 

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from casf_spark import schemas
 from casf_spark.functions import text as TX
@@ -1619,43 +1620,86 @@ def pagerank_iterations(pairs: DataFrame, n_iter: int = 3,
 
 def label_propagation(pairs: DataFrame, seeds: DataFrame,
                       n_iter: int = 3,
-                      id0: str = "doc0", id1: str = "doc1") -> DataFrame:
-    """Fixed-iteration label propagation over an undirected pair graph —
-    spread sparse seed quality labels across the near-dup candidate
-    graph (the graph-assisted curation capstone: a handful of judged
-    documents label their whole mirror/template neighborhoods, so
-    quality decisions reach documents no classifier ever scored).
+                      id0: str = "doc0", id1: str = "doc1",
+                      weight_col: str | None = None,
+                      tol_u: int | None = None) -> DataFrame:
+    """Label propagation over an undirected pair graph — spread sparse
+    seed quality labels across the near-dup candidate graph (the
+    graph-assisted curation capstone: a handful of judged documents
+    label their whole mirror/template neighborhoods, so quality
+    decisions reach documents no classifier ever scored).
 
     ``seeds`` carries (doc_id, label_u) with label_u an INTEGER
     micro-unit score (quality * 1e6 as BIGINT). Seeds are CLAMPED —
     their score never moves; every other node starts at the neutral
-    prior 0.5 (500_000 u) and each iteration becomes the mean of its
-    neighbors' previous scores: floor(SUM(neighbor_u) / degree + 0.5).
-    The recurrence runs entirely in integer micro-units for the same
-    reason pagerank_iterations does (round-7 lesson): integer SUMs are
-    order-independent, so the engines' different aggregation orders can
-    never drift; the one float op per term (BIGINT/BIGINT division) is
-    IEEE-identical across engines on identical operands.
+    prior 0.5 (500_000 u) and each iteration becomes the weighted mean
+    of its neighbors' previous scores:
+    floor(SUM(w * neighbor_u) / SUM(w) + 0.5). Without ``weight_col``
+    every edge weighs 1, so SUM(w) is the degree (>= 1) and the mean is
+    the plain neighborhood mean. ``weight_col`` must be an integer
+    column of non-negative weights (:func:`minhash_pair_weights` counts
+    agreeing signature components): a non-integral dtype raises
+    ``ValueError`` up front, a negative weight fails the edge
+    materialization, and a node whose incident weights are all zero
+    keeps the neutral prior. The recurrence runs entirely in integer
+    micro-units for the same reason pagerank_iterations does (round-7
+    lesson): integer SUMs are order-independent, so the engines'
+    different aggregation orders can never drift; the one float op per
+    term (BIGINT/BIGINT division) is IEEE-identical across engines on
+    identical operands.
+
+    ``n_iter`` iterations run. With ``tol_u`` set, ``n_iter`` only
+    bounds the loop: it stops after the first iteration whose largest
+    per-node movement is below ``tol_u`` micro-units. ``tol_u`` is an
+    INTEGER so the stopping rule itself is cross-engine exact — BIGINT
+    deltas and an integer MAX are order-independent, so two engines
+    never disagree on WHICH iteration converged (the twin unrolls
+    ``n_iter`` chained CTEs and picks the first one below the bound).
 
     Same Spark-first iterative shape as PageRank: per iteration one
-    edge⋈score join + one destination-keyed integer aggregation —
-    n_iter shuffles on one key, localCheckpoint truncation between
-    iterations, the Python loop only over the bounded iteration count.
-    Node set = nodes appearing in ``pairs`` (degree >= 1 by
-    construction); seeds outside the graph contribute nothing.
+    edge⋈score join + one destination-keyed integer aggregation,
+    localCheckpoint truncation between iterations, the Python loop only
+    over the bounded iteration count. With ``tol_u`` the previous score
+    rides the update join, so the per-node delta is computed inside the
+    same checkpointed pass and the check is one 1-row integer MAX job
+    per iteration (a bounded scalar, never row data). Node set = nodes
+    appearing in ``pairs`` (degree >= 1 by construction); seeds outside
+    the graph contribute nothing.
 
-    Output: (doc_id, degree, is_seed, score) — score after ``n_iter``
-    iterations, micro-units / 1e6 (exact 6dp).
+    Output: (doc_id, degree, is_seed, score, n_iters) — ``degree`` the
+    plain edge count, score micro-units / 1e6 (exact 6dp), ``n_iters``
+    the iterations actually run (a constant column, so an early stop is
+    part of the checked contract).
     """
+    if n_iter < 1 or (tol_u is not None and tol_u < 0):
+        raise ValueError(
+            f"label_propagation: need n_iter >= 1 and tol_u >= 0, "
+            f"got n_iter={n_iter}, tol_u={tol_u}")
+    if weight_col is None:
+        w = F.lit(1).cast("long")
+    else:
+        dtype = pairs.schema[weight_col].dataType
+        if not isinstance(dtype, T.IntegralType):
+            raise ValueError(
+                f"label_propagation: weight column {weight_col!r} is "
+                f"{dtype.simpleString()}, not an integer type — the "
+                f"recurrence is integer, so cast or scale it first")
+        wc = F.col(weight_col).cast("long")
+        w = F.when(wc < 0, F.raise_error(F.concat(
+            F.lit(f"label_propagation: negative weight in "
+                  f"{weight_col!r}: "), wc.cast("string")))).otherwise(wc)
     scale_u = 1_000_000
     neutral_u = scale_u // 2
     edges = (pairs.select(F.col(id0).cast("long").alias("src"),
-                          F.col(id1).cast("long").alias("dst"))
+                          F.col(id1).cast("long").alias("dst"),
+                          w.alias("w"))
              .unionByName(
                  pairs.select(F.col(id1).cast("long").alias("src"),
-                              F.col(id0).cast("long").alias("dst"))))
+                              F.col(id0).cast("long").alias("dst"),
+                              w.alias("w"))))
     edges = edges.localCheckpoint()  # computed once, iterated over
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("degree"),
+                                   F.sum("w").cast("long").alias("wdeg"))
     # one label per seed by contract — a duplicate doc_id would multiply
     # that node's row in `nodes`, double-counting its score into every
     # neighbor's SUM (degree unchanged, so means go wrong) and
@@ -1665,114 +1709,40 @@ def label_propagation(pairs: DataFrame, seeds: DataFrame,
     sd = (seeds.select(F.col("doc_id").cast("long").alias("doc_id"),
                        F.col("label_u").cast("long").alias("label_u"))
           .groupBy("doc_id").agg(F.min("label_u").alias("label_u")))
-    nodes = (deg.select(F.col("src").alias("doc_id"), "degree")
+    nodes = (deg.select(F.col("src").alias("doc_id"), "degree", "wdeg")
              .join(sd, "doc_id", "left"))
     nodes = nodes.localCheckpoint()  # seeds + degrees reused every pass
     scores = nodes.select(
         "doc_id",
         F.coalesce("label_u", F.lit(neutral_u)).cast("long")
         .alias("score_u"))
-    for i in range(n_iter):
+    new_u = (F.when(F.col("label_u").isNotNull(), F.col("label_u"))
+             .when(F.col("wdeg") > 0,
+                   F.floor(F.coalesce("sum_u", F.lit(0))
+                           / F.col("wdeg") + 0.5).cast("long"))
+             .otherwise(F.lit(neutral_u)))
+    n_iters = n_iter
+    for i in range(1, n_iter + 1):
         inflow = (edges.join(scores, edges.src == scores.doc_id)
                   .groupBy("dst")
-                  .agg(F.sum("score_u").cast("long").alias("sum_u")))
-        scores = (nodes.join(inflow, nodes.doc_id == inflow.dst, "left")
-                  .select(
-                      "doc_id",
-                      F.when(F.col("label_u").isNotNull(), F.col("label_u"))
-                      .otherwise(
-                          F.floor(F.coalesce("sum_u", F.lit(0))
-                                  / F.col("degree") + 0.5).cast("long"))
-                      .alias("score_u")))
-        if i < n_iter - 1:
-            scores = scores.localCheckpoint()
-    return (nodes.join(scores, "doc_id")
-            .select("doc_id",
-                    F.col("degree").cast("long").alias("degree"),
-                    F.col("label_u").isNotNull().alias("is_seed"),
-                    F.round(F.col("score_u") / F.lit(float(scale_u)), 6)
-                    .alias("score")))
-
-
-def label_propagation_converged(pairs: DataFrame, seeds: DataFrame,
-                                tol_u: int = 5000, max_iter: int = 8,
-                                id0: str = "doc0",
-                                id1: str = "doc1") -> DataFrame:
-    """Convergence-stopped :func:`label_propagation` (the round-10
-    verdict's graph-family follow-through): the same clamped-seed /
-    neighborhood-mean recurrence in INTEGER micro-units, but the loop
-    stops after the first iteration whose largest per-node movement is
-    below ``tol_u`` micro-units — ``max_iter`` bounds the loop either
-    way. ``tol_u`` is an INTEGER (micro-units, 5000 = 0.005 score)
-    precisely so the stopping rule itself is cross-engine exact: the
-    per-iteration deltas are BIGINT differences of BIGINT scores, and
-    ``MAX(ABS(delta))`` over integers is order-independent, so two
-    engines can never disagree on WHICH iteration converged — the twin
-    unrolls ``max_iter`` chained CTEs and picks the first one whose
-    max-delta beats the same integer bound.
-
-    The convergence check is the one driver-side decision an early-stop
-    loop inherently needs: a 1-row MAX aggregate per iteration (bounded
-    scalar — never row data), on the already-checkpointed score table
-    the next iteration reuses, so the check adds no recomputation. At
-    100 TB the shape is unchanged from the fixed-iteration operator:
-    per iteration one edge⋈score join + one keyed integer aggregation +
-    one scalar job over node-grain rows.
-
-    Output: (doc_id, degree, is_seed, score, n_iters) — ``n_iters`` the
-    iteration count actually run (constant column, so the early stop is
-    part of the checked contract, not a silent internal detail).
-    """
-    if tol_u < 0 or max_iter < 1:
-        raise ValueError("tol_u must be >= 0 and max_iter >= 1")
-    scale_u = 1_000_000
-    neutral_u = scale_u // 2
-    edges = (pairs.select(F.col(id0).cast("long").alias("src"),
-                          F.col(id1).cast("long").alias("dst"))
-             .unionByName(
-                 pairs.select(F.col(id1).cast("long").alias("src"),
-                              F.col(id0).cast("long").alias("dst"))))
-    edges = edges.localCheckpoint()
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
-    sd = (seeds.select(F.col("doc_id").cast("long").alias("doc_id"),
-                       F.col("label_u").cast("long").alias("label_u"))
-          .groupBy("doc_id").agg(F.min("label_u").alias("label_u")))
-    nodes = (deg.select(F.col("src").alias("doc_id"), "degree")
-             .join(sd, "doc_id", "left"))
-    nodes = nodes.localCheckpoint()
-    scores = nodes.select(
-        "doc_id",
-        F.coalesce("label_u", F.lit(neutral_u)).cast("long")
-        .alias("score_u")).localCheckpoint()
-    n_iters = max_iter
-    for i in range(1, max_iter + 1):
-        inflow = (edges.join(scores, edges.src == scores.doc_id)
-                  .groupBy("dst")
-                  .agg(F.sum("score_u").cast("long").alias("sum_u")))
+                  .agg(F.sum(F.col("w") * F.col("score_u")).cast("long")
+                       .alias("sum_u")))
+        step = nodes.join(inflow, nodes.doc_id == inflow.dst, "left")
+        if tol_u is None:
+            scores = step.select("doc_id", new_u.alias("score_u"))
+            if i < n_iter:
+                scores = scores.localCheckpoint()
+            continue
         # carry the PREVIOUS score through the update join so the
-        # convergence check needs no second join: the per-node delta is
-        # computed inside the same checkpointed pass and d_max is a bare
-        # integer MAX over the already-materialized table (r13
-        # optimization — one keyed join job per iteration instead of
-        # two; the delta arithmetic is the identical BIGINT difference,
-        # so the stopping decision is bit-for-bit the old one).
-        new_u = (F.when(F.col("label_u").isNotNull(), F.col("label_u"))
-                 .otherwise(
-                     F.floor(F.coalesce("sum_u", F.lit(0))
-                             / F.col("degree") + 0.5)
-                     .cast("long")))
-        new_scores = (nodes.join(scores.select(
-                          F.col("doc_id"), F.col("score_u").alias("prev_u")),
-                          "doc_id")
-                      .join(inflow, nodes.doc_id == inflow.dst, "left")
-                      .select("doc_id",
-                              new_u.alias("score_u"),
-                              F.abs(new_u - F.col("prev_u"))
-                              .alias("delta_u")))
-        new_scores = new_scores.localCheckpoint()
-        d_max = (new_scores.agg(F.max("delta_u").alias("d"))
-                 .collect()[0].d)
-        scores = new_scores.select("doc_id", "score_u")
+        # convergence check needs no second keyed join: d_max is a bare
+        # integer MAX over the already-checkpointed table
+        prev = scores.select("doc_id", F.col("score_u").alias("prev_u"))
+        step = (step.join(prev, "doc_id")
+                .select("doc_id", new_u.alias("score_u"),
+                        F.abs(new_u - F.col("prev_u")).alias("delta_u"))
+                .localCheckpoint())
+        d_max = step.agg(F.max("delta_u").alias("d")).collect()[0].d
+        scores = step.select("doc_id", "score_u")
         if d_max is None or d_max < tol_u:
             n_iters = i
             break
@@ -1824,80 +1794,6 @@ def minhash_pair_weights(df: DataFrame, id_col: str, text_col: str,
             for i in range(num_hashes))
     return (pairs.join(s0, "doc0").join(s1, "doc1")
             .select("doc0", "doc1", w.alias("w")))
-
-
-def label_propagation_weighted(pairs: DataFrame, seeds: DataFrame,
-                               n_iter: int = 3, id0: str = "doc0",
-                               id1: str = "doc1",
-                               weight_col: str = "w") -> DataFrame:
-    """Edge-WEIGHTED :func:`label_propagation`: each iteration a
-    non-seed becomes the weighted mean of its neighbors' previous
-    scores, ``floor(SUM(w * neighbor_u) / SUM(w) + 0.5)`` — closer
-    near-duplicates (higher MinHash agreement) pull harder than
-    marginal band collisions. Weights must be non-negative INTEGERS
-    (:func:`minhash_pair_weights` counts agreeing signature
-    components), so every term of the recurrence stays integer:
-    products and sums are order-independent, and the one float op per
-    node (BIGINT/BIGINT division) is IEEE-identical across engines on
-    identical operands — the same cross-engine discipline as the
-    unweighted operator, extended to the weighted numerator.
-
-    A node whose incident weights are all zero keeps the neutral prior
-    (candidate edges can't be zero-weight by construction, but the
-    operator doesn't rely on it). Output matches
-    :func:`label_propagation`: (doc_id, degree, is_seed, score) with
-    ``degree`` the plain edge count.
-
-    Scale shape unchanged: per iteration one edge⋈score join + one
-    destination-keyed integer aggregation; weights ride the
-    checkpointed edge table computed once.
-    """
-    scale_u = 1_000_000
-    neutral_u = scale_u // 2
-    edges = (pairs.select(F.col(id0).cast("long").alias("src"),
-                          F.col(id1).cast("long").alias("dst"),
-                          F.col(weight_col).cast("long").alias("w"))
-             .unionByName(
-                 pairs.select(F.col(id1).cast("long").alias("src"),
-                              F.col(id0).cast("long").alias("dst"),
-                              F.col(weight_col).cast("long").alias("w"))))
-    edges = edges.localCheckpoint()
-    deg = edges.groupBy("src").agg(
-        F.count(F.lit(1)).alias("degree"),
-        F.sum("w").cast("long").alias("wdeg"))
-    sd = (seeds.select(F.col("doc_id").cast("long").alias("doc_id"),
-                       F.col("label_u").cast("long").alias("label_u"))
-          .groupBy("doc_id").agg(F.min("label_u").alias("label_u")))
-    nodes = (deg.select(F.col("src").alias("doc_id"), "degree", "wdeg")
-             .join(sd, "doc_id", "left"))
-    nodes = nodes.localCheckpoint()
-    scores = nodes.select(
-        "doc_id",
-        F.coalesce("label_u", F.lit(neutral_u)).cast("long")
-        .alias("score_u"))
-    for i in range(n_iter):
-        inflow = (edges.join(scores, edges.src == scores.doc_id)
-                  .groupBy("dst")
-                  .agg(F.sum(F.col("w") * F.col("score_u")).cast("long")
-                       .alias("sum_wu")))
-        scores = (nodes.join(inflow, nodes.doc_id == inflow.dst, "left")
-                  .select(
-                      "doc_id",
-                      F.when(F.col("label_u").isNotNull(),
-                             F.col("label_u"))
-                      .when(F.col("wdeg") > 0,
-                            F.floor(F.coalesce("sum_wu", F.lit(0))
-                                    / F.col("wdeg") + 0.5).cast("long"))
-                      .otherwise(F.lit(neutral_u))
-                      .alias("score_u")))
-        if i < n_iter - 1:
-            scores = scores.localCheckpoint()
-    return (nodes.join(scores, "doc_id")
-            .select("doc_id",
-                    F.col("degree").cast("long").alias("degree"),
-                    F.col("label_u").isNotNull().alias("is_seed"),
-                    F.round(F.col("score_u") / F.lit(float(scale_u)), 6)
-                    .alias("score")))
 
 
 def first_stage_attribution(df: DataFrame, stage_cols: list[str],
@@ -1981,9 +1877,8 @@ def kcore(pairs: DataFrame, k: int = 2, id0: str = "doc0",
     neighbors THAT THEMSELVES sit in dense neighborhoods is structural
     duplication, not chance collision. Output: one row per core member
     (doc_id, core_deg, n_rounds) — core_deg is the degree WITHIN the
-    final core; n_rounds (same on every row — the
-    label_propagation_converged convention) counts the peel rounds
-    that removed anything.
+    final core; n_rounds (same on every row — label_propagation's
+    n_iters convention) counts the peel rounds that removed anything.
 
     Determinism: pure integer degree thresholding — no floats anywhere.
     Scale shape: per round one semi-join of the edge list against the
@@ -1995,10 +1890,10 @@ def kcore(pairs: DataFrame, k: int = 2, id0: str = "doc0",
     O(graph diameter) rounds — measured 2 (sf0.01) / 4 (sf0.1) on the
     MinHash candidate graph.
 
-    Non-convergence is LOUD (the label_propagation_converged
-    contract): if ``max_iter`` rounds exhaust while the alive set is
-    still shrinking, the table is not a fixpoint — a silently-returned
-    partial peel would be a wrong k-core — so this raises instead.
+    Non-convergence is LOUD: if ``max_iter`` rounds exhaust while the
+    alive set is still shrinking, the table is not a fixpoint — a
+    silently-returned partial peel would be a wrong k-core — so this
+    raises instead.
     """
     if k <= 0:
         raise ValueError(f"kcore: k must be > 0, got {k}")

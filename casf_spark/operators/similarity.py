@@ -1079,56 +1079,11 @@ def kcenter_select(emb: DataFrame, k: int = 8, id_col: str = "vec_id",
     return out
 
 
-def _fl_candidates(emb: DataFrame, k: int, n_candidates: int, id_col: str,
-                   vec_col: str, caller: str) -> DataFrame:
-    """Validate and pick the bounded md5-smallest candidate pool
-    (localCheckpointed, <= n_candidates rows)."""
-    if k < 1 or n_candidates < k:
-        raise ValueError(
-            f"{caller}: need 1 <= k <= n_candidates, "
-            f"got k={k}, n_candidates={n_candidates}")
-    ck = F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 15),
-                16, 10).cast("long")
-    cand = (emb.select(F.col(id_col).cast("long").alias("cid"),
-                       V.l2_normalize(vec_col).alias("cv"),
-                       ck.alias("ck"))
-            .orderBy("ck", "cid").limit(n_candidates)
-            .select("cid", "cv")
-            # materialized once (<= n_candidates rows): the count below
-            # and every downstream read hit the checkpoint, so
-            # validation costs no extra corpus scan
-            .localCheckpoint())
-    # the ACTUAL pool can be smaller than n_candidates (tiny corpus);
-    # a pool below k would exhaust mid-greedy with a bare IndexError /
-    # empty heap — validate loudly instead (the cluster_silhouette
-    # convention).
-    n_pool = cand.count()
-    if n_pool < k:
-        raise ValueError(
-            f"{caller}: corpus yields only {n_pool} candidate "
-            f"vectors (< k={k}) — reduce k or supply more rows")
-    return cand
-
-
-def _fl_pool(emb: DataFrame, k: int, n_candidates: int, id_col: str,
-             vec_col: str, caller: str):
-    """Shared facility-location setup: validate, pick the bounded
-    md5-smallest candidate pool, and materialize the corpus x
-    candidates micro-unit similarity table plus the zeroed coverage
-    table (both localCheckpointed — they anchor every greedy round)."""
-    cand = _fl_candidates(emb, k, n_candidates, id_col, vec_col, caller)
-    corp = emb.select(F.col(id_col).cast("long").alias("id"),
-                      V.l2_normalize(vec_col).alias("v"))
-    simu = F.greatest(
-        F.lit(0).cast("long"),
-        F.floor(F.round(V.dot("v", "cv"), 6) * F.lit(1e6) + F.lit(0.5))
-        .cast("long"))
-    sims = (corp.crossJoin(F.broadcast(cand))
-            .select("id", "cid", simu.alias("su"))
-            .localCheckpoint())
-    cov = corp.select("id", F.lit(0).cast("long").alias("cu")) \
-        .localCheckpoint()
-    return sims, cov
+# Each candidate vector is inlined into the plan as `dim` float literals
+# (one similarity column per candidate), so planning cost grows with
+# dim x pool size. On a 16-row input (4 cores) a call took 4.8 s at
+# 512 literals (the query's 64 x 8), 12 s at 4096 and ~55 s at 32768.
+MAX_FL_PLAN_LITERALS = 1 << 12
 
 
 def facility_location_select(emb: DataFrame, k: int = 4,
@@ -1159,24 +1114,42 @@ def facility_location_select(emb: DataFrame, k: int = 4,
     map-only scalar aggregation whose coverage term is greatest() over
     the already-selected columns — bounded scalars only to the driver,
     never row data. A NULL candidate vector has similarity 0 to every
-    row; duplicate candidate ids raise ``ValueError``. Output:
+    row; duplicate candidate ids raise ``ValueError``, as does a pool
+    of more than ``MAX_FL_PLAN_LITERALS`` vector components. Output:
     (sel_rank, sel_id, gain, coverage) — gain is the round's marginal
     coverage, coverage the cumulative objective, both micro-exact 6dp.
     """
-    # Every su value is the same expression as the lazy variant's
-    # cross-join (l2_normalize/dot/round/floor in the same operand
-    # order) and the argmax keeps the (gain desc, cid asc) tie-break, so
-    # the two are output-identical (pinned by test_similarity
-    # classic==lazy and the oracle twin).
-    cand = _fl_candidates(emb, k, n_candidates, id_col, vec_col,
-                          "facility_location_select")
+    if k < 1 or n_candidates < k:
+        raise ValueError(
+            f"facility_location_select: need 1 <= k <= n_candidates, "
+            f"got k={k}, n_candidates={n_candidates}")
+    ck = F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 15),
+                16, 10).cast("long")
+    cand = (emb.select(F.col(id_col).cast("long").alias("cid"),
+                       V.l2_normalize(vec_col).alias("cv"),
+                       ck.alias("ck"))
+            .orderBy("ck", "cid").limit(n_candidates)
+            .select("cid", "cv"))
     pool = sorted(((int(r.cid), r.cv) for r in cand.collect()),
                   key=lambda p: p[0])
+    # the ACTUAL pool can be smaller than n_candidates (tiny corpus); a
+    # pool below k would exhaust mid-greedy — refuse loudly instead
+    if len(pool) < k:
+        raise ValueError(
+            f"facility_location_select: corpus yields only {len(pool)} "
+            f"candidate vectors (< k={k}) — reduce k or supply more rows")
     for (a, _), (b, _) in zip(pool, pool[1:]):
         if a == b:
             raise ValueError(
                 f"facility_location_select: duplicate candidate id {a} in "
                 f"{id_col!r} — candidate ids must be unique")
+    dim = max((len(cv) for _, cv in pool if cv is not None), default=0)
+    if dim * len(pool) > MAX_FL_PLAN_LITERALS:
+        raise ValueError(
+            f"facility_location_select: {len(pool)} candidates x dim {dim} "
+            f"= {dim * len(pool)} plan literals exceeds "
+            f"MAX_FL_PLAN_LITERALS={MAX_FL_PLAN_LITERALS} — lower "
+            f"n_candidates or reduce the embedding dimension")
 
     def su_col(cv: list | None) -> Column:
         if cv is None:
@@ -1203,83 +1176,5 @@ def facility_location_select(emb: DataFrame, k: int = 4,
         selected.append(sel)
         total += gain_u
         rows.append((r, sel, gain_u / 1e6, total / 1e6))
-    return emb.sparkSession.createDataFrame(
-        rows, "sel_rank long, sel_id long, gain double, coverage double")
-
-
-def facility_location_select_lazy(emb: DataFrame, k: int = 4,
-                                  n_candidates: int = 8,
-                                  id_col: str = "vec_id",
-                                  vec_col: str = "embedding") -> DataFrame:
-    """Lazy-greedy facility location (Minoux 1978) — the accelerated
-    twin of :func:`facility_location_select`, OUTPUT-IDENTICAL by
-    construction (pinned by test): submodularity makes every
-    candidate's marginal gain non-increasing as coverage grows, so a
-    gain computed in an earlier round is a valid UPPER BOUND later. A
-    driver-side priority queue (bounded: one scalar per candidate,
-    never row data) keeps stale bounds; each round pops the best bound
-    and recomputes ONLY that candidate's exact gain until the top of
-    the queue is fresh — typically 1-2 single-candidate aggregations
-    instead of re-scoring all C candidates.
-
-    Why it exists: classic greedy costs k aggregations over the FULL
-    N x C similarity table. Lazy greedy's per-recompute aggregation
-    scans only one candidate's N rows, and on real (clustered) data
-    the number of recomputes per round is famously near 1 — the
-    standard large-C accelerant in submodular selection. Worst case
-    (adversarially flat gains) recomputes every candidate, matching
-    classic greedy's total work in 1/C-sized steps.
-
-    Tie-break equivalence: the queue orders by (gain desc, cid asc),
-    exactly the classic argmax. A fresh entry pops only when its TRUE
-    gain beats (or ties with a larger cid than) every other bound, and
-    bounds never understate true gains — so the selected sequence, the
-    per-round gains, and the cumulative coverage all match classic
-    greedy exactly, including ties.
-
-    Same scale shape as the classic: the N x C micro-unit similarity
-    table materializes once, coverage updates are localCheckpointed,
-    and only bounded scalars (one gain per recompute, C ids up front)
-    reach the driver. Output: (sel_rank, sel_id, gain, coverage).
-    """
-    import heapq
-
-    sims, cov = _fl_pool(emb, k, n_candidates, id_col, vec_col,
-                         "facility_location_select_lazy")
-    # round 1 exact gains for every candidate in ONE aggregation (with
-    # cov == 0 the gain is just sum(su)) — the standard lazy-greedy
-    # seeding; C bounded scalars to the driver
-    first = (sims.groupBy("cid").agg(F.sum("su").alias("gu"))
-             .collect())
-    heap = [(-int(r.gu), int(r.cid), 1) for r in first]
-    heapq.heapify(heap)
-    rows, total = [], 0
-    for r in range(1, k + 1):
-        while True:
-            neg_gu, cid, fresh = heapq.heappop(heap)
-            if fresh == r:
-                break
-            # stale bound on top: recompute this ONE candidate's exact
-            # gain against the current coverage (1-row scalar agg)
-            g = (sims.where(F.col("cid") == cid).join(cov, "id")
-                 .agg(F.sum(F.greatest(F.col("su"), F.col("cu"))
-                            - F.col("cu")).alias("gu"))
-                 .collect()[0])
-            heapq.heappush(heap, (-int(g.gu), cid, r))
-        sel, gain_u = cid, -neg_gu
-        total += gain_u
-        rows.append((r, sel, gain_u / 1e6, total / 1e6))
-        if r == k:
-            break
-        upd = sims.where(F.col("cid") == sel).select(
-            "id", F.col("su").alias("__fl_su"))
-        cov = (cov.join(upd, "id", "left")
-               .select("id", F.greatest(
-                   F.col("cu"), F.coalesce(F.col("__fl_su"),
-                                           F.lit(0).cast("long")))
-                   .alias("cu"))
-               .localCheckpoint())
-        # entries seeded in round 1 stay valid bounds for round r+1;
-        # the selected candidate was popped and never pushed back
     return emb.sparkSession.createDataFrame(
         rows, "sel_rank long, sel_id long, gain double, coverage double")

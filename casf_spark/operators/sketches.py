@@ -447,86 +447,3 @@ def hist_sketch_quantiles(sketch: DataFrame, qs, lo: float, hi: float,
             .select("q", "target_rank",
                     _hist_est(F.col("__hs_bin"), lo, w).alias("est"))
             .orderBy("q"))
-
-
-def hist_sketch_build_grouped(df: DataFrame, group_col: str, value_col,
-                              lo: float, hi: float,
-                              n_bins: int) -> DataFrame:
-    """Per-group histogram sketches in ONE aggregation — the grouped
-    twin of :func:`hist_sketch_build` for "p99 per source / per
-    language / per day over 100 TB" questions: every group gets its own
-    fixed-boundary sketch, built in a single (group, bin)-grain
-    ``groupBy`` instead of one job per group (the per-group-filter
-    anti-pattern multiplies full scans by group count).
-
-    Same exact contract as the ungrouped build — values clamp into
-    ``n_bins`` equal-width bins over ``[lo, hi)``; NULL values and NULL
-    group keys are skipped (neither carries a rank in any group).
-    Output: (grp, bin, cnt), only non-empty cells.
-
-    Scale shape: one map-side-combinable aggregation whose exchange
-    carries at most ``tasks x groups x bins`` cells regardless of row
-    count; the group count is the only new dimension, and it is the
-    grain the caller asked to be answered at.
-    """
-    _check_hist_args(lo, hi, n_bins)
-    v = F.col(value_col) if isinstance(value_col, str) else value_col
-    w = (hi - lo) / n_bins
-    return (df.where(v.isNotNull() & F.col(group_col).isNotNull())
-            .select(F.col(group_col).alias("grp"),
-                    _hist_bin(v, lo, w, n_bins).alias("bin"))
-            .groupBy("grp", "bin")
-            .agg(F.count(F.lit(1)).cast("long").alias("cnt")))
-
-
-def hist_sketch_merge_grouped(sketches: DataFrame) -> DataFrame:
-    """Merge stacked grouped sketches (grp, bin, cnt) cell-wise — the
-    mergeability contract per group: merged(build(A) ++ build(B)) ==
-    build(A ++ B) exactly, for every group independently."""
-    return (sketches.groupBy("grp", "bin")
-            .agg(F.sum("cnt").cast("long").alias("cnt")))
-
-
-def hist_sketch_quantiles_grouped(sketch: DataFrame, qs, lo: float,
-                                  hi: float, n_bins: int) -> DataFrame:
-    """Per-group nearest-rank quantile reads off a grouped sketch: for
-    each group and each ``q``, the UPPER EDGE of the first bin whose
-    within-group cumulative count reaches ``ceil(q * n_grp)`` — the
-    ungrouped estimator applied under a PARTITION BY, so the two agree
-    exactly on a single-group table (pinned by test). Output: (grp, q,
-    target_rank, est), groups x len(qs) rows.
-
-    Scale shape: all work is at sketch grain. The cumulative walk is a
-    window partitioned by group over <= n_bins rows each; the quantile
-    probe joins the tiny ``qs`` relation against group totals
-    (group-grain) and then the cumulative cells on (grp, cum >=
-    target_rank) — an equi-join on grp with a residual range predicate,
-    never a product across groups. The row stream is gone before any of
-    this runs.
-    """
-    _check_hist_args(lo, hi, n_bins)
-    _check_hist_qs(qs)
-    from pyspark.sql import Window
-    spark = sketch.sparkSession
-    w = (hi - lo) / n_bins
-    qdf = spark.createDataFrame([(float(q),) for q in qs], "q double")
-    tot = sketch.groupBy("grp").agg(F.sum("cnt").cast("long").alias("n"))
-    cum = sketch.withColumn(
-        "cum", F.sum("cnt").over(
-            Window.partitionBy("grp").orderBy("bin")
-            .rowsBetween(Window.unboundedPreceding, 0)))
-    probes = (tot.crossJoin(F.broadcast(qdf))
-              .withColumn("target_rank",
-                          F.ceil(F.col("q") * F.col("n")).cast("long"))
-              .select("grp", "q", "target_rank"))
-    # both sides descend from `sketch`, so name one leg explicitly —
-    # a bare grp == grp would resolve against the shared lineage
-    cum = cum.select(F.col("grp").alias("__hs_grp"), "bin", "cum")
-    j = probes.join(cum, (F.col("grp") == F.col("__hs_grp"))
-                    & (F.col("cum") >= F.col("target_rank"))) \
-        .select("grp", "q", "target_rank", "bin")
-    return (j.groupBy("grp", "q", "target_rank")
-            .agg(F.min("bin").alias("__hs_bin"))
-            .select("grp", "q", "target_rank",
-                    _hist_est(F.col("__hs_bin"), lo, w).alias("est"))
-            .orderBy("grp", "q"))

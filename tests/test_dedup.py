@@ -525,8 +525,7 @@ def test_kcore_cap_exhaustion_raises(spark):
     """Round-13 convergence contract: a path graph peels one endpoint
     pair per round, so a long path with max_iter=1 exhausts the cap
     while still shrinking — kcore raises loudly instead of silently
-    returning a non-fixpoint (the label_propagation_converged
-    contract)."""
+    returning a non-fixpoint."""
     import pytest
     from casf_spark.operators.dedup import kcore
 

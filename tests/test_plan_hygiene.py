@@ -268,35 +268,26 @@ def test_staged_operator_plans_follow_hygiene(spark, sf_dir):
     pin their plans here to the same rules: no row-at-a-time Python
     anywhere; products only for the deliberate 1-row totals broadcast
     (the LM scorers' crossJoin(broadcast(tot)), the JM whitelist
-    rationale); the grouped sketch has NO product at all."""
+    rationale)."""
     from pyspark.sql import functions as F
 
     from casf_spark.operators.relevance import (
         heldout_interpolated_logprob, heldout_kneser_ney_logprob)
-    from casf_spark.operators.sketches import (
-        hist_sketch_build_grouped, hist_sketch_quantiles_grouped)
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     train = docs.where(F.col("doc_id") % 5 != 0)
     held = docs.where(F.col("doc_id") % 5 == 0)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
 
     shapes = {
         "kn": heldout_kneser_ney_logprob(train, held, "doc_id", "text"),
         "jm_salted": heldout_interpolated_logprob(
             train, held, "doc_id", "text", n_salt=4),
-        "hist_grouped": hist_sketch_quantiles_grouped(
-            hist_sketch_build_grouped(ev, "event_type", "value",
-                                      0.0, 500.0, 1000),
-            [0.5, 0.9], 0.0, 500.0, 1000),
     }
     # kn = 2: the 1-row x 1-row totals build (B from the bigram-type
     # table x V from the token table — different grains, so unlike JM
     # they cannot fuse into one agg) + the totals broadcast into the
     # scored stream; both sides bounded at 1 row.
-    # hist_grouped = 1: group-grain totals x the broadcast literal
-    # quantile list (len(qs) rows) — all sketch-grain, never row data
-    max_products = {"kn": 2, "jm_salted": 1, "hist_grouped": 1}
+    max_products = {"kn": 2, "jm_salted": 1}
     for name, df in shapes.items():
         plan = df._jdf.queryExecution().executedPlan().toString() \
             .split("\n\n")[0]

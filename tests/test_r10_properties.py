@@ -130,25 +130,21 @@ def test_label_propagation_duplicate_seed_rows_deduped(spark):
     assert len(got) == 3  # one row per graph node, no duplicates
 
 
-def test_label_propagation_converged_tol0_matches_fixed(spark):
-    """tol_u=0 can never beat a strict integer bound, so the converged
-    variant runs all max_iter iterations and must equal the
-    fixed-iteration operator exactly (n_iters = max_iter)."""
+def test_label_propagation_tol0_matches_fixed(spark):
+    """tol_u=0 can never beat a strict integer bound, so the
+    convergence-stopped loop runs all n_iter iterations and must equal
+    the fixed-iteration loop exactly (n_iters = n_iter)."""
     pairs = _pairs(spark, [(2, 1), (3, 2), (4, 3), (5, 4)])
     seeds = spark.createDataFrame([(1, 1_000_000)],
                                   "doc_id long, label_u long")
-    conv = DD.label_propagation_converged(
-        pairs, seeds, tol_u=0, max_iter=4).collect()
-    fixed = {r.doc_id: r for r in
-             DD.label_propagation(pairs, seeds, n_iter=4).collect()}
-    for r in conv:
-        assert r.n_iters == 4
-        f = fixed[r.doc_id]
-        assert (r.degree, r.is_seed, r.score) == \
-            (f.degree, f.is_seed, f.score)
+    conv = sorted(DD.label_propagation(
+        pairs, seeds, n_iter=4, tol_u=0).collect())
+    fixed = sorted(DD.label_propagation(pairs, seeds, n_iter=4).collect())
+    assert conv == fixed
+    assert {r.n_iters for r in conv} == {4}
 
 
-def test_label_propagation_converged_stops_early(spark):
+def test_label_propagation_tol_stops_early(spark):
     """Path 1-2-3 with both ends clamped: iteration 1 leaves the middle
     node at exactly the neutral prior (mean of 1.0 and 0.0), so the max
     movement is 0 and any positive tolerance stops after one
@@ -156,37 +152,57 @@ def test_label_propagation_converged_stops_early(spark):
     pairs = _pairs(spark, [(2, 1), (3, 2)])
     seeds = spark.createDataFrame([(1, 1_000_000), (3, 0)],
                                   "doc_id long, label_u long")
-    out = DD.label_propagation_converged(
-        pairs, seeds, tol_u=1, max_iter=8).collect()
+    out = DD.label_propagation(
+        pairs, seeds, n_iter=8, tol_u=1).collect()
     assert {r.n_iters for r in out} == {1}
     got = {r.doc_id: r.score for r in out}
     assert got == {1: 1.0, 2: 0.5, 3: 0.0}
 
 
-def test_label_propagation_converged_rejects_bad_args(spark):
+def test_label_propagation_rejects_bad_args(spark):
+    """n_iter=0 would silently return the priors; a negative tolerance
+    could never be met."""
     import pytest
     pairs = _pairs(spark, [(2, 1)])
     seeds = spark.createDataFrame([], "doc_id long, label_u long")
-    with pytest.raises(ValueError):
-        DD.label_propagation_converged(pairs, seeds, tol_u=-1)
-    with pytest.raises(ValueError):
-        DD.label_propagation_converged(pairs, seeds, max_iter=0)
+    with pytest.raises(ValueError, match="n_iter >= 1"):
+        DD.label_propagation(pairs, seeds, tol_u=-1)
+    with pytest.raises(ValueError, match="n_iter >= 1"):
+        DD.label_propagation(pairs, seeds, n_iter=0)
 
 
-def test_label_propagation_weighted_uniform_equals_unweighted(spark):
-    """All-equal weights make the weighted mean the plain mean, so the
-    weighted operator must reproduce label_propagation exactly."""
+def test_label_propagation_rejects_bad_weights(spark):
+    """A fractional weight dtype is refused from the schema (a cast to
+    BIGINT would truncate a 0.75 Jaccard to 0 and leave every non-seed
+    at the prior); a negative integer weight fails the edge
+    materialization."""
+    import pytest
+    seeds = spark.createDataFrame([(1, 1_000_000)],
+                                  "doc_id long, label_u long")
+    frac = spark.createDataFrame([(2, 1, 0.75)],
+                                 "doc0 long, doc1 long, w double")
+    with pytest.raises(ValueError, match="'w' is double"):
+        DD.label_propagation(frac, seeds, weight_col="w")
+    neg = spark.createDataFrame([(2, 1, 1), (3, 2, -2)],
+                                "doc0 long, doc1 long, w int")
+    with pytest.raises(Exception, match="negative weight in 'w': -2"):
+        DD.label_propagation(neg, seeds, weight_col="w").collect()
+
+
+def test_label_propagation_uniform_weights_equal_unweighted(spark):
+    """All-equal weights make the weighted mean the plain mean, so a
+    weighted run must reproduce the unweighted one exactly."""
     pairs = _pairs(spark, [(2, 1), (3, 2), (4, 2), (4, 3)])
     wpairs = pairs.withColumn("w", F.lit(7))
     seeds = spark.createDataFrame([(1, 1_000_000), (4, 0)],
                                   "doc_id long, label_u long")
     want = sorted(DD.label_propagation(pairs, seeds, n_iter=3).collect())
-    got = sorted(DD.label_propagation_weighted(wpairs, seeds,
-                                               n_iter=3).collect())
+    got = sorted(DD.label_propagation(wpairs, seeds, n_iter=3,
+                                      weight_col="w").collect())
     assert got == want
 
 
-def test_label_propagation_weighted_hand_computed(spark):
+def test_label_propagation_weights_hand_computed(spark):
     """Star around node 2 with clamped leaves 1 (score 1.0, w=3) and
     3 (score 0.0, w=1): node 2 = floor((3*1e6 + 1*0)/4 + .5) = 750000
     -> 0.75 — the weighted pull toward the heavier edge."""
@@ -195,14 +211,14 @@ def test_label_propagation_weighted_hand_computed(spark):
     seeds = spark.createDataFrame([(1, 1_000_000), (3, 0)],
                                   "doc_id long, label_u long")
     out = {r.doc_id: r for r in
-           DD.label_propagation_weighted(wpairs, seeds,
-                                         n_iter=3).collect()}
+           DD.label_propagation(wpairs, seeds, n_iter=3,
+                                weight_col="w").collect()}
     assert out[2].score == 0.75
     assert out[1].score == 1.0 and out[3].score == 0.0
     assert out[2].degree == 2
 
 
-def test_label_propagation_weighted_zero_weight_stays_neutral(spark):
+def test_label_propagation_zero_weight_stays_neutral(spark):
     """A node whose only incident weights are zero keeps the neutral
     prior instead of dividing by zero."""
     wpairs = spark.createDataFrame([(2, 1, 0)],
@@ -210,8 +226,8 @@ def test_label_propagation_weighted_zero_weight_stays_neutral(spark):
     seeds = spark.createDataFrame([(1, 1_000_000)],
                                   "doc_id long, label_u long")
     out = {r.doc_id: r.score for r in
-           DD.label_propagation_weighted(wpairs, seeds,
-                                         n_iter=2).collect()}
+           DD.label_propagation(wpairs, seeds, n_iter=2,
+                                weight_col="w").collect()}
     assert out == {1: 1.0, 2: 0.5}
 
 

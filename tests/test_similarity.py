@@ -247,32 +247,41 @@ def test_kcenter_batched_duplicates_and_small_pool(spark):
         kcenter_select_batched(empty, k=2, buffer=2)
 
 
-def test_facility_location_matches_python_greedy(spark):
-    """The distributed greedy matches an independent Python fold over
-    the identical micro-unit similarities (same md5 candidate pool,
-    same smaller-id ties), and the gain sequence is non-increasing —
-    the submodularity signature classic greedy guarantees."""
+def _fl_python_greedy(vecs, k, n_candidates):
+    """Independent plain-Python facility-location greedy over the
+    operator's exact arithmetic: sequential double sums for the norm and
+    the dot product (Spark's aggregate is a left fold), half-up 6dp
+    rounding of the shortest repr (Spark's round), the md5-smallest
+    candidate pool, and smaller-id ties. ``vecs`` maps id -> vector."""
     import hashlib
-    import numpy as np
-    from casf_spark.operators.similarity import facility_location_select
+    import math
+    from decimal import ROUND_HALF_UP, Decimal
+    from functools import reduce
 
-    ids = list(range(20))
-    vecs = {i: np.array([float((i * 7 + j * 3) % 5 - 2)
-                         for j in range(4)]) for i in ids}
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in ids],
-        "vec_id long, embedding array<double>")
-    got = facility_location_select(emb, k=3, n_candidates=5).collect()
+    def fold(terms):  # not sum(): it compensates float error since 3.12
+        return reduce(lambda acc, t: acc + t, terms, 0.0)
 
-    nv = {i: v / np.linalg.norm(v) for i, v in vecs.items()}
+    def unit(v):
+        n = math.sqrt(fold(x * x for x in v))
+        return [x / n for x in v] if n > 0 else list(v)
+
+    def dot(a, b):
+        return fold(x * y for x, y in zip(a, b))
+
+    ids = sorted(vecs)
+    nv = {i: unit([float(x) for x in vecs[i]]) for i in ids}
     pool = sorted(ids, key=lambda i: (
-        int(hashlib.md5(str(i).encode()).hexdigest()[:15], 16), i))[:5]
-    su = {(x, c): max(0, int(np.floor(
-        round(float(nv[x] @ nv[c]), 6) * 1e6 + 0.5)))
-        for x in ids for c in pool}
+        int(hashlib.md5(str(i).encode()).hexdigest()[:15], 16), i)
+    )[:n_candidates]
+    su = {}
+    for x in ids:
+        for c in pool:
+            r6 = float(Decimal(repr(dot(nv[x], nv[c]))).quantize(
+                Decimal("1e-6"), rounding=ROUND_HALF_UP))
+            su[(x, c)] = max(0, int(math.floor(r6 * 1e6 + 0.5)))
     cov = {x: 0 for x in ids}
     sel, tot, expect = [], 0, []
-    for r in range(3):
+    for r in range(k):
         best = None
         for c in sorted(set(pool) - set(sel)):
             g = sum(max(cov[x], su[(x, c)]) - cov[x] for x in ids)
@@ -283,48 +292,55 @@ def test_facility_location_matches_python_greedy(spark):
         expect.append((r + 1, best[0], best[1] / 1e6, tot / 1e6))
         for x in ids:
             cov[x] = max(cov[x], su[(x, best[0])])
-    assert [(r.sel_rank, r.sel_id, r.gain, r.coverage)
-            for r in got] == expect
-    gains = [r.gain for r in got]
+    return expect
+
+
+def test_facility_location_matches_python_greedy(spark):
+    """The distributed greedy matches an independent Python fold over
+    the identical micro-unit similarities (same md5 candidate pool,
+    same smaller-id ties), and the gain sequence is non-increasing —
+    the submodularity signature classic greedy guarantees."""
+    from casf_spark.operators.similarity import facility_location_select
+
+    vecs = {i: [float((i * 7 + j * 3) % 5 - 2) for j in range(4)]
+            for i in range(20)}
+    emb = spark.createDataFrame(list(vecs.items()),
+                                "vec_id long, embedding array<double>")
+    got = [tuple(r) for r in
+           facility_location_select(emb, k=3, n_candidates=5).collect()]
+    assert got == _fl_python_greedy(vecs, k=3, n_candidates=5)
+    gains = [r[2] for r in got]
     assert gains == sorted(gains, reverse=True)  # submodularity
 
 
 def test_facility_location_validates(spark):
     import pytest
-    from casf_spark.operators.similarity import (
-        facility_location_select, facility_location_select_lazy)
+    from casf_spark.operators.similarity import facility_location_select
 
     emb = spark.createDataFrame([(1, [1.0, 0.0])],
                                 "vec_id long, embedding array<double>")
     with pytest.raises(ValueError, match="k <= n_candidates"):
         facility_location_select(emb, k=5, n_candidates=3)
     # a corpus SMALLER than k passes the k <= n_candidates check but
-    # would exhaust the pool mid-greedy (bare IndexError / empty heap)
-    # — both variants must refuse loudly up front instead
+    # would exhaust the pool mid-greedy — it must refuse loudly up front
     three = spark.createDataFrame(
         [(i, [1.0, float(i)]) for i in range(3)],
         "vec_id long, embedding array<double>")
     with pytest.raises(ValueError, match="only 3 candidate"):
         facility_location_select(three, k=4, n_candidates=8)
-    with pytest.raises(ValueError, match="only 3 candidate"):
-        facility_location_select_lazy(three, k=4, n_candidates=8)
 
 
 def test_facility_location_null_candidate_vector_contributes_zero(spark):
     """A NULL embedding in the candidate pool has similarity 0 to every
-    row, as in the lazy variant's cross-join: it is picked last with
-    zero gain instead of crashing the pool fold."""
-    from casf_spark.operators.similarity import (
-        facility_location_select, facility_location_select_lazy)
+    row: it is picked last with zero gain instead of crashing the pool
+    fold."""
+    from casf_spark.operators.similarity import facility_location_select
 
     emb = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, None), (3, [1.0, 1.0])],
         "vec_id long, embedding array<double>")
     got = [tuple(r) for r in facility_location_select(
         emb, k=4, n_candidates=4).collect()]
-    lazy = [tuple(r) for r in facility_location_select_lazy(
-        emb, k=4, n_candidates=4).collect()]
-    assert got == lazy
     assert [r[1] for r in got] == [3, 0, 1, 2]
     assert got[0][2] == 2.414214 and got[3][2] == 0.0
 
@@ -340,26 +356,45 @@ def test_facility_location_duplicate_candidate_id_raises(spark):
         facility_location_select(emb, k=2, n_candidates=3)
 
 
-def test_facility_location_lazy_matches_classic(spark, sf_dir):
-    """Minoux lazy greedy must reproduce classic greedy EXACTLY —
-    selection sequence, per-round gains, cumulative coverage — on the
-    real embeddings at the windowed config (k=4, C=8) and at a larger
-    pool (k=5, C=24) where laziness actually skips recomputes; the
-    shared-validation contract also still raises on k > C."""
+def test_facility_location_matches_python_greedy_on_embeddings(
+        spark, sf_dir):
+    """The same independent Python greedy on the real 64-dim embeddings,
+    at the query's config (k=4, C=8) and at a larger pool (k=5, C=24):
+    selection sequence, per-round gains and cumulative coverage all
+    match exactly; k > C still raises."""
+    import pyarrow.parquet as pq
+    import pytest
+
+    from casf_spark.operators.similarity import facility_location_select
+
+    path = f"{sf_dir}/embeddings.parquet"
+    tbl = pq.read_table(path, columns=["vec_id", "embedding"]).to_pydict()
+    vecs = dict(zip(tbl["vec_id"], tbl["embedding"]))
+    emb = spark.read.parquet(path)
+    for k, c in ((4, 8), (5, 24)):
+        got = [tuple(r) for r in facility_location_select(
+            emb, k=k, n_candidates=c).collect()]
+        assert got == _fl_python_greedy(vecs, k, c) and len(got) == k
+    with pytest.raises(ValueError, match="k <= n_candidates"):
+        facility_location_select(emb, k=9, n_candidates=8)
+
+
+def test_facility_location_caps_plan_literals(spark):
+    """Every candidate vector is inlined into the plan, so a pool of
+    more than MAX_FL_PLAN_LITERALS components is refused with both
+    numbers named, before any plan over the corpus is built."""
     import pytest
 
     from casf_spark.operators.similarity import (
-        facility_location_select, facility_location_select_lazy)
+        MAX_FL_PLAN_LITERALS, facility_location_select)
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    for k, c in ((4, 8), (5, 24)):
-        classic = [tuple(r) for r in facility_location_select(
-            emb, k=k, n_candidates=c).collect()]
-        lazy = [tuple(r) for r in facility_location_select_lazy(
-            emb, k=k, n_candidates=c).collect()]
-        assert classic == lazy and len(classic) == k
-    with pytest.raises(ValueError):
-        facility_location_select_lazy(emb, k=9, n_candidates=8)
+    dim = MAX_FL_PLAN_LITERALS // 16 + 1
+    emb = spark.createDataFrame(
+        [(i, [float(i + 1)] * dim) for i in range(16)],
+        "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError,
+                       match=f"16 candidates x dim {dim} "):
+        facility_location_select(emb, k=2, n_candidates=16)
 
 
 def test_similarity_empty_and_undersized_inputs_are_loud(spark):

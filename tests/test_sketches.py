@@ -276,111 +276,10 @@ def test_hist_sketch_clamps_and_validates(spark):
             [0.5], 0.0, 10.0, 0)
     # an out-of-range q would silently VANISH from the output (q > 1
     # matches no bin, q <= 0 matches the first) — both reads raise
-    from casf_spark.operators.sketches import (
-        hist_sketch_build_grouped, hist_sketch_quantiles_grouped)
     sk = hist_sketch_build(vals, "v", 0.0, 10.0, 10)
     with pytest.raises(ValueError, match="every q"):
         hist_sketch_quantiles(sk, [0.5, 1.5], 0.0, 10.0, 10)
+    with pytest.raises(ValueError, match="every q"):
+        hist_sketch_quantiles(sk, [0.0], 0.0, 10.0, 10)
     with pytest.raises(ValueError, match="non-empty"):
         hist_sketch_quantiles(sk, [], 0.0, 10.0, 10)
-    gvals = spark.createDataFrame([("a", 1.0)], "grp string, v double")
-    gsk = hist_sketch_build_grouped(gvals, "grp", "v", 0.0, 10.0, 10)
-    with pytest.raises(ValueError, match="every q"):
-        hist_sketch_quantiles_grouped(gsk, [0.0], 0.0, 10.0, 10)
-
-
-def test_hist_sketch_grouped_single_group_matches_ungrouped(spark):
-    """The grouped estimator under PARTITION BY must reduce exactly to
-    the ungrouped one when there is one group — the definitional pin
-    tying hist_sketch_*_grouped to the already-oracle-checked family."""
-    from casf_spark.operators.sketches import (
-        hist_sketch_build, hist_sketch_build_grouped,
-        hist_sketch_quantiles, hist_sketch_quantiles_grouped)
-
-    vals = spark.range(1, 101).select(
-        F.lit("only").alias("g"), (F.col("id") % 83).cast("double").alias("v"))
-    qs = [0.25, 0.5, 0.9]
-    flat = {(r.q, r.target_rank, r.est)
-            for r in hist_sketch_quantiles(
-                hist_sketch_build(vals, "v", 0.0, 100.0, 20),
-                qs, 0.0, 100.0, 20).collect()}
-    grp = {(r.q, r.target_rank, r.est)
-           for r in hist_sketch_quantiles_grouped(
-               hist_sketch_build_grouped(vals, "g", "v", 0.0, 100.0, 20),
-               qs, 0.0, 100.0, 20).collect()}
-    assert flat == grp
-
-
-def test_hist_sketch_grouped_merge_and_per_group_reads(spark):
-    """Two groups with different distributions: per-batch grouped builds
-    merge to the whole-corpus grouped build (mergeability per group),
-    the per-group medians separate, and NULL values / NULL group keys
-    are skipped."""
-    from casf_spark.operators.sketches import (
-        hist_sketch_build_grouped, hist_sketch_merge_grouped,
-        hist_sketch_quantiles_grouped)
-
-    rows = ([("lo", float(i % 10)) for i in range(40)]
-            + [("hi", 80.0 + i % 10) for i in range(40)]
-            + [("lo", None), (None, 5.0)])
-    vals = spark.createDataFrame(rows, "g string, v double")
-    whole = hist_sketch_build_grouped(vals, "g", "v", 0.0, 100.0, 100)
-    parts = hist_sketch_build_grouped(
-        vals.where("v < 50"), "g", "v", 0.0, 100.0, 100).unionByName(
-        hist_sketch_build_grouped(
-            vals.where("v >= 50"), "g", "v", 0.0, 100.0, 100))
-    merged = hist_sketch_merge_grouped(parts)
-    key = lambda df: {(r.grp, r.bin): r.cnt for r in df.collect()}
-    assert key(whole) == key(merged)
-    # NULL value and NULL group contributed nothing: 40 counted per grp
-    assert sum(c for (g, _), c in key(whole).items() if g == "lo") == 40
-    assert not any(g is None for (g, _) in key(whole))
-    med = {r.grp: r.est for r in hist_sketch_quantiles_grouped(
-        merged, [0.5], 0.0, 100.0, 100).collect()}
-    # lo median in the 4-bin (values 0..9, rank 20 -> value 4), upper
-    # edge 5.0; hi shifted by +80
-    assert med == {"lo": 5.0, "hi": 85.0}
-
-
-def test_hist_sketch_grouped_duckdb_twin(spark, sf_dir):
-    """Cross-engine pin on the real events table grouped by event_type
-    — the exact SQL a future windowed `events_quantile_by_type` oracle
-    would use, staged so registration is a paste."""
-    import duckdb
-
-    from casf_spark.operators.sketches import (
-        hist_sketch_build_grouped, hist_sketch_quantiles_grouped)
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    got = [(r.grp, r.q, r.target_rank, r.est)
-           for r in hist_sketch_quantiles_grouped(
-               hist_sketch_build_grouped(ev, "event_type", "value",
-                                         0.0, 500.0, 1000),
-               [0.5, 0.9, 0.99], 0.0, 500.0, 1000)
-           .orderBy("grp", "q").collect()]
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW events AS SELECT * FROM "
-                f"read_parquet('{sf_dir}/events.parquet')")
-    exp = con.execute("""
-WITH b AS (
-  SELECT event_type grp,
-         CAST(LEAST(GREATEST(FLOOR((CAST(value AS DOUBLE) - 0.0) / 0.5),
-                             0), 999) AS INT) bin
-  FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL),
-sk AS (SELECT grp, bin, CAST(COUNT(*) AS BIGINT) cnt FROM b GROUP BY 1, 2),
-tot AS (SELECT grp, CAST(SUM(cnt) AS BIGINT) n FROM sk GROUP BY 1),
-cum AS (SELECT grp, bin,
-               CAST(SUM(cnt) OVER (PARTITION BY grp ORDER BY bin)
-                    AS BIGINT) cum
-        FROM sk),
-qs AS (SELECT CAST(q AS DOUBLE) q
-       FROM (VALUES (0.5), (0.9), (0.99)) t(q)),
-tr AS (SELECT grp, q,
-              CAST(CEIL(q * CAST(n AS DOUBLE)) AS BIGINT) target_rank
-       FROM qs CROSS JOIN tot)
-SELECT tr.grp, tr.q, tr.target_rank,
-       ROUND(0.0 + (MIN(c.bin) + 1) * 0.5, 6) est
-FROM tr JOIN cum c ON c.grp = tr.grp AND c.cum >= tr.target_rank
-GROUP BY 1, 2, 3 ORDER BY tr.grp, tr.q""").fetchall()
-    con.close()
-    assert got == [(g, float(q), int(t), float(e)) for g, q, t, e in exp]
