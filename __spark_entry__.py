@@ -2557,9 +2557,9 @@ def q_er_customer_link(spark, sf):
     candidate-vs-match separation a linkage report shows. Pair count
     is sum of block-size², never corpus² — and at 100 TB a single hot
     block (a default name value) is still a quadratic bomb, so
-    blocked_pairs takes a ``max_block_size`` cap that diverts oversize
-    blocks to the ``oversize_blocks`` report instead of emitting block²
-    pairs (guard tested with a planted hot block in test_dedup.py;
+    blocked_pairs takes a ``max_block_size`` cap that drops oversize
+    blocks instead of emitting block² pairs (guard tested with a
+    planted hot block in test_dedup.py;
     unset here because TPC-H names are synthetic-unique)."""
     cust = load_table(spark, sf, "customer")
     base = cust.select(F.col("c_custkey").cast("long").alias("ck"),
@@ -3480,15 +3480,14 @@ def q_negative_samples(spark, sf):
 
 
 def q_stream_bloom_state(spark, sf):
-    """End state of Bloom-gated streaming dedup (streaming.curation.
-    bloom_dedup_replay_batches — the batch twin test_streaming pins
-    against the REAL availableNow foreachBatch stream): documents split
+    """End state of Bloom-gated micro-batch dedup (streaming.curation.
+    bloom_dedup_replay_batches): documents split
     into two micro-batches by doc_id parity; batch 0 keeps per-
     fingerprint representatives and publishes its fixed-size Bloom
     words; batch 1 dedups within itself then probes batch 0's bitmap
     (k broadcast joins, map-only) and drops maybe-seen docs. The oracle
     rebuilds the identical bitmap and replays both batches in SQL —
-    the streaming operator's full cross-batch semantics, hash-checked."""
+    the operator's full cross-batch semantics, hash-checked."""
     from casf_spark.streaming.curation import bloom_dedup_replay_batches
     docs = load_table(spark, sf, "documents").select("doc_id", "text")
     b0 = docs.where(F.col("doc_id") % 2 == 0)
@@ -3498,9 +3497,8 @@ def q_stream_bloom_state(spark, sf):
 
 
 def q_stream_cms_state(spark, sf):
-    """End state of streaming Count-Min maintenance (streaming.curation
-    .cms_replay_batches — the batch twin test_streaming pins against
-    the REAL availableNow foreachBatch stream): documents split into
+    """End state of micro-batch Count-Min maintenance (streaming.curation
+    .cms_replay_batches): documents split into
     THREE micro-batches by doc_id % 3, each batch collapsing to its
     own 4x256 cell table, merged cell-wise and point-queried for the
     exact top-20 tokens. Because counter sums commute, the twin's
@@ -5490,8 +5488,7 @@ def q_dedup_semantic(spark, sf):
     with the lowest centroid similarity (the paper's keep rule in
     pairwise form). The one major LLM-pipeline dedup family MinHash/
     SimHash/embedding-LSH don't cover: semantically-redundant documents
-    whose surface text differs. Cluster-bucketed, never all-pairs — the
-    oracle-checked twin of the KMeans-quantizer semantic_dedup."""
+    whose surface text differs. Cluster-bucketed, never all-pairs."""
     emb = load_table(spark, sf, "embeddings")
     return DD.semantic_dedup_det(emb, n_clusters=8, threshold=0.3)
 
@@ -5529,16 +5526,13 @@ def q_dedup_semantic_2l(spark, sf):
 
 
 def q_stream_near_dedup_state(spark, sf):
-    """Streaming near-dedup END STATE (streaming.curation
-    .near_dedup_replay_batches — the batch twin of
-    near_dedup_stream_against_index): documents arrive as two
+    """Micro-batch near-dedup END STATE (streaming.curation
+    .near_dedup_replay_batches): documents arrive as two
     deterministic micro-batches (batch = doc_id % 2, replayed in order),
     each batch is exact-deduped within itself, dropped against the
     persistent MinHash band-bucket index built by PRIOR batches, star-
     contracted within the batch, and survivors' buckets extend the index.
-    Output: every surviving (doc, batch_id, fp). The real availableNow
-    foreachBatch stream is asserted equal to this twin on the same split
-    in tests/test_streaming.py."""
+    Output: every surviving (doc, batch_id, fp)."""
     from casf_spark.streaming.curation import near_dedup_replay_batches
     docs = load_table(spark, sf, "documents")
     b0 = docs.where(F.col("doc_id") % 2 == 0)
@@ -5548,12 +5542,10 @@ def q_stream_near_dedup_state(spark, sf):
 
 def q_stream_lifetime_state(spark, sf):
     """Stateful-streaming lifetime aggregate END STATE
-    (streaming.stateful.user_lifetime_stats_batch — the batch twin of the
-    transformWithStateInPandas/applyInPandasWithState processor): the
-    per-user lifetime (count, non-NULL sum, non-NULL max) every key
-    converges to once the stream drains. One hash aggregation; the real
-    multi-batch stream's final per-key emission is asserted equal in
-    tests/test_stateful_lifetime.py, including NULL-value batches."""
+    (streaming.stateful.user_lifetime_stats_batch): the per-user
+    lifetime (count, non-NULL sum, non-NULL max) every key converges to
+    once a stateful stream drains. One hash aggregation; the NULL/NaN
+    contract is pinned in tests/test_stateful_lifetime.py."""
     from casf_spark.streaming.stateful import user_lifetime_stats_batch
     return user_lifetime_stats_batch(load_table(spark, sf, "events"))
 
@@ -6046,8 +6038,8 @@ def q_events_session_window(spark, sf):
     """Built-in session_window sessionization (gap 30 min): dynamic
     merging windows in ONE aggregation — same session semantics as the
     lag/island construction (q_events_sessions) but expressed as the
-    idiomatic Spark operator that also runs stateful-streaming with
-    watermark eviction (streaming.events.session_window_counts)."""
+    idiomatic Spark built-in session_window
+    (streaming.events.session_window_counts)."""
     ev = load_table(spark, sf, "events")
     return EV.session_window_counts(ev, "30 minutes")
 

@@ -1,7 +1,9 @@
-"""casf_spark — a PySpark-native analytics engine with the capabilities of
-SaltFishYe/Casf (sparse-matrix cosine similarity via Spark SQL), extended
-with large-scale data-pipeline operators (dedup, similarity search, text
-analysis, multimodal plumbing, streaming).
+"""casf_spark — a PySpark-native batch analytics engine with the
+capabilities of SaltFishYe/Casf (sparse-matrix cosine similarity via Spark
+SQL), extended with large-scale data-pipeline operators (dedup, similarity
+search, text analysis, multimodal plumbing, event-time windows). Like the
+reference it reads and writes batch DataFrames only: no streaming sources
+or sinks.
 
 Everything is expressed DataFrame-first so Catalyst/Tungsten (and AQE at
 runtime) pick the physical strategy; there are no custom Catalyst rules and

@@ -73,88 +73,6 @@ def extract_features(df: DataFrame, real_decoder: bool = False) -> DataFrame:
     return df.select("doc_id", "payload").mapInPandas(batches, FEATURE_SCHEMA)
 
 
-RESIZED_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType(), False),
-    T.StructField("width", T.IntegerType(), False),
-    T.StructField("height", T.IntegerType(), False),
-    T.StructField("resized", T.BinaryType(), False),
-])
-
-
-def resize_images(df: DataFrame, width: int = 32, height: int = 32,
-                  real_decoder: bool = False) -> DataFrame:
-    """Image resize seam via mapInPandas: one output row per input, binary
-    out. The stub "resize" deterministically truncates/cycles the payload
-    to width*height bytes (a fake raster), so schema, Arrow round-trip of
-    binary columns, and batch shape are real; PIL's ``Image.resize`` slots
-    into the marked line when available.
-    """
-    if real_decoder:
-        raise NotImplementedError(
-            "image decoders (PIL) are not installed in this environment; "
-            "stub resize only")
-    target = int(width) * int(height)
-
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
-        for pdf in it:
-            def fake_resize(b: bytes) -> bytes:
-                # real decoder seam: Image.open(BytesIO(b)).resize(...)
-                if not b:
-                    return bytes(target)
-                reps = target // len(b) + 1
-                return (b * reps)[:target]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "width": width, "height": height,
-                "resized": pdf["payload"].map(fake_resize),
-            })
-
-    return df.select("doc_id", "payload").mapInPandas(batches, RESIZED_SCHEMA)
-
-
-FRAME_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType(), False),
-    T.StructField("frame_idx", T.IntegerType(), False),
-    T.StructField("frame", T.BinaryType(), False),
-])
-
-
-def sample_frames(df: DataFrame, n_frames: int = 4,
-                  real_decoder: bool = False) -> DataFrame:
-    """Video frame-sampling seam via mapInPandas: 1 -> n_frames row
-    EXPLOSION inside the Arrow batch (the shape ffmpeg keyframe extraction
-    produces). The stub slices the payload into n_frames equal chunks;
-    each output row is (doc_id, frame_idx, frame bytes).
-    """
-    if real_decoder:
-        raise NotImplementedError(
-            "video decoders (ffmpeg) are not installed in this "
-            "environment; stub frame sampling only")
-    k = int(n_frames)
-
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
-        for pdf in it:
-            ids, idxs, frames = [], [], []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                if b is None:
-                    b = b""  # NULL payload -> k empty frames, not a crash
-                step = max(1, len(b) // k)
-                for i in range(k):
-                    # real decoder seam: ffmpeg -ss <t_i> frame grab
-                    frames.append(bytes(b[i * step:(i + 1) * step]))
-                    ids.append(doc_id)
-                    idxs.append(i)
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "frame_idx": pd.Series(idxs, dtype="int32"),
-                "frame": frames,
-            })
-
-    return df.select("doc_id", "payload").mapInPandas(batches, FRAME_SCHEMA)
-
-
 RGB_FEATURE_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType(), False),
     T.StructField("width", T.IntegerType(), False),
@@ -230,11 +148,19 @@ def decode_rgb_features(df: DataFrame, width: int, height: int) -> DataFrame:
         batches, RGB_FEATURE_SCHEMA)
 
 
+RESIZED_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.LongType(), False),
+    T.StructField("width", T.IntegerType(), False),
+    T.StructField("height", T.IntegerType(), False),
+    T.StructField("resized", T.BinaryType(), False),
+])
+
+
 def resize_rgb_nearest(df: DataFrame, width: int, height: int,
                        out_w: int, out_h: int) -> DataFrame:
     """REAL nearest-neighbor resize of raw RGB24 rasters via numpy index
-    mapping (no PIL): output is again raw rgb24 bytes at (out_w, out_h).
-    Batch shape identical to the PIL-seamed :func:`resize_images`."""
+    mapping (no PIL): output is again raw rgb24 bytes at (out_w, out_h),
+    one row per input row."""
     w, h, ow, oh = int(width), int(height), int(out_w), int(out_h)
     need = w * h * 3
 

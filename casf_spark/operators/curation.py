@@ -6,8 +6,8 @@ pipeline runs between raw crawl and tokenizer:
 
 - ``repetition_features`` — Gopher-style repeated-n-gram signals (docs
   dominated by repeated phrases are low-quality boilerplate).
-- ``pii_features`` / ``redact_pii`` — regex detection + scrubbing of
-  emails / IPv4 / phone-shaped spans, cross-engine-portable patterns.
+- ``pii_scrub_report`` — regex detection + scrubbing of emails / IPv4 /
+  phone-shaped spans, cross-engine-portable patterns.
 - ``contamination_flags`` — test-set decontamination: flag corpus docs
   sharing word n-grams with a benchmark corpus (the standard 13-gram
   overlap rule, n configurable).
@@ -45,8 +45,6 @@ from casf_spark.operators.sampling import hash_fraction
 
 __all__ = [
     "repetition_features",
-    "pii_features",
-    "redact_pii",
     "pii_scrub_report",
     "contamination_flags",
     "pack_sequences",
@@ -68,7 +66,6 @@ __all__ = [
     "mixture_plan",
     "quantile_buckets",
     "boilerplate_lines",
-    "boilerplate_strip",
     "contamination_flags_bloom",
     "quantile_normalize",
     "quantile_match",
@@ -131,34 +128,11 @@ PII_PATTERNS: dict[str, str] = {
 _REDACT_ORDER = ("email", "phone", "ipv4")
 
 
-def pii_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Per-document PII span counts: (doc, n_email, n_phone, n_ipv4).
-
-    Pure narrow projection — ``regexp_count`` stays in codegen; no
-    shuffle, no UDF. DuckDB twin: ``len(regexp_extract_all(text, p))``.
-    """
-    return df.select(
-        F.col(id_col).cast("long").alias("doc"),
-        *[F.regexp_count(F.col(text_col), F.lit(p)).cast("long")
-          .alias(f"n_{name}") for name, p in PII_PATTERNS.items()])
-
-
 def _scrub_expr(text_col: str | Column, token: str) -> Column:
     scrubbed = F.col(text_col) if isinstance(text_col, str) else text_col
     for name in _REDACT_ORDER:
         scrubbed = F.regexp_replace(scrubbed, PII_PATTERNS[name], token)
     return scrubbed
-
-
-def redact_pii(df: DataFrame, id_col: str, text_col: str,
-               token: str = "<PII>") -> DataFrame:
-    """Scrub PII spans, replacing each with ``token``: (doc, text).
-
-    Chained ``regexp_replace`` in the fixed ``_REDACT_ORDER`` — one
-    projection, no shuffle.
-    """
-    return df.select(F.col(id_col).cast("long").alias("doc"),
-                     _scrub_expr(text_col, token).alias("text"))
 
 
 def pii_scrub_report(df: DataFrame, id_col: str, text_col: str,
@@ -167,8 +141,7 @@ def pii_scrub_report(df: DataFrame, id_col: str, text_col: str,
     (doc, n_email, n_phone, n_ipv4, redacted).
 
     The audit-trail shape pipelines persist — what was found and the text
-    with it removed — without scanning the corpus twice or self-joining
-    the per-doc outputs of :func:`pii_features` and :func:`redact_pii`.
+    with it removed — in one scan of the corpus.
     """
     return df.select(
         F.col(id_col).cast("long").alias("doc"),
@@ -1532,29 +1505,6 @@ def boilerplate_lines(lines: DataFrame, group_col: str, doc_col: str,
                     >= F.ceil(F.col("grp_docs") * F.lit(float(min_frac))))
                    & (F.col("line_docs") >= F.lit(int(min_docs))))
             .select(group_col, line_col, "line_docs", "grp_docs"))
-
-
-def boilerplate_strip(lines: DataFrame, group_col: str, doc_col: str,
-                      line_col: str, min_frac: float = 0.5,
-                      min_docs: int = 2) -> DataFrame:
-    """Remove detected boilerplate from the line stream: every input
-    line row survives unless its (group, line) pair is in the
-    :func:`boilerplate_lines` table — a broadcast LEFT ANTI join (the
-    boilerplate table is tiny: only over-threshold lines), so the
-    corpus-side stream never shuffles in the strip itself."""
-    bp = boilerplate_lines(lines, group_col, doc_col, line_col,
-                           min_frac=min_frac, min_docs=min_docs)
-    # null-safe anti-join condition: lines of a NULL group must be
-    # strippable too (their detection rows exist — see the eqNullSafe
-    # note in boilerplate_lines); the line itself is never NULL after
-    # detection, but the same null-safe spelling keeps the pair exact
-    bpk = bp.select(F.col(group_col).alias("__bp_grp"),
-                    F.col(line_col).alias("__bp_line"))
-    return (lines.join(
-        F.broadcast(bpk),
-        F.col(group_col).eqNullSafe(F.col("__bp_grp"))
-        & F.col(line_col).eqNullSafe(F.col("__bp_line")),
-        "left_anti"))
 
 
 def contamination_flags_bloom(docs: DataFrame, benchmark: DataFrame,

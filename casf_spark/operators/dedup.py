@@ -29,24 +29,6 @@ from casf_spark.functions import vectors as V
 from casf_spark.functions.hashing import md5_long, minhash_exprs
 
 
-def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Group documents by content fingerprint; one row per duplicate group
-    (>=2 members): (fingerprint, keep_id = min id, n_dups).
-
-    At 100 TB this is a single hash-shuffle on a 32-char key; partial
-    aggregation makes the map-side combine absorb most duplicates.
-    """
-    out = (
-        df.select(F.col(id_col).cast("long").alias("doc_id"),
-                  _fp_or_unique(id_col, text_col).alias("fingerprint"))
-        .groupBy("fingerprint")
-        .agg(F.min("doc_id").alias("keep_id"),
-             F.count(F.lit(1)).alias("n_dups"))
-        .where(F.col("n_dups") >= 2)
-    )
-    return schemas.conform(out, schemas.DUP_GROUP)
-
-
 def _fp_or_unique(id_col: str, text_col: str):
     """Content fingerprint with NULL text mapped to a per-doc unique
     sentinel: NULL fingerprints connect NOTHING (the group_star_edges
@@ -88,10 +70,8 @@ def blocked_pairs(df: DataFrame, id_col: str,
     when every other block is tiny. When set, records in blocks larger
     than the cap are EXCLUDED from pair generation (the size comes from
     a window count over the same block-key partitioning the join
-    shuffles on, so the guard adds no extra shuffle); the diverted
-    blocks are what :func:`oversize_blocks` reports — review them and
-    refine the key rather than paying block² blindly (the same
-    divert-and-report posture as the candidate-graph degree report).
+    shuffles on, so the guard adds no extra shuffle) — refine the key
+    rather than paying block² blindly.
 
     Scale shape: one self equi-join shuffled on the block key (the
     same shape as the matrix core's _factor_pairs); expensive
@@ -113,23 +93,6 @@ def blocked_pairs(df: DataFrame, id_col: str,
 
     return (side("0").join(side("1"), block_cols)
             .where(F.col("id0") < F.col("id1")))
-
-
-def oversize_blocks(df: DataFrame, block_cols: list[str],
-                    max_block_size: int) -> DataFrame:
-    """The report side of :func:`blocked_pairs`'s ``max_block_size``
-    guard: one row per block whose record count exceeds the cap —
-    ``(<block cols>, n_records, n_pairs_avoided)`` where
-    ``n_pairs_avoided = n·(n-1)/2`` is the quadratic cost the guard
-    diverted. ONE map-combined aggregation on the block key; feed the
-    rows to a human (or a key-refinement pass) instead of the join."""
-    n = F.count(F.lit(1))
-    return (df.groupBy(*block_cols)
-            .agg(n.cast("long").alias("n_records"))
-            .where(F.col("n_records") > int(max_block_size))
-            .select(*block_cols, "n_records",
-                    (F.col("n_records") * (F.col("n_records") - 1) / 2)
-                    .cast("long").alias("n_pairs_avoided")))
 
 
 def _shingles(df: DataFrame, id_col: str, text_col: str, n: int,
@@ -394,42 +357,18 @@ def simhash_pairs(df: DataFrame, id_col: str, text_col: str,
 
 def embedding_near_dups(emb: DataFrame, id_col: str = "vec_id",
                         vec_col: str = "embedding",
-                        threshold: float = 0.95,
-                        method: str = "blocked") -> DataFrame:
-    """Exact embedding near-duplicates: pairs with cosine >= threshold.
-
-    ``method="blocked"`` (default): distributed block-pair numpy matmul
+                        threshold: float = 0.95) -> DataFrame:
+    """Exact embedding near-duplicates: pairs with cosine >= threshold,
+    via the distributed block-pair numpy matmul
     (operators.similarity.blocked_gemm_pairs) — no driver-side collect at
     any corpus size; block count is sized from a measured corpus count so
-    per-task memory stays bounded. ``method="gemm"``: single-broadcast
-    matmul (faster constant factor when the corpus comfortably fits one
-    executor — an explicit opt-in, not the default, because it collects
-    the full table). ``method="expr"``: pure Column-expression all-pairs
-    cross-join baseline (correctness anchor, no Python). Exact all-pairs
-    is inherently O(n^2) compute: for sub-quadratic *approximate* recall
-    at 100 TB, LSH-bucket first (operators.similarity.lsh_candidates) and
-    re-rank, or use minhash/simhash. Output (id0, id1, cos_sim) canonical
-    ordering; all three methods produce identical rows.
+    per-task memory stays bounded. Exact all-pairs is inherently O(n^2)
+    compute: for sub-quadratic *approximate* recall at 100 TB, LSH-bucket
+    first (operators.similarity.lsh_candidates) and re-rank, or use
+    minhash/simhash. Output (id0, id1, cos_sim) in canonical order.
     """
-    if method == "blocked":
-        from casf_spark.operators.similarity import blocked_gemm_pairs
-        return blocked_gemm_pairs(emb, id_col, vec_col, threshold)
-    if method == "gemm":
-        from casf_spark.operators.similarity import gemm_near_dup_pairs
-        return gemm_near_dup_pairs(emb, id_col, vec_col, threshold)
-    normed = emb.select(
-        F.col(id_col).cast("long").alias("id"),
-        V.l2_normalize(vec_col).alias("v"))
-    a = normed.select(F.col("id").alias("id0"), F.col("v").alias("v0"))
-    b = normed.select(F.col("id").alias("id1"), F.col("v").alias("v1"))
-    out = (
-        a.crossJoin(b)
-        .where(F.col("id0") > F.col("id1"))
-        .select("id0", "id1",
-                F.round(V.dot(F.col("v0"), F.col("v1")), 6).alias("cos_sim"))
-        .where(F.col("cos_sim") >= threshold)
-    )
-    return schemas.conform(out, schemas.COSINE_PAIR)
+    from casf_spark.operators.similarity import blocked_gemm_pairs
+    return blocked_gemm_pairs(emb, id_col, vec_col, threshold)
 
 
 def line_dedup_keep(lines: DataFrame) -> DataFrame:
@@ -449,31 +388,6 @@ def line_dedup_keep(lines: DataFrame) -> DataFrame:
                      F.col("f.pos").alias("pos")))
     return (hashed.join(first, ["lh", "doc", "pos"], "left_semi")
             .select("doc", "pos", "line"))
-
-
-def line_dedup(df: DataFrame, id_col: str, text_col: str,
-               delim: str = "\n") -> DataFrame:
-    """Document-level wrapper: split text on ``delim``, drop every line
-    that already occurred in an earlier document (or earlier in the same
-    document), and rebuild each document from its surviving lines in
-    order. Documents whose lines are all removed survive with empty text.
-    Output: (doc, text).
-    """
-    lines = df.select(
-        F.col(id_col).cast("long").alias("doc"),
-        F.posexplode(F.split(F.col(text_col), F.lit(delim), -1))
-        .alias("pos", "line"))
-    kept = line_dedup_keep(lines)
-    rebuilt = (kept.groupBy("doc")
-               .agg(F.array_join(
-                   F.transform(
-                       F.array_sort(F.collect_list(F.struct("pos", "line"))),
-                       lambda s: s["line"]),
-                   delim).alias("text")))
-    ids = df.select(F.col(id_col).cast("long").alias("doc"))
-    out = (ids.join(rebuilt, "doc", "left")
-           .select("doc", F.coalesce("text", F.lit("")).alias("text")))
-    return out
 
 
 def collision_clusters(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -932,20 +846,6 @@ def connected_components(pairs: DataFrame, id0: str = "doc0",
     return schemas.conform(out, schemas.CLUSTER_MEMBER)
 
 
-def dedup_keep_representatives(df: DataFrame, id_col: str,
-                               clusters: DataFrame) -> DataFrame:
-    """Final dedup decision from a cluster map: keep the min-id member of
-    every cluster plus all documents that never appeared in a pair.
-
-    One broadcast-size left-anti join at cluster scale (the cluster map is
-    ~duplicate docs only, a small fraction of the corpus at 100 TB).
-    """
-    drop = clusters.where(F.col("doc_id") != F.col("cluster_id")) \
-                   .select("doc_id")
-    return df.join(drop, df[id_col].cast("long") == drop["doc_id"],
-                   "left_anti")
-
-
 def winnow_overlap_pairs(df: DataFrame, id_col: str, text_col: str,
                          k: int = 5, w: int = 4,
                          min_shared: int = 2) -> DataFrame:
@@ -1346,10 +1246,7 @@ def semantic_dedup_det(emb: DataFrame, id_col: str = "vec_id",
     join shuffles on cluster id and is quadratic only in bucket size —
     size ``n_clusters`` ~ N / target_bucket so buckets stay bounded and
     total pair work is N * bucket, linear in the corpus (the same
-    bucket-bounding argument as MinHash banding). The KMeans-quantizer
-    variant (:func:`semantic_dedup`) buys tighter clusters at the cost
-    of SQL-expressibility; this variant is its oracle-checked twin,
-    exactly as ivf_topk_det twins ivf_topk.
+    bucket-bounding argument as MinHash banding).
 
     ``assign`` selects the centroid-assignment strategy (see
     :func:`_nearest_det_centroids`): ``expr`` Column expressions,
@@ -1360,50 +1257,6 @@ def semantic_dedup_det(emb: DataFrame, id_col: str = "vec_id",
     """
     assigned = _nearest_det_centroids(emb, id_col, vec_col, n_clusters,
                                       method=assign, n_super=n_super)
-    return _semdedup_rollup(assigned, threshold)
-
-
-def semantic_dedup(emb: DataFrame, id_col: str = "vec_id",
-                   vec_col: str = "embedding",
-                   n_clusters: int = 8, threshold: float = 0.3,
-                   seed: int = 42) -> DataFrame:
-    """SemDeDup with a seeded KMeans quantizer — the production variant:
-    same keep rule and output schema as :func:`semantic_dedup_det`, but
-    clusters come from ``pyspark.ml.clustering.KMeans`` (tighter buckets
-    -> fewer cross-cluster misses at equal n_clusters). Deterministic
-    for a fixed seed, but the iterative float path has no SQL twin, so
-    correctness is pinned by tests (seed determinism + agreement with
-    the det variant's numpy reference), not a DuckDB oracle.
-
-    Plan: KMeans fit on a corpus sample-free pass (maxIter=8 — the
-    quantizer only buckets), assignment map-only after the tiny model
-    broadcasts, then the identical within-cluster prior-neighbor join
-    as the det variant: one assignment pass + one cluster-keyed pair
-    shuffle, quadratic only in bucket size."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = emb.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(vec_col).alias("v"),
-        array_to_vector(
-            F.transform(F.col(vec_col), lambda x: x.cast("double")))
-        .alias("features"))
-    model = KMeans(k=n_clusters, seed=seed, maxIter=8,
-                   featuresCol="features", predictionCol="cluster"
-                   ).fit(feats)
-    import numpy as np
-    centers = {i: np.asarray(c) for i, c in
-               enumerate(model.clusterCenters())}
-    cent_df = emb.sparkSession.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in centers.items()],
-        "cluster int, cemb array<double>")
-    assigned = (model.transform(feats)
-                .select("id", "v", "cluster")
-                .join(F.broadcast(cent_df), "cluster")
-                .select("id", "v", V.norm("v").alias("nrm"), "cluster",
-                        F.round(V.cosine("v", "cemb"), 6)
-                        .alias("cent_sim")))
     return _semdedup_rollup(assigned, threshold)
 
 
@@ -1639,9 +1492,10 @@ def label_propagation(pairs: DataFrame, seeds: DataFrame,
     the plain neighborhood mean. ``weight_col`` must be an integer
     column of non-negative weights (:func:`minhash_pair_weights` counts
     agreeing signature components): a non-integral dtype raises
-    ``ValueError`` up front, a negative weight fails the edge
-    materialization, and a node whose incident weights are all zero
-    keeps the neutral prior. The recurrence runs entirely in integer
+    ``ValueError`` up front, a NULL or negative weight fails the edge
+    materialization (a NULL would otherwise drop out of SUM(w) while
+    still counting in ``degree``), and a node whose incident weights are
+    all zero keeps the neutral prior. The recurrence runs entirely in integer
     micro-units for the same reason pagerank_iterations does (round-7
     lesson): integer SUMs are order-independent, so the engines'
     different aggregation orders can never drift; the one float op per
@@ -1685,9 +1539,10 @@ def label_propagation(pairs: DataFrame, seeds: DataFrame,
                 f"{dtype.simpleString()}, not an integer type — the "
                 f"recurrence is integer, so cast or scale it first")
         wc = F.col(weight_col).cast("long")
-        w = F.when(wc < 0, F.raise_error(F.concat(
-            F.lit(f"label_propagation: negative weight in "
-                  f"{weight_col!r}: "), wc.cast("string")))).otherwise(wc)
+        w = F.when(wc.isNull() | (wc < 0), F.raise_error(F.concat(
+            F.lit(f"label_propagation: NULL or negative weight in "
+                  f"{weight_col!r}: "),
+            F.coalesce(wc.cast("string"), F.lit("NULL"))))).otherwise(wc)
     scale_u = 1_000_000
     neutral_u = scale_u // 2
     edges = (pairs.select(F.col(id0).cast("long").alias("src"),

@@ -48,8 +48,7 @@ __all__ = ["tfidf_terms", "bm25_rank", "tfidf_rank", "knn_classify",
            "vocab_coverage", "unigram_logprob", "bigram_logprob",
            "label_centroid_outliers", "rrf_fuse", "collocation_pmi",
            "negative_sampling_table", "negative_draws", "skipgram_cooc",
-           "keyness_terms", "heldout_interpolated_logprob",
-           "heldout_kneser_ney_logprob"]
+           "keyness_terms", "heldout_interpolated_logprob"]
 
 
 def _doc_term_counts(docs: DataFrame, id_col: str, text_col: str,
@@ -394,8 +393,7 @@ def label_centroid_outliers(emb: DataFrame, k: int = 10,
 
 def knn_classify(corpus: DataFrame, queries: DataFrame, k: int = 10,
                  id_col: str = "vec_id", vec_col: str = "embedding",
-                 label_col: str = "label",
-                 method: str = "gemm") -> DataFrame:
+                 label_col: str = "label") -> DataFrame:
     """k-nearest-neighbor majority-vote label prediction ->
     (vec_id, pred_label, n_votes).
 
@@ -406,8 +404,7 @@ def knn_classify(corpus: DataFrame, queries: DataFrame, k: int = 10,
     scale — the vote shape is identical.
     """
     nn = _sim.brute_force_topk(corpus, queries, k=k,
-                               id_col=id_col, vec_col=vec_col,
-                               method=method)
+                               id_col=id_col, vec_col=vec_col)
     labels = corpus.select(F.col(id_col).cast("long").alias("neighbor_id"),
                            F.col(label_col).alias("nl"))
     votes = (nn.join(labels, "neighbor_id")
@@ -423,8 +420,7 @@ def hard_negative_mine(corpus: DataFrame, queries: DataFrame,
                        k_pool: int = 20, k_neg: int = 5,
                        margin: float = 0.05,
                        id_col: str = "vec_id", vec_col: str = "embedding",
-                       label_col: str = "label",
-                       method: str = "gemm") -> DataFrame:
+                       label_col: str = "label") -> DataFrame:
     """Hard-negative mining for contrastive/embedding training (the
     ANCE / FaceNet batch-construction step): per anchor, the ``k_neg``
     most-similar vectors with a DIFFERENT label, drawn from the
@@ -448,8 +444,7 @@ def hard_negative_mine(corpus: DataFrame, queries: DataFrame,
     shape is identical.
     """
     nn = _sim.brute_force_topk(corpus, queries, k=k_pool,
-                               id_col=id_col, vec_col=vec_col,
-                               method=method)
+                               id_col=id_col, vec_col=vec_col)
     # labels compare AS-IS: a cast("long") here turned non-numeric
     # labels ('en'/'fr' — accepted by knn_classify in this module)
     # into NULLs, making q_label != n_label NULL everywhere and the
@@ -874,113 +869,3 @@ def heldout_interpolated_logprob(train: DataFrame, score: DataFrame,
                                            * F.lit(1e9)), 6)
                     .alias("avg_neg_logprob")))
 
-
-def heldout_kneser_ney_logprob(train: DataFrame, score: DataFrame,
-                               id_col: str, text_col: str,
-                               discount: float = 0.75,
-                               pattern: str = TOKEN_SPLIT_PATTERN,
-                               n_salt: int = 0) -> DataFrame:
-    """Held-out interpolated Kneser–Ney scoring — the third point of
-    the smoothing family next to add-one (:func:`bigram_logprob`) and
-    Jelinek–Mercer (:func:`heldout_interpolated_logprob`), and the one
-    production LMs (KenLM, the CCNet filter's backend) actually use.
-    Two ideas distinguish it from JM:
-
-    * **Absolute discounting**: instead of scaling the MLE bigram leg
-      by a constant ``lam``, a fixed ``discount`` D is subtracted from
-      every observed bigram count — high-count transitions keep nearly
-      all their mass while singletons (mostly noise) give most of
-      theirs to the back-off leg. The mass freed under a prefix is
-      exactly ``D * N1+(prev,·) / c(prev·)``, which becomes that
-      prefix's back-off weight (Ney–Essen–Kneser 1994).
-    * **Continuation probability**: the back-off leg is NOT the
-      unigram frequency but ``p_cont(w) ∝ N1+(·,w)`` — how many
-      DISTINCT contexts ``w`` completes (Kneser–Ney 1995). "Francisco"
-      is frequent but follows almost nothing except "San"; its
-      continuation mass is tiny, so an unseen "the Francisco" is
-      penalized where a raw-frequency back-off would not.
-
-    Exact-arithmetic spelling (the oracle contract): with train-side
-    counts ``bc = c(prev,w)``, ``uc = c(prev·)``, ``n1p =
-    N1+(prev,·)`` (distinct continuations of prev), ``cw = N1+(·,w)``
-    (distinct contexts of w), ``B`` = distinct bigram types and ``V``
-    = unigram vocabulary::
-
-        p_cont(w)  = (cw + 1) / (B + V + 1)          # add-one + OOV
-                                                     # bucket, finite
-                                                     # for unseen w
-        p(w|prev)  = max(bc - D, 0) / uc
-                     + (D * n1p / uc) * p_cont(w)    # uc > 0
-                   = p_cont(w)                       # unseen prefix,
-                                                     # or first token
-
-    ``D = discount`` must sit strictly inside (0, 1): observed bigrams
-    then keep positive discounted mass (counts are >= 1) and every
-    back-off weight is positive, so every token's probability is
-    finite with NO extra flooring. The add-one-over-types p_cont
-    denominator deviates from the textbook ``cw / B`` only to keep OOV
-    score tokens finite — the same OOV bucket rule as the JM unigram
-    leg, documented here because the two engines must (and do) agree
-    on it exactly. Per-token ``-ln p`` folds to integer nano-units
-    before the per-doc sum (order-independent BIGINT); one division at
-    output. Output: (doc, n_tokens, avg_neg_logprob), one row per
-    scored doc.
-
-    Scale shape (identical to the JM operator): the continuation and
-    prefix tables are vocabulary-grain (broadcastable); the bc table
-    is bigram-TYPE grain and joins keyed (prev, w) — the usual Zipf
-    caveat, mitigable with ``n_salt > 0`` (salted count-table joins,
-    values identical) or AQE skew-join; the scored stream shuffles
-    only for its doc-grain sum. Totals are a 1-row broadcast, never a
-    driver collect.
-    """
-    if not 0.0 < discount < 1.0:
-        raise ValueError(
-            f"discount must be strictly inside (0, 1), got {discount}")
-    tt = tokenize(train, id_col, text_col, pattern) \
-        .select(F.col("doc").cast("long").alias("doc"), "pos", "word")
-    nxt = tt.select("doc", (F.col("pos") + 1).alias("pos"),
-                    F.col("word").alias("prev"))
-    tbi = (tt.join(nxt, ["doc", "pos"])
-           .select("prev", F.col("word").alias("w")))
-    bc = tbi.groupBy("prev", "w").agg(F.count(F.lit(1)).cast("double")
-                                      .alias("bc"))
-    # prefix stats in ONE pass: occurrences c(prev·) and distinct
-    # continuation types N1+(prev,·)
-    pstat = tbi.groupBy("prev").agg(
-        F.count(F.lit(1)).cast("double").alias("uc"),
-        F.countDistinct("w").cast("double").alias("n1p"))
-    # continuation counts over bigram TYPES (bc is already type-grain)
-    cont = bc.groupBy("w").agg(F.count(F.lit(1)).cast("double")
-                               .alias("cw"))
-    tot = bc.agg(F.count(F.lit(1)).cast("double").alias("b")) \
-        .crossJoin(tt.agg(F.countDistinct("word").cast("double")
-                          .alias("v")))
-
-    st = tokenize(score, id_col, text_col, pattern) \
-        .select(F.col("doc").cast("long").alias("doc"), "pos", "word")
-    sprev = st.select("doc", (F.col("pos") + 1).alias("pos"),
-                      F.col("word").alias("prev"))
-    pairs = (st.join(sprev, ["doc", "pos"], "left")
-             .select("doc", "pos", F.col("word").alias("w"), "prev"))
-    j = (_lm_score_joins(pairs, [(cont, ["w"]), (bc, ["prev", "w"]),
-                                 (pstat, ["prev"])], n_salt)
-         .crossJoin(F.broadcast(tot)))
-    d = F.lit(float(discount))
-    p_cont = (F.coalesce("cw", F.lit(0.0)) + 1.0) \
-        / (F.col("b") + F.col("v") + 1.0)
-    p_kn = (F.greatest(F.coalesce("bc", F.lit(0.0)) - d, F.lit(0.0))
-            / F.col("uc")
-            + (d * F.col("n1p") / F.col("uc")) * p_cont)
-    p = F.when(F.col("prev").isNull()
-               | (F.coalesce("uc", F.lit(0.0)) == 0), p_cont) \
-        .otherwise(p_kn)
-    term_u = F.floor(-F.log(p) * F.lit(1e9) + F.lit(0.5)).cast("long")
-    return (j.select("doc", term_u.alias("tu"))
-            .groupBy("doc")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_tokens"),
-                 F.sum("tu").alias("su"))
-            .select("doc", "n_tokens",
-                    F.round(F.col("su") / (F.col("n_tokens")
-                                           * F.lit(1e9)), 6)
-                    .alias("avg_neg_logprob")))

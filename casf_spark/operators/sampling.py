@@ -32,23 +32,6 @@ def hash_fraction(key: Column | str) -> Column:
     return (F.shiftright(md5_long(key), HASH_BITS - 30) / F.lit(float(_BUCKETS)))
 
 
-def deterministic_sample(df: DataFrame, key: Column | str,
-                         fraction: float) -> DataFrame:
-    """Keep ~``fraction`` of rows, chosen by key hash — same rows every run,
-    every engine, any partitioning. A narrow filter: pushes to the scan."""
-    if not 0.0 <= fraction <= 1.0:
-        raise ValueError("fraction must be in [0, 1]")
-    frac = hash_fraction(key)
-    # a NULL key hashes to a NULL fraction and would be silently
-    # DROPPED (even at fraction=1.0) — raise per-row instead; the
-    # filter still evaluates inside the scan stage (the md5 predicate
-    # was never parquet-pushable, so the guard costs nothing)
-    return df.where(
-        F.when(frac.isNull(),
-               F.raise_error(F.lit("deterministic_sample: NULL key")))
-        .otherwise(frac < fraction))
-
-
 def assign_splits(df: DataFrame, key: Column | str,
                   splits: Sequence[tuple[str, float]] = (
                       ("train", 0.98), ("val", 0.01), ("test", 0.01)),

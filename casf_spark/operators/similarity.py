@@ -57,50 +57,28 @@ def _normalized_matrix(pdf, vec_col: str):
 
 
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     method: str = "gemm") -> DataFrame:
+                     id_col: str = "vec_id",
+                     vec_col: str = "embedding") -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
     Output: (query_id, neighbor_id, cos_sim, rank), self-matches excluded;
     rank ties break on neighbor_id for determinism.
 
-    ``method="gemm"`` (default): the query set is collected + broadcast
-    (same smallness contract as a broadcast join); the corpus streams
-    through an Arrow-batched ``mapInPandas`` that computes a blocked
-    Q x batch^T matmul and emits only each batch's per-query top-k partial —
-    shuffle volume is O(n_queries * k * n_batches), independent of corpus
-    size. A final window reduces partials. This is the scale shape: corpus
-    never concentrates, numpy does the flops.
-
-    ``method="expr"``: pure Column-expression fallback (zip_with/aggregate
-    dot products) — keeps everything JVM-side, O(corpus) rows through the
-    window.
+    The query set is collected + broadcast (same smallness contract as a
+    broadcast join); the corpus streams through an Arrow-batched
+    ``mapInPandas`` that computes a blocked Q x batch^T matmul and emits
+    only each batch's per-query top-k partial — shuffle volume is
+    O(n_queries * k * n_batches), independent of corpus size. A final
+    window reduces partials. This is the scale shape: corpus never
+    concentrates, numpy does the flops.
     """
-    if method == "expr":
-        c = corpus.select(F.col(id_col).cast("long").alias("neighbor_id"),
-                          V.l2_normalize(vec_col).alias("cv"))
-        q = queries.select(F.col(id_col).cast("long").alias("query_id"),
-                           V.l2_normalize(vec_col).alias("qv"))
-        scored = (
-            F.broadcast(q).crossJoin(c)
-            .where(F.col("query_id") != F.col("neighbor_id"))
-            .select("query_id", "neighbor_id",
-                    F.round(V.dot(F.col("qv"), F.col("cv")), 6).alias("cos_sim"))
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("cos_sim"), F.asc("neighbor_id"))
-        return schemas.conform(
-            scored.withColumn("rank", F.row_number().over(w))
-                  .where(F.col("rank") <= k), schemas.ANN_TOPK)
-
     import numpy as np
 
     qpdf = queries.select(F.col(id_col).cast("long").alias("id"),
                           vec_col).toPandas()
     if qpdf.empty:
-        # top-k of an empty query set is empty — the expr path yields
-        # that naturally; the gemm path used to crash every executor
-        # with a (0,0) matmul core-dimension mismatch
+        # top-k of an empty query set is empty; without this guard every
+        # executor crashed with a (0,0) matmul core-dimension mismatch
         empty = corpus.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, cos_sim double, "
                 "rank long")
@@ -143,75 +121,13 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                .where(F.col("rank") <= k), schemas.ANN_TOPK)
 
 
-#: gemm_near_dup_pairs refuses to collect more than this many vectors to
-#: the driver — above it the distributed blocked_gemm_pairs (the default
-#: via dedup.embedding_near_dups) is the correct path. 2M 64-dim float64
-#: vectors ~= 1 GB broadcast; generous for a local run, far below the
-#: point where the collect itself is the bottleneck.
-MAX_GEMM_COLLECT_ROWS = 2_000_000
-
-
-def gemm_near_dup_pairs(df: DataFrame, id_col: str = "vec_id",
-                        vec_col: str = "embedding",
-                        threshold: float = 0.95) -> DataFrame:
-    """All-pairs cosine >= threshold via blocked GEMM.
-
-    The full (id, vector) set is collected and broadcast once (fits-in-
-    executor-memory contract — at 100 TB you LSH-bucket *first* and run this
-    within buckets); the same DataFrame then streams through mapInPandas,
-    each Arrow batch computing batch x corpus^T with numpy and emitting only
-    the pairs above threshold with canonical id0 > id1 ordering.
-
-    Foot-gun guard: raises when the corpus exceeds MAX_GEMM_COLLECT_ROWS
-    (one cheap count, a measure-then-decide probe) instead of silently
-    flooding the driver —
-    callers at scale should use :func:`blocked_gemm_pairs`, which is
-    exact-identical with no driver collect.
-    """
-    import numpy as np
-
-    n = df.count()
-    if n > MAX_GEMM_COLLECT_ROWS:
-        raise ValueError(
-            f"gemm_near_dup_pairs: corpus has {n} vectors > "
-            f"MAX_GEMM_COLLECT_ROWS={MAX_GEMM_COLLECT_ROWS}; this path "
-            "collects the corpus to the driver. Use blocked_gemm_pairs "
-            "(distributed, same exact output) or LSH-bucket first.")
-    pdf = df.select(F.col(id_col).cast("long").alias("id"), vec_col).toPandas()
-    ids = pdf["id"].to_numpy()
-    mat = _normalized_matrix(pdf, vec_col)
-    sc = df.sparkSession.sparkContext
-    b_ids, b_mat = sc.broadcast(ids), sc.broadcast(mat)
-
-    def pairs(batches):
-        import pandas as pd
-
-        all_ids, m = b_ids.value, b_mat.value
-        for bpdf in batches:
-            if len(bpdf) == 0:
-                continue
-            bid = bpdf["id"].to_numpy()
-            bm = _normalized_matrix(bpdf, vec_col)
-            s = np.round(bm @ m.T, 6)
-            mask = (s >= threshold) & (bid[:, None] > all_ids[None, :])
-            i, j = np.nonzero(mask)
-            if i.size:
-                yield pd.DataFrame({"id0": bid[i], "id1": all_ids[j],
-                                    "cos_sim": s[i, j]})
-
-    out = (df.select(F.col(id_col).cast("long").alias("id"), vec_col)
-           .mapInPandas(pairs, "id0 long, id1 long, cos_sim double"))
-    return schemas.conform(out, schemas.COSINE_PAIR)
-
-
 def blocked_gemm_pairs(df: DataFrame, id_col: str = "vec_id",
                        vec_col: str = "embedding",
                        threshold: float = 0.95,
                        num_blocks: int | None = None,
                        max_block_rows: int = 32768) -> DataFrame:
-    """All-pairs cosine >= threshold via DISTRIBUTED block-pair GEMM — the
-    same exact result as gemm_near_dup_pairs with no driver-side collect
-    at any corpus size.
+    """All-pairs cosine >= threshold via DISTRIBUTED block-pair GEMM —
+    exact, with no driver-side collect at any corpus size.
 
     Each vector is hashed to one of B blocks; every row is replicated B
     times, tagged with the block-pair group it participates in (upper
@@ -295,34 +211,14 @@ def blocked_gemm_pairs(df: DataFrame, id_col: str = "vec_id",
     return schemas.conform(out, schemas.COSINE_PAIR)
 
 
-def hyperplane_signature(df: DataFrame, id_col: str, vec_col: str,
-                         num_planes: int = 8, seed: int = 42,
-                         dims: int | None = None) -> DataFrame:
-    """Sign-bit LSH signature: bucket = sum over planes of sign-bit << p.
-
-    Plane p's component for dimension d is the deterministic integer
-    ``H(seed:p:d) % 2001 - 1000`` (functions.hashing.md5_long semantics,
-    inlined here as a crc-free md5 on a literal string per (p, d) — computed
-    once per plan, constant-folded by Catalyst since the argument is a
-    literal-indexed expression over the array).
-    """
-    # infer dims from schema metadata is unavailable for array<float>; the
-    # caller's data has fixed width — pass ``dims`` to skip the probe, or
-    # sample one row (a tiny driver action, but one Spark job per call —
-    # callers building many signature tables should pass it).
-    if dims is None:
-        dims = _probe_dims(df, vec_col, "hyperplane_signature")
-    return df.select(F.col(id_col).cast("long").alias("id"),
-                     F.col(vec_col).alias("v"),
-                     _bucket_expr(vec_col, num_planes, seed, dims)
-                     .alias("bucket"))
-
-
 def _bucket_expr(vec_col, num_planes: int, seed: int, dims: int):
-    """The sign-bit LSH bucket id as a single Column expression — the
-    signature half of :func:`hyperplane_signature`, shared with the
-    candidate builders so one projection can emit several seeds' buckets
-    side by side (one corpus pass for a whole multi-probe family)."""
+    """The sign-bit LSH bucket id as a single Column expression:
+    bucket = sum over planes of sign-bit << p, where plane p's component
+    for dimension d is the deterministic integer ``H(seed:p:d) % 2001 -
+    1000`` (an md5 of a literal string per (p, d), computed once per
+    plan). Shared by the candidate builders so one projection can emit
+    several seeds' buckets side by side (one corpus pass for a whole
+    multi-probe family)."""
     import hashlib
 
     def comp(p: int, d: int) -> int:

@@ -19,6 +19,8 @@ run verbatim as SQL in the oracle twin.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -30,7 +32,6 @@ __all__ = [
     "url_host",
     "registered_domain",
     "registered_domain_join",
-    "public_suffix_table",
     "url_incremental_dedup",
     "domain_caps",
     "domain_blocklist_filter",
@@ -51,7 +52,7 @@ MULTI_PART_SUFFIXES = (
 # entries (ICANN section; single-label TLDs need no entry — "last two
 # labels" is already the rule there). This is the side table the
 # registered-domain rule is driven by: swap in the full ~9k-entry PSL
-# dump for production (:func:`public_suffix_table` broadcasts it;
+# dump for production (:func:`registered_domain_join` broadcasts it;
 # :func:`registered_domain` folds it into the expression). Includes
 # 3-label entries (``k12.ca.us``-style), which the old seed could not
 # represent. Sorted tuples keyed once at import — a literal table, one
@@ -252,31 +253,16 @@ def registered_domain(host_col: Column,
     return expr.otherwise(last2)
 
 
-def public_suffix_table(spark, suffixes=PUBLIC_SUFFIXES) -> DataFrame:
-    """The multi-part public-suffix table as a DataFrame ``(suffix,
-    n_labels)`` — the broadcast side input :func:`registered_domain_join`
-    consumes. Entries may be literal suffixes (``co.uk``), wildcard
-    rules (``*.ck``), or exception rules (``!www.ck``) — the raw PSL
-    rule strings pass through verbatim (``n_labels`` counts the rule's
-    labels, ``*`` included); only the JOIN spelling interprets the
-    rules. Swap ``suffixes`` for a full PSL dump in production; the
-    vendored :data:`PUBLIC_SUFFIXES` snapshot is the offline default."""
-    rows = [(s, s.lstrip("!").count(".") + 1) for s in sorted(set(suffixes))]
-    return spark.createDataFrame(rows, "suffix string, n_labels int")
-
-
 def registered_domain_join(df: DataFrame, host_col: str,
-                           suffix_table=None,
+                           rules: Sequence[str],
                            out_col: str = "reg_domain") -> DataFrame:
     """Side-table spelling of :func:`registered_domain` for suffix lists
     too large or too dynamic to fold into an expression (the full PSL
     refreshed from upstream): per row, generate the host's label tails,
-    broadcast-join them against the suffix table, and take one more
-    label than the public suffix the PSL rules resolve (no match =
-    plain-TLD default, last two labels). ``suffix_table`` may be the
-    ``(suffix, n_labels)`` DataFrame (collected once — it is a bounded
-    side input) or a plain Python sequence of rule strings (zero plan-
-    build jobs; the spelling of the JOINS is identical either way).
+    broadcast-join them against the PSL ``rules`` (a plain sequence of
+    rule strings — a bounded side input, classified once in Python with
+    zero plan-build jobs), and take one more label than the public suffix
+    the rules resolve (no match = plain-TLD default, last two labels).
 
     Unlike the expression spelling (which loudly rejects them — see
     ``_split_by_depth``), this form implements the FULL PSL rule set:
@@ -290,38 +276,24 @@ def registered_domain_join(df: DataFrame, host_col: str,
 
     Scale shape: one broadcast hash EQUI-join per NON-EMPTY
     depth x kind class (literal-k, wildcard-parent-k, exception-k for
-    every rule depth k the table actually carries — the vendored ICANN
-    snapshot compiles to six; a private-section dump with
+    every rule depth k the rules actually carry — the vendored ICANN
+    snapshot (:data:`casf_spark.operators.psl_data.PSL_ICANN_FULL_RULES`)
+    compiles to six; a private-section dump with
     ``*.compute.amazonaws.com``-style rules simply adds classes; each
     class is distinct-keyed, so every join matches at most once: no row
     multiplication, no dedup aggregation, and the corpus never
     shuffles); joins for empty classes are skipped, and a literal-only
-    2/3-depth table compiles to exactly the two joins this function
-    always had. ``suffix_table=None`` defaults to the vendored full
-    ICANN rule set (:data:`casf_spark.operators.psl_data.PSL_ICANN_FULL_RULES`).
+    2/3-depth list compiles to exactly two joins.
     Output: ``df`` plus ``out_col``. Equivalent to the expression form
-    on literal-only tables — pinned by a property test."""
-    if suffix_table is None:
-        from casf_spark.operators.psl_data import PSL_ICANN_FULL_RULES
-        suffix_table = PSL_ICANN_FULL_RULES
-    # the suffix table is a BOUNDED side input (the full PSL is ~10k
-    # rows — same driver-side contract as the BPE-merge / piece
-    # tables), so classify its rules ONCE in Python: lazy DataFrame
-    # classes would otherwise cost one distinct+isEmpty job per class
-    # per call (measured 1.1 s -> 5.2 s warm at sf0.1 before this)
-    if isinstance(suffix_table, DataFrame):
-        rules = {(r[0], int(r[1])) for r in
-                 suffix_table.select("suffix", "n_labels").collect()}
-    else:
-        rules = {(s, s.lstrip("!").count(".") + 1)
-                 for s in set(suffix_table)}
+    on literal-only lists — pinned by a property test."""
     # classify by (kind, depth) with NO depth ceiling: every rule lands
     # in a class or raises — a silently-dropped rule is a silently
     # wrong reg_domain (the _split_by_depth loud-failure contract)
     lits: dict[int, set] = {}    # rule depth k -> suffixes (ps = k)
     wilds: dict[int, set] = {}   # PARENT depth k -> parents (ps = k+1)
     excs: dict[int, set] = {}    # rule depth k -> labels  (ps = k-1)
-    for s, nl in rules:
+    for s in set(rules):
+        nl = s.lstrip("!").count(".") + 1
         body = s[2:] if s.startswith("*.") else s.lstrip("!")
         if not body or "*" in body or nl < 1 or (s.startswith("!") and nl < 2):
             raise ValueError(f"unsupported PSL rule shape: {s!r}")

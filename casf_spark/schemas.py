@@ -78,13 +78,6 @@ SIMILARITY_VALUE = T.StructType([
 # streaming operators the same way the entity classes pin the cosine core).
 # ------------------------------------------------------------------------- #
 
-# operators.dedup.exact_duplicates: one row per duplicate group
-DUP_GROUP = T.StructType([
-    T.StructField("fingerprint", T.StringType(), False),
-    T.StructField("keep_id", T.LongType(), False),
-    T.StructField("n_dups", T.LongType(), False),
-])
-
 # operators.dedup.dedup_exact: the surviving representative per fingerprint
 DEDUP_KEEP = T.StructType([
     T.StructField("doc_id", T.LongType(), False),
@@ -111,7 +104,7 @@ HAMMING_PAIR = T.StructType([
     T.StructField("hamming", T.IntegerType(), False),
 ])
 
-# operators.dedup.embedding_near_dups / similarity.gemm_near_dup_pairs /
+# operators.dedup.embedding_near_dups / similarity.blocked_gemm_pairs /
 # similarity.lsh_candidates (canonical id0 > id1)
 COSINE_PAIR = T.StructType([
     T.StructField("id0", T.LongType(), False),

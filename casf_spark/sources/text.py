@@ -34,30 +34,6 @@ def read_stopwords(spark: SparkSession, path: str) -> DataFrame:
             .where(F.col("word") != ""))
 
 
-def read_csv(spark: SparkSession, path: str, schema: str | None = None,
-             header: bool = True, delimiter: str = ",") -> DataFrame:
-    """CSV source. Always pass an explicit ``schema`` in production —
-    inference scans the data twice and guesses types per-file, which is both
-    slow and unstable at 100 TB."""
-    r = (spark.read.option("header", str(header).lower())
-         .option("delimiter", delimiter))
-    if schema:
-        r = r.schema(schema)
-    else:
-        r = r.option("inferSchema", "true")
-    return r.csv(path)
-
-
-def read_json(spark: SparkSession, path: str,
-              schema: str | None = None) -> DataFrame:
-    """JSON-lines source; explicit schema recommended (same rationale as
-    CSV). Nested fields arrive as structs/arrays and stay columnar."""
-    r = spark.read
-    if schema:
-        r = r.schema(schema)
-    return r.json(path)
-
-
 def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None,
                   mode: str = "overwrite") -> None:
     """Partitioned parquet sink. ``partition_by`` drives directory layout —
@@ -66,35 +42,6 @@ def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = Non
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
-
-
-def read_parquet_evolving(spark: SparkSession, *paths: str) -> DataFrame:
-    """Read parquet written under an EVOLVING schema (columns added over
-    the table's lifetime): ``mergeSchema`` unions every file footer's
-    schema; files missing a column yield NULLs. This is how a long-lived
-    ingestion directory stays readable after new fields appear — without
-    it Spark samples one footer and silently drops late-added columns.
-    Costs a footer read per file at planning; keep it off (the default)
-    for schema-stable tables."""
-    return spark.read.option("mergeSchema", "true").parquet(*paths)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC source (built into Spark — no external package): columnar like
-    parquet with the same predicate-pushdown / column-pruning behavior;
-    the interchange format warehouse stacks (Hive/Trino) often hand us."""
-    return spark.read.orc(path)
-
-
-def write_orc(df: DataFrame, path: str,
-              partition_by: list[str] | None = None,
-              mode: str = "overwrite") -> None:
-    """Partitioned ORC sink — layout semantics identical to
-    :func:`write_parquet`."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
 
 
 def write_sorted_bucketed_table(df: DataFrame, name: str, bucket_cols: list[str],

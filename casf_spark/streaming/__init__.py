@@ -1,3 +1,3 @@
-from casf_spark.streaming import curation, events, sessions, stateful
+from casf_spark.streaming import curation, events, stateful
 
-__all__ = ["events", "sessions", "curation", "stateful"]
+__all__ = ["events", "curation", "stateful"]

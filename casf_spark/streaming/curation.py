@@ -1,93 +1,23 @@
-"""Streaming corpus curation: micro-batch dedup against a persistent
-fingerprint index — the Structured Streaming twin of
-``operators.dedup.incremental_dedup``.
+"""Micro-batch corpus curation: dedup and frequency sketches replayed
+over an ordered list of ``(batch_id, docs)`` batches, each batch checked
+against the state every earlier batch left behind — the batch-by-batch
+sibling of ``operators.dedup.incremental_dedup``.
 
-A stateful-operator dedup (``dropDuplicatesWithinWatermark``) bounds its
-state by the watermark horizon; a training-corpus index must instead
-remember every fingerprint EVER ingested. That state does not belong in
-the streaming state store — it belongs in a table. ``foreachBatch`` is
-the seam: each micro-batch is a bounded DataFrame, so the full batch
-toolbox (broadcast semi-joins against the index, struct-argmin
-within-batch dedup) applies, and the index is a plain parquet directory
-(swap for Delta/Iceberg MERGE on a real deployment — identical body).
-
-Scale contract (the incremental_dedup orientation): the index is only
-ever FILTERED by a broadcast of the current batch's fingerprints — the
-semi-join residue is proportional to collisions, and the index is never
-shuffled or aggregated at full width no matter how many years of corpus
-it holds.
-
-Exactly-once: survivors and their fingerprints both land in partitions
-keyed by the checkpointed ``batch_id`` with dynamic partition overwrite —
-a replayed batch overwrites its own partitions, and the index read
-EXCLUDES the current batch id so a replay never anti-joins a batch
-against its own previous output.
+The dedup history (band buckets, Bloom words) is only ever joined
+against a BROADCAST of the current batch's keys, so it never shuffles at
+full width; the per-batch loop is over batches (a small count), not
+data.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from casf_spark.functions import text as TX
 
-__all__ = ["dedup_stream_against_index", "near_dedup_stream_against_index",
-           "near_dedup_replay_batches", "bloom_dedup_stream_against_index",
-           "bloom_dedup_replay_batches", "cms_stream_counts",
-           "cms_merged_estimates", "cms_replay_batches",
-           "hist_stream_sketch", "hist_merged_quantiles"]
-
-
-def _index_nonempty(index_dir: str) -> bool:
-    return os.path.isdir(index_dir) and any(
-        name.startswith("_batch_id=") for name in os.listdir(index_dir))
-
-
-def dedup_stream_against_index(docs_stream: DataFrame, index_dir: str,
-                               out_dir: str, checkpoint: str,
-                               id_col: str = "doc_id",
-                               text_col: str = "text",
-                               timeout_sec: int = 120) -> None:
-    """Drive ``docs_stream`` through content-fingerprint dedup against the
-    persistent index at ``index_dir``; survivors (doc, text, fp) append to
-    ``out_dir``, their fingerprints to the index. availableNow trigger
-    (processes all pending input, then stops — cron-style incremental
-    ingest)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        fp = batch_df.select(
-            F.col(id_col).cast("long").alias("doc"),
-            F.col(text_col).alias("text"),
-            TX.fingerprint(text_col).alias("fp"))
-        # within-batch first occurrence: struct-argmin, one aggregation
-        keep = (fp.groupBy("fp")
-                .agg(F.min(F.struct("doc", "text")).alias("_w"))
-                .select("fp", F.col("_w.doc").alias("doc"),
-                        F.col("_w.text").alias("text")))
-        if _index_nonempty(index_dir):
-            seen = (spark.read.parquet(index_dir)
-                    .where(F.col("_batch_id") != batch_id))
-            hit = (seen.join(F.broadcast(keep.select("fp").distinct()), "fp")
-                   .select("fp").distinct())
-            keep = keep.join(F.broadcast(hit), "fp", "left_anti")
-        keep = keep.localCheckpoint()  # evaluate once; two sinks below
-        (keep.select("doc", "text", "fp")
-         .withColumn("_batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("_batch_id").parquet(out_dir))
-        (keep.select("fp").withColumn("_batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("_batch_id").parquet(index_dir))
-
-    q = (docs_stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(timeout_sec)
+__all__ = ["near_dedup_replay_batches", "bloom_dedup_replay_batches",
+           "cms_replay_batches"]
 
 
 def near_dedup_replay_batches(batches: list[tuple[int, DataFrame]],
@@ -95,32 +25,20 @@ def near_dedup_replay_batches(batches: list[tuple[int, DataFrame]],
                               text_col: str = "text",
                               n: int = 2, num_hashes: int = 12,
                               bands: int = 4, seed: int = 42) -> DataFrame:
-    """BATCH TWIN of :func:`near_dedup_stream_against_index`: replay the
-    exact per-micro-batch sink semantics over an explicit ordered list of
-    ``(batch_id, docs_df)`` pairs with plain DataFrames instead of the
-    parquet index/checkpoint machinery, and return the final corpus end
-    state — (doc, batch_id, fp) for every surviving document.
+    """Near-duplicate dedup of ordered ``(batch_id, docs_df)`` batches
+    against a MinHash band-bucket index of all earlier batches; returns
+    the end state (doc, batch_id, fp) of every surviving document.
 
-    This is the driver-visible contract row for the streaming operator:
-    the foreachBatch pipeline itself writes side state to disk (index +
-    checkpoint dirs), which is not hermetic for an oracle harness that
-    re-runs queries, so the END STATE is pinned here and
-    tests/test_streaming.py asserts the real availableNow stream produces
-    exactly this output on the same batch split.
-
-    Rules replayed verbatim from the sink (see ``sink`` above):
+    Per batch:
       * within-batch exact dedup: min (doc, text) struct per content
         fingerprint;
       * history drop: any band bucket already in the index (keepers of
         all PRIOR batches only);
       * within-batch star rule: drop docs sharing a bucket with a
         smaller exact-surviving doc id — computed over exact survivors
-        BEFORE history drops, exactly like the sink's ``bmin``;
+        BEFORE history drops (the contraction ``minhash_lsh_star_edges``
+        uses);
       * survivors' buckets (and only theirs) extend the index.
-
-    Scale shape is the sink's: history buckets are only ever joined
-    against the current batch's bucket set, and the per-batch loop is
-    over MICRO-BATCHES (a bounded, small count), not data.
     """
     from casf_spark.operators.dedup import _band_buckets, _band_keys
 
@@ -164,158 +82,22 @@ def near_dedup_replay_batches(batches: list[tuple[int, DataFrame]],
     return out
 
 
-def near_dedup_stream_against_index(docs_stream: DataFrame, index_dir: str,
-                                    out_dir: str, checkpoint: str,
-                                    id_col: str = "doc_id",
-                                    text_col: str = "text",
-                                    n: int = 2, num_hashes: int = 12,
-                                    bands: int = 4, seed: int = 42,
-                                    timeout_sec: int = 120) -> None:
-    """NEAR-duplicate streaming dedup against a persistent MinHash
-    band-bucket index — the near-dup sibling of
-    :func:`dedup_stream_against_index` (which is exact-only).
-
-    Per micro-batch: exact within-batch argmin on the content
-    fingerprint, then MinHash band buckets; a doc is dropped if any of
-    its buckets already exists in the index (near-dup vs ALL history),
-    or if a smaller surviving doc id in the SAME batch shares a bucket
-    (the star-representative rule — same contraction
-    ``minhash_lsh_star_edges`` uses; chains contract to their bucket
-    minimum). Survivors' buckets append to the index.
-
-    Same scale contract as the exact variant: the index is only ever
-    semi-joined against a BROADCAST of the current batch's bucket set —
-    history never shuffles at full width, residue ∝ collisions. Same
-    replay safety: batch-id partitions + dynamic overwrite, index read
-    excludes the current batch id.
-    """
-    from casf_spark.operators.dedup import _band_buckets, _band_keys
-
-    keys = _band_keys(num_hashes, bands)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        base = batch_df.select(
-            F.col(id_col).cast("long").alias("doc"),
-            F.col(text_col).alias("text"),
-            TX.fingerprint(text_col).alias("fp"))
-        keep = (base.groupBy("fp")
-                .agg(F.min(F.struct("doc", "text")).alias("_w"))
-                .select("fp", F.col("_w.doc").alias("doc"),
-                        F.col("_w.text").alias("text")))
-        nb = _band_buckets(keep.select("doc", "text"), "doc", "text",
-                           n, num_hashes, bands, seed)
-        nb = nb.localCheckpoint()
-        drop = None
-        if _index_nonempty(index_dir):
-            seen = (spark.read.parquet(index_dir)
-                    .where(F.col("_batch_id") != batch_id)
-                    .select(*keys))
-            hit = (seen.join(
-                F.broadcast(nb.select(*keys).distinct()),
-                keys).select(*keys).distinct())
-            drop = (nb.join(F.broadcast(hit), keys)
-                    .select("doc").distinct())
-        # within-batch star rule: drop docs sharing a bucket with a
-        # smaller surviving doc
-        bmin = nb.groupBy(*keys).agg(F.min("doc").alias("mn"))
-        intra = (nb.join(bmin, keys)
-                 .where(F.col("doc") > F.col("mn"))
-                 .select("doc").distinct())
-        drop = intra if drop is None else drop.unionByName(intra).distinct()
-        keep = keep.join(F.broadcast(drop), "doc", "left_anti")
-        keep = keep.localCheckpoint()
-        (keep.select("doc", "text", "fp")
-         .withColumn("_batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("_batch_id").parquet(out_dir))
-        (nb.join(F.broadcast(keep.select("doc")), "doc")
-         .select(*keys)
-         .withColumn("_batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("_batch_id").parquet(index_dir))
-
-    q = (docs_stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(timeout_sec)
-
-
-def bloom_dedup_stream_against_index(docs_stream: DataFrame,
-                                     index_dir: str, out_dir: str,
-                                     checkpoint: str,
-                                     id_col: str = "doc_id",
-                                     text_col: str = "text",
-                                     m_bits: int = 1 << 16, k: int = 4,
-                                     timeout_sec: int = 120) -> None:
-    """Bloom-gated streaming dedup — :func:`dedup_stream_against_index`
-    with the history compressed to a FIXED-size bitmap (the Dolma-BFF
-    shape in micro-batch form). The index directory stores each batch's
-    Bloom WORDS (word_idx, bits), <= m_bits/63 rows per batch; probing
-    re-aggregates them bit_or (word-grain, tiny) and tests the batch's
-    normalized-text hashes with k broadcast joins — map-only, so a batch
-    never shuffles against years of history, and the history costs
-    O(m) storage TOTAL regardless of corpus size.
-
-    The tradeoff is explicit: a Bloom false positive DROPS a genuinely
-    novel document (rate ~ (1-e^{-kn/m})^k — size m to the expected
-    corpus); there are no false negatives, so every true duplicate is
-    dropped. Within-batch dedup stays exact (fingerprint struct-argmin).
-    Replay-idempotent like the exact-index variant: survivors and words
-    land in batch-id partitions with dynamic overwrite, and the index
-    read excludes the current batch id.
-    """
-    from casf_spark.operators.sketches import bloom_build, bloom_probe
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        fp = batch_df.select(
-            F.col(id_col).cast("long").alias("doc"),
-            F.col(text_col).alias("text"),
-            TX.fingerprint(text_col).alias("fp"))
-        keep = (fp.groupBy("fp")
-                .agg(F.min(F.struct("doc", "text")).alias("_w"))
-                .select("fp", F.col("_w.doc").alias("doc"),
-                        F.col("_w.text").alias("text")))
-        if _index_nonempty(index_dir):
-            words = (spark.read.parquet(index_dir)
-                     .where(F.col("_batch_id") != batch_id)
-                     .groupBy("word_idx")
-                     .agg(F.bit_or("bits").alias("bits")))
-            probed = bloom_probe(keep, TX.normalize_text(F.col("text")),
-                                 words, m_bits=m_bits, k=k)
-            keep = probed.where(~F.col("maybe_seen")).drop("maybe_seen")
-        keep = keep.localCheckpoint()  # evaluate once; two sinks below
-        (keep.select("doc", "text", "fp")
-         .withColumn("_batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("_batch_id").parquet(out_dir))
-        (bloom_build(keep, TX.normalize_text(F.col("text")),
-                     m_bits=m_bits, k=k)
-         .withColumn("_batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("_batch_id").parquet(index_dir))
-
-    q = (docs_stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(timeout_sec)
-
-
 def bloom_dedup_replay_batches(batches: list[tuple[int, DataFrame]],
                                id_col: str = "doc_id",
                                text_col: str = "text",
                                m_bits: int = 1 << 16,
                                k: int = 4) -> DataFrame:
-    """BATCH TWIN of :func:`bloom_dedup_stream_against_index`: replay the
-    exact per-micro-batch sink semantics over ordered (batch_id, docs)
-    pairs with in-memory word tables, returning the end state (doc,
-    batch_id, fp) of every surviving document — the hermetic contract
-    the stream test asserts equality against."""
+    """Bloom-gated exact dedup of ordered ``(batch_id, docs)`` batches:
+    each batch drops the documents whose normalized text finds all k of
+    its bits already set in the FIXED-size bitmap built from earlier
+    batches' keepers (the Dolma-BFF shape), after an exact within-batch
+    fingerprint argmin. Returns the end state (doc, batch_id, fp) of
+    every survivor.
+
+    A Bloom false positive drops a genuinely novel document (rate
+    ~ (1-e^{-kn/m})^k — size m to the expected corpus); there are no
+    false negatives, so every true duplicate is dropped.
+    """
     from casf_spark.operators.sketches import bloom_build, bloom_probe
 
     words_acc: DataFrame | None = None
@@ -346,63 +128,14 @@ def bloom_dedup_replay_batches(batches: list[tuple[int, DataFrame]],
     return out
 
 
-def cms_stream_counts(docs_stream: DataFrame, index_dir: str,
-                      checkpoint: str, text_col: str = "text",
-                      width: int = 256, depth: int = 4, seed: int = 11,
-                      timeout_sec: int = 120) -> None:
-    """Streaming Count-Min maintenance — the frequency-monitoring
-    counterpart of :func:`bloom_dedup_stream_against_index`: each
-    micro-batch's token occurrences collapse to a ``depth x width``
-    cell table (operators.sketches.cms_build — the batch never ships
-    its vocabulary) that lands in a batch-id partition of the index;
-    the LIVE sketch at any moment is the cell-wise SUM across
-    partitions, exactly the mergeable-summaries property CM sketches
-    are built for. Storage is O(depth·width) per batch regardless of
-    batch size; replay-idempotent via dynamic partition overwrite
-    (re-running a batch id overwrites its own partition only).
-    """
-    from casf_spark.operators.sketches import cms_build
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        toks = batch_df.select(
-            F.explode(TX.tokens(F.coalesce(F.col(text_col), F.lit(""))))
-            .alias("item"))
-        (cms_build(toks, "item", width=width, depth=depth, seed=seed)
-         .withColumn("_batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("_batch_id").parquet(index_dir))
-
-    q = (docs_stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(timeout_sec)
-
-
-def cms_merged_estimates(spark, index_dir: str, queries_df: DataFrame,
-                         item_col: str = "item", width: int = 256,
-                         depth: int = 4, seed: int = 11) -> DataFrame:
-    """Point-query the LIVE merged sketch a :func:`cms_stream_counts`
-    run has accumulated: cell-wise SUM across batch partitions, then
-    the map-only probe (operators.sketches.cms_estimate)."""
-    from casf_spark.operators.sketches import cms_estimate
-
-    merged = (spark.read.parquet(index_dir)
-              .groupBy("row_idx", "col_idx")
-              .agg(F.sum("cnt").cast("long").alias("cnt")))
-    return cms_estimate(queries_df, item_col, merged,
-                        width=width, depth=depth, seed=seed)
-
-
 def cms_replay_batches(batches: list, queries_df: DataFrame,
                        item_col: str = "item", text_col: str = "text",
                        width: int = 256, depth: int = 4,
                        seed: int = 11) -> DataFrame:
-    """BATCH TWIN of :func:`cms_stream_counts`: per-batch sketches
-    merged by cell-wise sum, then point-queried — the hermetic contract
-    the stream test asserts equality against. Because counter sums
-    commute, the merged sketch is BIT-IDENTICAL to one built over the
-    concatenated corpus: the oracle proves the mergeability property,
+    """Count-Min over ordered batches: per-batch ``depth x width``
+    sketches merged by cell-wise sum, then point-queried. Because counter
+    sums commute, the merged sketch is BIT-IDENTICAL to one built over
+    the concatenated corpus: the oracle checks the mergeability property,
     and any error in the per-batch build or the merge flips the hash.
     """
     from casf_spark.operators.sketches import cms_build, cms_estimate
@@ -421,50 +154,3 @@ def cms_replay_batches(batches: list, queries_df: DataFrame,
     return cms_estimate(queries_df, item_col, merged,
                         width=width, depth=depth, seed=seed)
 
-
-def hist_stream_sketch(values_stream: DataFrame, index_dir: str,
-                       checkpoint: str, value_col: str = "value",
-                       lo: float = 0.0, hi: float = 500.0,
-                       n_bins: int = 1000,
-                       timeout_sec: int = 120) -> None:
-    """Streaming histogram-quantile-sketch maintenance — the quantile
-    counterpart of :func:`cms_stream_counts` (the same
-    mergeable-summaries shape): each micro-batch collapses to its
-    ``(bin, cnt)`` cell table (operators.sketches.hist_sketch_build —
-    the batch never ships rows) landing in a batch-id partition; the
-    LIVE sketch is the cell-wise SUM across partitions, so a p99
-    monitor over a continuously-ingesting column costs O(bins) per
-    refresh forever. Storage O(n_bins) per batch regardless of batch
-    size; replay-idempotent via dynamic partition overwrite.
-    """
-    from casf_spark.operators.sketches import hist_sketch_build
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (hist_sketch_build(batch_df, value_col, lo, hi, n_bins)
-         .withColumn("_batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("_batch_id").parquet(index_dir))
-
-    q = (values_stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(timeout_sec)
-
-
-def hist_merged_quantiles(spark, index_dir: str, qs,
-                          lo: float = 0.0, hi: float = 500.0,
-                          n_bins: int = 1000) -> DataFrame:
-    """Quantile estimates off the LIVE merged sketch a
-    :func:`hist_stream_sketch` run has accumulated: cell-wise SUM
-    across batch partitions (operators.sketches.hist_sketch_merge),
-    then the closed-form nearest-rank read — by counter-sum
-    commutativity the result equals a single whole-corpus build
-    exactly (the events_quantile_sketch oracle contract), pinned
-    against the real stream by test_streaming."""
-    from casf_spark.operators.sketches import (hist_sketch_merge,
-                                               hist_sketch_quantiles)
-
-    sk = hist_sketch_merge(
-        spark.read.parquet(index_dir).select("bin", "cnt"))
-    return hist_sketch_quantiles(sk, qs, lo, hi, n_bins)

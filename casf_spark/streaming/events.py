@@ -1,85 +1,39 @@
-"""Structured Streaming over the events table (SURVEY.md §7 phase E).
-
-The reference is batch-only (SURVEY.md §2.9); these are additive, built
-entirely on Structured Streaming built-ins: watermarked tumbling/sliding
-window aggregations, plus batch twins with identical semantics so the
-driver's DuckDB oracle can check the logic (the streaming path itself is
-exercised in tests with an availableNow trigger over the same parquet).
+"""Event-time window aggregations over the events table (SURVEY.md §7
+phase E): tumbling, sliding and gap-based session windows, built on
+Spark's ``window`` / ``session_window`` built-ins.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from casf_spark import schemas
 
 
-def read_events_stream(spark: SparkSession, sf_dir: str,
-                       max_files_per_trigger: int = 1) -> DataFrame:
-    """Replay the events parquet as a stream. Schema is pinned from the
-    batch read (readStream requires a user-supplied schema for files); `ts`
-    is normalized to a micros timestamp whichever encoding the parquet
-    carries, mirroring sources.tables.load_table."""
-    import os
-    import tempfile
-
-    from casf_spark.sources.tables import normalize_ts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # FileStreamSource requires a *directory* source; stage the single file
-    # as a symlink in a temp dir (no data copy). Real deployments stream
-    # from a landing directory or Kafka, so this shim is test-only plumbing.
-    stage = tempfile.mkdtemp(prefix="casf_events_stream_")
-    os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"),
-               f"{stage}/events.parquet")
-    raw = (spark.readStream.schema(schema)
-           .option("maxFilesPerTrigger", max_files_per_trigger)
-           .parquet(stage))
-    out = raw.withColumn("ts", normalize_ts(schema["ts"].dataType))
-    # mirror load_table's props normalization (struct-encoded generations)
-    from pyspark.sql.types import StringType
-    if "props" in out.columns and not isinstance(
-            schema["props"].dataType, StringType):
-        out = out.withColumn("props", F.to_json("props"))
-    return out
-
-
-def tumbling_counts(events: DataFrame, window: str = "1 hour",
-                    watermark: str = "2 hours") -> DataFrame:
-    """Per-event-type tumbling-window counts + value sum with a watermark
-    for late data. Works on both batch and streaming DataFrames."""
-    src = events
-    if events.isStreaming:
-        src = events.withWatermark("ts", watermark)
+def tumbling_counts(events: DataFrame, window: str = "1 hour") -> DataFrame:
+    """Per-event-type tumbling-window counts + value sum."""
     out = (
-        src.groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.groupBy(F.window("ts", window).alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"),
              F.round(F.sum("value"), 6).alias("sum_value"))
         .select(F.col("w.start").alias("window_start"), "event_type",
                 "n_events", "sum_value")
     )
-    # conform works on streaming frames too (pure select/cast projection)
     return schemas.conform(out, schemas.EVENT_WINDOW_COUNTS)
 
 
-def session_window_counts(events: DataFrame, gap: str = "30 minutes",
-                          watermark: str = "2 hours") -> DataFrame:
+def session_window_counts(events: DataFrame,
+                          gap: str = "30 minutes") -> DataFrame:
     """Gap-based sessionization via Spark's built-in ``session_window``
     (dynamic merging windows: an event extends its session while it
-    lands strictly within `gap` of the previous one). Works on both
-    batch and streaming frames; when streaming, the watermark both
-    finalizes sessions (append mode) and evicts their state — per-key
-    state is one open session, not the event history.
+    lands strictly within `gap` of the previous one).
 
     Output: user_id, start_us / end_us (epoch micros; end = last event
     + gap), n_events, sum_value.
     """
-    src = events
-    if events.isStreaming:
-        src = events.withWatermark("ts", watermark)
-    return (src.groupBy("user_id", F.session_window("ts", gap).alias("sw"))
+    return (events.groupBy("user_id",
+                           F.session_window("ts", gap).alias("sw"))
             .agg(F.count(F.lit(1)).cast("long").alias("n_events"),
                  F.round(F.sum("value"), 6).alias("sum_value"))
             .select("user_id",
@@ -89,181 +43,13 @@ def session_window_counts(events: DataFrame, gap: str = "30 minutes",
 
 
 def sliding_counts(events: DataFrame, window: str = "1 hour",
-                   slide: str = "30 minutes",
-                   watermark: str = "2 hours") -> DataFrame:
+                   slide: str = "30 minutes") -> DataFrame:
     """Sliding-window event counts (each event lands in window/slide rows)."""
-    src = events
-    if events.isStreaming:
-        src = events.withWatermark("ts", watermark)
     out = (
-        src.groupBy(F.window("ts", window, slide).alias("w"), "event_type")
+        events.groupBy(F.window("ts", window, slide).alias("w"),
+                       "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("window_start"), "event_type",
                 "n_events")
     )
     return schemas.conform(out, schemas.EVENT_SLIDING_COUNTS)
-
-
-def clicks_before_purchases(events: DataFrame, max_gap: str = "1 hour",
-                            watermark: str = "2 hours") -> DataFrame:
-    """Stream-stream (self-)join: every purchase paired with the same
-    user's clicks in the preceding ``max_gap`` — the streaming attribution
-    twin of the batch as-of join (operators.joins.asof_join), except it
-    keeps ALL qualifying clicks (streaming cannot know "the latest" until
-    the watermark closes; a downstream ranked pick can follow).
-
-    State-bounded by construction: both sides carry watermarks and the
-    join condition bounds click_ts to [purchase_ts - max_gap, purchase_ts],
-    so the state store evicts rows once the watermark passes their
-    horizon — the REQUIRED shape for unbounded stream-stream inner joins
-    (an unconstrained join would buffer both streams forever). Works
-    identically on batch frames (no watermark, same join).
-    """
-    purchases = (events.where(F.col("event_type") == "purchase")
-                 .select("event_id", "user_id", "ts"))
-    clicks = (events.where(F.col("event_type") == "click")
-              .select(F.col("event_id").alias("click_id"),
-                      F.col("user_id").alias("click_user"),
-                      F.col("ts").alias("click_ts")))
-    if events.isStreaming:
-        purchases = purchases.withWatermark("ts", watermark)
-        clicks = clicks.withWatermark("click_ts", watermark)
-    cond = (
-        (purchases["user_id"] == clicks["click_user"])
-        & (clicks["click_ts"] <= purchases["ts"])
-        & (clicks["click_ts"] >= F.expr(f"ts - INTERVAL {max_gap}"))
-    )
-    return (purchases.join(clicks, cond)
-            .select("event_id", "user_id", "ts", "click_id", "click_ts"))
-
-
-def enrich_with_dimension(events: DataFrame, dim: DataFrame,
-                          key: str = "user_id") -> DataFrame:
-    """Stream-static join: enrich each event with its dimension row (user
-    segment, account tier, ...). The static side is broadcast per
-    micro-batch — no watermark, NO state store involvement (only
-    stream-stream joins buffer state); a dimension refresh is picked up on
-    the next micro-batch because the static plan re-executes per trigger.
-    Left join so events without a dimension row survive with nulls — an
-    inner join would silently drop late-registered users. Works
-    identically on batch frames.
-    """
-    return events.join(F.broadcast(dim), key, "left")
-
-
-def dedup_stream(events: DataFrame, key_cols: list[str],
-                 watermark: str = "2 hours") -> DataFrame:
-    """Streaming exact dedup: keep the first row per key, drop re-deliveries
-    — the streaming twin of operators.dedup.dedup_exact for an ingest
-    pipeline (e.g. re-crawled documents keyed by content fingerprint).
-
-    State is BOUNDED by the watermark: ``dropDuplicatesWithinWatermark``
-    evicts a key's dedup state once the watermark passes its event time,
-    so memory tracks (keys seen per watermark horizon), not stream
-    lifetime — the only formulation that survives an unbounded 100 TB/day
-    stream. Duplicates arriving later than the watermark horizon are NOT
-    caught (by design — pair with a periodic batch dedup_exact compaction
-    for the long tail). Batch input degrades to plain dropDuplicates.
-    """
-    if not events.isStreaming:
-        return events.dropDuplicates(key_cols)
-    return (events.withWatermark("ts", watermark)
-            .dropDuplicatesWithinWatermark(key_cols))
-
-
-def run_stream_append_to_memory(stream_df: DataFrame, query_name: str,
-                                timeout_sec: int = 120) -> None:
-    """Like run_stream_to_memory but append output mode (row-wise
-    operators: dedup, filters, maps — no complete-mode aggregation)."""
-    q = (stream_df.writeStream.format("memory").queryName(query_name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(timeout_sec)
-
-
-def write_stream_parquet(stream_df: DataFrame, path: str,
-                         checkpoint: str, timeout_sec: int = 120) -> None:
-    """foreachBatch parquet sink: each micro-batch appends atomically;
-    exactly-once via the checkpointed batch id (re-delivered batches
-    overwrite their own partition directory). Demonstrates the custom-sink
-    seam a warehouse upsert (MERGE INTO / Delta) would use."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df.withColumn("_batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("_batch_id")
-         .parquet(path))
-
-    q = (stream_df.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(timeout_sec)
-
-
-def run_stream_to_memory(stream_df: DataFrame, query_name: str,
-                         timeout_sec: int = 120) -> None:
-    """Drive a streaming aggregation to completion with availableNow (test
-    helper): processes all currently-available input then stops."""
-    q = (stream_df.writeStream.format("memory").queryName(query_name)
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(timeout_sec)
-
-
-def write_stream_upsert(stream_df: DataFrame, path: str, checkpoint: str,
-                        key_cols: list[str], timeout_sec: int = 120) -> None:
-    """MERGE-style keyed upsert sink via foreachBatch: each micro-batch's
-    rows replace the stored rows with the same key (last write wins), so an
-    update-mode streaming aggregation materializes to exactly its batch-twin
-    result.
-
-    Storage is a snapshot directory (``path/current``) swapped atomically by
-    rename per batch — correct and idempotent on batch replay (re-merging
-    the same batch reproduces the same snapshot, the checkpointed batch id
-    guarantees ordering). This is the demo-grade stand-in for a table
-    format's MERGE INTO; on object stores use Delta/Iceberg with the
-    identical foreachBatch body.
-    """
-    import os
-    import shutil
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        cur = os.path.join(path, "current")
-        batch = batch_df.dropDuplicates(key_cols)
-        base = cur
-        if not os.path.exists(cur):
-            # crash recovery: a death BETWEEN the two renames below
-            # leaves no 'current' but a _retired_<id> dir holding the
-            # entire pre-crash history. The old code rebuilt from the
-            # replayed batch alone and then rmtree'd that dir — every
-            # key not in the batch was silently and permanently lost.
-            retired = sorted(
-                (d for d in os.listdir(path)
-                 if d.startswith("_retired_")),
-                key=lambda d: int(d.rsplit("_", 1)[1])
-            ) if os.path.isdir(path) else []
-            base = os.path.join(path, retired[-1]) if retired else None
-        if base is not None and os.path.exists(base):
-            existing = spark.read.parquet(base)
-            keep = existing.join(batch.select(*key_cols).distinct(),
-                                 key_cols, "left_anti")
-            merged = keep.unionByName(batch)
-        else:
-            merged = batch
-        tmp = os.path.join(path, f"_staging_{batch_id}")
-        merged.write.mode("overwrite").parquet(tmp)
-        old = os.path.join(path, f"_retired_{batch_id}")
-        if os.path.exists(cur):
-            os.rename(cur, old)
-        os.rename(tmp, cur)
-        # only AFTER the new current is in place: clear every retired
-        # snapshot (including any left by a recovered crash)
-        for d in os.listdir(path):
-            if d.startswith("_retired_"):
-                shutil.rmtree(os.path.join(path, d))
-
-    q = (stream_df.writeStream.foreachBatch(sink)
-         .outputMode("update")
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(timeout_sec)

@@ -1,149 +1,24 @@
-"""Arbitrary stateful processing via transformWithStateInPandas — the
-Spark 4 successor to ``applyInPandasWithState`` (used by
-streaming.sessions). Typed per-key state handles (value/list/map state),
-explicit time modes and timers, Arrow-batched user code.
-
-Operator: per-user lifetime rolling stats (event count, value sum, max)
-maintained across micro-batches — the feature-store shape where a keyed
-aggregate must survive beyond any window/watermark horizon. State per
-key is one fixed-size tuple (bounded by key cardinality, not stream
-length); updates emit one row per key per batch (Update mode).
-"""
+"""Per-user lifetime rolling stats (event count, value sum, max): the
+keyed aggregate a stateful stream converges to once drained, computed
+in batch as one hash aggregation."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-from pyspark.sql.types import (DoubleType, LongType, StructField, StructType)
-
-STATE_SCHEMA = StructType([
-    StructField("n", LongType()),
-    StructField("total", DoubleType()),
-    StructField("mx", DoubleType()),
-])
-
-OUTPUT_SCHEMA = StructType([
-    StructField("user_id", LongType()),
-    StructField("n_events", LongType()),
-    StructField("total_value", DoubleType()),
-    StructField("max_value", DoubleType()),
-])
-
-
-class UserLifetimeStats(StatefulProcessor):
-    """ValueState-backed running (count, sum, max) per user."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState("agg", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd
-
-        if self._state.exists():
-            n, total, mx = self._state.get()
-        else:
-            n, total, mx = 0, 0.0, float("-inf")
-        for pdf in rows:
-            if len(pdf):
-                # NULL-clean: count every row, but fold only non-NULL
-                # values — a NaN must never poison the max (Python's
-                # max(-inf, nan) is order-dependent) and SQL SUM/MAX
-                # skip NULLs, which the batch twin mirrors.
-                n += len(pdf)
-                vals = pdf["value"].dropna()
-                if len(vals):
-                    total += float(vals.sum())
-                    mx = max(mx, float(vals.max()))
-        self._state.update((n, float(total), float(mx)))
-        yield pd.DataFrame({
-            "user_id": [key[0]],
-            "n_events": [n],
-            "total_value": [round(total, 6)],
-            "max_value": [None if mx == float("-inf") else round(mx, 6)],
-        })
-
-    def close(self) -> None:
-        pass
-
-
-def _has_tws_runtime() -> bool:
-    """transformWithStateInPandas drives its state server over protobuf;
-    absent from this container. Gate, don't crash mid-stream."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-def user_lifetime_stats(events: DataFrame, api: str = "auto") -> DataFrame:
-    """Apply the processor; works on streaming frames (Update mode — each
-    batch re-emits the keys it touched with their lifetime totals).
-
-    ``api``: ``"tws"`` = transformWithStateInPandas (requires protobuf in
-    the Python workers), ``"apply"`` = the applyInPandasWithState
-    equivalent (same state tuple, same output), ``"auto"`` = tws when its
-    runtime is present, else apply. Both are watermark-free keyed state
-    bounded by key cardinality.
-    """
-    if api == "auto":
-        api = "tws" if _has_tws_runtime() else "apply"
-    src = events.select("user_id", "value")
-    if api == "tws":
-        return (src.groupBy("user_id")
-                .transformWithStateInPandas(UserLifetimeStats(),
-                                            outputStructType=OUTPUT_SCHEMA,
-                                            outputMode="Update",
-                                            timeMode="None"))
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def fold(key, pdfs, state):
-        import pandas as pd
-
-        if state.exists:
-            n, total, mx = state.get
-        else:
-            n, total, mx = 0, 0.0, float("-inf")
-        for pdf in pdfs:
-            if len(pdf):
-                n += len(pdf)
-                vals = pdf["value"].dropna()
-                if len(vals):
-                    total += float(vals.sum())
-                    mx = max(mx, float(vals.max()))
-        state.update((n, float(total), float(mx)))
-        yield pd.DataFrame({
-            "user_id": [key[0]],
-            "n_events": [n],
-            "total_value": [round(total, 6)],
-            "max_value": [None if mx == float("-inf") else round(mx, 6)],
-        })
-
-    return (src.groupBy("user_id")
-            .applyInPandasWithState(fold, OUTPUT_SCHEMA, STATE_SCHEMA,
-                                    "update", GroupStateTimeout.NoTimeout))
+from pyspark.sql import functions as F
 
 
 def user_lifetime_stats_batch(events: DataFrame) -> DataFrame:
-    """BATCH TWIN of :func:`user_lifetime_stats`'s END STATE: the lifetime
-    per-user (count, sum, max) a fully-drained stream converges to — one
-    hash aggregation. This is the driver-visible contract row for the
-    stateful operator (the streaming run itself needs a state store and
-    Update-mode sink the oracle harness can't replay);
-    tests/test_stateful_lifetime.py asserts the real multi-batch stream's
-    final emission per key equals this, including on NULL-bearing input.
+    """The lifetime per-user (count, sum, max) a fully-drained stateful
+    stream converges to — one hash aggregation, the engine of the
+    stream_lifetime_state query.
 
-    NULL/NaN contract (mirrors the processor, whose pandas ``dropna``
-    removes BOTH): n_events counts every row; total_value/max_value fold
-    only non-NULL, non-NaN values (0.0 total when none); max_value is
+    NULL/NaN contract: n_events counts every row; total_value/max_value
+    fold only non-NULL, non-NaN values (0.0 total when none); max_value is
     NULL when a user never saw a foldable value. Without the explicit
-    NaN mask here, SQL SUM/MAX would skip only NULL — and Spark's MAX
-    orders NaN above every number — so one NaN would silently split the
-    stream from its twin.
+    NaN mask, SQL SUM/MAX would skip only NULL — and Spark's MAX orders
+    NaN above every number — so one NaN would poison both.
     """
-    from pyspark.sql import functions as F
-
     v = F.when(F.col("value").isNotNull() & ~F.isnan("value"),
                F.col("value"))
     return (events.groupBy(F.col("user_id").cast("long").alias("user_id"))

@@ -38,8 +38,6 @@ def assert_conforms(df, contract):
 
 
 def test_dedup_contracts(docs):
-    assert_conforms(dedup.exact_duplicates(docs, "doc_id", "text"),
-                    schemas.DUP_GROUP)
     assert_conforms(dedup.dedup_exact(docs, "doc_id", "text"),
                     schemas.DEDUP_KEEP)
     assert_conforms(dedup.ngram_jaccard_pairs(docs, "doc_id", "text"),
@@ -51,16 +49,13 @@ def test_dedup_contracts(docs):
     assert_conforms(dedup.embedding_near_dups(
         docs.sparkSession.createDataFrame(
             [(1, [1.0, 0.0]), (2, [1.0, 0.01])],
-            "vec_id long, embedding array<float>"),
-        method="expr"), schemas.COSINE_PAIR)
+            "vec_id long, embedding array<float>")), schemas.COSINE_PAIR)
 
 
 def test_similarity_contracts(emb):
-    assert_conforms(similarity.brute_force_topk(emb, emb, k=2, method="expr"),
+    assert_conforms(similarity.brute_force_topk(emb, emb, k=2),
                     schemas.ANN_TOPK)
-    assert_conforms(similarity.brute_force_topk(emb, emb, k=2, method="gemm"),
-                    schemas.ANN_TOPK)
-    assert_conforms(similarity.gemm_near_dup_pairs(emb, threshold=0.9),
+    assert_conforms(similarity.blocked_gemm_pairs(emb, threshold=0.9),
                     schemas.COSINE_PAIR)
     assert_conforms(similarity.lsh_candidates(emb), schemas.COSINE_PAIR)
     assert_conforms(similarity.ivf_topk(emb, emb, k=2, n_centroids=2),

@@ -52,23 +52,20 @@ def test_pii_counts_and_redaction(spark):
         (2, "server 10.0.0.1 called +49 171 5551234"),
         (3, "clean text only"),
     ])
-    counts = {r["doc"]: r.asDict()
-              for r in CU.pii_features(df, "doc_id", "text").collect()}
-    assert counts[1]["n_email"] == 2
-    assert counts[2]["n_ipv4"] == 1 and counts[2]["n_phone"] == 1
-    assert all(counts[3][k] == 0 for k in ("n_email", "n_phone", "n_ipv4"))
-
-    red = {r["doc"]: r["text"]
-           for r in CU.redact_pii(df, "doc_id", "text").collect()}
-    assert red[1] == "mail <PII> and <PII> end"
-    assert red[2] == "server <PII> called <PII>"
-    assert red[3] == "clean text only"
+    rep = {r["doc"]: r.asDict()
+           for r in CU.pii_scrub_report(df, "doc_id", "text").collect()}
+    assert rep[1]["n_email"] == 2
+    assert rep[2]["n_ipv4"] == 1 and rep[2]["n_phone"] == 1
+    assert all(rep[3][k] == 0 for k in ("n_email", "n_phone", "n_ipv4"))
+    assert rep[1]["redacted"] == "mail <PII> and <PII> end"
+    assert rep[2]["redacted"] == "server <PII> called <PII>"
+    assert rep[3]["redacted"] == "clean text only"
 
 
 def test_redacted_text_has_no_remaining_matches(spark):
     df = _docs(spark, [(1, "a@b.com 1.2.3.4 +12 345 6789 a@b.com")])
-    red = CU.redact_pii(df, "doc_id", "text")
-    counts = CU.pii_features(red, "doc", "text").collect()[0]
+    red = CU.pii_scrub_report(df, "doc_id", "text")
+    counts = CU.pii_scrub_report(red, "doc", "redacted").collect()[0]
     assert counts["n_email"] == 0
     assert counts["n_ipv4"] == 0
     assert counts["n_phone"] == 0
@@ -1018,9 +1015,8 @@ def test_unigram_lm_segment_join_path_matches_broadcast(spark):
 
 def test_boilerplate_lines_threshold_and_floor(spark):
     """Detection: >= min_frac of the group's docs AND >= min_docs;
-    under-threshold and under-floor lines survive the strip."""
-    from casf_spark.operators.curation import (boilerplate_lines,
-                                               boilerplate_strip)
+    under-threshold and under-floor lines are not reported."""
+    from casf_spark.operators.curation import boilerplate_lines
 
     rows = []
     # domain A: 4 docs; 'hdr' in all 4 (boiler), 'promo' in 1 (kept)
@@ -1035,14 +1031,6 @@ def test_boilerplate_lines_threshold_and_floor(spark):
           for r in boilerplate_lines(df, "dom", "doc", "line",
                                      min_frac=0.5, min_docs=3).collect()}
     assert bp == {("a.com", "hdr"): (4, 4)}
-    kept = {(r.dom, r.doc, r.line)
-            for r in boilerplate_strip(df, "dom", "doc", "line",
-                                       min_frac=0.5,
-                                       min_docs=3).collect()}
-    assert ("a.com", 0, "hdr") not in kept
-    assert ("a.com", 0, "promo") in kept
-    assert ("b.com", 10, "hdr") in kept       # floored, survives
-    assert len(kept) == len(rows) - 4          # exactly the 4 hdr rows
 
 
 def test_boilerplate_lines_frac_validation(spark):
@@ -1157,12 +1145,11 @@ def test_temperature_resample_null_stratum_is_real(spark):
     assert by == {"en": 50, None: 50}
 
 
-def test_boilerplate_null_group_detected_and_stripped(spark):
+def test_boilerplate_null_group_detected(spark):
     """Documents without a domain (NULL group) form a real boilerplate
-    group: their shared chrome is detected and stripped, instead of
-    being exempted by a null-dropping equality join."""
-    from casf_spark.operators.curation import (boilerplate_lines,
-                                               boilerplate_strip)
+    group: their shared chrome is detected, instead of being exempted
+    by a null-dropping equality join."""
+    from casf_spark.operators.curation import boilerplate_lines
 
     rows = ([(None, d, "COOKIE BANNER") for d in range(4)]
             + [(None, d, f"body {d}") for d in range(4)]
@@ -1171,10 +1158,6 @@ def test_boilerplate_null_group_detected_and_stripped(spark):
     det = boilerplate_lines(lines, "dom", "doc", "line",
                             min_frac=0.5, min_docs=2).collect()
     assert [(r.dom, r.line) for r in det] == [(None, "COOKIE BANNER")]
-    kept = boilerplate_strip(lines, "dom", "doc", "line",
-                             min_frac=0.5, min_docs=2)
-    assert kept.where("line = 'COOKIE BANNER'").count() == 0
-    assert kept.count() == 7  # all non-chrome lines survive
 
 
 def test_empty_corpus_reports_do_not_crash_under_ansi(spark):

@@ -19,13 +19,6 @@ def dup_docs(spark):
     return spark.createDataFrame(data, "doc_id long, text string")
 
 
-def test_exact_duplicates_groups(spark, dup_docs):
-    groups = DD.exact_duplicates(dup_docs, "doc_id", "text").collect()
-    assert len(groups) == 1
-    g = groups[0]
-    assert g.keep_id == 1 and g.n_dups == 3  # 1, 2 and 5 (case/ws-normalized)
-
-
 def test_dedup_exact_keeps_one_per_group(spark, dup_docs):
     kept = {r.doc_id for r in DD.dedup_exact(dup_docs, "doc_id", "text").collect()}
     assert kept == {1, 3, 4}
@@ -72,22 +65,30 @@ def test_embedding_near_dups(spark):
     assert (4, 1) not in pairs
 
 
-def test_embedding_near_dups_methods_agree(spark, sf_dir):
-    """The three all-pairs methods (distributed blocked GEMM default,
-    broadcast GEMM, pure Column expr) are exact and must return identical
-    rows on real embeddings — and the default's plan must contain no
-    driver-side collect of the corpus (it is groupBy+applyInPandas)."""
+def test_embedding_near_dups_matches_numpy_all_pairs(spark, sf_dir):
+    """The distributed blocked GEMM returns exactly the pairs of a
+    single-matrix numpy all-pairs reference on real embeddings (float32
+    inputs widened to float64, zero-norm rows stay zero, cosine rounded
+    to 6dp, canonical id0 > id1) — and its plan contains no driver-side
+    collect of the corpus (it is groupBy+applyInPandas)."""
+    import numpy as np
+
     from casf_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    got = {}
-    for m in ("blocked", "gemm", "expr"):
-        got[m] = sorted(
-            (r.id0, r.id1, r.cos_sim)
-            for r in DD.embedding_near_dups(emb, threshold=0.3,
-                                            method=m).collect())
-    assert got["blocked"] == got["gemm"] == got["expr"]
-    assert len(got["blocked"]) > 0
+    got = sorted((r.id0, r.id1, r.cos_sim)
+                 for r in DD.embedding_near_dups(emb, threshold=0.3)
+                 .collect())
+    pdf = emb.select("vec_id", "embedding").toPandas()
+    ids = pdf["vec_id"].to_numpy()
+    m = np.array(pdf["embedding"].tolist(), dtype=np.float64)
+    norms = np.linalg.norm(m, axis=1, keepdims=True)
+    m = m / np.where(norms == 0.0, 1.0, norms)
+    s = np.round(m @ m.T, 6)
+    i, j = np.nonzero((s >= 0.3) & (ids[:, None] > ids[None, :]))
+    want = sorted(zip(ids[i].tolist(), ids[j].tolist(), s[i, j].tolist()))
+    assert got == want
+    assert len(got) > 0
     plan = DD.embedding_near_dups(emb, threshold=0.3)._jdf \
         .queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan
@@ -134,15 +135,6 @@ def test_connected_components_transitivity(spark):
         assert {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)} <= got
         assert {(i, 20) for i in range(20, 26)} <= got
         assert len(got) == 11
-
-
-def test_dedup_keep_representatives(spark, dup_docs):
-    pairs = DD.minhash_lsh_pairs(dup_docs, "doc_id", "text")
-    cc = DD.connected_components(pairs)
-    kept = DD.dedup_keep_representatives(dup_docs, "doc_id", cc)
-    ids = {r.doc_id for r in kept.collect()}
-    # 1,2,5 are exact/near dups -> keep 1; 3 may or may not pair with them
-    assert 1 in ids and 2 not in ids and 5 not in ids and 4 in ids
 
 
 def test_star_edges_same_components_as_pairs(spark, dup_docs):
@@ -399,10 +391,8 @@ def test_blocked_pairs_hand_computed(spark):
 def test_blocked_pairs_oversize_block_guard(spark):
     """A planted hot block (the quadratic bomb: one shared default-ish
     key) is diverted, not paired: with max_block_size=3 the 5-record
-    block emits ZERO pairs while normal blocks pair as usual, and
-    oversize_blocks reports exactly the diverted block with its
-    avoided-pair count."""
-    from casf_spark.operators.dedup import blocked_pairs, oversize_blocks
+    block emits ZERO pairs while normal blocks pair as usual."""
+    from casf_spark.operators.dedup import blocked_pairs
 
     rows = [(i, "HOT", f"p{i}") for i in range(1, 6)]       # 5-rec bomb
     rows += [(10, "b1", "x"), (11, "b1", "y"), (12, "b2", "z")]
@@ -412,10 +402,6 @@ def test_blocked_pairs_oversize_block_guard(spark):
            for r in blocked_pairs(df, "rid", ["blk"], ["payload"],
                                   max_block_size=3).collect()}
     assert got == {(10, 11)}, got        # the bomb's 10 pairs diverted
-
-    rep = oversize_blocks(df, ["blk"], max_block_size=3).collect()
-    assert [(r.blk, r.n_records, r.n_pairs_avoided) for r in rep] \
-        == [("HOT", 5, 10)]
 
     # cap None (default) keeps the old behavior: the bomb pairs fully
     all_pairs = blocked_pairs(df, "rid", ["blk"], ["payload"]).count()
@@ -554,15 +540,13 @@ def test_banding_misconfig_raises(spark):
 def test_exact_dedup_null_text_is_singleton(spark):
     """NULL-text docs used to share one NULL fingerprint: dedup kept a
     single survivor of a corrupt load. Each is now its own group."""
-    from casf_spark.operators.dedup import dedup_exact, exact_duplicates
+    from casf_spark.operators.dedup import dedup_exact
 
     df = spark.createDataFrame(
         [(1, None), (2, None), (3, "same"), (4, "same")],
         "doc_id long, text string")
     kept = sorted(r.doc_id for r in dedup_exact(df, "doc_id", "text").collect())
     assert kept == [1, 2, 3]  # both NULL docs kept; 4 dups 3
-    groups = exact_duplicates(df, "doc_id", "text").collect()
-    assert [(g.keep_id, g.n_dups) for g in groups] == [(3, 2)]
 
 
 def test_remove_spans_zero_token_doc_passes_through(spark):

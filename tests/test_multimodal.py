@@ -36,34 +36,6 @@ def test_real_decoder_gate(spark, payloads):
         MM.extract_features(payloads, real_decoder=True)
 
 
-def test_resize_images_stub_shape(spark, payloads):
-    out = {r.doc_id: r for r in
-           MM.resize_images(payloads, width=4, height=3).collect()}
-    assert len(out) == payloads.count()          # 1:1 rows
-    assert all(r.width == 4 and r.height == 3 for r in out.values())
-    assert all(len(r.resized) == 12 for r in out.values())
-    assert out[1].resized[:5] == b"hello"        # deterministic fake raster
-    with pytest.raises(NotImplementedError):
-        MM.resize_images(payloads, real_decoder=True)
-
-
-def test_sample_frames_explodes_rows(spark, payloads):
-    rows = MM.sample_frames(payloads, n_frames=4).collect()
-    n_docs = payloads.count()
-    assert len(rows) == 4 * n_docs               # 1 -> n_frames explosion
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r.doc_id, []).append(r)
-    assert sorted(r.frame_idx for r in by_doc[1]) == [0, 1, 2, 3]
-    # frames reassemble a prefix of the original payload, in order:
-    # "hello" with 4 frames -> step 1 -> b"h", b"e", b"l", b"l"
-    joined = b"".join(r.frame for r in sorted(by_doc[1],
-                                              key=lambda r: r.frame_idx))
-    assert joined == b"hell"
-    with pytest.raises(NotImplementedError):
-        MM.sample_frames(payloads, real_decoder=True)
-
-
 def test_rgb_decode_hand_computed(spark):
     """A real 2x1 rgb24 raster with known pixels decodes to exact channel
     means — this is a working decoder, not the stub path."""

@@ -263,35 +263,22 @@ def test_centroid_argmin_is_aggregation_not_window(spark, sf_dir):
 
 
 def test_staged_operator_plans_follow_hygiene(spark, sf_dir):
-    """The round-13 late additions have no queries() entry yet (window
-    budget was spent), so the global sweeps above cannot see them —
-    pin their plans here to the same rules: no row-at-a-time Python
-    anywhere; products only for the deliberate 1-row totals broadcast
-    (the LM scorers' crossJoin(broadcast(tot)), the JM whitelist
-    rationale)."""
+    """The salted LM scorer (``n_salt > 0``) has no queries() entry, so
+    the global sweeps above cannot see it — pin its plan here to the
+    same rules: no row-at-a-time Python anywhere; a product only for
+    the deliberate 1-row totals broadcast (crossJoin(broadcast(tot)),
+    the JM whitelist rationale)."""
     from pyspark.sql import functions as F
 
-    from casf_spark.operators.relevance import (
-        heldout_interpolated_logprob, heldout_kneser_ney_logprob)
+    from casf_spark.operators.relevance import heldout_interpolated_logprob
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     train = docs.where(F.col("doc_id") % 5 != 0)
     held = docs.where(F.col("doc_id") % 5 == 0)
-
-    shapes = {
-        "kn": heldout_kneser_ney_logprob(train, held, "doc_id", "text"),
-        "jm_salted": heldout_interpolated_logprob(
-            train, held, "doc_id", "text", n_salt=4),
-    }
-    # kn = 2: the 1-row x 1-row totals build (B from the bigram-type
-    # table x V from the token table — different grains, so unlike JM
-    # they cannot fuse into one agg) + the totals broadcast into the
-    # scored stream; both sides bounded at 1 row.
-    max_products = {"kn": 2, "jm_salted": 1}
-    for name, df in shapes.items():
-        plan = df._jdf.queryExecution().executedPlan().toString() \
-            .split("\n\n")[0]
-        assert "BatchEvalPython" not in plan, name
-        n_prod = (plan.count("CartesianProduct")
-                  + plan.count("BroadcastNestedLoopJoin"))
-        assert n_prod <= max_products[name], (name, n_prod)
+    plan = heldout_interpolated_logprob(
+        train, held, "doc_id", "text", n_salt=4
+    )._jdf.queryExecution().executedPlan().toString().split("\n\n")[0]
+    assert "BatchEvalPython" not in plan
+    n_prod = (plan.count("CartesianProduct")
+              + plan.count("BroadcastNestedLoopJoin"))
+    assert n_prod <= 1, n_prod

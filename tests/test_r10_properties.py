@@ -189,6 +189,19 @@ def test_label_propagation_rejects_bad_weights(spark):
         DD.label_propagation(neg, seeds, weight_col="w").collect()
 
 
+def test_label_propagation_rejects_null_weight(spark):
+    """A NULL weight fails the edge materialization: it used to drop out
+    of SUM(w) while still counting in degree, so node 2 below silently
+    scored 1.0 with degree 2 instead of raising."""
+    import pytest
+    pairs = spark.createDataFrame([(2, 1, 1), (3, 2, None)],
+                                  "doc0 long, doc1 long, w int")
+    seeds = spark.createDataFrame([(1, 1_000_000), (3, 0)],
+                                  "doc_id long, label_u long")
+    with pytest.raises(Exception, match="NULL or negative weight in 'w'"):
+        DD.label_propagation(pairs, seeds, weight_col="w").collect()
+
+
 def test_label_propagation_uniform_weights_equal_unweighted(spark):
     """All-equal weights make the weighted mean the plain mean, so a
     weighted run must reproduce the unweighted one exactly."""

@@ -610,126 +610,9 @@ def test_heldout_jm_unseen_bigram_falls_back_to_unigram(spark):
     assert got[10][1] == round((t1 + t2) / 2e9, 6)
 
 
-def test_kneser_ney_hand_computed(spark):
-    """Full hand check of the absolute-discount + continuation math:
-    train bc(a,b)=2 bc(b,a)=1 bc(a,c)=1 -> B=3, V=3, p_cont(w) =
-    (cw+1)/7 for all of a,b,c (each completes exactly one context);
-    scoring "a b": first token on the continuation leg, second on
-    max(bc-D,0)/uc + (D*n1p/uc)*p_cont."""
-    import math as m
-
-    train = _docs(spark, [(1, "a b a b"), (2, "a c")])
-    score = _docs(spark, [(10, "a b")])
-    got = RV.heldout_kneser_ney_logprob(
-        train, score, "doc_id", "text", discount=0.75).collect()
-    assert len(got) == 1 and got[0].n_tokens == 2
-    p1 = 2 / 7                                    # p_cont(a)
-    p2 = (2 - 0.75) / 3 + (0.75 * 2 / 3) * (2 / 7)
-    t1 = m.floor(-m.log(p1) * 1e9 + 0.5)
-    t2 = m.floor(-m.log(p2) * 1e9 + 0.5)
-    assert got[0].avg_neg_logprob == round((t1 + t2) / 2e9, 6)
-
-
-def test_kneser_ney_continuation_beats_raw_frequency(spark):
-    """The defining KN property: 'x' is twice as FREQUENT as 'y' but
-    completes only one context, while 'y' completes two — after an
-    unseen prefix (pure continuation leg) 'y' must be the more
-    probable completion. A raw-frequency back-off (JM) orders them the
-    other way on the same corpus."""
-    train = _docs(spark, [(1, "s x"), (2, "s x"), (3, "s x"),
-                          (4, "s x"), (5, "p y"), (6, "q y")])
-    score = _docs(spark, [(10, "z x"), (11, "z y")])
-    kn = {r.doc: r.avg_neg_logprob
-          for r in RV.heldout_kneser_ney_logprob(
-              train, score, "doc_id", "text").collect()}
-    assert kn[11] < kn[10]
-    jm = {r.doc: r.avg_neg_logprob
-          for r in RV.heldout_interpolated_logprob(
-              train, score, "doc_id", "text").collect()}
-    assert jm[10] < jm[11]
-
-
-def test_kneser_ney_discount_validation(spark):
-    """D=0 gives unseen-but-prefixed tokens zero back-off mass and D=1
-    zeroes singleton bigrams — both boundary values must raise, not
-    produce -ln(0) infinities downstream."""
-    import pytest
-
-    d = _docs(spark, [(1, "a b")])
-    for bad in (0.0, 1.0, -0.5, 1.5):
-        with pytest.raises(ValueError):
-            RV.heldout_kneser_ney_logprob(d, d, "doc_id", "text",
-                                          discount=bad)
-
-
-def test_kneser_ney_duckdb_twin(spark, sf_dir):
-    """Cross-engine pin on the real documents table: the exact SQL a
-    future `lm_heldout_kn` oracle entry would use (the JM twin with
-    the KN legs swapped in) agrees with the Spark operator row-for-row
-    at 6dp — staged here so windowing the query later is a paste."""
-    import duckdb
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    train = docs.where(F.col("doc_id") % 5 != 0)
-    held = docs.where(F.col("doc_id") % 5 == 0)
-    got = [(r.doc, r.n_tokens, r.avg_neg_logprob)
-           for r in RV.heldout_kneser_ney_logprob(
-               train, held, "doc_id", "text", discount=0.75)
-           .orderBy("doc").collect()]
-
-    toks = ("list_filter(regexp_split_to_array(lower(text), "
-            "'[^a-z0-9]+'), t -> t <> '')")
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW documents AS SELECT * FROM "
-                f"read_parquet('{sf_dir}/documents.parquet')")
-    exp = con.execute(f"""
-WITH tl AS (SELECT CAST(doc_id AS BIGINT) doc, {toks} a,
-                   doc_id % 5 = 0 AS held
-            FROM documents),
-tk AS (SELECT doc, held, generate_subscripts(a, 1) pos, unnest(a) w
-       FROM tl),
-tt AS (SELECT doc, pos, w FROM tk WHERE NOT held),
-tbi AS (SELECT t1.w prev, t2.w FROM tt t1
-        JOIN tt t2 ON t1.doc = t2.doc AND t2.pos = t1.pos + 1),
-bc AS (SELECT prev, w, CAST(COUNT(*) AS DOUBLE) bc
-       FROM tbi GROUP BY 1, 2),
-ps AS (SELECT prev, CAST(COUNT(*) AS DOUBLE) uc,
-              CAST(COUNT(DISTINCT w) AS DOUBLE) n1p
-       FROM tbi GROUP BY 1),
-cont AS (SELECT w, CAST(COUNT(*) AS DOUBLE) cw FROM bc GROUP BY 1),
-tot AS (SELECT (SELECT CAST(COUNT(*) AS DOUBLE) FROM bc) b,
-               (SELECT CAST(COUNT(DISTINCT w) AS DOUBLE) FROM tt) v),
-hk AS (SELECT doc, pos, w FROM tk WHERE held),
-hp AS (SELECT h.doc, h.w, p.w prev
-       FROM hk h LEFT JOIN hk p ON p.doc = h.doc
-                              AND p.pos = h.pos - 1),
-j AS (SELECT hp.doc, hp.prev, ps.uc, ps.n1p,
-             COALESCE(bc.bc, 0) bc,
-             (COALESCE(cont.cw, 0) + 1.0)
-               / (tot.b + tot.v + 1.0) p_cont
-      FROM hp LEFT JOIN cont ON hp.w = cont.w
-      LEFT JOIN bc ON hp.prev = bc.prev AND hp.w = bc.w
-      LEFT JOIN ps ON hp.prev = ps.prev
-      CROSS JOIN tot),
-tx AS (SELECT doc,
-              CAST(FLOOR(-ln(CASE
-                    WHEN prev IS NULL OR COALESCE(uc, 0) = 0
-                    THEN p_cont
-                    ELSE GREATEST(bc - 0.75, 0) / uc
-                         + (0.75 * n1p / uc) * p_cont
-                 END) * 1000000000.0 + 0.5) AS BIGINT) tu
-       FROM j)
-SELECT doc, CAST(COUNT(*) AS BIGINT) n_tokens,
-       ROUND(CAST(SUM(tu) AS BIGINT) / (COUNT(*) * 1e9), 6)
-         AS avg_neg_logprob
-FROM tx GROUP BY doc ORDER BY doc""").fetchall()
-    con.close()
-    assert got == [(int(d), int(n), float(p)) for d, n, p in exp]
-
-
 def test_heldout_lm_salted_joins_are_value_identical(spark, sf_dir):
-    """n_salt > 0 must only rebalance exchanges: both heldout scorers
-    return identical rows with and without salting on the real
+    """n_salt > 0 must only rebalance exchanges: the heldout scorer
+    returns identical rows with and without salting on the real
     documents table (each stream row meets exactly one replica of its
     matching count row), and a negative n_salt raises."""
     import pytest
@@ -737,13 +620,12 @@ def test_heldout_lm_salted_joins_are_value_identical(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     train = docs.where(F.col("doc_id") % 5 != 0)
     held = docs.where(F.col("doc_id") % 5 == 0)
-    for fn in (RV.heldout_interpolated_logprob,
-               RV.heldout_kneser_ney_logprob):
-        plain = sorted(map(tuple, fn(train, held, "doc_id", "text")
-                           .collect()))
-        salted = sorted(map(tuple, fn(train, held, "doc_id", "text",
-                                      n_salt=4).collect()))
-        assert plain == salted and len(plain) > 0
+    fn = RV.heldout_interpolated_logprob
+    plain = sorted(map(tuple, fn(train, held, "doc_id", "text")
+                       .collect()))
+    salted = sorted(map(tuple, fn(train, held, "doc_id", "text",
+                                  n_salt=4).collect()))
+    assert plain == salted and len(plain) > 0
     with pytest.raises(ValueError):
         RV.heldout_interpolated_logprob(train, held, "doc_id", "text",
                                         n_salt=-1)

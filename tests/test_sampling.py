@@ -4,24 +4,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from casf_spark.operators import sampling as SP
-from casf_spark.operators.dedup import line_dedup
+from casf_spark.operators.dedup import line_dedup_keep
 
 
 @pytest.fixture(scope="module")
 def keyed(spark):
     return spark.createDataFrame([(i, f"k{i}") for i in range(2000)],
                                  "id long, key string")
-
-
-def test_deterministic_sample_stable_and_unbiased(keyed):
-    a = SP.deterministic_sample(keyed, "key", 0.25)
-    n1, n2 = a.count(), SP.deterministic_sample(keyed, "key", 0.25).count()
-    assert n1 == n2  # rerun-stable
-    assert 0.18 < n1 / 2000 < 0.32  # ~fraction
-    # monotone: smaller fraction selects a subset of the larger one
-    small = {r.id for r in SP.deterministic_sample(keyed, "key", 0.1).collect()}
-    big = {r.id for r in a.collect()}
-    assert small <= big
 
 
 def test_assign_splits_partition_and_weights(keyed):
@@ -45,22 +34,17 @@ def test_assign_splits_validates_weights(keyed):
 
 
 def test_line_dedup_first_occurrence_wins(spark):
-    df = spark.createDataFrame(
-        [(1, "alpha\nshared line\nbeta"),
-         (2, "shared line\ngamma\nshared line"),
-         (3, "delta")],
-        "doc_id long, text string")
-    got = {r.doc: r.text for r in line_dedup(df, "doc_id", "text").collect()}
-    assert got[1] == "alpha\nshared line\nbeta"
-    assert got[2] == "gamma"          # both copies of the shared line drop
-    assert got[3] == "delta"
-
-
-def test_line_dedup_fully_duplicated_doc_survives_empty(spark):
-    df = spark.createDataFrame([(1, "only line"), (2, "only line")],
-                               "doc_id long, text string")
-    got = {r.doc: r.text for r in line_dedup(df, "doc_id", "text").collect()}
-    assert got == {1: "only line", 2: ""}
+    """Each distinct line keeps only its first (doc, pos) occurrence,
+    across documents and within one; a document whose every line
+    occurred earlier keeps no line at all."""
+    lines = spark.createDataFrame(
+        [(1, 0, "alpha"), (1, 1, "shared line"), (1, 2, "beta"),
+         (2, 0, "shared line"), (2, 1, "gamma"), (2, 2, "shared line"),
+         (3, 0, "delta"), (4, 0, "alpha")],
+        "doc long, pos int, line string")
+    got = sorted(map(tuple, line_dedup_keep(lines).collect()))
+    assert got == [(1, 0, "alpha"), (1, 1, "shared line"), (1, 2, "beta"),
+                   (2, 1, "gamma"), (3, 0, "delta")]
 
 
 def test_sample_per_group_deterministic_prefix(spark):
@@ -205,23 +189,19 @@ def test_weighted_sample_excludes_nonpositive_and_validates(spark):
 
 
 def test_null_keys_raise_not_silently_misroute(spark):
-    """A NULL key used to be silently DROPPED by deterministic_sample
-    (even at fraction=1.0) and silently routed to the LAST split by
+    """A NULL key used to be silently routed to the LAST split by
     assign_splits (the 1% test split absorbing 100% of null-id docs —
-    eval contamination); both now raise per-row. n_buckets < 1 in
+    eval contamination); it now raises per-row. n_buckets < 1 in
     dsir_logweights used to be modulo-by-zero / a silently empty
     result; it raises up front."""
     from pyspark.errors.exceptions.captured import SparkRuntimeException
 
     df = spark.createDataFrame([(1, "a"), (2, None)],
                                "id long, key string")
-    with pytest.raises(Exception, match="NULL key"):
-        SP.deterministic_sample(df, "key", 1.0).collect()
     with pytest.raises(Exception, match="NULL split key"):
         SP.assign_splits(df, "key").collect()
     # non-NULL rows are unaffected
     ok = df.where("key IS NOT NULL")
-    assert SP.deterministic_sample(ok, "key", 1.0).count() == 1
     assert SP.assign_splits(ok, "key").count() == 1
     with pytest.raises(ValueError, match="n_buckets"):
         SP.dsir_logweights(df, "id", "key", F.lit(True), n_buckets=0)

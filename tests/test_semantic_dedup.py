@@ -70,25 +70,6 @@ def test_det_flags_some_dups(emb):
     assert 0 < n_dup < out.count()
 
 
-def test_kmeans_variant_deterministic_and_consistent(emb):
-    a = DD.semantic_dedup(emb, n_clusters=8, threshold=0.3, seed=42)
-    b = DD.semantic_dedup(emb, n_clusters=8, threshold=0.3, seed=42)
-    ra = sorted(a.collect())
-    rb = sorted(b.collect())
-    assert ra == rb
-    det = DD.semantic_dedup_det(emb, n_clusters=8, threshold=0.3)
-    assert [(f.name, f.dataType) for f in a.schema] == \
-        [(f.name, f.dataType) for f in det.schema]
-    # keep-rule internal consistency on the output itself
-    for r in ra:
-        if r.is_semantic_dup:
-            assert r.n_dup_neighbors >= 1
-            assert r.max_prior_sim >= 0.3
-        else:
-            assert r.n_dup_neighbors == 0
-            assert r.max_prior_sim == 0.0
-
-
 def test_exact_clones_keep_exactly_one(spark):
     """Five identical vectors + three orthogonal-ish singles: the clones
     collapse to one kept representative regardless of clustering."""

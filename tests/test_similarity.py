@@ -92,20 +92,6 @@ def test_multiprobe_lsh_recall_floor(spark, sf_dir):
     assert len(cand) <= 0.4 * n * (n - 1) / 2, "candidate set ~all pairs"
 
 
-def test_gemm_near_dup_guard_refuses_large_collect(spark, sf_dir, monkeypatch):
-    """The driver-collect GEMM path must refuse a corpus above its bound
-    with a clear error instead of silently collecting (the distributed
-    blocked_gemm_pairs is the scale path)."""
-    import pytest
-
-    from casf_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    monkeypatch.setattr(S, "MAX_GEMM_COLLECT_ROWS", 10)
-    with pytest.raises(ValueError, match="blocked_gemm_pairs"):
-        S.gemm_near_dup_pairs(emb, threshold=0.9)
-
-
 def test_quantize_embeddings_int8_roundtrip(spark):
     import numpy as np
     from casf_spark.operators.similarity import quantize_embeddings_int8
@@ -413,7 +399,7 @@ def test_similarity_empty_and_undersized_inputs_are_loud(spark):
     few = spark.createDataFrame(
         [(i, [float(i), 1.0]) for i in range(5)],
         "vec_id long, embedding array<double>")
-    # empty QUERY set: a clean empty top-k, matching the expr path
+    # empty QUERY set: a clean empty top-k
     assert brute_force_topk(few, empty, k=3).count() == 0
     with pytest.raises(ValueError, match="corpus has only 5"):
         ivf_pq_topk(few, few, n_centroids=8, ksub=16, m=2)

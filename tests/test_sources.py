@@ -51,20 +51,6 @@ def test_partitioned_parquet_write(spark, tmp_path):
     assert pruned.count() == 2
 
 
-def test_csv_json_roundtrip(spark, tmp_path):
-    from casf_spark.sources.text import read_csv, read_json
-    csv = tmp_path / "t.csv"
-    csv.write_text("id,name\n1,alpha\n2,beta\n")
-    df = read_csv(spark, str(csv), schema="id long, name string")
-    assert {(r.id, r.name) for r in df.collect()} == {(1, "alpha"), (2, "beta")}
-
-    js = tmp_path / "t.jsonl"
-    js.write_text('{"id": 1, "tags": ["a", "b"]}\n{"id": 2, "tags": []}\n')
-    jdf = read_json(spark, str(js), schema="id long, tags array<string>")
-    got = {r.id: list(r.tags) for r in jdf.collect()}
-    assert got == {1: ["a", "b"], 2: []}
-
-
 def test_demo_example_runs(spark, sf_dir):
     import subprocess
     import sys
@@ -160,72 +146,6 @@ def test_load_events_struct_props(spark, tmp_path):
         "event_id",
         F.get_json_object("props", "$.k").alias("k")).collect()}
     assert got[1] == "7"
-
-
-def test_orc_roundtrip_with_pushdown(spark, sf_dir, tmp_path):
-    """ORC round-trip: partitioned write, identical rows back, and the
-    filter on the partition column prunes directories."""
-    from pyspark.sql import functions as F
-
-    from casf_spark.sources.tables import load_table
-    from casf_spark.sources.text import read_orc, write_orc
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "n_chars")
-    out = str(tmp_path / "docs_orc")
-    write_orc(docs, out, partition_by=["lang"])
-    back = read_orc(spark, out)
-    assert back.count() == docs.count()
-    a = {(r["doc_id"], r["lang"], r["n_chars"]) for r in docs.collect()}
-    b = {(int(r["doc_id"]), r["lang"], int(r["n_chars"]))
-         for r in back.collect()}
-    assert a == b
-    # partition pruning: only the en directory is read
-    plan = back.where(F.col("lang") == "en")._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "lang=en" in plan or "PartitionFilters: [isnotnull(lang" in plan
-
-
-def test_parquet_schema_evolution_merge(spark, tmp_path):
-    """read_parquet_evolving unions footers across a column-added table:
-    old files surface NULL for the late column instead of dropping it."""
-    from casf_spark.sources.text import read_parquet_evolving
-    p = str(tmp_path / "evolving")
-    spark.createDataFrame([(1, "a")], "id INT, txt STRING") \
-        .write.parquet(p + "/batch=0")
-    spark.createDataFrame([(2, "b", 0.5)],
-                          "id INT, txt STRING, score DOUBLE") \
-        .write.parquet(p + "/batch=1")
-    df = read_parquet_evolving(spark, p)
-    assert sorted(df.columns) == ["batch", "id", "score", "txt"]
-    rows = {r.id: r.score for r in df.collect()}
-    assert rows == {1: None, 2: 0.5}
-
-
-def test_custom_python_datasource_jsonl(spark, tmp_path):
-    """Spark-4 Python DataSource: one partition per file, schema-projected
-    fields, missing keys NULL-filled."""
-    import json as _json
-
-    from casf_spark.sources import jsonl as J
-    d = tmp_path / "corpus"
-    d.mkdir()
-    for i in range(3):
-        with open(d / f"part{i}.jsonl", "w") as fh:
-            for j in range(4):
-                rec = {"doc_id": i * 10 + j, "text": f"doc {i} {j}",
-                       "lang": "en"}
-                if j % 2 == 0:
-                    rec["source"] = f"src{i}"
-                fh.write(_json.dumps(rec) + "\n")
-    J.register(spark)
-    df = (spark.read.format("jsonl_docs")
-          .option("path", str(d)).load())
-    assert sorted(df.columns) == ["doc_id", "lang", "source", "text"]
-    assert df.rdd.getNumPartitions() == 3
-    rows = df.collect()
-    assert len(rows) == 12
-    assert sum(1 for r in rows if r.source is None) == 6
 
 
 def test_embedding_demo_runs(spark, sf_dir):

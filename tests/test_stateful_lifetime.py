@@ -1,103 +1,34 @@
-"""user_lifetime_stats: keyed state survives across micro-batches under
-either stateful API (transformWithStateInPandas when its protobuf
-runtime exists, applyInPandasWithState otherwise)."""
+"""user_lifetime_stats_batch: the per-user lifetime (count, sum, max)
+behind the stream_lifetime_state query."""
 
 from __future__ import annotations
 
-import glob
-import os
+from casf_spark.streaming.stateful import user_lifetime_stats_batch
+
+SCHEMA = "user_id long, value double"
 
 
-def _landing(spark, tmp_path, batches, schema):
-    land = tmp_path / "land"
-    land.mkdir()
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, schema).coalesce(1) \
-            .write.parquet(str(tmp_path / f"s{i}"))
-        src = glob.glob(str(tmp_path / f"s{i}" / "*.parquet"))[0]
-        os.symlink(src, str(land / f"f{i}.parquet"))
-    return str(land)
-
-
-def test_lifetime_stats_accumulate_across_batches(spark, tmp_path):
-    from casf_spark.streaming.stateful import user_lifetime_stats
-
-    schema = "user_id long, value double"
-    land = _landing(spark, tmp_path,
-                    [[(1, 1.0), (1, 2.0), (2, 5.0)], [(1, 4.0), (3, 7.0)]],
-                    schema)
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(land))
-    out = user_lifetime_stats(stream)
-    q = (out.writeStream.format("memory").queryName("t_lifetime")
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    rows = {(r.user_id, r.n_events): (r.total_value, r.max_value)
-            for r in spark.sql("SELECT * FROM t_lifetime").collect()}
-    # user 1: batch1 state (2 events, 3.0) then batch2 lifetime (3, 7.0)
-    assert rows[(1, 2)] == (3.0, 2.0)
-    assert rows[(1, 3)] == (7.0, 4.0)
-    assert rows[(2, 1)] == (5.0, 5.0)
-    assert rows[(3, 1)] == (7.0, 7.0)
-
-
-def test_lifetime_stream_end_state_equals_batch_twin(spark, tmp_path):
-    """The stream's FINAL per-key emission (the lifetime a drained stream
-    converges to) equals user_lifetime_stats_batch — the
-    stream_lifetime_state contract query's engine — including on a batch
-    carrying NULL values: n_events counts every row, total/max fold only
-    non-NULL values, and a key that never saw a non-NULL value emits
+def test_lifetime_stats_batch_null_and_nan_contract(spark):
+    """n_events counts every row, total/max fold only non-NULL, non-NaN
+    values, and a key that never saw a foldable value gets total 0.0 and
     max_value NULL (never -inf, never NaN)."""
-    from casf_spark.streaming.stateful import (user_lifetime_stats,
-                                               user_lifetime_stats_batch)
-
-    schema = "user_id long, value double"
-    # user 4 sees ONLY NaN + NULL: the pinned contract treats NaN exactly
-    # like NULL (counted in n_events, never folded into sum/max), so the
-    # processor's dropna, the batch twin's isnan mask, and the DuckDB
-    # oracle's CASE WHEN NOT isnan all agree
-    batches = [[(1, 1.5), (2, None), (1, 2.25), (4, float("nan"))],
-               [(1, None), (2, None), (3, 4.0), (1, float("nan"))],
-               [(3, 0.5), (1, 9.75), (4, None)]]
-    land = _landing(spark, tmp_path, batches, schema)
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(land))
-    q = (user_lifetime_stats(stream).writeStream.format("memory")
-         .queryName("t_lifetime_end").outputMode("update")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    # Update mode re-emits a key per batch that touches it; the lifetime
-    # end state per key is the emission with the highest n_events.
-    final = {}
-    for r in spark.sql("SELECT * FROM t_lifetime_end").collect():
-        if r.user_id not in final or r.n_events > final[r.user_id][0]:
-            final[r.user_id] = (r.n_events, r.total_value, r.max_value)
-
-    all_rows = [r for b in batches for r in b]
-    twin = {r.user_id: (r.n_events, r.total_value, r.max_value)
-            for r in user_lifetime_stats_batch(
-                spark.createDataFrame(all_rows, schema)).collect()}
-    assert final == twin
+    rows = [(1, 1.5), (2, None), (1, 2.25), (4, float("nan")),
+            (1, None), (2, None), (3, 4.0), (1, float("nan")),
+            (3, 0.5), (1, 9.75), (4, None)]
+    got = {r.user_id: (r.n_events, r.total_value, r.max_value)
+           for r in user_lifetime_stats_batch(
+               spark.createDataFrame(rows, SCHEMA)).collect()}
     # user 2 never saw a non-NULL value: counted rows, 0.0 total, NULL max
-    assert twin[2] == (2, 0.0, None)
+    assert got[2] == (2, 0.0, None)
     # user 4 saw only NaN/NULL: same shape — NaN never poisons max or sum
-    assert twin[4] == (2, 0.0, None)
-    # user 1's NaN row is counted but not folded
-    assert twin[1] == (5, 13.5, 9.75)
+    assert got[4] == (2, 0.0, None)
+    # user 1's NaN and NULL rows are counted but not folded
+    assert got[1] == (5, 13.5, 9.75)
+    assert got[3] == (2, 4.5, 4.0)
 
 
-def test_lifetime_stats_batch_of_one_key_shapes(spark, tmp_path):
-    """Explicit api='apply' path is well-formed on a single batch."""
-    from casf_spark.streaming.stateful import user_lifetime_stats
-
-    schema = "user_id long, value double"
-    land = _landing(spark, tmp_path, [[(9, 2.5), (9, 3.5)]], schema)
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(land))
-    out = user_lifetime_stats(stream, api="apply")
-    q = (out.writeStream.format("memory").queryName("t_lifetime1")
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    r = spark.sql("SELECT * FROM t_lifetime1").collect()[0]
-    assert (r.user_id, r.n_events, r.total_value, r.max_value) \
-        == (9, 2, 6.0, 3.5)
+def test_lifetime_stats_batch_of_one_key_shapes(spark):
+    r = user_lifetime_stats_batch(
+        spark.createDataFrame([(9, 2.5), (9, 3.5)], SCHEMA)).collect()
+    assert [(r[0].user_id, r[0].n_events, r[0].total_value,
+             r[0].max_value)] == [(9, 2, 6.0, 3.5)]

@@ -6,227 +6,12 @@ from casf_spark.sources import load_table
 from casf_spark.streaming import events as EV
 
 
-def test_stream_tumbling_equals_batch(spark, sf_dir):
-    """Replay events.parquet as a stream with availableNow; the watermarked
-    streaming aggregation must produce exactly the batch result."""
-    batch = EV.tumbling_counts(load_table(spark, sf_dir, "events"), "1 hour")
-    stream_src = EV.read_events_stream(spark, sf_dir)
-    assert stream_src.isStreaming
-    agg = EV.tumbling_counts(stream_src, "1 hour")
-    EV.run_stream_to_memory(agg, "t_tumbling")
-    got = {tuple(r) for r in spark.sql("SELECT * FROM t_tumbling").collect()}
-    want = {tuple(r) for r in batch.collect()}
-    assert got == want and len(got) > 0
-
-
-def test_foreach_batch_parquet_sink(spark, sf_dir, tmp_path):
-    stream = EV.read_events_stream(spark, sf_dir)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    EV.write_stream_parquet(stream.select("event_id", "ts", "event_type"),
-                            out, ckpt)
-    back = spark.read.parquet(out)
-    n_src = load_table(spark, sf_dir, "events").count()
-    assert back.count() == n_src
-    assert "_batch_id" in back.columns
-
-
 def test_sliding_each_event_in_two_windows(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     n_events = ev.count()
     sliding = EV.sliding_counts(ev, "1 hour", "30 minutes")
     total = sum(r.n_events for r in sliding.collect())
     assert total == 2 * n_events
-
-
-def test_upsert_sink_matches_batch_twin(spark, tmp_path):
-    """Update-mode tumbling counts upserted by window key must equal the
-    batch aggregation over the same input — the exactly-once MERGE story."""
-    from casf_spark.streaming.events import (read_events_stream,
-                                             tumbling_counts,
-                                             write_stream_upsert)
-
-    sf = "/root/testdata/sf0.001"
-    stream = tumbling_counts(read_events_stream(spark, sf), "1 hour")
-    out = tmp_path / "upsert"
-    write_stream_upsert(
-        stream.withColumn("window_start",
-                          F.date_format("window_start", "yyyy-MM-dd HH:mm:ss")),
-        str(out), str(tmp_path / "ckpt"),
-        key_cols=["window_start", "event_type"])
-    got = spark.read.parquet(str(out / "current"))
-    from casf_spark.sources.tables import load_table
-    want = tumbling_counts(load_table(spark, sf, "events"), "1 hour") \
-        .withColumn("window_start",
-                    F.date_format("window_start", "yyyy-MM-dd HH:mm:ss"))
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-
-def test_dedup_stream_drops_cross_batch_duplicates(spark, sf_dir, tmp_path):
-    """The same 200 events delivered twice in two micro-batches: the
-    watermark-bounded streaming dedup must emit each event_id once."""
-    src = load_table(spark, sf_dir, "events").limit(200)
-    stage = tmp_path / "dup_stream"
-    src.coalesce(1).write.parquet(str(stage / "a"))
-    src.coalesce(1).write.parquet(str(stage / "b"))
-    files = sorted(str(p) for p in stage.rglob("*.parquet")
-                   if not p.name.startswith("_"))
-    land = tmp_path / "landing"
-    land.mkdir()
-    for i, f in enumerate(files):
-        (land / f"f{i}.parquet").symlink_to(f)
-    stream = (spark.readStream.schema(src.schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(land)))
-    deduped = EV.dedup_stream(stream, ["event_id"], watermark="365 days")
-    EV.run_stream_append_to_memory(deduped, "t_dedup_stream")
-    out = spark.sql("SELECT event_id FROM t_dedup_stream")
-    assert out.count() == 200
-    assert out.distinct().count() == 200
-
-
-def test_dedup_stream_batch_fallback(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events").limit(50)
-    doubled = ev.unionByName(ev)
-    assert EV.dedup_stream(doubled, ["event_id"]).count() == 50
-
-
-def test_stream_stream_join_equals_batch(spark, sf_dir):
-    """Self stream-stream join (purchases x prior clicks within 1h) with
-    watermarks on both sides must equal the batch twin exactly."""
-    batch = EV.clicks_before_purchases(load_table(spark, sf_dir, "events"))
-    stream = EV.clicks_before_purchases(EV.read_events_stream(spark, sf_dir))
-    assert stream.isStreaming
-    EV.run_stream_append_to_memory(stream, "t_ss_join")
-    got = {tuple(r) for r in spark.sql("SELECT * FROM t_ss_join").collect()}
-    want = {tuple(r) for r in batch.collect()}
-    assert got == want and len(got) > 0
-
-
-def test_watermark_drops_late_rows_in_append_mode(spark, tmp_path):
-    """Three micro-batches: A advances event time past hour 3, B turns that
-    into the late-filter watermark (Spark's late-record filter uses the
-    PREVIOUS batch's eviction watermark — it lags one batch), C delivers an
-    hour-0 straggler. Append-mode tumbling counts must emit the finalized
-    hour-0 window WITHOUT the late row, while the batch twin counts it."""
-    import datetime as dt
-    import time
-
-    def T(h, m):
-        return dt.datetime(2024, 1, 1, h, m, 0)
-
-    schema = "event_id long, ts timestamp, event_type string, value double"
-    file_a = [(1, T(0, 30), "click", 1.0), (2, T(0, 40), "click", 1.0),
-              (3, T(0, 50), "click", 1.0), (4, T(1, 30), "click", 1.0),
-              (5, T(1, 40), "click", 1.0), (6, T(4, 0), "click", 1.0)]
-    file_b = [(8, T(5, 0), "click", 1.0)]   # advances the lagged filter wm
-    file_c = [(7, T(0, 45), "click", 1.0)]  # 3h+ late vs watermark
-    land = tmp_path / "landing"
-    land.mkdir()
-    # file-source batch order follows the TARGET file's mtime — write with
-    # >1s gaps so A, B, C become batches 0, 1, 2
-    for i, rows in enumerate((file_a, file_b, file_c)):
-        spark.createDataFrame(rows, schema).coalesce(1) \
-            .write.parquet(str(tmp_path / f"src{i}"))
-        time.sleep(1.1)
-    for i in range(3):
-        f = next(p for p in (tmp_path / f"src{i}").glob("*.parquet"))
-        (land / f"f{i}.parquet").symlink_to(f)
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(land)))
-    agg = (stream.withWatermark("ts", "1 hour")
-           .groupBy(F.window("ts", "1 hour").alias("w"))
-           .agg(F.count(F.lit(1)).alias("n"))
-           .select(F.col("w.start").alias("ws"), "n"))
-    q = (agg.writeStream.format("memory").queryName("t_late")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {r.ws.hour: r.n for r in spark.sql("SELECT * FROM t_late").collect()}
-    assert got[0] == 3          # late straggler DROPPED
-    assert got[1] == 2
-    assert 5 not in got         # unfinalized window not emitted in append
-
-    batch = spark.createDataFrame(file_a + file_b + file_c, schema)
-    bcounts = {r.ws.hour: r.n for r in
-               batch.groupBy(F.window("ts", "1 hour").alias("w"))
-               .agg(F.count(F.lit(1)).alias("n"))
-               .select(F.col("w.start").alias("ws"), "n").collect()}
-    assert bcounts[0] == 4      # batch sees all rows
-
-
-def test_stream_dedup_against_persistent_index(spark, tmp_path):
-    """Two micro-batches with overlapping CONTENT (different ids): the
-    foreachBatch index dedup keeps each distinct text exactly once across
-    batches, and the fingerprint index accumulates one row per kept doc."""
-    from casf_spark.streaming.curation import dedup_stream_against_index
-
-    b1 = spark.createDataFrame([(i, f"text number {i}") for i in range(50)],
-                               "doc_id long, text string")
-    b2 = spark.createDataFrame(
-        [(1000 + i, f"text number {i}") for i in range(25, 75)],
-        "doc_id long, text string")
-    land = tmp_path / "docs_landing"
-    land.mkdir()
-    b1.coalesce(1).write.parquet(str(tmp_path / "s1"))
-    b2.coalesce(1).write.parquet(str(tmp_path / "s2"))
-    for i, stage in enumerate(("s1", "s2")):
-        src = next(p for p in (tmp_path / stage).glob("*.parquet"))
-        (land / f"f{i}.parquet").symlink_to(src)
-
-    stream = (spark.readStream.schema(b1.schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(land)))
-    idx = str(tmp_path / "fp_index")
-    out = str(tmp_path / "kept")
-    dedup_stream_against_index(stream, idx, out,
-                               str(tmp_path / "ckpt"))
-
-    kept = spark.read.parquet(out)
-    # 75 distinct texts total; the 25 cross-batch content dups are dropped
-    assert kept.count() == 75
-    assert kept.select("fp").distinct().count() == 75
-    # each text number kept exactly once
-    nums = [r["text"] for r in kept.collect()]
-    assert len(set(nums)) == 75
-    index = spark.read.parquet(idx)
-    assert index.count() == 75
-
-
-def test_stream_static_enrichment_equals_batch(spark, sf_dir):
-    """Stream-static left join (event -> user segment dimension) must
-    equal the batch twin exactly, including events whose user has no
-    dimension row (null segment, not dropped)."""
-    ev = load_table(spark, sf_dir, "events")
-    # segment dimension covering only half the users
-    dim = (ev.select("user_id").distinct()
-           .where(F.col("user_id") % 2 == 0)
-           .withColumn("segment",
-                       F.when(F.col("user_id") % 4 == 0, "gold")
-                        .otherwise("silver")))
-    batch = EV.enrich_with_dimension(ev, dim).select(
-        "event_id", "user_id", "segment")
-    stream_src = EV.read_events_stream(spark, sf_dir)
-    stream = EV.enrich_with_dimension(stream_src, dim).select(
-        "event_id", "user_id", "segment")
-    assert stream.isStreaming
-    EV.run_stream_append_to_memory(stream, "t_enrich")
-    got = {tuple(r) for r in spark.sql("SELECT * FROM t_enrich").collect()}
-    want = {tuple(r) for r in batch.collect()}
-    assert got == want and len(got) > 0
-    # unmatched users survive with null segment
-    assert any(r[2] is None for r in got)
-
-
-def test_session_window_stream_equals_batch(spark, sf_dir):
-    """Built-in session_window over a streamed replay: completed sessions
-    (update-to-complete via run_stream_to_memory's complete mode or the
-    finalized append set) must agree with the batch sessionization."""
-    batch = {tuple(r) for r in EV.session_window_counts(
-        load_table(spark, sf_dir, "events"), "30 minutes").collect()}
-    stream_src = EV.read_events_stream(spark, sf_dir)
-    agg = EV.session_window_counts(stream_src, "30 minutes")
-    EV.run_stream_to_memory(agg, "t_session_window")
-    got = {tuple(r) for r in
-           spark.sql("SELECT * FROM t_session_window").collect()}
-    assert got == batch and len(got) > 0
 
 
 def test_session_window_matches_island_construction(spark, sf_dir):
@@ -244,11 +29,11 @@ def test_session_window_matches_island_construction(spark, sf_dir):
     assert got == want
 
 
-def test_near_dedup_stream_against_persistent_index(spark, tmp_path):
-    """Two micro-batches: batch-2 exact copies AND near copies (one token
+def test_near_dedup_replay_drops_exact_and_near_copies(spark):
+    """Two batches: batch-2 exact copies AND near copies (one token
     changed) of batch-1 docs are both dropped by the band-bucket index;
     novel docs survive."""
-    from casf_spark.streaming.curation import near_dedup_stream_against_index
+    from casf_spark.streaming.curation import near_dedup_replay_batches
 
     base = [
         "the quick brown fox jumps over the lazy dog again and again",
@@ -262,104 +47,16 @@ def test_near_dedup_stream_against_persistent_index(spark, tmp_path):
          (101, base[1].replace("rows", "records")),         # near copy
          (102, "a completely different sentence about gardening tools")],
         "doc_id long, text string")
-    land = tmp_path / "landing"
-    land.mkdir()
-    b1.coalesce(1).write.parquet(str(tmp_path / "s1"))
-    b2.coalesce(1).write.parquet(str(tmp_path / "s2"))
-    for i, stage in enumerate(("s1", "s2")):
-        src = next(p for p in (tmp_path / stage).glob("*.parquet"))
-        (land / f"f{i}.parquet").symlink_to(src)
-
-    stream = (spark.readStream.schema(b1.schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(land)))
-    out = str(tmp_path / "kept")
-    near_dedup_stream_against_index(stream, str(tmp_path / "bb_index"),
-                                    out, str(tmp_path / "ckpt"))
-    kept = sorted(r.doc for r in spark.read.parquet(out).collect())
-    assert kept == [0, 1, 2, 102], kept
+    kept = sorted((r.doc, r.batch_id) for r in
+                  near_dedup_replay_batches([(0, b1), (1, b2)]).collect())
+    assert kept == [(0, 0), (1, 0), (2, 0), (102, 1)], kept
 
 
-def test_near_dedup_stream_end_state_equals_replay_twin(spark, tmp_path):
-    """The REAL availableNow foreachBatch near-dedup stream and the batch
-    twin (near_dedup_replay_batches — the stream_near_dedup_state
-    contract query's engine) produce the identical end state on the same
-    two-batch split: same survivors, same batch attribution, same
-    fingerprints. This is the cross-check that makes the driver-visible
-    batch-twin row pin the streaming operator, not just itself."""
-    from casf_spark.streaming.curation import (
-        near_dedup_replay_batches, near_dedup_stream_against_index)
-
-    docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-            .select("doc_id", "text"))
-    b0 = docs.where(F.col("doc_id") % 2 == 0)
-    b1 = docs.where(F.col("doc_id") % 2 == 1)
-
-    land = tmp_path / "landing"
-    land.mkdir()
-    for i, b in enumerate((b0, b1)):
-        b.coalesce(1).write.parquet(str(tmp_path / f"s{i}"))
-        src = next(p for p in (tmp_path / f"s{i}").glob("*.parquet"))
-        (land / f"f{i}.parquet").symlink_to(src)
-    stream = (spark.readStream.schema(docs.schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(land)))
-    out = str(tmp_path / "kept")
-    near_dedup_stream_against_index(stream, str(tmp_path / "bb_index"),
-                                    out, str(tmp_path / "ckpt"))
-    streamed = {(r.doc, r._batch_id, r.fp)
-                for r in spark.read.parquet(out)
-                .select("doc", "_batch_id", "fp").collect()}
-
-    twin = {(r.doc, r.batch_id, r.fp)
-            for r in near_dedup_replay_batches([(0, b0), (1, b1)]).collect()}
-    assert streamed == twin
-    assert len(twin) > 0
-
-
-def test_streaming_quality_filters_equal_batch(spark, sf_dir, tmp_path):
-    """The stateless curation projections (gopher rules, quality
-    features, language ID) run unchanged on a document STREAM and emit
-    exactly the batch result — no watermark, no state, per-micro-batch
-    map-only plans. This is the shape a streaming ingest pipeline uses
-    to score documents on arrival."""
-    from casf_spark.functions.text import (gopher_quality, lang_id,
-                                           quality_features)
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
-        .select("doc_id", "text")
-    land = tmp_path / "docs_land"
-    land.mkdir()
-    docs.coalesce(2).write.parquet(str(tmp_path / "src"))
-    for i, p in enumerate((tmp_path / "src").glob("*.parquet")):
-        (land / f"f{i}.parquet").symlink_to(p)
-    stream = (spark.readStream.schema(docs.schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(land)))
-
-    def scored(df):
-        return (gopher_quality(df, "doc_id", "text")
-                .join(quality_features(df, "doc_id", "text")
-                      .select("doc_id", "stopword_ratio"), "doc_id")
-                .join(lang_id(df, "doc_id", "text")
-                      .select("doc_id", "pred_lang"), "doc_id"))
-
-    q = (scored(stream).writeStream.format("memory")
-         .queryName("t_stream_quality").outputMode("append").start())
-    q.processAllAvailable()
-    q.stop()
-    got = spark.sql("SELECT * FROM t_stream_quality")
-    want = scored(docs)
-    assert got.count() == want.count() == docs.count()
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-
-
-def test_bloom_dedup_stream_cross_batch_and_twin(spark, tmp_path):
-    """Bloom-gated streaming dedup: cross-batch content duplicates are
-    dropped through the fixed-size word index (no false negatives), the
-    index stores WORDS not fingerprints (rows bounded by m/63 per
-    batch), and the real availableNow stream's end state equals the
-    batch replay twin exactly."""
-    from casf_spark.streaming.curation import (
-        bloom_dedup_replay_batches, bloom_dedup_stream_against_index)
+def test_bloom_dedup_replay_drops_cross_batch_duplicates(spark):
+    """Bloom-gated dedup: cross-batch content duplicates are dropped
+    through the fixed-size word index (no false negatives), and at
+    m=64Ki bits for 40 docs per batch no novel text is lost."""
+    from casf_spark.streaming.curation import bloom_dedup_replay_batches
 
     b1 = spark.createDataFrame(
         [(i, f"bloom text number {i}") for i in range(40)],
@@ -367,54 +64,20 @@ def test_bloom_dedup_stream_cross_batch_and_twin(spark, tmp_path):
     b2 = spark.createDataFrame(
         [(1000 + i, f"bloom text number {i}") for i in range(20, 60)],
         "doc_id long, text string")
-    land = tmp_path / "landing"
-    land.mkdir()
-    for i, b in enumerate((b1, b2)):
-        b.coalesce(1).write.parquet(str(tmp_path / f"s{i}"))
-        src = next(p for p in (tmp_path / f"s{i}").glob("*.parquet"))
-        (land / f"f{i}.parquet").symlink_to(src)
-    stream = (spark.readStream.schema(b1.schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(land)))
-    idx = str(tmp_path / "bloom_index")
-    out = str(tmp_path / "kept")
-    bloom_dedup_stream_against_index(stream, idx, out,
-                                     str(tmp_path / "ckpt"),
-                                     m_bits=1 << 16, k=4)
-
-    kept = spark.read.parquet(out)
-    texts = [r["text"] for r in kept.collect()]
-    # 60 distinct texts; 20 cross-batch dups MUST drop (no false
-    # negatives); at m=64Ki/n=40 the fp rate is ~0, so novel texts
-    # survive — assert exact set equality
-    assert sorted(texts) == sorted(f"bloom text number {i}"
-                                   for i in range(60))
-    # index holds words, bounded by m/63 per batch — far fewer rows
-    # than a fingerprint index would need at corpus scale, and every
-    # row is (word_idx, bits, _batch_id)
-    index = spark.read.parquet(idx)
-    assert set(index.columns) == {"word_idx", "bits", "_batch_id"}
-    assert index.count() <= 2 * ((1 << 16) // 63 + 1)
-
-    twin = {(r.doc, r.batch_id, r.fp)
-            for r in bloom_dedup_replay_batches(
-                [(0, b1), (1, b2)], m_bits=1 << 16, k=4).collect()}
-    streamed = {(r.doc, r._batch_id, r.fp)
-                for r in kept.select("doc", "_batch_id", "fp").collect()}
-    assert streamed == twin
+    kept = {r.doc: r.batch_id for r in bloom_dedup_replay_batches(
+        [(0, b1), (1, b2)], m_bits=1 << 16, k=4).collect()}
+    # 60 distinct texts: batch 0 keeps its 40, batch 1 only the 20 new
+    assert kept == {**{i: 0 for i in range(40)},
+                    **{1000 + i: 1 for i in range(40, 60)}}
 
 
-def test_cms_stream_counts_merge_and_twin(spark, tmp_path):
-    """Streaming CMS maintenance: the real availableNow stream's merged
-    index answers point queries exactly equal to the batch replay twin
-    AND to a single whole-corpus build (mergeability), with the index
-    bounded by depth*width cells per batch and every estimate >= the
-    true count."""
-    from casf_spark.operators.sketches import cms_build, cms_estimate
-    from casf_spark.streaming.curation import (cms_merged_estimates,
-                                               cms_replay_batches,
-                                               cms_stream_counts)
-    from pyspark.sql import functions as F
+def test_cms_replay_merge_equals_single_build(spark):
+    """Count-Min over two batches: per-batch sketches merged by cell-wise
+    sum answer point queries exactly like one whole-corpus build
+    (mergeability), and every estimate is >= the true count."""
     from casf_spark.functions.text import tokens
+    from casf_spark.operators.sketches import cms_build, cms_estimate
+    from casf_spark.streaming.curation import cms_replay_batches
 
     b1 = spark.createDataFrame(
         [(i, f"alpha beta w{i % 9} gamma") for i in range(30)],
@@ -422,81 +85,15 @@ def test_cms_stream_counts_merge_and_twin(spark, tmp_path):
     b2 = spark.createDataFrame(
         [(100 + i, f"alpha delta w{i % 5}") for i in range(25)],
         "doc_id long, text string")
-    land = tmp_path / "landing"
-    land.mkdir()
-    for i, b in enumerate((b1, b2)):
-        b.coalesce(1).write.parquet(str(tmp_path / f"s{i}"))
-        src = next(p for p in (tmp_path / f"s{i}").glob("*.parquet"))
-        (land / f"f{i}.parquet").symlink_to(src)
-    stream = (spark.readStream.schema(b1.schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(land)))
-    idx = str(tmp_path / "cms_index")
-    cms_stream_counts(stream, idx, str(tmp_path / "ckpt"),
-                      width=64, depth=4)
-
     whole = b1.unionByName(b2)
     toks = whole.select(F.explode(tokens("text")).alias("item"))
     truth = toks.groupBy("item").agg(F.count(F.lit(1)).alias("exact_cnt"))
-    streamed = {(r.item, r.cms_est) for r in cms_merged_estimates(
-        spark, idx, truth, width=64, depth=4).collect()}
-    twin = {(r.item, r.cms_est) for r in cms_replay_batches(
+    merged = {(r.item, r.cms_est) for r in cms_replay_batches(
         [(0, b1), (1, b2)], truth, width=64, depth=4).collect()}
     single = {(r.item, r.cms_est) for r in cms_estimate(
         truth, "item", cms_build(toks, "item", width=64, depth=4),
         width=64, depth=4).collect()}
-    assert streamed == twin == single
-    # one-sided guarantee on every item
-    est = dict(streamed)
+    assert merged == single
+    est = dict(merged)
     for r in truth.collect():
         assert est[r.item] >= r.exact_cnt
-    # index bounded by cells, not vocabulary
-    index = spark.read.parquet(idx)
-    assert index.count() <= 2 * 4 * 64
-
-
-def test_hist_stream_sketch_merge_equals_single_build(spark, tmp_path):
-    """Streaming histogram-sketch maintenance (round 13): the real
-    availableNow stream's merged index yields quantile estimates
-    exactly equal to a single whole-corpus build (counter-sum
-    commutativity — the events_quantile_sketch contract), the index
-    stays bounded by bins per batch, and every estimate is within one
-    bin width above the true nearest-rank quantile."""
-    import math
-    from casf_spark.operators.sketches import (hist_sketch_build,
-                                               hist_sketch_quantiles)
-    from casf_spark.streaming.curation import (hist_merged_quantiles,
-                                               hist_stream_sketch)
-
-    xs1 = [float((i * 17) % 90) for i in range(200)]
-    xs2 = [float(60 + (i * 7) % 40) for i in range(150)]
-    b1 = spark.createDataFrame([(i, x) for i, x in enumerate(xs1)],
-                               "event_id long, value double")
-    b2 = spark.createDataFrame([(1000 + i, x) for i, x in enumerate(xs2)],
-                               "event_id long, value double")
-    land = tmp_path / "landing"
-    land.mkdir()
-    for i, b in enumerate((b1, b2)):
-        b.coalesce(1).write.parquet(str(tmp_path / f"s{i}"))
-        src = next(p for p in (tmp_path / f"s{i}").glob("*.parquet"))
-        (land / f"f{i}.parquet").symlink_to(src)
-    stream = (spark.readStream.schema(b1.schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(land)))
-    idx = str(tmp_path / "hist_index")
-    hist_stream_sketch(stream, idx, str(tmp_path / "ckpt"),
-                       lo=0.0, hi=100.0, n_bins=50)
-
-    qs = [0.5, 0.9, 0.99]
-    streamed = {r.q: (r.target_rank, r.est) for r in
-                hist_merged_quantiles(spark, idx, qs,
-                                      0.0, 100.0, 50).collect()}
-    whole = b1.unionByName(b2)
-    single = {r.q: (r.target_rank, r.est) for r in hist_sketch_quantiles(
-        hist_sketch_build(whole, "value", 0.0, 100.0, 50),
-        qs, 0.0, 100.0, 50).collect()}
-    assert streamed == single
-    xs = sorted(xs1 + xs2)
-    for q in qs:
-        true = xs[math.ceil(q * len(xs)) - 1]
-        assert true < streamed[q][1] <= true + 2.0  # one 2.0-wide bin
-    index = spark.read.parquet(idx)
-    assert index.count() <= 2 * 50  # <= bins per batch

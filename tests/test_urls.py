@@ -7,8 +7,7 @@ from pyspark.sql import functions as F
 
 from casf_spark.operators.urls import (PUBLIC_SUFFIXES,
                                        domain_blocklist_filter, domain_caps,
-                                       normalize_url, public_suffix_table,
-                                       registered_domain,
+                                       normalize_url, registered_domain,
                                        registered_domain_join, url_host)
 
 
@@ -87,17 +86,9 @@ def test_registered_domain_join_matches_expression(spark):
     df = spark.createDataFrame([(h,) for h in hosts], "host string")
     expr = {r.host: r.d for r in df.select(
         "host", registered_domain(F.col("host")).alias("d")).collect()}
-    tbl = public_suffix_table(spark)
     join = {r.host: r.reg_domain for r in
-            registered_domain_join(df, "host", tbl).collect()}
+            registered_domain_join(df, "host", PUBLIC_SUFFIXES).collect()}
     assert expr == join
-
-
-def test_public_suffix_table_shape(spark):
-    tbl = public_suffix_table(spark).collect()
-    assert all(r.n_labels in (2, 3) for r in tbl)
-    assert len(tbl) == len(PUBLIC_SUFFIXES)
-    assert {"co.uk", "k12.ca.us", "nsw.edu.au"} <= {r.suffix for r in tbl}
 
 
 def test_url_host_keeps_non_default_port(spark):
@@ -172,7 +163,7 @@ def test_registered_domain_join_internal_collision_raises(spark):
     df = spark.createDataFrame([("ex.co.uk", 1)],
                                "host string, __psl_h int")
     with pytest.raises(ValueError, match="collision"):
-        registered_domain_join(df, "host", public_suffix_table(spark))
+        registered_domain_join(df, "host", PUBLIC_SUFFIXES)
 
 
 def test_psl_full_snapshot_shape():
@@ -206,9 +197,8 @@ def test_registered_domain_expression_join_equivalence_full_table(spark):
         "host",
         registered_domain(F.col("host"),
                           suffixes=PSL_ICANN_FULL).alias("d")).collect()}
-    tbl = public_suffix_table(spark, PSL_ICANN_FULL)
     join = {r.host: r.reg_domain for r in
-            registered_domain_join(df, "host", tbl).collect()}
+            registered_domain_join(df, "host", PSL_ICANN_FULL).collect()}
     assert expr == join
     # spot checks of the longest-match rule on the large table
     assert expr["sub.h.com.bo"] == "h.com.bo"
@@ -268,9 +258,9 @@ def test_registered_domain_join_psl_rules(spark):
         "deep.plain.org": "plain.org",
     }
     df = spark.createDataFrame([(h,) for h in cases], "host string")
-    tbl = public_suffix_table(spark, PSL_ICANN_FULL_RULES)
     got = {r.host: r.reg_domain for r in
-           registered_domain_join(df, "host", tbl).collect()}
+           registered_domain_join(df, "host",
+                                  PSL_ICANN_FULL_RULES).collect()}
     assert got == cases, {h: (got[h], cases[h])
                           for h in cases if got[h] != cases[h]}
 
@@ -329,17 +319,6 @@ def test_registered_domain_join_deep_rules(spark):
            registered_domain_join(df, "host", rules).collect()}
     assert got == cases, {h: (got[h], cases[h])
                           for h in cases if got[h] != cases[h]}
-
-
-def test_registered_domain_join_default_table(spark):
-    """suffix_table=None defaults to the vendored full ICANN rule set
-    instead of failing with a deep TypeError (round-13 ADVICE)."""
-    df = spark.createDataFrame(
-        [("a.example.co.uk",), ("bar.foo.ck",)], "host string")
-    got = {r.host: r.reg_domain for r in
-           registered_domain_join(df, "host").collect()}
-    assert got == {"a.example.co.uk": "example.co.uk",
-                   "bar.foo.ck": "bar.foo.ck"}
 
 
 def test_registered_domain_join_bad_rule_shapes(spark):
