@@ -1,11 +1,26 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec, ...}, "sf": ...}.
+"""Regression suite: times the registered queries and records what each did.
 
-Each query is fully materialized with a noop-format write (evaluates every
-output column — unlike count(), which lets Catalyst prune work).
+    python bench.py [name ...]
+
+Protocol, one code path for every query: one untimed warm pass of each
+query at $SPARK_GRAFT_WARM_DIR (default: the sf0.001 directory beside the
+timed data), then $SPARK_GRAFT_BENCH_RUNS timed samples (default 2) at
+$SPARK_GRAFT_SF_DIR (default sf0.1), keeping the fastest. Generated
+whole-stage-codegen classes are keyed by plan shape, not data size, so the
+small warm pass fills the codegen and JIT caches for every timed plan and
+the samples measure steady state, not first-run compilation. Each query is
+materialized with a noop-format write, which evaluates every output column
+(``count()`` would let Catalyst prune work).
+
+Every sample runs inside ``perfbench.engine.EngineProbe.op``, so its Spark
+jobs carry their own job group, described by the query's name. Standard
+output gets ONE JSON line with keys ``metric``, ``value`` (total seconds),
+``unit``, ``queries`` ({name: best seconds}), ``runs_per_query`` and ``sf``.
+``$SPARK_GRAFT_BENCH_FULL`` (default ``BENCH_full.json`` beside this file
+for the whole suite, no file for named queries) gets the same payload plus
+``layers``: for each query the fastest sample's jobs, stages, tasks,
+shuffle, spill, JIT, GC and codegen counters, and the driver's peak RSS.
 """
 
 from __future__ import annotations
@@ -19,287 +34,124 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
 from casf_spark.session import get_spark
+from perfbench.engine import EngineProbe
+from perfbench.host import rss_peak_mb
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+WARM_DIR = os.environ.get(
+    "SPARK_GRAFT_WARM_DIR",
+    os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.001"))
 
-# every oracle-checked query + the rows-only mapInPandas one
-BENCH_QUERIES = list(entrymod.queries().keys())
-
-#: queries measured in a DEDICATED subprocess JVM — one JVM per query.
-#: cosine_predict's slow JIT state is a stochastic sticky deopt
-#: (BASELINE.md "Residual predict bimodality"): once a process flips,
-#: best-of-N cannot recover, and the flip can strike even when the query
-#: is warmed+timed first (measured 10.1 s in one such run vs 3.5 s
-#: standalone). Round 4 showed the same flip landing on cosine_topk
-#: (driver recorded 9.35 s vs 1.28 s standalone) once predict moved into
-#: its own subprocess and topk became the first big fused plan the main
-#: JVM timed — so topk gets the same isolation, and each isolated name
-#: runs in its OWN fresh JVM so one query's deopt cannot contaminate the
-#: other's measurement. Every other query is stable in-suite and stays
-#: in-process. Set SPARK_GRAFT_BENCH_ONLY to run the subprocess leg;
-#: empty ISOLATE (or a failed subprocess) falls back to in-process
-#: timing.
-ISOLATE = ("cosine_predict", "cosine_topk")
-
-#: per-name ceiling of the measured steady-state band. The deopt flip is
-#: PER-PROCESS and sticky: a flipped JVM's best-of-N is 2-3x the steady
-#: state no matter how many samples it takes (BASELINE.md: a process
-#: running ONLY predict measured [3.56, 3.87, 14.42] after flipping).
-#: When an isolated leg lands above its ceiling, launch ONE more fresh
-#: JVM and keep the min — min over independent processes is the standard
-#: noise-free estimator, and the flip (~10-20%/process) is JIT
-#: nondeterminism, not workload. Two tries drop the odds of recording a
-#: flipped number to a few percent.
-ISOLATE_RETRY_ABOVE = {"cosine_predict": 6.0, "cosine_topk": 5.0}
+#: Spark's status store keeps 1000 stages and jobs by default and evicts
+#: skipped stages first (they never complete), so past ~1000 stages
+#: ``EngineProbe.op`` would look up a stage record that is gone. Both limits
+#: are read when the SparkContext starts, so they go on the launch line.
+#: The price: each stage lookup sorts every retained stage, so the probe's
+#: read time (``probe_s``) grows with the session.
+RETAIN_STATUS = ("--conf spark.ui.retainedStages=1000000 "
+                 "--conf spark.ui.retainedJobs=1000000")
 
 
 def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _run_isolated(names: list[str]) -> dict[str, float]:
-    """Time ``names`` in a fresh subprocess JVM (own warm, best-of-N);
-    returns {} on any failure so the caller falls back in-process."""
-    import json as _json
-    import subprocess
+def time_query(spark, probe: EngineProbe, name: str, fn, sf_dir: str,
+               runs: int) -> tuple[list[float], dict]:
+    """Time ``runs`` samples of query ``fn`` at ``sf_dir``.
 
-    env = dict(os.environ, SPARK_GRAFT_BENCH_ONLY=",".join(names))
-    try:
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__)],
-            env=env, capture_output=True, text=True, timeout=600)
-        line = out.stdout.strip().splitlines()[-1]
-        return {k: float(v)
-                for k, v in _json.loads(line)["queries"].items()}
-    except Exception as e:  # noqa: BLE001 — any failure -> fallback
-        print(f"# isolated leg failed ({e}); falling back in-process",
-              file=sys.stderr)
-        return {}
+    Returns the samples in seconds and a record: the fastest sample's probe
+    counters and ``rss_peak_mb``, and ``probe_s``, the time all samples
+    spent in the probe outside the query."""
+    jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
+    samples: list[float] = []
+    best: dict = {}
+    probe_s = 0.0
+    for _ in range(runs):
+        out: dict = {}
+        t_enter = time.perf_counter()
+        with probe.op(out):
+            spark.sparkContext.setJobDescription(f"bench:{name}")
+            t0 = time.perf_counter()
+            materialize(fn(spark, sf_dir))
+            dt = time.perf_counter() - t0
+        probe_s += time.perf_counter() - t_enter - dt
+        out["rss_peak_mb"] = rss_peak_mb(jvm_pid)
+        spark.catalog.clearCache()  # warm code, cold data
+        if not samples or dt < min(samples):
+            best = {k: round(v, 3) for k, v in out.items()}
+        samples.append(round(dt, 3))
+    return samples, dict(best, probe_s=round(probe_s, 3))
 
 
 def main() -> None:
+    qs = entrymod.queries()
+    names = sys.argv[1:] or list(qs)
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        sys.exit(f"unknown queries: {unknown}")
     sf_label = os.path.basename(SF_DIR.rstrip("/")).replace("sf", "")
     try:
         sf = float(sf_label)
     except ValueError:
         sf = sf_label
-    only = [n for n in os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").split(",")
-            if n]
-    spark = get_spark("casf_bench")
-
-    # Warm-up: run the whole suite once at sf0.001 (untimed). Generated
-    # whole-stage-codegen classes are keyed by plan shape, not data size, so
-    # this fills the codegen + JIT caches for every timed plan — the timed
-    # numbers then reflect steady-state throughput (what a long-running
-    # cluster job sees) instead of first-run JIT compilation, which
-    # dominated cold per-query times (e.g. 12.8s cold vs 1.7s steady for
-    # the dense top-k pipeline at sf0.1).
-    warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    qs = entrymod.queries()
-    # best-of-N per query (min = the standard noise-free estimator; single
-    # runs showed +-40% run-to-run variance on the heavy queries locally)
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
+    full_path = os.environ.get("SPARK_GRAFT_BENCH_FULL") or (
+        None if sys.argv[1:] else os.path.join(
+            os.path.dirname(os.path.abspath(__file__)), "BENCH_full.json"))
+
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
+        [RETAIN_STATUS, os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")])
+    spark = get_spark("casf_bench")
+    probe = EngineProbe(spark)
+
+    if os.path.isdir(WARM_DIR):
+        for name in names:
+            spark.sparkContext.setJobDescription(f"warm:{name}")
+            try:
+                materialize(qs[name](spark, WARM_DIR))
+            except Exception as e:  # noqa: BLE001 — the timed pass reports it
+                print(f"# warm {name} FAILED: {e}", file=sys.stderr)
+        # CacheManager matches persisted plans structurally: without this
+        # a timed sample could read a warm query's cached data
+        spark.catalog.clearCache()
+
     timings: dict[str, float] = {}
-
-    # optional storm forensics: per-sample JIT-compilation-time delta and
-    # code-cache/metaspace occupancy, written as JSONL (debug only — does
-    # not change what is timed or reported)
-    dbg_path = os.environ.get("SPARK_GRAFT_BENCH_DEBUG")
-    dbg_fh = open(dbg_path, "a") if dbg_path else None
-    jmf = (spark._jvm.java.lang.management.ManagementFactory
-           if dbg_fh else None)
-
-    def _jvm_gauges() -> dict:
-        out = {"jit_ms": jmf.getCompilationMXBean().getTotalCompilationTime()}
-        for pool in jmf.getMemoryPoolMXBeans():
-            n = pool.getName()
-            if "CodeHeap" in n or "Metaspace" in n:
-                out[n] = pool.getUsage().getUsed()
-        return out
-
-    def time_query(name: str) -> None:
-        fn = qs[name]
-        best = -1.0
-        samples: list[float] = []
-        # best-of-N plus adaptive retries: heavy plans occasionally hit a
-        # transient 2-3x outlier (GC pause / deopt storm) on BOTH base
-        # runs; when the samples disagree by >50% keep sampling (up to 2
-        # extra) so one bad pair can't masquerade as the steady state.
-        attempts = 0
-        while attempts < runs + 2:
-            g0 = _jvm_gauges() if dbg_fh else None
-            t0 = time.time()
-            try:
-                materialize(fn(spark, SF_DIR))
-                dt = round(time.time() - t0, 3)
-            except Exception as e:  # record failures without killing the run
-                print(f"# {name} FAILED: {e}", file=sys.stderr)
-                break
-            if dbg_fh:
-                g1 = _jvm_gauges()
-                rec = {"q": name, "sec": dt,
-                       "jit_delta_ms": g1["jit_ms"] - g0["jit_ms"]}
-                rec.update({k: v for k, v in g1.items() if k != "jit_ms"})
-                dbg_fh.write(json.dumps(rec) + "\n")
-                dbg_fh.flush()
-            samples.append(dt)
-            best = dt if best < 0 else min(best, dt)
-            spark.catalog.clearCache()  # warm code, cold data (see above)
-            attempts += 1
-            if attempts >= runs and (max(samples) - best) <= 0.5 * best:
-                break
-            if attempts >= runs and best <= 1.0:
-                break  # sub-second shapes: jitter, not instability
-        timings[name] = best
-
-    if only:
-        # subprocess leg: own 3-pass warm at SF_DIR, then best-of-N
-        for _ in range(3):
-            for name in only:
-                try:
-                    materialize(qs[name](spark, SF_DIR))
-                except Exception:
-                    pass
-            spark.catalog.clearCache()
-        for name in only:
-            time_query(name)
-        print(json.dumps({"metric": "isolated_leg_sec",
-                          "value": round(sum(timings.values()), 3),
-                          "unit": "sec", "queries": timings, "sf": sf}))
-        return
-
-    for iso in ISOLATE:
-        if iso in BENCH_QUERIES:
-            got = _run_isolated([iso])
-            if got.get(iso, 0) > ISOLATE_RETRY_ABOVE.get(iso, float("inf")):
-                print(f"# {iso}: {got[iso]}s exceeds steady band -> "
-                      f"one fresh-JVM retry", file=sys.stderr)
-                retry = _run_isolated([iso])
-                if retry.get(iso) and retry[iso] < got[iso]:
-                    got = retry
-            for name, t in got.items():
-                timings[name] = t
-
-    # PHASE 1 — the heavy cosine family, timed in a near-pristine JVM.
-    # The biggest fused plans (predict/topk) are JIT-fragile: in a JVM
-    # that has executed the other ~130 plans first they occasionally lock
-    # into a 3x-slower compiled state for the whole process (measured
-    # 10.4 s vs 1.3-3.3 s for identical code/data; retries don't recover
-    # it). Timing them FIRST — right after their own 3-pass warm at
-    # SF_DIR, before the suite-wide warm floods the JIT with hundreds of
-    # generated classes — measures the state a dedicated production job
-    # actually runs in. Three warm passes because tiered compilation
-    # needs ~5 executions to fully promote these methods.
-    heavy = [n for n in BENCH_QUERIES
-             if n.startswith("cosine_") or n.startswith("doc_cosine")]
-    # cosine_predict first: the slow JIT state (BASELINE.md "Residual
-    # predict bimodality") is entered by a stochastic deopt event and is
-    # sticky for the process — measured [3.56, 3.87, 14.42] in a process
-    # that ran ONLY predict. Sampling it before any other timed query
-    # minimizes the chance the process has flipped by the time it's
-    # measured.
-    heavy.sort(key=lambda n: n != "cosine_predict")
-    for _ in range(3):
-        for name in heavy:
-            try:
-                materialize(qs[name](spark, SF_DIR))
-            except Exception:
-                pass
-        spark.catalog.clearCache()
-    for name in heavy:
-        if name not in timings:  # isolated-leg names are already measured
-            time_query(name)
-
-    # PHASE 2 — everything else, after a full-suite warm at sf0.001.
-    # Generated classes are keyed by plan shape, not data size, so the
-    # small-SF pass fills codegen+JIT caches for every remaining plan;
-    # timed numbers then reflect steady-state throughput, not first-run
-    # compilation (measured 12.8 s cold vs 1.7 s steady for the dense
-    # top-k pipeline at sf0.1).
-    if os.path.isdir(warm_dir):
-        for name, fn in qs.items():
-            if name in timings:
-                continue
-            try:
-                materialize(fn(spark, warm_dir))
-            except Exception:
-                pass
-        # Drop caches persisted by warm-up queries. Essential when warming
-        # at SF_DIR itself: CacheManager matches persisted plans
-        # structurally, so without this the timed pass would read the
-        # warm-up's cached data instead of computing.
-        spark.catalog.clearCache()
-    for name in BENCH_QUERIES:
-        if name not in timings:
-            time_query(name)
-
-    # END-OF-SUITE RESAMPLE (r14 measurement fix, documented in
-    # OPTIMIZATION_r14.md): a 250-plan session intermittently hits
-    # multi-second JIT compile/deopt storms (measured: 4-20 s of JVM
-    # compilation time INSIDE a timed sample), and a storm spans all of a
-    # query's back-to-back samples — so the adaptive retry above cannot
-    # escape it and the recorded "best" is 2-5x the steady state for
-    # whichever ~10 queries were unlucky THIS run (a different set every
-    # run; r13's driver bench vs this round's baseline agree on the
-    # total within 1% while disagreeing 2-5x on individual queries).
-    # After the whole suite has run, give every multi-second query two
-    # more samples and keep the min: same estimator (min over samples of
-    # the identical computation), same uniform rule for every query, no
-    # per-name tuning — by suite end the storm has passed and the late
-    # samples measure the steady state (validated: 28.9 s recovered over
-    # 27 queries in the instrumented run; sticky-slow queries measure
-    # identical late, so the min is unchanged for them).
-    resample_above = float(os.environ.get("SPARK_GRAFT_RESAMPLE_ABOVE",
-                                          "2.0"))
-    for name in BENCH_QUERIES:
-        if timings.get(name, 0) <= resample_above:
+    layers: dict[str, dict] = {}
+    failed: list[str] = []
+    for name in names:
+        try:
+            samples, rec = time_query(spark, probe, name, qs[name], SF_DIR,
+                                      runs)
+        except Exception as e:  # noqa: BLE001 — record it, keep the suite
+            print(f"# {name} FAILED: {e}", file=sys.stderr)
+            failed.append(name)
             continue
-        fn = qs[name]
-        before = timings[name]
-        for _ in range(2):
-            g0 = _jvm_gauges() if dbg_fh else None
-            t0 = time.time()
-            try:
-                materialize(fn(spark, SF_DIR))
-            except Exception:
-                break
-            dt = round(time.time() - t0, 3)
-            spark.catalog.clearCache()
-            if dbg_fh:
-                g1 = _jvm_gauges()
-                dbg_fh.write(json.dumps(
-                    {"q": name, "sec": dt, "phase": "resample",
-                     "jit_delta_ms": g1["jit_ms"] - g0["jit_ms"]}) + "\n")
-                dbg_fh.flush()
-            timings[name] = min(timings[name], dt)
-        if timings[name] < before:
-            print(f"# resample: {name} {before} -> {timings[name]}",
-                  file=sys.stderr)
-
-    total = sum(v for v in timings.values() if v > 0)
-    timings = {n: timings[n] for n in BENCH_QUERIES if n in timings}
+        timings[name] = min(samples)
+        layers[name] = dict(rec, samples=samples)
+        print(f"# {name} best={timings[name]} samples={samples} "
+              f"jobs={rec['spark.jobs']} jit_ms={rec['jvm.jit_ms']}",
+              file=sys.stderr, flush=True)
 
     payload = {
         "metric": "headline_suite_wall_sec",
-        "value": round(total, 3),
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "runs_per_query": runs,
         "sf": sf,
     }
-    # The driver truncates the captured stdout tail (~2000 chars), which
-    # cuts the per-query map to ~70 of 139 entries — persist the FULL
-    # timing map to a round-stamped file so it stays auditable.
-    full_path = os.environ.get("SPARK_GRAFT_BENCH_FULL",
-                               os.path.join(os.path.dirname(
-                                   os.path.abspath(__file__)),
-                                   "BENCH_full.json"))
-    try:
+    if full_path:
+        # the full record: the stdout line's tail gets truncated by
+        # log capture, and it carries no per-query counters
+        probe_s = sum(r["probe_s"] for r in layers.values())
+        sampled_s = sum(sum(r["samples"]) for r in layers.values())
         with open(full_path, "w") as fh:
-            json.dump(payload, fh, indent=1, sort_keys=False)
-    except OSError as e:
-        print(f"# full-timings write failed: {e}", file=sys.stderr)
-
+            json.dump(dict(payload, cpus=spark.sparkContext.defaultParallelism,
+                           failed=failed,
+                           sampled_s=round(sampled_s, 3),
+                           probe_s=round(probe_s, 3),
+                           layers=layers), fh, indent=1)
     print(json.dumps(payload))
 
 

@@ -74,8 +74,9 @@ class CosineModel:
         #: FACTOR_NORMALIZED_VALUE — aligned element pairs per shared coord
         self.factor_pairs = factor_pairs
         self.is_sparse = is_sparse
-        # intermediates persisted by query methods, released by unpersist()
-        self._extra_caches: list[DataFrame] = []
+        # top_k's persisted similarity tables, one per round_to, shared by
+        # every top_k / predict_missing call and released by unpersist()
+        self._sims: dict[int | None, DataFrame] = {}
 
     # ------------------------------------------------------------------ #
 
@@ -285,18 +286,22 @@ class CosineModel:
         union. Without it the union's two branches each carry the ENTIRE
         similarity pipeline as a separate subtree — double the compute if
         exchange reuse misses, and double the generated-code compilation
-        even when it hits (measured ~2x cold wall time at sf0.1). The cache
-        is released by :meth:`unpersist`.
+        even when it hits (measured ~2x cold wall time at sf0.1). The table
+        is persisted once per ``round_to`` and reused by later calls; it is
+        released by :meth:`unpersist`.
         """
-        sims = self.all_similarity()
-        if round_to is not None:
-            sims = sims.withColumn(
-                "similarity_value", F.round("similarity_value", round_to))
-        sims = sims.persist(StorageLevel.MEMORY_AND_DISK)
-        self._extra_caches.append(sims)
-        # fill the cache now (a small planning action, like AQE stats) so
-        # the union's two branches read it instead of racing to fill it
-        sims.count()
+        sims = self._sims.get(round_to)
+        if sims is None:
+            sims = self.all_similarity()
+            if round_to is not None:
+                sims = sims.withColumn(
+                    "similarity_value", F.round("similarity_value", round_to))
+            sims = sims.persist(StorageLevel.MEMORY_AND_DISK)
+            self._sims[round_to] = sims
+            # fill the cache now (a small planning action, like AQE stats)
+            # so the union's two branches read it instead of racing to
+            # fill it
+            sims.count()
         sym = sims.select(
             F.col("vector0").alias("vector"),
             F.col("vector1").alias("neighbor"),
@@ -349,9 +354,9 @@ class CosineModel:
         """Release the cached intermediates (fixes the reference's premature
         unpersist at MatrixCosineAnalyse.scala:223, which fired before any
         action materialized the cache)."""
-        for df in (self.normalized, self.factor_pairs, *self._extra_caches):
+        for df in (self.normalized, self.factor_pairs, *self._sims.values()):
             try:
                 df.unpersist()
             except Exception:
                 pass
-        self._extra_caches.clear()
+        self._sims.clear()

@@ -87,8 +87,8 @@ def bloom_dedup_replay_batches(batches: list[tuple[int, DataFrame]],
                                text_col: str = "text",
                                m_bits: int = 1 << 16,
                                k: int = 4) -> DataFrame:
-    """Bloom-gated exact dedup of ordered ``(batch_id, docs)`` batches:
-    each batch drops the documents whose normalized text finds all k of
+    """Bloom-gated exact dedup of ``(batch_id, docs)`` batches, replayed
+    in ``batch_id`` order whatever the list order: each batch drops the documents whose normalized text finds all k of
     its bits already set in the FIXED-size bitmap built from earlier
     batches' keepers (the Dolma-BFF shape), after an exact within-batch
     fingerprint argmin. Returns the end state (doc, batch_id, fp) of
@@ -102,7 +102,7 @@ def bloom_dedup_replay_batches(batches: list[tuple[int, DataFrame]],
 
     words_acc: DataFrame | None = None
     out: DataFrame | None = None
-    for batch_id, df in batches:
+    for batch_id, df in sorted(batches, key=lambda p: p[0]):
         fp = df.select(
             F.col(id_col).cast("long").alias("doc"),
             F.col(text_col).alias("text"),

@@ -182,6 +182,13 @@ def test_top_k_and_predict(spark):
              for r in model2.predict_missing(k=2).collect()}
     assert ("y1", "x4") in preds
     assert 0.0 < preds[("y1", "x4")] <= 1.0
+    # predict_missing reuses the similarity table top_k persisted for the
+    # same round_to; unpersist releases it
+    model2.top_k(1).collect()
+    assert list(model2._sims) == [None]
+    assert model2._sims[None].is_cached
+    model2.unpersist()
+    assert not model2._sims
 
 
 def test_similarity_for_pairs_semi_join(spark):

@@ -64,11 +64,13 @@ def test_bloom_dedup_replay_drops_cross_batch_duplicates(spark):
     b2 = spark.createDataFrame(
         [(1000 + i, f"bloom text number {i}") for i in range(20, 60)],
         "doc_id long, text string")
-    kept = {r.doc: r.batch_id for r in bloom_dedup_replay_batches(
-        [(0, b1), (1, b2)], m_bits=1 << 16, k=4).collect()}
-    # 60 distinct texts: batch 0 keeps its 40, batch 1 only the 20 new
-    assert kept == {**{i: 0 for i in range(40)},
-                    **{1000 + i: 1 for i in range(40, 60)}}
+    # 60 distinct texts: batch 0 keeps its 40, batch 1 only the 20 new,
+    # in whatever order the list holds the batches
+    for batches in ([(0, b1), (1, b2)], [(1, b2), (0, b1)]):
+        kept = {r.doc: r.batch_id for r in bloom_dedup_replay_batches(
+            batches, m_bits=1 << 16, k=4).collect()}
+        assert kept == {**{i: 0 for i in range(40)},
+                        **{1000 + i: 1 for i in range(40, 60)}}
 
 
 def test_cms_replay_merge_equals_single_build(spark):
