@@ -143,29 +143,23 @@ def normalize_ts(dtype, col: str = "ts"):
 
 def matrix_from_lineitem(spark: SparkSession, sf_dir: str,
                          y: str = "l_suppkey", x: str = "l_partkey",
-                         value: str = "l_quantity",
-                         partition_by_vector: bool = True) -> DataFrame:
+                         value: str = "l_quantity") -> DataFrame:
     """Derive a COO sparse matrix from lineitem: one cell per (y, x) with
     value = sum(value_col). E.g. supplier purchase-profiles over parts.
 
     Only the three needed columns are selected, so the parquet scan prunes
     to exactly that ReadSchema.
 
-    ``partition_by_vector`` pre-partitions the raw rows by ``y`` before the
-    cell aggregation. HashPartitioning(y) satisfies the (y, x) aggregation's
-    clustered requirement AND the downstream per-vector max aggregation and
+    The raw rows are pre-partitioned by ``y`` before the cell aggregation.
+    HashPartitioning(y) satisfies the (y, x) aggregation's clustered
+    requirement AND the downstream per-vector max aggregation and
     normalization join in CosineAnalyser — removing two exchanges of the
     cell table from every cosine plan (measured ~30-40% off the sparse
-    pipeline at sf0.1). Trade-off: the one shuffle that remains carries RAW
-    rows instead of map-side-combined cells — right when (y, x) duplication
-    is low (here: 600k rows -> 591k cells). For high-duplication corpora
-    set False (keep the combine) or repartition the aggregated result.
+    pipeline at sf0.1).
     """
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col(y).cast("string").alias("y"),
         F.col(x).cast("string").alias("x"),
         F.col(value).cast("double").alias("value"),
-    )
-    if partition_by_vector:
-        li = li.repartition("y")
+    ).repartition("y")
     return li.groupBy("y", "x").agg(F.sum("value").alias("value"))

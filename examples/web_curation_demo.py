@@ -45,10 +45,11 @@ def main() -> None:
     # ---- synthesize a crawl: the documents table wrapped in markup +
     # ---- messy URLs (the same doc_id-keyed plants the contract queries
     # ---- use — a real deployment reads WARC records here)
-    import __spark_entry__ as E
+    from casf_spark.queries._common import _planted_urls
+    from casf_spark.queries.web import _URL_BLOCKLIST
 
     docs = load_table(spark, sf_dir, "documents")
-    crawl = (E._planted_urls(docs)
+    crawl = (_planted_urls(docs)
              .join(docs.select(F.col("doc_id").cast("long").alias("doc_id"),
                                "text"), "doc_id"))
     i = F.col("doc_id")
@@ -70,7 +71,7 @@ def main() -> None:
         HT.extract_text(F.col("html")).alias("text"))
 
     # ---- blocklist gate (broadcast anti-join)
-    bl = spark.createDataFrame([(d,) for d in E._URL_BLOCKLIST],
+    bl = spark.createDataFrame([(d,) for d in _URL_BLOCKLIST],
                                "reg_domain string")
     pages = URL.domain_blocklist_filter(pages, "reg_domain", bl)
 

@@ -9,7 +9,10 @@ self-join with ZERO Exchange operators on the bucketed path.
 
 from __future__ import annotations
 
+import os
 import re
+import shutil
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
@@ -57,3 +60,28 @@ def test_bucketed_matrix_self_join_has_no_exchange(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("DROP TABLE IF EXISTS bucketed_matrix")
+
+
+def test_cosine_bucketed_leaves_shared_warehouse_alone(spark, sf_dir,
+                                                      tmp_path):
+    """q_cosine_bucketed keeps its table under this session's own root:
+    a directory at the shared spark-warehouse/ location its table name
+    maps to (another process's files) is left untouched, and the rows
+    equal cosine_sparse's."""
+    from casf_spark.queries.cosine import q_cosine_bucketed, q_cosine_sparse
+
+    sf = tmp_path / "sf_bucketed"
+    sf.mkdir()
+    shutil.copy(f"{sf_dir}/lineitem.parquet", sf / "lineitem.parquet")
+    mtime = 1_000_000_007
+    os.utime(sf / "lineitem.parquet", (mtime, mtime))
+    foreign = Path("spark-warehouse") / f"supplier_matrix_sf_bucketed_{mtime}"
+    foreign.mkdir(parents=True, exist_ok=True)
+    (foreign / "other_process.txt").write_text("in use")
+    try:
+        got = sorted(map(tuple, q_cosine_bucketed(spark, str(sf)).collect()))
+        want = sorted(map(tuple, q_cosine_sparse(spark, str(sf)).collect()))
+        assert got and got == want
+        assert (foreign / "other_process.txt").read_text() == "in use"
+    finally:
+        shutil.rmtree(foreign, ignore_errors=True)

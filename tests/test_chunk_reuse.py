@@ -15,7 +15,7 @@ sys.path.insert(0, "/root/repo")
 
 
 def _reuse(spark, sf_dir):
-    from __spark_entry__ import q_cdc_chunk_reuse
+    from casf_spark.queries.dedup import q_cdc_chunk_reuse
     return q_cdc_chunk_reuse(spark, sf_dir).collect()
 
 

@@ -634,17 +634,18 @@ def test_self_dedup_plant_guarantees_work(spark, sf_dir):
     """The q_text_self_dedup plant: every doc_id % 10 == 0 doc with
     >= 10 tokens removes >= 1 chunk (chunk 0 == chunk 1 by
     construction); unplanted docs are untouched on this corpus."""
-    import __spark_entry__ as E
+    from casf_spark.queries.text import q_text_self_dedup
+    from casf_spark.sources import load_table
     from casf_spark.functions.text import tokens
 
     from pyspark.sql import functions as F
 
-    docs = E.load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     eligible = {r.doc_id for r in docs.select(
         F.col("doc_id").cast("long").alias("doc_id"))
         .where((F.col("doc_id") % 10 == 0)
                & (F.size(tokens("text")) >= 10)).collect()}
-    rows = E.q_text_self_dedup(spark, sf_dir).collect()
+    rows = q_text_self_dedup(spark, sf_dir).collect()
     removed = {r.doc_id for r in rows if r.n_removed > 0}
     assert eligible and eligible <= removed
     assert all(r.doc_id % 10 == 0 for r in rows if r.n_removed > 0)

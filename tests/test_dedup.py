@@ -437,9 +437,9 @@ def test_maximal_spans_conservation(spark, sf_dir):
     between them; every span is >= n tokens."""
     from casf_spark.operators.dedup import (cross_doc_spans,
                                             maximal_duplicated_spans)
-    import __spark_entry__ as E
+    from casf_spark.sources import load_table
 
-    docs = E.load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     spans = maximal_duplicated_spans(docs, "doc_id", "text", n=4).collect()
     covered = {r.doc: r.covered
                for r in cross_doc_spans(docs, "doc_id", "text",
@@ -463,10 +463,11 @@ def test_er_customer_link_planted_matches(spark, sf_dir):
     """Every planted dirty copy (key+10M, last name char corrupted,
     balance +0.01) is found and flagged is_match; the pair's lev is
     exactly 1 and bal_diff exactly 0.01."""
-    import __spark_entry__ as E
+    from casf_spark.queries.dedup import q_er_customer_link
+    from casf_spark.sources import load_table
 
-    rows = E.q_er_customer_link(spark, sf_dir).collect()
-    n_cust = E.load_table(spark, sf_dir, "customer").count()
+    rows = q_er_customer_link(spark, sf_dir).collect()
+    n_cust = load_table(spark, sf_dir, "customer").count()
     planted = {(r.cust0, r.cust1): r for r in rows
                if r.cust1 >= 10_000_000}
     expect_keys = {(k, k + 10_000_000)

@@ -105,10 +105,11 @@ def test_pcm_pipeline_end_to_end(spark, sf_dir):
     duration at 16 kHz, and every per-payload DSP invariant asserted true
     (the query emits its contract columns; raw rms/peak exactness is
     pinned in test_decode_pcm_*)."""
-    import __spark_entry__ as E
-    out = E.q_multimodal_pcm(spark, sf_dir)
+    from casf_spark.queries.multimodal import q_multimodal_pcm
+    from casf_spark.sources import load_table
+    out = q_multimodal_pcm(spark, sf_dir)
     rows = out.collect()
-    n_docs = E.load_table(spark, sf_dir, "documents").count()
+    n_docs = load_table(spark, sf_dir, "documents").count()
     assert len(rows) == n_docs
     for r in rows[:20]:
         assert r.n_samples == 1600

@@ -13,7 +13,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-import __spark_entry__ as E
+from casf_spark.queries.dedup import q_dedup_incremental
+from casf_spark.queries.relational import q_cdc_snapshot
 from casf_spark.sources.tables import load_table
 
 
@@ -129,7 +130,7 @@ def test_cdc_snapshot_newest_wins_and_deletes_filtered(spark, sf_dir):
     upsert, once each, carrying that newest row's payload — recomputed
     here with an independent window-ranked plan."""
     from pyspark.sql import Window
-    snap = E.q_cdc_snapshot(spark, sf_dir)
+    snap = q_cdc_snapshot(spark, sf_dir)
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", "o_orderdate", "o_totalprice",
         F.when(F.col("o_orderstatus") == "F", F.lit("d"))
@@ -156,7 +157,7 @@ def test_incremental_dedup_labels_partition_batch(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     new = docs.where(F.col("source") == "src19")
     hist = docs.where(F.col("source") != "src19")
-    out = E.q_dedup_incremental(spark, sf_dir).cache()
+    out = q_dedup_incremental(spark, sf_dir).cache()
     try:
         assert out.count() == new.count()
         assert out.select("doc").distinct().count() == out.count()

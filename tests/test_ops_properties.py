@@ -150,18 +150,18 @@ def test_text_chunks_cover_every_token_in_order(spark, docs):
     appears in some chunk at its original relative order; chunk 0 starts
     at token 1; consecutive chunks overlap by size-stride tokens (except
     a possibly-short final chunk); no chunk exceeds the window size."""
-    import __spark_entry__ as E
+    from casf_spark.queries import text as text_queries
 
     rows = [(i, " ".join(toks)) for i, toks in docs]
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
     # run the same chunker the query uses, on this synthetic frame
-    orig_load = E.load_table
+    orig_load = text_queries.load_table
     try:
-        E.load_table = lambda _s, _sf, _n: df
-        out = E.q_text_chunks(spark, "unused").collect()
+        text_queries.load_table = lambda _s, _sf, _n: df
+        out = text_queries.q_text_chunks(spark, "unused").collect()
     finally:
-        E.load_table = orig_load
+        text_queries.load_table = orig_load
 
     by_doc = {}
     for r in out:
@@ -190,17 +190,17 @@ def test_train_shards_bijection_and_determinism(spark, ids):
     """Shard assignment invariants: every doc exactly once, positions
     within each shard are 1..n_shard with no gaps, and a re-run is
     bit-identical (seeded)."""
-    import __spark_entry__ as E
+    from casf_spark.queries import lm as lm_queries
 
     df = spark.createDataFrame([(i, "t") for i in ids],
                                "doc_id long, text string")
-    orig_load = E.load_table
+    orig_load = lm_queries.load_table
     try:
-        E.load_table = lambda _s, _sf, _n: df
-        a = E.q_train_shards(spark, "unused").collect()
-        b = E.q_train_shards(spark, "unused").collect()
+        lm_queries.load_table = lambda _s, _sf, _n: df
+        a = lm_queries.q_train_shards(spark, "unused").collect()
+        b = lm_queries.q_train_shards(spark, "unused").collect()
     finally:
-        E.load_table = orig_load
+        lm_queries.load_table = orig_load
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     assert sorted(r.doc_id for r in a) == sorted(ids)
     by_shard = {}

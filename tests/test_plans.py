@@ -10,7 +10,15 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-import __spark_entry__ as E
+from casf_spark.queries.cosine import q_cosine_via_sql
+from casf_spark.queries.quality import (q_curation_funnel, q_decontaminate,
+                                        q_pii_redact)
+from casf_spark.queries.relational import (q_q1, q_q3, q_q8_market_share,
+                                           q_q17_small_quantity,
+                                           q_q19_disjunctive_revenue)
+from casf_spark.queries.sampling import (q_budget_select, q_mixture_resample,
+                                         q_sample_stratified)
+from casf_spark.queries.text import q_tfidf_terms
 from casf_spark import CosineAnalyser
 from casf_spark.plans.inspect import (assert_no_cartesian,
                                       broadcast_join_count, explain_str,
@@ -27,7 +35,7 @@ def test_matrix_scan_prunes_columns(spark, sf_dir):
 
 
 def test_q1_filter_pushdown(spark, sf_dir):
-    df = E.q_q1(spark, sf_dir)
+    df = q_q1(spark, sf_dir)
     pushed = pushed_filters(df)
     assert any("l_shipdate" in p for p in pushed), pushed
 
@@ -46,7 +54,7 @@ def test_dense_cosine_single_cartesian(spark, sf_dir):
 
 
 def test_q3_broadcasts_customer(spark, sf_dir):
-    df = E.q_q3(spark, sf_dir)
+    df = q_q3(spark, sf_dir)
     assert broadcast_join_count(df) >= 1
 
 
@@ -94,7 +102,7 @@ def test_q8_all_joins_broadcast(spark, sf_dir):
     """The 6-table market-share join must plan as all broadcast hash
     joins at test scale — no sort-merge/shuffled-hash on the dimension
     chains."""
-    df = E.q_q8_market_share(spark, sf_dir)
+    df = q_q8_market_share(spark, sf_dir)
     plan = explain_str(df)
     assert broadcast_join_count(df) >= 4
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
@@ -104,7 +112,7 @@ def test_q19_disjunction_reaches_scan(spark, sf_dir):
     """The OR'd quantity predicate must push into the lineitem scan (not
     become a post-join filter) and the scan must prune to the 4 needed
     columns."""
-    df = E.q_q19_disjunctive_revenue(spark, sf_dir)
+    df = q_q19_disjunctive_revenue(spark, sf_dir)
     pushed = pushed_filters(df)
     assert any("l_quantity" in p and "Or(" in p for p in pushed), pushed
     schemas = scan_read_schema(df)
@@ -118,7 +126,7 @@ def test_q17_single_fact_scan_reused(spark, sf_dir):
     join-against-groupBy form scans the fact table twice — its two subtrees
     prune to different columns, so ReusedExchange cannot merge them) and no
     self-join of lineitem (window, not SortMergeJoin)."""
-    df = E.q_q17_small_quantity(spark, sf_dir)
+    df = q_q17_small_quantity(spark, sf_dir)
     plan = explain_str(df)
     assert plan.count("lineitem.parquet") == 1, plan
     assert "SortMergeJoin" not in plan
@@ -143,7 +151,7 @@ def test_decontaminate_corpus_side_never_shuffles(spark, sf_dir, no_spread):
     join with NO exchange — every shuffle in the plan is over the
     benchmark grams or the post-join contaminated residue, never the
     full corpus."""
-    df = E.q_decontaminate(spark, sf_dir)
+    df = q_decontaminate(spark, sf_dir)
     assert broadcast_join_count(df) >= 1, explain_str(df)
     plan = explain_str(df)
     # in the formatted tree the corpus subtree is the lines between the
@@ -175,7 +183,7 @@ def test_pack_sequences_no_global_window(spark, sf_dir):
 
 def test_pii_scrub_single_projection_no_shuffle(spark, sf_dir, no_spread):
     """PII audit is scan -> project: no exchange anywhere."""
-    df = E.q_pii_redact(spark, sf_dir)
+    df = q_pii_redact(spark, sf_dir)
     plan = explain_str(df)
     assert "Exchange" not in plan, plan
 
@@ -183,7 +191,7 @@ def test_pii_scrub_single_projection_no_shuffle(spark, sf_dir, no_spread):
 def test_stratified_sample_filter_reaches_scan(spark, sf_dir, no_spread):
     """The md5-rate filter is a narrow predicate: no exchange, single
     scan."""
-    df = E.q_sample_stratified(spark, sf_dir)
+    df = q_sample_stratified(spark, sf_dir)
     plan = explain_str(df)
     assert "Exchange" not in plan, plan
 
@@ -192,7 +200,7 @@ def test_budget_select_windows_are_partitioned(spark, sf_dir):
     """Both prefix-sum windows key on a partition (stratum+chunk for the
     doc table, stratum for the chunk totals) — no single-task global
     window over the corpus."""
-    df = E.q_budget_select(spark, sf_dir)
+    df = q_budget_select(spark, sf_dir)
     plan = explain_str(df)
     assert "Window" in plan
     assert "Exchange SinglePartition" not in plan, plan
@@ -202,7 +210,7 @@ def test_tfidf_no_window_grouped_topk(spark, sf_dir):
     """Per-doc top-k runs as a hash aggregation (slice/array_sort), not a
     row_number window over the full doc-term table; the only
     single-partition exchange feeds the 1-row corpus-count aggregate."""
-    df = E.q_tfidf_terms(spark, sf_dir)
+    df = q_tfidf_terms(spark, sf_dir)
     plan = explain_str(df)
     assert "Window" not in plan, plan
     assert plan.count("Exchange SinglePartition") <= 1, plan
@@ -211,7 +219,7 @@ def test_tfidf_no_window_grouped_topk(spark, sf_dir):
 def test_curation_funnel_single_pass(spark, sf_dir, no_spread):
     """N funnel stages = one scan + one global aggregate: exactly one
     exchange (the 1-row final agg), one parquet scan."""
-    df = E.q_curation_funnel(spark, sf_dir)
+    df = q_curation_funnel(spark, sf_dir)
     tree = explain_str(df).split("\n\n")[0]  # operator tree only
     assert tree.count("Scan parquet") == 1, tree
     assert tree.count("Exchange") == 1, tree
@@ -221,7 +229,7 @@ def test_mixture_resample_corpus_single_scan_no_shuffle(spark, sf_dir):
     """The corpus side is scanned for the tiny rate table and once for
     the filter, but never exchanged at full width: the only exchanges
     feed the stratum-count aggregate (strata-sized) and its broadcast."""
-    df = E.q_mixture_resample(spark, sf_dir)
+    df = q_mixture_resample(spark, sf_dir)
     plan = explain_str(df)
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan
     # no full-corpus hash exchange: every Exchange hashes the stratum key
@@ -257,7 +265,7 @@ def test_sql_path_matrix_prepartition(spark, sf_dir):
     cosine-via-SQL plan hashes the (vector, coord) pair."""
     import re
 
-    df = E.q_cosine_via_sql(spark, sf_dir)
+    df = q_cosine_via_sql(spark, sf_dir)
     # formatted explain puts exchange args on "Arguments:" lines; match
     # the partitioning expressions themselves
     plan = explain_str(df)

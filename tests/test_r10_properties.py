@@ -64,9 +64,10 @@ def test_group_star_edges_linear_not_clique(spark):
 def test_split_leakage_domain_no_straddle(spark, sf_dir):
     """The ordered contract: no registered domain — and no near-dup
     cluster — appears in two splits."""
-    import __spark_entry__ as E
+    from casf_spark.queries.dedup import q_split_leakage_domain
+    from casf_spark.sources import load_table
 
-    out = E.q_split_leakage_domain(spark, sf_dir)
+    out = q_split_leakage_domain(spark, sf_dir)
     dom_straddle = (out.groupBy("reg_domain")
                     .agg(F.countDistinct("split").alias("n"))
                     .where(F.col("n") > 1).count())
@@ -76,17 +77,18 @@ def test_split_leakage_domain_no_straddle(spark, sf_dir):
                    .where(F.col("n") > 1).count())
     assert cl_straddle == 0
     # total coverage: one row per document
-    n_docs = E.load_table(spark, sf_dir, "documents").count()
+    n_docs = load_table(spark, sf_dir, "documents").count()
     assert out.count() == n_docs
 
 
 def test_dedup_waterfall_conservation(spark, sf_dir):
     """removed + kept == corpus, and first_stage is consistent with the
     flags (first flagged stage in ladder order; 'kept' iff none)."""
-    import __spark_entry__ as E
+    from casf_spark.queries.dedup import q_dedup_waterfall
+    from casf_spark.sources import load_table
 
-    rows = E.q_dedup_waterfall(spark, sf_dir).collect()
-    n_docs = E.load_table(spark, sf_dir, "documents").count()
+    rows = q_dedup_waterfall(spark, sf_dir).collect()
+    n_docs = load_table(spark, sf_dir, "documents").count()
     assert len(rows) == n_docs
     order = ["exact", "url", "line", "minhash"]
     n_removed = 0
@@ -249,9 +251,9 @@ def test_minhash_pair_weights_bounds(spark, sf_dir):
     [num_hashes/bands, num_hashes]: candidacy requires one full band
     to agree; agreement can never exceed the signature length. Pair
     set == minhash_lsh_pairs exactly."""
-    import __spark_entry__ as E
+    from casf_spark.sources import load_table
 
-    docs = E.load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     w = DD.minhash_pair_weights(docs, "doc_id", "text",
                                 n=2, num_hashes=12, bands=4)
     rows = w.collect()

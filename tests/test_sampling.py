@@ -71,8 +71,8 @@ def test_sample_per_group_deterministic_prefix(spark):
 def test_leakage_safe_split_no_cluster_straddles(spark, sf_dir):
     """Every dedup cluster lands wholly inside ONE split — the invariant
     that makes the split leakage-safe."""
-    import __spark_entry__ as E
-    out = E.q_split_leakage_safe(spark, sf_dir)
+    from casf_spark.queries.dedup import q_split_leakage_safe
+    out = q_split_leakage_safe(spark, sf_dir)
     per_cluster = (out.groupBy("cluster_id")
                    .agg(F.count_distinct("split").alias("k")).collect())
     assert per_cluster and all(r.k == 1 for r in per_cluster)

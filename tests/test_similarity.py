@@ -188,9 +188,9 @@ def test_kcenter_batched_equals_sequential(spark, sf_dir):
     (the tau-cut correctness argument under stress)."""
     from casf_spark.operators.similarity import (kcenter_select,
                                                  kcenter_select_batched)
-    import __spark_entry__ as E
+    from casf_spark.sources import load_table
 
-    emb = E.load_table(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     want = [(r.sel_rank, r.vec_id, r.sel_dist)
             for r in kcenter_select(emb, k=12).orderBy("sel_rank").collect()]
     for buf in (3, 12):

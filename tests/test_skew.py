@@ -48,8 +48,8 @@ def test_approx_distinct_error_bound(spark, sf_dir):
     """HLL++ sketch estimate stays within its configured rsd of the exact
     count (5% rsd -> assert 3 sigma = 15%; the query emits the bound
     check as its within_bound contract column)."""
-    import __spark_entry__ as E
-    rows = E.q_events_approx_distinct(spark, sf_dir).collect()
+    from casf_spark.queries.events import q_events_approx_distinct
+    rows = q_events_approx_distinct(spark, sf_dir).collect()
     assert rows, "no event types"
     for r in rows:
         assert r["exact_users"] > 0 and r["within_bound"], r
@@ -60,11 +60,12 @@ def test_sketch_rollup_merge_matches_exact(spark, sf_dir):
     users as a direct exact count (within the sketch's error bound) —
     the mergeability contract that makes pre-aggregated sketch tables
     safe to roll up."""
-    import __spark_entry__ as E
+    from casf_spark.queries.events import q_events_sketch_rollup
+    from casf_spark.sources import load_table
     got = {r.event_type: r for r in
-           E.q_events_sketch_rollup(spark, sf_dir).collect()}
+           q_events_sketch_rollup(spark, sf_dir).collect()}
     exact = {r.event_type: r.n for r in
-             E.load_table(spark, sf_dir, "events")
+             load_table(spark, sf_dir, "events")
              .groupBy("event_type")
              .agg(F.count_distinct("user_id").alias("n")).collect()}
     assert set(got) == set(exact)

@@ -18,12 +18,13 @@ def test_session_window_matches_island_construction(spark, sf_dir):
     """session_window and the lag/island sessionization agree on
     (user, n_sessions, n_events) — two independent constructions of the
     same gap semantics."""
-    import __spark_entry__ as E
-    sw = (E.q_events_session_window(spark, sf_dir)
+    from casf_spark.queries.events import (q_events_session_window,
+                                           q_events_sessions)
+    sw = (q_events_session_window(spark, sf_dir)
           .groupBy("user_id")
           .agg(F.count(F.lit(1)).alias("n_sessions"),
                F.sum("n_events").alias("n_events")))
-    island = E.q_events_sessions(spark, sf_dir)
+    island = q_events_sessions(spark, sf_dir)
     got = {r.user_id: (r.n_sessions, r.n_events) for r in sw.collect()}
     want = {r.user_id: (r.n_sessions, r.n_events) for r in island.collect()}
     assert got == want

@@ -128,9 +128,10 @@ def test_planted_urls_canonical_groups(spark, sf_dir):
     exactly — 50 distinct canons, every doc in a group agrees, and raw
     variants within a group genuinely differ (the normalizer has work
     to do)."""
-    import __spark_entry__ as E
+    from casf_spark.queries._common import _planted_urls
+    from casf_spark.sources import load_table
 
-    u = E._planted_urls(E.load_table(spark, sf_dir, "documents"))
+    u = _planted_urls(load_table(spark, sf_dir, "documents"))
     rows = u.select("doc_id", "url",
                     normalize_url(F.col("url")).alias("n")).collect()
     by_g = {}
@@ -211,12 +212,12 @@ def test_psl_plant_suffixes_pinned():
     """The url_psl_domains plant list: every dotted entry is in the
     FULL snapshot and ABSENT from the small table (so the contract
     proves the large table is consulted); tails are unlisted."""
-    import __spark_entry__ as E
+    from casf_spark.queries.web import _PSL_PLANT_SUFFIXES
     from casf_spark.operators.psl_data import PSL_ICANN_FULL
 
-    listed = [s for s in E._PSL_PLANT_SUFFIXES if "." in s]
-    tails = [s for s in E._PSL_PLANT_SUFFIXES if "." not in s]
-    assert len(E._PSL_PLANT_SUFFIXES) == 40 and len(listed) == 36
+    listed = [s for s in _PSL_PLANT_SUFFIXES if "." in s]
+    tails = [s for s in _PSL_PLANT_SUFFIXES if "." not in s]
+    assert len(_PSL_PLANT_SUFFIXES) == 40 and len(listed) == 36
     assert all(s in PSL_ICANN_FULL for s in listed)
     assert not any(s in PUBLIC_SUFFIXES for s in listed)
     assert all(t not in PSL_ICANN_FULL for t in tails)
@@ -279,10 +280,10 @@ def test_registered_domain_expression_rejects_rules():
 def test_psl_rule_plant_pinned():
     """The url_psl_rules plant: every template resolves under a rule or
     default branch that psl_data.PSL_RULES actually carries."""
-    import __spark_entry__ as E
+    from casf_spark.queries.web import _PSL_RULE_PLANT_HOSTS
     from casf_spark.operators.psl_data import PSL_RULES
 
-    assert len(E._PSL_RULE_PLANT_HOSTS) == 16
+    assert len(_PSL_RULE_PLANT_HOSTS) == 16
     assert {"*.ck", "!www.ck", "*.kawasaki.jp", "!city.kawasaki.jp",
             "*.sch.uk"} <= set(PSL_RULES)
     assert all(r.startswith(("*.", "!")) for r in PSL_RULES)
