@@ -243,33 +243,71 @@ def bpe_ish_tokens(col: Column | str) -> Column:
 def token_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document token accounting: whitespace tokens, regex word tokens,
     BPE-ish tokens, chars."""
-    ws = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != F.lit(""))
     return df.select(
         F.col(id_col).cast("long").alias("doc_id"),
-        F.size(ws).cast("long").alias("n_ws_tokens"),
+        F.size(whitespace_words(F.col(text_col))).cast("long")
+        .alias("n_ws_tokens"),
         token_count(text_col).cast("long").alias("n_word_tokens"),
         F.size(bpe_ish_tokens(text_col)).cast("long").alias("n_bpe_tokens"),
         F.length(text_col).cast("long").alias("n_chars"),
     )
 
 
-def quality_exprs(text_col: str,
+def whitespace_words(col: Column) -> Column:
+    """Whitespace-split words, empty strings removed (Gopher's word unit)."""
+    return F.filter(F.split(col, r"\s+"), lambda w: w != F.lit(""))
+
+
+def nonempty_lines(col: Column) -> Column:
+    """Newline-split lines that are not blank (Gopher's line unit)."""
+    return F.filter(F.split(col, r"\n"), lambda l: F.trim(l) != F.lit(""))
+
+
+#: the arrays :func:`with_token_arrays` can add, by output column name
+TOKEN_ARRAYS = {"_toks": tokens, "_words": whitespace_words,
+                "_lines": nonempty_lines}
+
+
+def with_token_arrays(df: DataFrame, text_col: str, *names: str) -> DataFrame:
+    """``df`` plus the named :data:`TOKEN_ARRAYS` of ``text_col``, each
+    split exactly once per row — the one place the feature builders below
+    get their arrays from.
+
+    The arrays come out of a ``Generate`` (``inline`` over a one-element
+    array: one output row per input row; a NULL text gives NULL arrays).
+    A plain projection is not enough: Catalyst pushes a downstream filter
+    below it and inlines the tokenizer into every reference, and each
+    inlined copy of a higher-order-function lambda gets fresh ids, so
+    subexpression elimination cannot merge them (``curate_documents``
+    planned 54 ``split`` calls per row that way). A filter that reads the
+    arrays stops above the ``Generate``.
+    """
+    c = F.col(text_col)
+    arrays = F.struct(*[TOKEN_ARRAYS[n](c).alias(n) for n in names])
+    return df.select("*", F.inline(F.array(arrays)))
+
+
+def quality_exprs(text_col: str, toks_col: str = "_toks",
                   stopwords: Sequence[str] = DEFAULT_STOPWORDS,
                   ) -> dict[str, Column]:
     """The six quality-metric Columns keyed by output name — importable so
     composite pipelines (operators.pipeline.curate_documents) can evaluate
-    them inline in ONE scan instead of joining per-feature outputs."""
-    tok = tokens(text_col)
+    them inline in ONE scan instead of joining per-feature outputs.
+
+    ``toks_col`` is the document's token array (``_toks`` of
+    :func:`with_token_arrays`); ``text_col`` feeds only the character
+    counts."""
+    tok = F.col(toks_col)
+    text = F.col(text_col)
     sw = F.array(*[F.lit(w) for w in stopwords])
     n_tokens = F.size(tok)
-    n_chars = F.length(F.col(text_col))
+    n_chars = F.length(text)
     n_stop = F.size(F.filter(tok, lambda t: F.array_contains(sw, t)))
     total_tok_len = F.aggregate(
         F.transform(tok, lambda t: F.length(t)), F.lit(0),
         lambda acc, x: acc + x)
-    n_digits = n_chars - F.length(F.regexp_replace(F.col(text_col), "[0-9]", ""))
-    n_punct = n_chars - F.length(
-        F.regexp_replace(F.col(text_col), r"[^\w\s]", ""))
+    n_digits = n_chars - F.length(F.regexp_replace(text, "[0-9]", ""))
+    n_punct = n_chars - F.length(F.regexp_replace(text, r"[^\w\s]", ""))
     return {
         "n_chars": n_chars.cast("long"),
         "n_tokens": n_tokens.cast("long"),
@@ -291,10 +329,11 @@ def quality_features(df: DataFrame, id_col: str, text_col: str,
     """Per-document quality metrics for pipeline filtering:
 
     n_chars, n_tokens, avg_token_len, stopword_ratio, digit_ratio,
-    punct_ratio — all as JVM-side expressions over one pass.
+    punct_ratio — all as JVM-side expressions over one pass, tokenizing
+    each document once.
     """
-    q = quality_exprs(text_col, stopwords)
-    return df.select(
+    q = quality_exprs(text_col, "_toks", stopwords)
+    return with_token_arrays(df, text_col, "_toks").select(
         F.col(id_col).alias("doc_id"),
         *[c.alias(name) for name, c in q.items()],
     )
@@ -306,21 +345,22 @@ def lang_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     Counts marker-word hits per language over the token stream; predicts the
     highest-scoring language in fixed priority order (ties and zero scores
     fall through to 'und'). Deterministic, SQL-expressible, cheap: one
-    pass, no shuffle beyond the final projection (scores are computed per
-    row from the token array, not via explode).
+    pass, no shuffle (scores are computed per row from the token array,
+    not via explode), tokenizing each document once.
     """
-    scores = lang_score_exprs(text_col)
-    out = df.select(
+    scores = lang_score_exprs("_toks")
+    return with_token_arrays(df, text_col, "_toks").select(
         F.col(id_col).alias("doc_id"),
-        *[scores[lang].cast("long").alias(f"score_{lang}") for lang in LANG_PRIORITY],
-        lang_pred_expr(text_col).alias("pred_lang"),
+        *[scores[lang].cast("long").alias(f"score_{lang}")
+          for lang in LANG_PRIORITY],
+        lang_pred_expr("_toks").alias("pred_lang"),
     )
-    return out
 
 
-def lang_score_exprs(text_col: str) -> dict[str, Column]:
-    """Per-language marker-hit counts as Columns (see lang_id)."""
-    tok = tokens(text_col)
+def lang_score_exprs(toks_col: str = "_toks") -> dict[str, Column]:
+    """Per-language marker-hit counts over the token array ``toks_col``
+    (see lang_id)."""
+    tok = F.col(toks_col)
     scores = {}
     for lang, markers in LANG_MARKERS.items():
         arr = F.array(*[F.lit(m) for m in markers])
@@ -328,14 +368,19 @@ def lang_score_exprs(text_col: str) -> dict[str, Column]:
     return scores
 
 
-def lang_pred_expr(text_col: str) -> Column:
-    """The lang_id argmax-with-priority decision as a single Column."""
-    scores = lang_score_exprs(text_col)
-    best = F.greatest(*[scores[lang] for lang in LANG_PRIORITY])
-    pred = F.when(best == 0, F.lit("und"))
-    for lang in LANG_PRIORITY:
-        pred = pred.when(scores[lang] == best, F.lit(lang))
-    return pred.otherwise(F.lit("und"))
+def lang_pred_expr(toks_col: str = "_toks") -> Column:
+    """The lang_id decision over the token array ``toks_col`` as a single
+    Column: the highest-scoring language, ties to the earlier one in
+    :data:`LANG_PRIORITY`, 'und' when no marker hits or the text is NULL.
+    One ``greatest`` over (score, priority, lang) structs, so each score
+    is referenced once."""
+    scores = lang_score_exprs(toks_col)
+    n = len(LANG_PRIORITY)
+    best = F.greatest(*[
+        F.struct(scores[lang].alias("score"), F.lit(n - i).alias("prio"),
+                 F.lit(lang).alias("lang"))
+        for i, lang in enumerate(LANG_PRIORITY)])
+    return F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und"))
 
 
 def normalize_text(col: Column | str) -> Column:
@@ -429,7 +474,9 @@ GOPHER_REQUIRED_WORDS = ("the", "be", "to", "of", "and", "that",
                          "have", "with")
 
 
-def gopher_exprs(text_col: str) -> dict[str, Column]:
+def gopher_exprs(text_col: str, toks_col: str = "_toks",
+                 words_col: str = "_words",
+                 lines_col: str = "_lines") -> dict[str, Column]:
     """The Gopher quality-rule metric Columns (Rae et al. 2021,
     arXiv:2112.11446 Appendix A1.1 — the ruleset later reused by
     RedPajama/Dolma/DataTrove), keyed by output name. All shuffle-free
@@ -443,14 +490,18 @@ def gopher_exprs(text_col: str) -> dict[str, Column]:
       * >= 80% of words contain an alphabetic character
       * at least 2 of :data:`GOPHER_REQUIRED_WORDS` present
 
-    ``passes_gopher`` is the conjunction, computed FROM the rounded
-    ratio columns so the oracle SQL compares bit-identical doubles.
+    The arrays are :func:`with_token_arrays`' ``_toks``, ``_words`` and
+    ``_lines`` of the document; ``text_col`` feeds only the character
+    counts. ``passes_gopher`` is the conjunction, computed FROM the
+    rounded ratio columns so the oracle SQL compares bit-identical doubles.
 
     NULL text counts as empty (0 words / 0 lines, fails the word-count
-    rule) rather than poisoning the metrics via Spark's size(NULL) = -1.
+    rule) rather than poisoning the metrics via Spark's size(NULL).
     """
+    empty = F.array().cast("array<string>")
     txt = F.coalesce(F.col(text_col), F.lit(""))
-    words = F.filter(F.split(txt, r"\s+"), lambda w: w != F.lit(""))
+    words = F.coalesce(F.col(words_col), empty)
+    lines = F.coalesce(F.col(lines_col), empty)
     n_words = F.size(words)
     wdiv = F.greatest(n_words, F.lit(1))
     total_len = F.aggregate(F.transform(words, F.length), F.lit(0),
@@ -460,7 +511,6 @@ def gopher_exprs(text_col: str) -> dict[str, Column]:
     n_ellipsis = (F.length(txt) - F.length(
         F.replace(txt, F.lit("..."), F.lit("")))) / F.lit(3)
     symbol_word_ratio = F.round((n_hash + n_ellipsis) / wdiv, 6)
-    lines = F.filter(F.split(txt, r"\n"), lambda l: F.trim(l) != F.lit(""))
     ldiv = F.greatest(F.size(lines), F.lit(1))
     bullet_line_frac = F.round(
         F.size(F.filter(lines,
@@ -471,7 +521,7 @@ def gopher_exprs(text_col: str) -> dict[str, Column]:
         / ldiv, 6)
     alpha_word_frac = F.round(
         F.size(F.filter(words, lambda w: w.rlike("[A-Za-z]"))) / wdiv, 6)
-    low = tokens(txt)
+    low = F.col(toks_col)
     n_required = F.size(F.filter(
         F.array(*[F.lit(w) for w in GOPHER_REQUIRED_WORDS]),
         lambda r: F.array_contains(low, r)))
@@ -497,8 +547,9 @@ def gopher_exprs(text_col: str) -> dict[str, Column]:
 
 def gopher_quality(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document Gopher rule metrics + pass flag (:func:`gopher_exprs`):
-    one narrow map-only projection — no shuffle, no UDF, pushes through
-    the scan like the other quality features."""
+    one narrow map-only pass — no shuffle, no UDF, each array split once
+    per document (:func:`with_token_arrays`)."""
     g = gopher_exprs(text_col)
-    return df.select(F.col(id_col).cast("long").alias("doc_id"),
-                     *[c.alias(n) for n, c in g.items()])
+    return (with_token_arrays(df, text_col, "_toks", "_words", "_lines")
+            .select(F.col(id_col).cast("long").alias("doc_id"),
+                    *[c.alias(n) for n, c in g.items()]))

@@ -8,15 +8,18 @@ together, and HOW they compose determines the 100 TB cost:
   fingerprint) evaluate in ONE projection over ONE scan — importing the
   Column-expression builders (functions.text.quality_exprs /
   lang_pred_expr) instead of joining each pass's output frame, which
-  would shuffle the corpus once per feature.
-* Quality + language filters apply BEFORE the dedup aggregation, so the
-  only shuffle in the whole plan — the fingerprint argmin — carries only
-  surviving rows.
+  would shuffle the corpus once per feature. The builders read one token
+  array per document (functions.text.with_token_arrays), so each text is
+  split once.
+* The keep decision (quality + language) folds into the dedup
+  aggregation instead of filtering before it, so no filter sits where
+  Catalyst could push it into the feature projection and evaluate the
+  features a second time.
 * Split assignment is a narrow hash expression appended at the end.
 
-Net: one feature projection per scanned row and one shuffle (the
-fingerprint struct-argmin aggregation — no join back, so the feature
-projection is evaluated exactly once) for the entire curation decision.
+Net: one tokenization and one feature projection per scanned row, and one
+shuffle (the fingerprint struct-argmin aggregation, with no join back)
+for the entire curation decision.
 """
 
 from __future__ import annotations
@@ -45,30 +48,38 @@ def curate_documents(docs: DataFrame, id_col: str = "doc_id",
     the caps, and a predicted language in ``keep_langs``; among surviving
     exact duplicates keeps the min-id copy; labels the keepers with a
     deterministic split. Output: (doc_id, n_tokens, pred_lang, split).
+
+    Each document is tokenized once and its features are evaluated once.
+    The keep predicate is folded into the fingerprint aggregation: a
+    rejected row contributes NULL to its group's min, and groups with no
+    kept row are dropped after the shuffle. The trade: rejected rows'
+    fingerprints now enter that one exchange too, adding at most the
+    reject share of the rows to it.
     """
     q = TX.quality_exprs(text_col)
-    feats = docs.select(
+    feats = TX.with_token_arrays(docs, text_col, "_toks").select(
         F.col(id_col).cast("long").alias("doc_id"),
         q["n_tokens"].alias("n_tokens"),
         q["stopword_ratio"].alias("stopword_ratio"),
         q["digit_ratio"].alias("digit_ratio"),
-        TX.lang_pred_expr(text_col).alias("pred_lang"),
+        TX.lang_pred_expr().alias("pred_lang"),
         TX.fingerprint(text_col).alias("fp"),
     )
-    kept = feats.where(
-        (F.col("n_tokens") >= min_tokens)
-        & (F.col("stopword_ratio") <= max_stopword_ratio)
-        & (F.col("digit_ratio") <= max_digit_ratio)
-        & F.col("pred_lang").isin(list(keep_langs)))
+    keep = ((F.col("n_tokens") >= min_tokens)
+            & (F.col("stopword_ratio") <= max_stopword_ratio)
+            & (F.col("digit_ratio") <= max_digit_ratio)
+            & F.col("pred_lang").isin(list(keep_langs)))
     # struct-argmin: the keeper row (min doc_id per fingerprint) comes out
     # of ONE aggregation — exact duplicates share identical text, hence
     # identical features, so carrying them through the min-struct is
     # lossless. The previous groupBy + left-semi join back re-evaluated
     # the feature projection for the probe side (measured 2.4 s -> 1.5 s
     # at sf0.1).
-    first = (kept.groupBy("fp")
-             .agg(F.min(F.struct("doc_id", "n_tokens", "pred_lang"))
+    first = (feats.groupBy("fp")
+             .agg(F.min(F.when(keep, F.struct("doc_id", "n_tokens",
+                                                 "pred_lang")))
                   .alias("_w"))
+             .where(F.col("_w").isNotNull())
              .select(F.col("_w.doc_id").alias("doc_id"),
                      F.col("_w.n_tokens").alias("n_tokens"),
                      F.col("_w.pred_lang").alias("pred_lang")))

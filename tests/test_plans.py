@@ -7,6 +7,9 @@ dimensions broadcast.
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -20,6 +23,8 @@ from casf_spark.queries.sampling import (q_budget_select, q_mixture_resample,
                                          q_sample_stratified)
 from casf_spark.queries.text import q_tfidf_terms
 from casf_spark import CosineAnalyser
+from casf_spark.functions import text as TX
+from casf_spark.operators.pipeline import curate_documents
 from casf_spark.plans.inspect import (assert_no_cartesian,
                                       broadcast_join_count, explain_str,
                                       pushed_filters, scan_read_schema)
@@ -304,3 +309,39 @@ def test_runtime_bloom_filter_injection(spark, sf_dir):
     finally:
         for k, v in saved.items():
             conf.set(k, v)
+
+
+def _split_patterns(df) -> Counter:
+    """Regex pattern -> number of split() calls on it in the physical plan."""
+    plan = explain_str(df, "simple")
+    pats = re.findall(r"split\(.*?, ([^,\s]+), -1\)", plan)
+    assert len(pats) == plan.count("split("), plan
+    return Counter(pats)
+
+
+_TOK = TX.TOKEN_SPLIT_PATTERN
+_DOC_FEATURES = {
+    "curate_documents": (curate_documents, "pred_lang = 'en'", {_TOK: 1}),
+    "lang_id": (lambda d: TX.lang_id(d, "doc_id", "text"),
+                "pred_lang = 'en'", {_TOK: 1}),
+    "quality_features": (lambda d: TX.quality_features(d, "doc_id", "text"),
+                         "n_tokens >= 20 AND stopword_ratio <= 0.15",
+                         {_TOK: 1}),
+    "gopher_quality": (lambda d: TX.gopher_quality(d, "doc_id", "text"),
+                       "passes_gopher", {_TOK: 1, r"\s+": 1, r"\n": 1}),
+}
+
+
+@pytest.mark.parametrize("downstream", [False, True],
+                         ids=["bare", "filtered"])
+@pytest.mark.parametrize("name", list(_DOC_FEATURES))
+def test_document_features_split_text_once(spark, sf_dir, name, downstream):
+    """Each document's text is split once per pattern, also when a filter
+    on an output column follows: Catalyst pushes such a filter below the
+    feature projection, and an inlined tokenizer there would be copied
+    into every reference (curate_documents once planned 54 splits)."""
+    build, pred, want = _DOC_FEATURES[name]
+    df = build(load_table(spark, sf_dir, "documents"))
+    if downstream:
+        df = df.where(pred)
+    assert _split_patterns(df) == want

@@ -63,6 +63,20 @@ def test_lang_id_markers(spark, docs):
     assert lid[4] == "und"
 
 
+def test_lang_id_ties_follow_priority(spark):
+    """Equal marker counts go to the earlier language in LANG_PRIORITY;
+    no marker and NULL text give 'und'."""
+    df = spark.createDataFrame(
+        [(1, "the and el la"),   # en 2, es 2
+         (2, "el y le les"),     # es 2, fr 2
+         (3, "zzz qqq"),         # no marker
+         (4, None)],
+        "doc_id long, text string")
+    lid = {r.doc_id: r.pred_lang for r in
+           TX.lang_id(df, "doc_id", "text").collect()}
+    assert lid == {1: "en", 2: "es", 3: "und", 4: "und"}
+
+
 def test_fingerprint_whitespace_and_case_invariant(spark):
     data = [(1, "Hello   World"), (2, "hello world"), (3, "hello  world "),
             (4, "different text")]
