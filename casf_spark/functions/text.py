@@ -39,9 +39,9 @@ LANG_PRIORITY = ("en", "es", "fr", "de")  # deterministic argmax tie-break
 def tokens(col: Column | str, pattern: str = TOKEN_SPLIT_PATTERN) -> Column:
     """Lowercase + regex-split tokenizer returning array<string> with empty
     tokens removed. The pluggable seam replacing the demo's ansj flatMap
-    (KWD:47-58)."""
+    (KWD:47-58). No lambda, so it stays inside whole-stage codegen."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.filter(F.split(F.lower(c), pattern), lambda t: t != F.lit(""))
+    return F.array_remove(F.split(F.lower(c), pattern), "")
 
 
 def tokenize(df: DataFrame, id_col: str, text_col: str,
@@ -255,17 +255,21 @@ def token_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 def whitespace_words(col: Column) -> Column:
     """Whitespace-split words, empty strings removed (Gopher's word unit)."""
-    return F.filter(F.split(col, r"\s+"), lambda w: w != F.lit(""))
+    return F.array_remove(F.split(col, r"\s+"), "")
 
 
 def nonempty_lines(col: Column) -> Column:
-    """Newline-split lines that are not blank (Gopher's line unit)."""
-    return F.filter(F.split(col, r"\n"), lambda l: F.trim(l) != F.lit(""))
+    """Newline-split lines that are not blank, i.e. not only spaces
+    (Gopher's line unit): each newline-free run holding a non-space
+    character. One regex and no lambda, so it stays inside whole-stage
+    codegen."""
+    return F.regexp_extract_all(col, F.lit(r"[^\n]*[^ \n][^\n]*"), F.lit(0))
 
 
-#: the arrays :func:`with_token_arrays` can add, by output column name
-TOKEN_ARRAYS = {"_toks": tokens, "_words": whitespace_words,
-                "_lines": nonempty_lines}
+#: the token-array columns :func:`with_token_arrays` adds and the feature
+#: builders below read: regex tokens, whitespace words, non-empty lines
+TOKS, WORDS, LINES = "_toks", "_words", "_lines"
+TOKEN_ARRAYS = {TOKS: tokens, WORDS: whitespace_words, LINES: nonempty_lines}
 
 
 def with_token_arrays(df: DataFrame, text_col: str, *names: str) -> DataFrame:
@@ -273,31 +277,39 @@ def with_token_arrays(df: DataFrame, text_col: str, *names: str) -> DataFrame:
     split exactly once per row — the one place the feature builders below
     get their arrays from.
 
-    The arrays come out of a ``Generate`` (``inline`` over a one-element
-    array: one output row per input row; a NULL text gives NULL arrays).
-    A plain projection is not enough: Catalyst pushes a downstream filter
-    below it and inlines the tokenizer into every reference, and each
-    inlined copy of a higher-order-function lambda gets fresh ids, so
-    subexpression elimination cannot merge them (``curate_documents``
-    planned 54 ``split`` calls per row that way). A filter that reads the
-    arrays stops above the ``Generate``.
+    The arrays come out of a ``Generate`` (``explode`` over a one-element
+    array of one struct: one output row per input row; a NULL text gives
+    NULL arrays). A plain projection is not enough: Catalyst pushes a
+    downstream filter below it and inlines the tokenizer into every
+    reference, so the filter splits the text again, once per reference
+    where a higher-order-function lambda around it keeps subexpression
+    elimination from merging the copies (``curate_documents`` planned 54
+    ``split`` calls per row that way). A filter that reads the arrays
+    stops above the ``Generate``.
+
+    The arrays are read as fields of the exploded struct, so when a
+    projection sits directly on the ``Generate`` Catalyst prunes the
+    fields no downstream column reads, and their splits with them. A
+    filter on a feature directly above the ``Generate`` blocks that
+    pruning: every named array is then built.
     """
     c = F.col(text_col)
     arrays = F.struct(*[TOKEN_ARRAYS[n](c).alias(n) for n in names])
-    return df.select("*", F.inline(F.array(arrays)))
+    return (df.select("*", F.explode(F.array(arrays)).alias("_arrays"))
+            .select("*", *[F.col("_arrays")[n].alias(n) for n in names])
+            .drop("_arrays"))
 
 
-def quality_exprs(text_col: str, toks_col: str = "_toks",
+def quality_exprs(text_col: str,
                   stopwords: Sequence[str] = DEFAULT_STOPWORDS,
                   ) -> dict[str, Column]:
     """The six quality-metric Columns keyed by output name — importable so
     composite pipelines (operators.pipeline.curate_documents) can evaluate
     them inline in ONE scan instead of joining per-feature outputs.
 
-    ``toks_col`` is the document's token array (``_toks`` of
-    :func:`with_token_arrays`); ``text_col`` feeds only the character
-    counts."""
-    tok = F.col(toks_col)
+    The tokens are the :data:`TOKS` array of :func:`with_token_arrays`;
+    ``text_col`` feeds only the character counts."""
+    tok = F.col(TOKS)
     text = F.col(text_col)
     sw = F.array(*[F.lit(w) for w in stopwords])
     n_tokens = F.size(tok)
@@ -332,8 +344,8 @@ def quality_features(df: DataFrame, id_col: str, text_col: str,
     punct_ratio — all as JVM-side expressions over one pass, tokenizing
     each document once.
     """
-    q = quality_exprs(text_col, "_toks", stopwords)
-    return with_token_arrays(df, text_col, "_toks").select(
+    q = quality_exprs(text_col, stopwords)
+    return with_token_arrays(df, text_col, TOKS).select(
         F.col(id_col).alias("doc_id"),
         *[c.alias(name) for name, c in q.items()],
     )
@@ -348,19 +360,19 @@ def lang_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     pass, no shuffle (scores are computed per row from the token array,
     not via explode), tokenizing each document once.
     """
-    scores = lang_score_exprs("_toks")
-    return with_token_arrays(df, text_col, "_toks").select(
+    scores = lang_score_exprs()
+    return with_token_arrays(df, text_col, TOKS).select(
         F.col(id_col).alias("doc_id"),
         *[scores[lang].cast("long").alias(f"score_{lang}")
           for lang in LANG_PRIORITY],
-        lang_pred_expr("_toks").alias("pred_lang"),
+        lang_pred_expr().alias("pred_lang"),
     )
 
 
-def lang_score_exprs(toks_col: str = "_toks") -> dict[str, Column]:
-    """Per-language marker-hit counts over the token array ``toks_col``
-    (see lang_id)."""
-    tok = F.col(toks_col)
+def lang_score_exprs() -> dict[str, Column]:
+    """Per-language marker-hit counts over the :data:`TOKS` array (see
+    lang_id)."""
+    tok = F.col(TOKS)
     scores = {}
     for lang, markers in LANG_MARKERS.items():
         arr = F.array(*[F.lit(m) for m in markers])
@@ -368,13 +380,13 @@ def lang_score_exprs(toks_col: str = "_toks") -> dict[str, Column]:
     return scores
 
 
-def lang_pred_expr(toks_col: str = "_toks") -> Column:
-    """The lang_id decision over the token array ``toks_col`` as a single
+def lang_pred_expr() -> Column:
+    """The lang_id decision over the :data:`TOKS` array as a single
     Column: the highest-scoring language, ties to the earlier one in
     :data:`LANG_PRIORITY`, 'und' when no marker hits or the text is NULL.
     One ``greatest`` over (score, priority, lang) structs, so each score
     is referenced once."""
-    scores = lang_score_exprs(toks_col)
+    scores = lang_score_exprs()
     n = len(LANG_PRIORITY)
     best = F.greatest(*[
         F.struct(scores[lang].alias("score"), F.lit(n - i).alias("prio"),
@@ -474,9 +486,7 @@ GOPHER_REQUIRED_WORDS = ("the", "be", "to", "of", "and", "that",
                          "have", "with")
 
 
-def gopher_exprs(text_col: str, toks_col: str = "_toks",
-                 words_col: str = "_words",
-                 lines_col: str = "_lines") -> dict[str, Column]:
+def gopher_exprs(text_col: str) -> dict[str, Column]:
     """The Gopher quality-rule metric Columns (Rae et al. 2021,
     arXiv:2112.11446 Appendix A1.1 — the ruleset later reused by
     RedPajama/Dolma/DataTrove), keyed by output name. All shuffle-free
@@ -490,18 +500,19 @@ def gopher_exprs(text_col: str, toks_col: str = "_toks",
       * >= 80% of words contain an alphabetic character
       * at least 2 of :data:`GOPHER_REQUIRED_WORDS` present
 
-    The arrays are :func:`with_token_arrays`' ``_toks``, ``_words`` and
-    ``_lines`` of the document; ``text_col`` feeds only the character
-    counts. ``passes_gopher`` is the conjunction, computed FROM the
-    rounded ratio columns so the oracle SQL compares bit-identical doubles.
+    The arrays are :func:`with_token_arrays`' :data:`TOKS`, :data:`WORDS`
+    and :data:`LINES` of the document; ``text_col`` feeds only the
+    character counts. ``passes_gopher`` is the conjunction, computed FROM
+    the rounded ratio columns so the oracle SQL compares bit-identical
+    doubles.
 
     NULL text counts as empty (0 words / 0 lines, fails the word-count
     rule) rather than poisoning the metrics via Spark's size(NULL).
     """
     empty = F.array().cast("array<string>")
     txt = F.coalesce(F.col(text_col), F.lit(""))
-    words = F.coalesce(F.col(words_col), empty)
-    lines = F.coalesce(F.col(lines_col), empty)
+    words = F.coalesce(F.col(WORDS), empty)
+    lines = F.coalesce(F.col(LINES), empty)
     n_words = F.size(words)
     wdiv = F.greatest(n_words, F.lit(1))
     total_len = F.aggregate(F.transform(words, F.length), F.lit(0),
@@ -521,7 +532,7 @@ def gopher_exprs(text_col: str, toks_col: str = "_toks",
         / ldiv, 6)
     alpha_word_frac = F.round(
         F.size(F.filter(words, lambda w: w.rlike("[A-Za-z]"))) / wdiv, 6)
-    low = F.col(toks_col)
+    low = F.col(TOKS)
     n_required = F.size(F.filter(
         F.array(*[F.lit(w) for w in GOPHER_REQUIRED_WORDS]),
         lambda r: F.array_contains(low, r)))
@@ -548,8 +559,9 @@ def gopher_exprs(text_col: str, toks_col: str = "_toks",
 def gopher_quality(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document Gopher rule metrics + pass flag (:func:`gopher_exprs`):
     one narrow map-only pass — no shuffle, no UDF, each array split once
-    per document (:func:`with_token_arrays`)."""
+    per document, and only the arrays the selected columns read
+    (:func:`with_token_arrays`)."""
     g = gopher_exprs(text_col)
-    return (with_token_arrays(df, text_col, "_toks", "_words", "_lines")
+    return (with_token_arrays(df, text_col, TOKS, WORDS, LINES)
             .select(F.col(id_col).cast("long").alias("doc_id"),
                     *[c.alias(n) for n, c in g.items()]))

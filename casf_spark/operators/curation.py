@@ -1560,7 +1560,7 @@ def quantile_normalize(df: DataFrame, group_col: str, doc_col: str,
     tile-j rows carry the same calibrated value.
 
     Output: df columns plus (tile, score_norm). NULL scores get NULL
-    tile/score_norm (excluded from the window, invisible to the
+    tile/score_norm (ranked apart from the scored rows, invisible to the
     percentiles).
 
     Scale shape: ONE 1-row global aggregation (k midpoint percentiles,
@@ -1575,19 +1575,8 @@ def quantile_normalize(df: DataFrame, group_col: str, doc_col: str,
     gq = df.agg(F.transform(
         F.percentile(score_col, F.array(*[F.lit(q) for q in mids])),
         lambda t: F.round(t, 6)).alias("__qn_g"))
-    w = Window.partitionBy(group_col).orderBy(F.col(score_col),
-                                              F.col(doc_col))
-    scored = df.where(F.col(score_col).isNotNull())
-    out = (scored.withColumn("__qn_t", F.ntile(k).over(w))
-           .crossJoin(F.broadcast(gq))
-           .withColumn("score_norm",
-                       F.element_at("__qn_g", F.col("__qn_t")))
-           .withColumn("tile", F.col("__qn_t").cast("long"))
-           .drop("__qn_t", "__qn_g"))
-    nulls = (df.where(F.col(score_col).isNull())
-             .withColumn("tile", F.lit(None).cast("long"))
-             .withColumn("score_norm", F.lit(None).cast("double")))
-    return out.unionByName(nulls)
+    return _tile_lookup(df, gq, group_col, doc_col, score_col, k,
+                        "score_norm")
 
 
 def quantile_match(df: DataFrame, ref: DataFrame, group_col: str,
@@ -1624,16 +1613,23 @@ def quantile_match(df: DataFrame, ref: DataFrame, group_col: str,
     gq = ref.agg(F.transform(
         F.percentile(rcol, F.array(*[F.lit(q) for q in mids])),
         lambda t: F.round(t, 6)).alias("__qm_g"))
-    w = Window.partitionBy(group_col).orderBy(F.col(score_col),
-                                              F.col(doc_col))
-    scored = df.where(F.col(score_col).isNotNull())
-    out = (scored.withColumn("__qm_t", F.ntile(k).over(w))
-           .crossJoin(F.broadcast(gq))
-           .withColumn("score_matched",
-                       F.element_at("__qm_g", F.col("__qm_t")))
-           .withColumn("tile", F.col("__qm_t").cast("long"))
-           .drop("__qm_t", "__qm_g"))
-    nulls = (df.where(F.col(score_col).isNull())
-             .withColumn("tile", F.lit(None).cast("long"))
-             .withColumn("score_matched", F.lit(None).cast("double")))
-    return out.unionByName(nulls)
+    return _tile_lookup(df, gq, group_col, doc_col, score_col, k,
+                        "score_matched")
+
+
+def _tile_lookup(df: DataFrame, gq: DataFrame, group_col: str,
+                 doc_col: str, score_col: str, k: int,
+                 out_col: str) -> DataFrame:
+    """``df`` plus ``out_col`` (the 1-row array ``gq`` at each row's
+    within-group NTILE(k) over (score, doc)) and ``tile``; NULL scores
+    get NULL for both. NULL scores sit in their own window partition
+    rather than in a filtered second branch, so ``df`` is evaluated once
+    here and no filter on the score lands on it."""
+    s = F.col(score_col)
+    w = Window.partitionBy(group_col, s.isNull()).orderBy(s, F.col(doc_col))
+    g = gq.columns[0]
+    return (df.withColumn("__t", F.when(s.isNotNull(), F.ntile(k).over(w)))
+            .crossJoin(F.broadcast(gq))
+            .withColumn(out_col, F.element_at(g, F.col("__t")))
+            .withColumn("tile", F.col("__t").cast("long"))
+            .drop("__t", g))

@@ -57,7 +57,7 @@ def curate_documents(docs: DataFrame, id_col: str = "doc_id",
     reject share of the rows to it.
     """
     q = TX.quality_exprs(text_col)
-    feats = TX.with_token_arrays(docs, text_col, "_toks").select(
+    feats = TX.with_token_arrays(docs, text_col, TX.TOKS).select(
         F.col(id_col).cast("long").alias("doc_id"),
         q["n_tokens"].alias("n_tokens"),
         q["stopword_ratio"].alias("stopword_ratio"),

@@ -312,14 +312,18 @@ def test_runtime_bloom_filter_injection(spark, sf_dir):
 
 
 def _split_patterns(df) -> Counter:
-    """Regex pattern -> number of split() calls on it in the physical plan."""
+    """Regex pattern -> number of calls in the physical plan that cut a
+    string into an array on it (``split`` or ``regexp_extract_all``)."""
     plan = explain_str(df, "simple")
-    pats = re.findall(r"split\(.*?, ([^,\s]+), -1\)", plan)
-    assert len(pats) == plan.count("split("), plan
+    pats = re.findall(
+        r"(?:split|regexp_extract_all)\(.*?, (.+?), (?:-1|0)\)", plan)
+    assert len(pats) == (plan.count("split(")
+                         + plan.count("regexp_extract_all(")), plan
     return Counter(pats)
 
 
 _TOK = TX.TOKEN_SPLIT_PATTERN
+_LINE = r"[^\n]*[^ \n][^\n]*"
 _DOC_FEATURES = {
     "curate_documents": (curate_documents, "pred_lang = 'en'", {_TOK: 1}),
     "lang_id": (lambda d: TX.lang_id(d, "doc_id", "text"),
@@ -328,7 +332,7 @@ _DOC_FEATURES = {
                          "n_tokens >= 20 AND stopword_ratio <= 0.15",
                          {_TOK: 1}),
     "gopher_quality": (lambda d: TX.gopher_quality(d, "doc_id", "text"),
-                       "passes_gopher", {_TOK: 1, r"\s+": 1, r"\n": 1}),
+                       "passes_gopher", {_TOK: 1, r"\s+": 1, _LINE: 1}),
 }
 
 
@@ -344,4 +348,17 @@ def test_document_features_split_text_once(spark, sf_dir, name, downstream):
     df = build(load_table(spark, sf_dir, "documents"))
     if downstream:
         df = df.where(pred)
+    assert _split_patterns(df) == want
+
+
+@pytest.mark.parametrize("col, want", [
+    ("alpha_word_frac", {r"\s+": 1}),
+    ("bullet_line_frac", {_LINE: 1}),
+    ("n_required_stopwords", {_TOK: 1}),
+])
+def test_gopher_column_splits_only_what_it_reads(spark, sf_dir, col, want):
+    """A caller that reads one Gopher metric splits only the array that
+    metric reads: the unread arrays are pruned out of the Generate."""
+    df = TX.gopher_quality(load_table(spark, sf_dir, "documents"),
+                           "doc_id", "text").select("doc_id", col)
     assert _split_patterns(df) == want
