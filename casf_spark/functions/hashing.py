@@ -11,7 +11,7 @@ stays below 2^63 (no overflow in either engine's BIGINT arithmetic).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: prime modulus > 2^32 for universal-hash mixing; with a < 2^30 the product
@@ -28,6 +28,18 @@ def md5_long(col: Column | str) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
+
+
+def det_centroids(df: DataFrame, id_col: str, vec_col: str,
+                  k: int) -> DataFrame:
+    """The deterministic quantizer's centroids: the ``k`` rows with the
+    smallest ``md5_long(id)``, ties to the smaller id, as (cid, cemb) in
+    that order. A plan-side sample both engines enumerate identically
+    (DuckDB: ``ORDER BY md5 key, id LIMIT k``)."""
+    return (df.select(F.col(id_col).cast("long").alias("cid"),
+                      F.col(vec_col).alias("cemb"),
+                      md5_long(F.col(id_col).cast("string")).alias("ck"))
+            .orderBy("ck", "cid").limit(k).drop("ck"))
 
 
 def _lcg_params(n: int, seed: int = 42) -> list[tuple[int, int]]:

@@ -604,33 +604,44 @@ def c4_line_filter(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     Output: (doc_id, n_lines, n_kept_lines, kept_frac, has_brace,
     has_lorem_ipsum, passes_c4, cleaned_text) — cleaned_text re-joins
     the kept lines with newlines ('' when none survive). NULL text
-    counts as empty. One shuffle-free array-HOF projection; every rule
-    is a per-line predicate, so the pass parallelizes embarrassingly at
-    any corpus size.
+    counts as empty. Shuffle-free: every rule is a per-line predicate,
+    so the pass parallelizes embarrassingly at any corpus size.
+
+    The non-blank lines (functions.text.nonempty_lines, the same
+    space-only trim rule) and the kept lines come out of one
+    ``Generate``, so each text is split once: in a plain projection a
+    filter on an output column is pushed below it and re-inlines the
+    split into every reference (functions.text.with_token_arrays).
     """
-    txt = F.coalesce(F.col(text_col), F.lit(""))
-    lines = F.filter(F.split(txt, r"\n"), lambda l: F.trim(l) != F.lit(""))
+    from casf_spark.functions.text import nonempty_lines, whitespace_words
 
     def _kept(l):
-        words = F.filter(F.split(l, r"\s+"), lambda w: w != F.lit(""))
         return (F.trim(l).rlike(r'[.!?"]$')
-                & (F.size(words) >= 5)
+                & (F.size(whitespace_words(l)) >= 5)
                 & ~F.lower(l).contains("javascript"))
 
-    kept = F.filter(lines, _kept)
-    n_lines = F.size(lines)
+    txt = F.col("_txt")
+    lines = F.transform(F.array(nonempty_lines(txt)), lambda ls: F.struct(
+        F.size(ls).alias("n"), F.filter(ls, _kept).alias("kept")))
+    per = (df.select(F.col(id_col).cast("long").alias("doc_id"),
+                     F.coalesce(F.col(text_col), F.lit("")).alias("_txt"))
+           .select("doc_id",
+                   txt.contains("{").alias("has_brace"),
+                   F.lower(txt).contains("lorem ipsum")
+                   .alias("has_lorem_ipsum"),
+                   F.explode(lines).alias("_c4")))
+    n_lines = F.col("_c4.n")
+    kept = F.col("_c4.kept")
     n_kept = F.size(kept)
-    has_brace = txt.contains("{")
-    has_lorem = F.lower(txt).contains("lorem ipsum")
-    return df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
+    return per.select(
+        "doc_id",
         n_lines.cast("long").alias("n_lines"),
         n_kept.cast("long").alias("n_kept_lines"),
         F.round(n_kept / F.greatest(n_lines, F.lit(1)), 6)
         .alias("kept_frac"),
-        has_brace.alias("has_brace"),
-        has_lorem.alias("has_lorem_ipsum"),
-        (~has_brace & ~has_lorem & (n_kept >= 3)).alias("passes_c4"),
+        "has_brace", "has_lorem_ipsum",
+        (~F.col("has_brace") & ~F.col("has_lorem_ipsum") & (n_kept >= 3))
+        .alias("passes_c4"),
         F.array_join(kept, "\n").alias("cleaned_text"))
 
 

@@ -26,7 +26,7 @@ from pyspark.sql import types as T
 from casf_spark import schemas
 from casf_spark.functions import text as TX
 from casf_spark.functions import vectors as V
-from casf_spark.functions.hashing import md5_long, minhash_exprs
+from casf_spark.functions.hashing import det_centroids, md5_long, minhash_exprs
 
 
 def _fp_or_unique(id_col: str, text_col: str):
@@ -938,232 +938,124 @@ def ngram_novelty(df: DataFrame, id_col: str, text_col: str,
 
 
 #: hard ceiling on the deterministic-quantizer centroid count: the
-#: centroid table is a DRIVER-side side input on the gemm path (k × d
-#: doubles), the same bounded-side-input contract as IVF codebooks.
+#: centroid table is a DRIVER-side side input (k × d doubles), the same
+#: bounded-side-input contract as IVF codebooks.
 MAX_DET_CENTROIDS = 65_536
 
 
 def _nearest_det_centroids(df: DataFrame, id_col: str, vec_col: str,
                            n_clusters: int,
-                           method: str = "auto",
                            n_super: int | None = None) -> DataFrame:
-    """Deterministic coarse clustering shared by the SemDeDup variants:
-    centroids are the ``n_clusters`` corpus vectors with the smallest
-    md5(id) (a deterministic sample — the same quantizer as
-    similarity.ivf_topk_det), each vector assigned to its nearest
-    centroid by squared L2 rounded to 6dp, ties to the smaller centroid
-    id. Returns (id, v, nrm, cluster, cent_sim) where cent_sim is the
-    cosine to the assigned centroid rounded to 6dp (SemDeDup's
-    keep-ordering key).
+    """Deterministic coarse clustering shared by the SemDeDup variants
+    and the cluster reports: the centroids are the ``n_clusters`` corpus
+    vectors with the smallest md5(id) (functions.hashing.det_centroids,
+    the same quantizer as similarity.ivf_topk_det), and each vector goes
+    to its nearest centroid by squared L2 rounded to 6dp, ties to the
+    smaller centroid id. Returns (id, v, nrm, cluster, cent_sim) where
+    cent_sim is the cosine to the assigned centroid rounded to 6dp
+    (0.0 for a zero vector; SemDeDup's keep-ordering key). An empty
+    corpus gives zero rows; a NULL vector raises ``ValueError``.
 
-    Two physical strategies, identical 6dp-rounded output:
+    One kernel: the k × d centroid matrix is collected once (a bounded
+    driver-side side input, at most MAX_DET_CENTROIDS rows) and rides
+    an Arrow-batched mapInPandas closure — map-only, no exchange. Each
+    batch computes every centroid distance with one BLAS matmul and one
+    rounded argmin. The float-sum order of BLAS differs from a
+    sequential reduction by ~1e-12 relative, which the 6dp rounding
+    absorbs, so the DuckDB twins' flat argmin agrees cell-for-cell.
 
-    * ``expr`` — Column expressions: centroids broadcast, argmin as a
-      ``min(struct(d, cid, ...))`` aggregation with a partial (map-side)
-      combine, so the exchange carries at most one row per id instead of
-      the n_clusters x N wide rows a row_number window shuffled.
-      Oracle-transparent, but the per-(vector, centroid) distance is an
-      interpreted HOF lambda: cost ~ N * k * d with a large constant.
-    * ``gemm`` — Arrow-batched mapInPandas: the centroid matrix (k x d,
-      a bounded driver-side side input like the IVF codebooks) rides in
-      the closure and each batch computes ALL centroid distances with
-      one BLAS matmul, argmin in numpy — MAP-ONLY, no exchange at all,
-      and ~2 orders of magnitude less per-distance cost. This is the
-      100 TB path when n_clusters scales with the corpus (SemDeDup's
-      linearity rule): measured at sf1 with k=320, expr assignment was
-      ~55 s of the 63 s query; gemm removes it. The paper's own
-      production config (50k clusters over 1.1B embeddings) does this
-      assignment as batched GEMM on accelerators.
-
-    Both paths round d and cent_sim to 6dp and break ties to the smaller
-    centroid id, so they agree cell-for-cell with each other and with
-    the DuckDB oracle (the float-sum-order difference between BLAS and
-    sequential reduction is ~1e-12 relative, absorbed by the rounding —
-    the same argument the oracle-checked blocked-GEMM dedup_embedding
-    relies on).
-
-    ``method="auto"`` picks gemm once the centroid count makes the HOF
-    constant dominate (k >= 64), expr below it.
-
-    ``two_level`` is the THIRD strategy, and the only approximate one:
-    hierarchical routing that cuts assignment FLOPs from N·k to
-    ~N·2·sqrt(k) once k is large (at k = 65536 that is 512 distances
-    per vector instead of 65536 — the standard coarse-quantizer trick
-    when the cluster count scales with a 100 TB corpus). The ``n_super``
-    (default ceil(sqrt(k))) centroids FIRST in the md5 order act as
-    routers: each centroid joins its nearest router's group, each
-    vector routes to its nearest router (N·s distances) and then
-    argmins only within that group (N·k/s expected). Every argmin is
-    the same rounded-6dp, smaller-id-tie rule, so the partitioning is
-    DEFINED (deterministic, oracle-expressible in two chained argmin
-    CTEs), just not identical to flat argmin: a vector near a group
-    boundary may land in a neighboring cluster. With
-    n_super = n_clusters every centroid routes to itself and two_level
-    degenerates to exactly the flat assignment (differential test pins
-    this identity).
+    ``n_super=s`` switches to two-level routing, the one approximate
+    assignment: the first ``s`` centroids in md5 order are routers,
+    each centroid joins its nearest router's group, and each vector
+    routes to its nearest router (among routers whose group is not
+    empty) and then argmins only within that group — ~N·(s + k/s)
+    distances instead of N·k. Every argmin is the same rounded rule, so
+    the partitioning is defined and oracle-expressible (two chained
+    argmin CTEs), though a vector near a group boundary may land in a
+    neighbouring cluster. At ``n_super >= n_clusters`` every centroid
+    routes to itself and the result is exactly the flat assignment.
     """
+    import numpy as np
+    import pandas as pd
+
+    def argmin6(x_sq, dots, c_sq):
+        # per row, the column with the smallest squared L2 distance
+        # |x|² - 2 x·c + |c|² rounded to 6dp; columns are cid-sorted, so
+        # argmin's first-minimum rule breaks ties to the smaller cid
+        return np.round(x_sq[:, None] - 2.0 * dots + c_sq[None, :],
+                        6).argmin(axis=1)
+
     if n_clusters > MAX_DET_CENTROIDS:
         raise ValueError(
             f"n_clusters={n_clusters} exceeds MAX_DET_CENTROIDS="
             f"{MAX_DET_CENTROIDS}: the centroid table is a driver-side "
             "side input; shard the corpus or use a coarser quantizer")
-    if method == "auto":
-        method = "gemm" if n_clusters >= 64 else "expr"
-    cent = (df.select(F.col(id_col).cast("long").alias("cid"),
-                      F.col(vec_col).alias("cemb"),
-                      md5_long(F.col(id_col).cast("string")).alias("ck"))
-            .orderBy("ck", "cid").limit(n_clusters).drop("ck"))
-    base = df.select(F.col(id_col).cast("long").alias("id"),
-                     F.col(vec_col).alias("v"))
+    if n_super is not None and n_super < 1:
+        raise ValueError(f"n_super must be >= 1 (got {n_super})")
+    schema = ("id long, v array<double>, nrm double, "
+              "cluster long, cent_sim double")
+    null_vec = (f"_nearest_det_centroids: NULL vector in {vec_col!r}; "
+                "drop or impute it before clustering")
+    rows = det_centroids(df, id_col, vec_col, n_clusters).collect()
+    if not rows:
+        return df.sparkSession.createDataFrame([], schema)
+    if any(r.cemb is None for r in rows):
+        raise ValueError(null_vec)
+    by_cid = np.argsort([r.cid for r in rows], kind="stable")
+    cids = np.array([rows[i].cid for i in by_cid], dtype=np.int64)
+    C = np.array([rows[i].cemb for i in by_cid], dtype=np.float64)
+    c_sq = (C * C).sum(axis=1)
+    c_nrm = np.sqrt(c_sq)
 
-    if method == "two_level":
-        import numpy as np
-        import pandas as pd
+    groups = None
+    if n_super is not None:
+        # routers: the first n_super centroids in md5 order, as indices
+        # into the cid-sorted arrays
+        routers = np.sort(np.argsort(by_cid)[:n_super])
+        grp = argmin6(c_sq, C @ C[routers].T, c_sq[routers])
+        # two routers at rounded distance 0 merge into the smaller cid's
+        # group; vectors route only among routers that keep members (the
+        # oracle's vroute joins DISTINCT cgrp sids)
+        live = np.unique(grp)
+        groups = [np.nonzero(grp == g)[0] for g in live]
+        routers = routers[live]
 
-        s = n_super or int(np.ceil(np.sqrt(n_clusters)))
-        # collect WITH the md5 key: the routers are the first s centroids
-        # in the same (ck, cid) order that selected the centroids
-        cpd = (df.select(F.col(id_col).cast("long").alias("cid"),
-                         F.col(vec_col).alias("cemb"),
-                         md5_long(F.col(id_col).cast("string")).alias("ck"))
-               .orderBy("ck", "cid").limit(n_clusters).toPandas())
-        if cpd.empty:
-            # an empty corpus used to surface as an undiagnostic numpy
-            # AxisError on (S*S).sum(axis=1); refuse loudly (the
-            # kcenter/cluster_silhouette convention)
-            raise ValueError(
-                "_nearest_det_centroids: corpus is empty — no centroids")
-        sup = cpd.sort_values(["ck", "cid"]).head(s).sort_values("cid")
-        sids = sup["cid"].to_numpy()
-        S = np.array([np.asarray(x, dtype=np.float64) for x in sup["cemb"]])
-        s_sq = (S * S).sum(axis=1)
-        cpd = cpd.sort_values("cid")
-        cids = cpd["cid"].to_numpy()
-        C = np.array([np.asarray(x, dtype=np.float64) for x in cpd["cemb"]])
-        c_sq = (C * C).sum(axis=1)
-        c_nrm = np.sqrt(c_sq)
-        # centroid -> router group: rounded argmin, tie to smaller sid
-        # (routers are sid-sorted so argmin's first-win IS the tie rule)
-        dc = np.round(c_sq[:, None] - 2.0 * (C @ S.T) + s_sq[None, :], 6)
-        c_group = dc.argmin(axis=1)  # router INDEX per centroid
-        members = [np.nonzero(c_group == g)[0] for g in range(len(sids))]
-        # vectors route only among routers that HAVE members: a router
-        # normally owns at least itself (d=0), but two routers whose
-        # rounded distance collides at 0 merge into the smaller sid's
-        # group, leaving the larger's empty — routing to it would strand
-        # vectors. Restricting the router set keeps the rule total and
-        # is what the oracle expresses (vroute joins DISTINCT cgrp sids).
-        nonempty = np.array([g for g in range(len(sids))
-                             if members[g].size > 0])
-        sids, S, s_sq = sids[nonempty], S[nonempty], s_sq[nonempty]
-        members = [members[g] for g in nonempty]
-
-        def assign2(batches):
-            for pdf in batches:
-                V_ = np.array([np.asarray(x, dtype=np.float64)
-                               for x in pdf["v"]])
-                v_sq = (V_ * V_).sum(axis=1)
-                v_nrm = np.sqrt(v_sq)
-                # route: rounded argmin over routers, tie smaller sid
-                dv = np.round(v_sq[:, None] - 2.0 * (V_ @ S.T)
-                              + s_sq[None, :], 6)
-                route = dv.argmin(axis=1)
-                n = len(V_)
-                out_cid = np.empty(n, dtype=np.int64)
-                out_sim = np.empty(n, dtype=np.float64)
-                for g in range(len(sids)):
-                    rows = np.nonzero(route == g)[0]
-                    mem = members[g]
-                    if rows.size == 0:
-                        continue
-                    Vg = V_[rows]
-                    dots = Vg @ C[mem].T
-                    dg = np.round((Vg * Vg).sum(axis=1)[:, None]
-                                  - 2.0 * dots + c_sq[mem][None, :], 6)
-                    jj = dg.argmin(axis=1)  # mem is cid-sorted: tie OK
-                    best = dots[np.arange(rows.size), jj]
-                    denom = v_nrm[rows] * c_nrm[mem][jj]
-                    sim = np.where(
-                        denom > 0.0,
-                        np.round(best / np.where(denom > 0.0, denom, 1.0),
-                                 6), 0.0)
-                    out_cid[rows] = cids[mem][jj]
-                    out_sim[rows] = sim
-                yield pd.DataFrame({
-                    "id": pdf["id"].to_numpy(),
-                    "v": list(V_),
-                    "nrm": v_nrm,
-                    "cluster": out_cid,
-                    "cent_sim": out_sim,
-                })
-
-        return base.mapInPandas(
-            assign2,
-            schema=("id long, v array<double>, nrm double, "
-                    "cluster long, cent_sim double"))
-
-    if method == "gemm":
-        import numpy as np
-        import pandas as pd
-
-        cpd = cent.orderBy("cid").toPandas()  # k rows — bounded side input
-        if cpd.empty:
-            # same loud refusal as the two_level path: the numpy
-            # AxisError an empty centroid table produced said nothing
-            raise ValueError(
-                "_nearest_det_centroids: corpus is empty — no centroids")
-        cids = cpd["cid"].to_numpy()
-        C = np.array([np.asarray(x, dtype=np.float64)
-                      for x in cpd["cemb"]])
-        c_sq = (C * C).sum(axis=1)
-        c_nrm = np.sqrt(c_sq)
-
-        def assign(batches):
-            for pdf in batches:
-                V_ = np.array([np.asarray(x, dtype=np.float64)
-                               for x in pdf["v"]])
-                v_sq = (V_ * V_).sum(axis=1)
-                dots = V_ @ C.T
-                d = np.round(v_sq[:, None] - 2.0 * dots + c_sq[None, :], 6)
-                # argmin returns the FIRST min — centroids are cid-sorted,
-                # so rounded-distance ties break to the smaller cid,
-                # matching the expr path's min(struct(d, cid)) order
-                j = d.argmin(axis=1)
-                v_nrm = np.sqrt(v_sq)
-                denom = v_nrm * c_nrm[j]
+    def assign(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            if pdf["v"].isna().any():
+                raise ValueError(null_vec)
+            X = np.array([np.asarray(v, dtype=np.float64)
+                          for v in pdf["v"]])
+            x_sq = (X * X).sum(axis=1)
+            if groups is None:
+                dots = X @ C.T
+                j = argmin6(x_sq, dots, c_sq)
                 best = dots[np.arange(len(j)), j]
-                sim = np.where(denom > 0.0,
-                               np.round(best / np.where(denom > 0.0,
-                                                        denom, 1.0), 6),
-                               0.0)
-                yield pd.DataFrame({
-                    "id": pdf["id"].to_numpy(),
-                    "v": list(V_),
-                    "nrm": v_nrm,
-                    "cluster": cids[j],
-                    "cent_sim": sim,
-                })
+            else:
+                route = argmin6(x_sq, X @ C[routers].T, c_sq[routers])
+                j = np.empty(len(X), dtype=np.int64)
+                best = np.empty(len(X))
+                for g, mem in enumerate(groups):
+                    sel = np.nonzero(route == g)[0]
+                    if sel.size:
+                        dots = X[sel] @ C[mem].T
+                        jj = argmin6(x_sq[sel], dots, c_sq[mem])
+                        j[sel] = mem[jj]
+                        best[sel] = dots[np.arange(sel.size), jj]
+            nrm = np.sqrt(x_sq)
+            denom = nrm * c_nrm[j]
+            sim = np.where(denom > 0.0,
+                           np.round(best / np.where(denom > 0.0, denom, 1.0),
+                                    6), 0.0)
+            yield pd.DataFrame({"id": pdf["id"].to_numpy(), "v": list(X),
+                                "nrm": nrm, "cluster": cids[j],
+                                "cent_sim": sim})
 
-        return base.mapInPandas(
-            assign,
-            schema=("id long, v array<double>, nrm double, "
-                    "cluster long, cent_sim double"))
-
-    def sq_dist(a, b):
-        return F.aggregate(
-            F.zip_with(V.as_double(a), V.as_double(b),
-                       lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, x: acc + x)
-
-    return (base.crossJoin(F.broadcast(cent))
-            .withColumn("d", F.round(sq_dist("v", "cemb"), 6))
-            .groupBy("id")
-            .agg(F.min(F.struct("d", "cid", "cemb", "v")).alias("b"))
-            .select("id", F.col("b.v").alias("v"),
-                    V.norm("b.v").alias("nrm"),
-                    F.col("b.cid").alias("cluster"),
-                    F.round(V.cosine("b.v", "b.cemb"), 6)
-                    .alias("cent_sim")))
+    return (df.select(F.col(id_col).cast("long").alias("id"),
+                      F.col(vec_col).alias("v"))
+            .mapInPandas(assign, schema=schema))
 
 
 def _semdedup_rollup(assigned: DataFrame, threshold: float) -> DataFrame:
@@ -1178,8 +1070,8 @@ def _semdedup_rollup(assigned: DataFrame, threshold: float) -> DataFrame:
     ``assigned`` is materialized ONCE here (r13 optimization, guide
     §2.4): it feeds three consumers — both sides of the within-cluster
     pair join (keyed cluster) and the final per-id left join (keyed id)
-    — so the quantizer assignment (centroid argmin over the whole
-    corpus, or the Arrow GEMM pass) would otherwise run 2-3x per query;
+    — so the quantizer assignment (the Arrow GEMM pass over the whole
+    corpus) would otherwise run 2-3x per query;
     the differently-keyed consumers rule out exchange reuse."""
     assigned = assigned.localCheckpoint()
     a = assigned.select("cluster", F.col("id").alias("id0"),
@@ -1220,7 +1112,6 @@ def semantic_dedup_det(emb: DataFrame, id_col: str = "vec_id",
                        vec_col: str = "embedding",
                        n_clusters: int = 8,
                        threshold: float = 0.3,
-                       assign: str = "auto",
                        n_super: int | None = None) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv:2303.09540),
     deterministic-quantizer variant: cluster the embedding corpus with a
@@ -1241,22 +1132,21 @@ def semantic_dedup_det(emb: DataFrame, id_col: str = "vec_id",
     threshold and ``max_prior_sim`` is the strongest of them (0.0 when
     none, so the column is never null).
 
-    Scale shape (100 TB bar): centroids broadcast (n_clusters rows);
-    ONE corpus shuffle for cluster assignment; the within-cluster pair
-    join shuffles on cluster id and is quadratic only in bucket size —
-    size ``n_clusters`` ~ N / target_bucket so buckets stay bounded and
+    Scale shape (100 TB bar): the centroid matrix (n_clusters rows) is
+    a driver-side side input and assignment is map-only (see
+    :func:`_nearest_det_centroids`); the within-cluster pair join
+    shuffles on cluster id and is quadratic only in bucket size — size
+    ``n_clusters`` ~ N / target_bucket so buckets stay bounded and
     total pair work is N * bucket, linear in the corpus (the same
     bucket-bounding argument as MinHash banding).
 
-    ``assign`` selects the centroid-assignment strategy (see
-    :func:`_nearest_det_centroids`): ``expr`` Column expressions,
-    ``gemm`` Arrow-batched BLAS (the large-k scale path), ``two_level``
-    hierarchical routing (approximate, ~N·2·sqrt(k) FLOPs), ``auto`` by
-    centroid count. expr/gemm produce identical 6dp-rounded output;
-    two_level is its own defined partitioning.
+    ``n_super`` (default: flat assignment) turns on two-level routing
+    through the first ``n_super`` md5-ordered centroids — approximate,
+    ~N·(s + k/s) distances, its own defined partitioning; at
+    ``n_super >= n_clusters`` it equals the flat assignment.
     """
     assigned = _nearest_det_centroids(emb, id_col, vec_col, n_clusters,
-                                      method=assign, n_super=n_super)
+                                      n_super=n_super)
     return _semdedup_rollup(assigned, threshold)
 
 

@@ -364,6 +364,7 @@ def cluster_silhouette(emb: DataFrame, id_col: str = "vec_id",
     way (fewer than 2 actual centroids), so it raises too.
     """
     from casf_spark.functions import vectors as V
+    from casf_spark.functions.hashing import det_centroids
 
     if n_clusters < 2:
         raise ValueError(
@@ -371,12 +372,7 @@ def cluster_silhouette(emb: DataFrame, id_col: str = "vec_id",
             f"(got {n_clusters}) — silhouette needs a nearest-OTHER "
             f"centroid")
 
-    h = F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 15),
-               16, 10).cast("long")
-    cent = (emb.select(F.col(id_col).alias("cid"),
-                       F.col(vec_col).alias("cemb"), h.alias("ck"))
-            .orderBy("ck", "cid").limit(n_clusters)
-            .select("cid", "cemb"))
+    cent = det_centroids(emb, id_col, vec_col, n_clusters)
     # bounded side input (<= n_clusters rows): collect ONCE — validates
     # the corpus actually yields >= 2 centroids (a 1-row corpus would
     # silently reproduce the b-NULL deflation) and hands the crossJoin

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from casf_spark import schemas
 from casf_spark.functions import vectors as V
-from casf_spark.functions.hashing import md5_long
+from casf_spark.functions.hashing import det_centroids, md5_long
 
 #: hyperplane component range: H(plane:dim) % 2001 - 1000 -> [-1000, 1000]
 _PLANE_MOD = 2001
@@ -433,11 +433,7 @@ def ivf_topk_det(corpus: DataFrame, queries: DataFrame, k: int = 10,
     the oracle-checked twin of :func:`ivf_topk`. Centroids broadcast (a
     ``n_centroids``-row cross join); corpus shuffles once on bucket id.
     """
-    cent = (corpus.select(
-        F.col(id_col).cast("long").alias("cid"),
-        F.col(vec_col).alias("cemb"),
-        md5_long(F.col(id_col).cast("string")).alias("ck"))
-        .orderBy("ck", "cid").limit(n_centroids).drop("ck"))
+    cent = det_centroids(corpus, id_col, vec_col, n_centroids)
 
     def sq_dist(a, b):
         return F.aggregate(
@@ -1019,8 +1015,7 @@ def facility_location_select(emb: DataFrame, k: int = 4,
         raise ValueError(
             f"facility_location_select: need 1 <= k <= n_candidates, "
             f"got k={k}, n_candidates={n_candidates}")
-    ck = F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 15),
-                16, 10).cast("long")
+    ck = md5_long(F.col(id_col).cast("string"))
     cand = (emb.select(F.col(id_col).cast("long").alias("cid"),
                        V.l2_normalize(vec_col).alias("cv"),
                        ck.alias("ck"))

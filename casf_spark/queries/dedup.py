@@ -46,10 +46,11 @@ def _semdedup_oracle(n_clusters: int, threshold: float,
     cosine divisions are zero-norm guarded to mirror V.cosine's 0.0.
 
     With ``n_super`` set, the assignment is the TWO-LEVEL routing rule
-    (assign="two_level"): routers = the first n_super centroids in md5
-    order, each centroid argmins over routers, each vector argmins over
-    routers-with-members then over that group's centroids — every argmin
-    the same rounded-6dp smaller-id-tie rule as the Spark side."""
+    (semantic_dedup_det(n_super=...)): routers = the first n_super
+    centroids in md5 order, each centroid argmins over routers, each
+    vector argmins over routers-with-members then over that group's
+    centroids — every argmin the same rounded-6dp smaller-id-tie rule
+    as the Spark side."""
     if n_super is None:
         assign_ctes = f"""cent AS (
   SELECT vec_id cid, embedding cemb
@@ -1373,14 +1374,11 @@ def q_dedup_semantic_32(spark, sf):
     comes from scaling n_clusters with the corpus (constant expected
     bucket size), and the operator must stay oracle-exact when the
     quantizer is 4x finer and the prune threshold moves. Same
-    deterministic md5-sampled quantizer; assignment pinned to the
-    Arrow-batched GEMM strategy (the large-k scale path), so the driver
-    gate checks that BLAS assignment agrees with the SQL flat argmin
-    cell-for-cell at 6dp — dedup_semantic (8/0.3) covers the expr
-    strategy."""
+    deterministic md5-sampled quantizer and the same Arrow-batched BLAS
+    assignment as dedup_semantic, so the driver gate checks that it
+    agrees with the SQL flat argmin cell-for-cell at 6dp at a second k."""
     emb = load_table(spark, sf, "embeddings")
-    return DD.semantic_dedup_det(emb, n_clusters=32, threshold=0.5,
-                                 assign="gemm")
+    return DD.semantic_dedup_det(emb, n_clusters=32, threshold=0.5)
 
 
 @query("dedup_semantic_2l",
@@ -1388,7 +1386,7 @@ def q_dedup_semantic_32(spark, sf):
                                               n_super=6))
 def q_dedup_semantic_2l(spark, sf):
     """SemDeDup with TWO-LEVEL hierarchical assignment
-    (semantic_dedup_det(assign="two_level")): the first ceil(sqrt(k))
+    (semantic_dedup_det(n_super=6), 6 = ceil(sqrt(32))): the first 6
     md5-ordered centroids act as routers; vectors argmin over routers
     then only within the routed group — ~N·2·sqrt(k) assignment FLOPs
     instead of N·k, the standard coarse-quantizer trick when the cluster
@@ -1399,7 +1397,7 @@ def q_dedup_semantic_2l(spark, sf):
     (differential-tested)."""
     emb = load_table(spark, sf, "embeddings")
     return DD.semantic_dedup_det(emb, n_clusters=32, threshold=0.3,
-                                 assign="two_level")
+                                 n_super=6)
 
 
 @query("minhash_band_plan", oracle="""

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import duckdb
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 import __spark_entry__ as E
@@ -129,6 +131,25 @@ def test_semantic_dedup_engines_agree_on_zero_vector(spark, zero_vec_sf,
     # the zero vector must appear with cent_sim exactly 0.0 (not NaN/NULL)
     z = s[s["vec_id"] == 3]
     assert len(z) == 1 and float(z["cent_sim"].iloc[0]) == 0.0
+
+
+@pytest.fixture(scope="module")
+def empty_emb_sf(tmp_path_factory):
+    """An embeddings table with no rows: the quantizer has no centroids."""
+    tmp = tmp_path_factory.mktemp("empty_emb")
+    pq.write_table(pa.table({"vec_id": pa.array([], pa.int64()),
+                             "embedding": pa.array([], pa.list_(
+                                 pa.float32()))}),
+                   tmp / "embeddings.parquet")
+    return str(tmp)
+
+
+@pytest.mark.parametrize("name", ["dedup_semantic", "dedup_semantic_32",
+                                  "dedup_semantic_2l"])
+def test_semantic_dedup_engines_agree_on_empty_corpus(spark, empty_emb_sf,
+                                                      name):
+    s = _compare_engines(spark, empty_emb_sf, name, ["embeddings"])
+    assert len(s) == 0
 
 
 @pytest.mark.parametrize("name", ["embedding_winsorize", "embedding_prep",

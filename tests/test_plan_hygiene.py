@@ -28,15 +28,12 @@ PRODUCT_WHITELIST = {
     "cosine_topk",       # dense zero-fill path (mods product)
     "cosine_predict",    # inherits top-k's dense path
     "ann_ivf_det",       # centroid table (n_centroids rows) broadcast
-    "dedup_semantic",    # same det-quantizer centroid broadcast (8 rows)
-    "dedup_semantic_32",  # the scaled contract point (32-row broadcast)
     "dsir_select",       # 1-row corpus-totals broadcast
     "tfidf_terms",       # 1-row corpus-count broadcast
     "bm25_rank",         # 1-row corpus stats broadcast
     "vocab_coverage",    # 1-row total broadcast
     "unigram_logprob",   # 1-row total broadcast
     "bigram_logprob",    # 1-row vocabulary-size broadcast
-    "doc_cosine_tfidf",  # 1-row corpus-count broadcast
     "q11_important_parts",   # scalar-subquery threshold (1 row)
     "q22_idle_customers",    # scalar-AVG threshold (1 row)
     "text_zipf",             # 1-row corpus-total broadcast
@@ -99,11 +96,6 @@ PRODUCT_WHITELIST = {
     # the 42-row Platt grid broadcast (map-side expansion) + the 1-row
     # argmin broadcast back onto the grid-sized loss table
     "nb_platt",
-    # 1-row candidate-total broadcast scoring the 64-row vocabulary cut
-    "unigram_lm_scores",
-    # 8-row deterministic-centroid broadcast in the quantizer assignment
-    # (same class as dedup_semantic)
-    "cluster_profile",
     # inherits unigram_logprob's vocab/total broadcasts + the 1-row
     # 9-threshold quantile table broadcast
     "curriculum_buckets",
@@ -230,7 +222,8 @@ def test_no_row_at_a_time_python_anywhere(plans):
 def test_products_only_where_deliberate(plans):
     got = {n for n, p in plans.items()
            if "CartesianProduct" in p or "BroadcastNestedLoopJoin" in p}
-    assert got <= PRODUCT_WHITELIST, got - PRODUCT_WHITELIST
+    assert got == PRODUCT_WHITELIST, (got - PRODUCT_WHITELIST,
+                                      PRODUCT_WHITELIST - got)
 
 
 def test_single_partition_exchanges_bounded(plans):
@@ -244,21 +237,29 @@ def test_single_partition_exchanges_bounded(plans):
 
 
 def test_centroid_argmin_is_aggregation_not_window(spark, sf_dir):
-    """The deterministic-quantizer assignment (_nearest_det_centroids /
-    ivf_topk_det's corpus side) must plan as a min(struct) aggregation
-    WITH a partial (map-side) combine before the exchange — not as a
-    row_number window, which exchanged all n_clusters x N wide rows
+    """The deterministic-quantizer assignment (_nearest_det_centroids)
+    is map-only: the centroid matrix is a driver-side side input and
+    each Arrow batch argmins in numpy, so its plan has no Exchange and
+    no Window. ivf_topk_det's corpus side keeps its Column-expression
+    argmin, and there it must plan as a min(struct) aggregation WITH a
+    partial (map-side) combine before the exchange — not as a
+    row_number window, which exchanged all n_centroids x N wide rows
     (embedding arrays included) to sort them corpus-grain. A struct
     containing array fields is not hash-aggregatable, so Spark plans
-    SortAggregate — fine: the partial_min still collapses each partition
-    to <= one row per id BEFORE the shuffle, which is the 8x (and wider)
-    exchange-volume cut the round-6 verdict asked for."""
+    SortAggregate — fine: the partial_min still collapses each
+    partition to <= one row per id BEFORE the shuffle."""
     from casf_spark.operators.dedup import _nearest_det_centroids
+    from casf_spark.operators.similarity import ivf_topk_det
+
+    def tree(df):
+        return df._jdf.queryExecution().executedPlan().toString() \
+            .split("\n\n")[0]
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    plan = _nearest_det_centroids(emb, "vec_id", "embedding", 8) \
-        ._jdf.queryExecution().executedPlan().toString().split("\n\n")[0]
+    plan = tree(_nearest_det_centroids(emb, "vec_id", "embedding", 8))
+    assert "Exchange" not in plan, plan
     assert "Window" not in plan, plan
+    plan = tree(ivf_topk_det(emb, emb.limit(4)))
     assert "partial_min" in plan, plan
 
 

@@ -24,6 +24,7 @@ from casf_spark.queries.sampling import (q_budget_select, q_mixture_resample,
 from casf_spark.queries.text import q_tfidf_terms
 from casf_spark import CosineAnalyser
 from casf_spark.functions import text as TX
+from casf_spark.operators.curation import c4_line_filter
 from casf_spark.operators.pipeline import curate_documents
 from casf_spark.plans.inspect import (assert_no_cartesian,
                                       broadcast_join_count, explain_str,
@@ -333,6 +334,11 @@ _DOC_FEATURES = {
                          {_TOK: 1}),
     "gopher_quality": (lambda d: TX.gopher_quality(d, "doc_id", "text"),
                        "passes_gopher", {_TOK: 1, r"\s+": 1, _LINE: 1}),
+    # non-blank lines once, and one per-line word split inside the
+    # kept-line filter (10 splits per row before both moved into one
+    # Generate)
+    "c4_line_filter": (lambda d: c4_line_filter(d, "doc_id", "text"),
+                       "passes_c4", {r"\s+": 1, _LINE: 1}),
 }
 
 

@@ -15,27 +15,36 @@ def _md5l(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
 
 
-def _numpy_semdedup(ids, X, n_clusters, threshold):
-    """Literal transcription of the semantic_dedup_det contract."""
+def _cos(a, b):
+    den = np.sqrt(a @ a) * np.sqrt(b @ b)
+    return round(float(a @ b / den), 6) if den > 0 else 0.0
+
+
+def _numpy_assign(ids, X, n_clusters):
+    """Literal transcription of the flat det-quantizer assignment: the
+    md5-smallest centroids, squared differences summed directly and
+    rounded to 6dp, ties to the smaller cid; (cluster, cent_sim) per
+    row of ``X``."""
     order = sorted(range(len(ids)), key=lambda i: (_md5l(str(ids[i])), ids[i]))
     ck = order[:n_clusters]
     cids, C = ids[ck], X[ck]
     d = np.round(((X[:, None, :] - C[None, :, :]) ** 2).sum(2), 6)
-    assign = np.array([
-        min(range(n_clusters), key=lambda j: (d[i, j], cids[j]))
-        for i in range(len(ids))])
+    assign = [min(range(len(ck)), key=lambda j: (d[i, j], cids[j]))
+              for i in range(len(ids))]
+    return (cids[assign],
+            np.array([_cos(X[i], C[j]) for i, j in enumerate(assign)]))
 
-    def cos(a, b):
-        return round(float(a @ b / (np.sqrt(a @ a) * np.sqrt(b @ b))), 6)
 
-    cs = np.array([cos(X[i], C[assign[i]]) for i in range(len(ids))])
+def _numpy_semdedup(ids, X, n_clusters, threshold):
+    """Literal transcription of the semantic_dedup_det contract."""
+    cluster, cs = _numpy_assign(ids, X, n_clusters)
     out = {}
     for i in range(len(ids)):
-        sims = [cos(X[i], X[j]) for j in range(len(ids))
-                if j != i and assign[j] == assign[i]
+        sims = [_cos(X[i], X[j]) for j in range(len(ids))
+                if j != i and cluster[j] == cluster[i]
                 and (cs[j], ids[j]) < (cs[i], ids[i])
-                and cos(X[i], X[j]) >= threshold]
-        out[int(ids[i])] = (int(cids[assign[i]]), cs[i],
+                and _cos(X[i], X[j]) >= threshold]
+        out[int(ids[i])] = (int(cluster[i]), cs[i],
                             bool(sims), len(sims),
                             max(sims) if sims else 0.0)
     return out
@@ -137,42 +146,48 @@ def test_dominant_cluster_skew_correctness(spark):
             assert r.max_prior_sim >= 0.999
 
 
-def test_gemm_assignment_equals_expr_assignment(spark):
-    """The two physical assignment strategies (Column-expression argmin
-    vs Arrow-batched BLAS GEMM) are the SAME operator: identical
-    6dp-rounded (cluster, cent_sim) and identical downstream dedup
-    verdicts, on real testdata AND on adversarial inputs (zero vector,
-    exact centroid hits that force rounded-distance ties)."""
+def test_assignment_matches_numpy_reference(spark):
+    """The assignment kernel (one matmul and one rounded argmin per Arrow
+    batch) gives the reference's (cluster, cent_sim) on real testdata,
+    at k = 16 and at k = 64, and on adversarial rows: a zero vector
+    (cent_sim 0.0) and two identical centroid candidates, which tie at
+    rounded distance 0 and must go to the smaller cid."""
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    for df, k in ((emb, 16), (emb, 64)):
-        a = {r.vec_id: (r.cluster, r.cent_sim, r.is_semantic_dup,
-                        r.n_dup_neighbors, r.max_prior_sim)
-             for r in DD.semantic_dedup_det(df, n_clusters=k,
-                                            threshold=0.5,
-                                            assign="expr").collect()}
-        b = {r.vec_id: (r.cluster, r.cent_sim, r.is_semantic_dup,
-                        r.n_dup_neighbors, r.max_prior_sim)
-             for r in DD.semantic_dedup_det(df, n_clusters=k,
-                                            threshold=0.5,
-                                            assign="gemm").collect()}
-        assert a == b
+    # md5 order of the ids is 4, 1, 2, 0, 3: k=4 makes both clones
+    # (0 and 1) and the zero vector (2) centroids
+    adv = spark.createDataFrame([(0, [1.0, 0.0, 2.0, 0.5]),
+                                 (1, [1.0, 0.0, 2.0, 0.5]),
+                                 (2, [0.0, 0.0, 0.0, 0.0]),
+                                 (3, [-1.0, 3.0, 0.0, 0.0]),
+                                 (4, [0.5, 0.5, 0.5, 0.5])],
+                                "vec_id long, embedding array<float>")
+    for df, k in ((emb, 16), (emb, 64), (adv, 2), (adv, 4)):
+        rows = sorted(df.select("vec_id", "embedding").collect())
+        ids = np.array([r.vec_id for r in rows])
+        X = np.array([r.embedding for r in rows], dtype=np.float64)
+        cluster, cs = _numpy_assign(ids, X, k)
+        got = {r.id: r for r in DD._nearest_det_centroids(
+            df, "vec_id", "embedding", k).collect()}
+        assert sorted(got) == list(ids)
+        for i, c, s in zip(ids, cluster, cs):
+            assert got[i].cluster == c, (k, i)
+            assert got[i].cent_sim == pytest.approx(s, abs=1e-9), (k, i)
+        if df is adv:
+            assert got[2].cent_sim == 0.0
+            if k == 4:
+                assert got[0].cluster == got[1].cluster == 0
 
-    # adversarial: a zero vector plus duplicated centroid-candidates
-    # (equal distance 0 to their own centroid; ties must break equally)
-    rows = [(0, [1.0, 0.0, 2.0, 0.5]),
-            (1, [1.0, 0.0, 2.0, 0.5]),
-            (2, [0.0, 0.0, 0.0, 0.0]),
-            (3, [-1.0, 3.0, 0.0, 0.0]),
-            (4, [0.5, 0.5, 0.5, 0.5])]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    for k in (2, 4):
-        a = sorted(DD.semantic_dedup_det(
-            df, n_clusters=k, threshold=0.3, assign="expr").collect())
-        g = sorted(DD.semantic_dedup_det(
-            df, n_clusters=k, threshold=0.3, assign="gemm").collect())
-        assert a == g
-        z = next(r for r in g if r.vec_id == 2)
-        assert z.cent_sim == 0.0
+
+@pytest.mark.parametrize("k", [2, 4])
+def test_null_vector_raises(spark, k):
+    """A NULL vector has no distance to anything: refused loudly whether
+    it is a centroid (k=4 takes all four rows) or not (k=2; the md5
+    order of the ids is 1, 2, 0, 3)."""
+    df = spark.createDataFrame([(0, [1.0, 0.0]), (1, [0.0, 1.0]),
+                                (2, [1.0, 1.0]), (3, None)],
+                               "vec_id long, embedding array<float>")
+    with pytest.raises(Exception, match="NULL vector in 'embedding'"):
+        DD.semantic_dedup_det(df, n_clusters=k, threshold=0.3).collect()
 
 
 def test_two_level_with_full_routers_equals_flat(spark):
@@ -186,25 +201,23 @@ def test_two_level_with_full_routers_equals_flat(spark):
     flat = {r.vec_id: (r.cluster, r.cent_sim, r.is_semantic_dup,
                        r.n_dup_neighbors, r.max_prior_sim)
             for r in DD.semantic_dedup_det(emb, n_clusters=16,
-                                           threshold=0.4,
-                                           assign="gemm").collect()}
+                                           threshold=0.4).collect()}
     two = {r.vec_id: (r.cluster, r.cent_sim, r.is_semantic_dup,
                       r.n_dup_neighbors, r.max_prior_sim)
            for r in DD.semantic_dedup_det(emb, n_clusters=16,
                                           threshold=0.4,
-                                          assign="two_level",
                                           n_super=16).collect()}
     assert flat == two
 
 
 def test_two_level_routing_is_group_consistent(spark):
-    """At default n_super, every vector's assigned cluster must be a
+    """At n_super = ceil(sqrt(32)), every vector's assigned cluster must be a
     member of its routed group — structurally: the set of clusters
     produced is a subset of the centroid set, and clone vectors land in
     the same cluster as each other (routing is deterministic)."""
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     out = DD.semantic_dedup_det(emb, n_clusters=32, threshold=0.3,
-                                assign="two_level").collect()
+                                n_super=6).collect()
     corpus_ids = {r.vec_id for r in
                   emb.select("vec_id").distinct().collect()}
     assert {r.cluster for r in out} <= corpus_ids
