@@ -18,7 +18,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: default token pattern: split on any non-alphanumeric run (lowercased).
+#: the token pattern: split on any non-alphanumeric run (lowercased).
 TOKEN_SPLIT_PATTERN = "[^a-z0-9]+"
 
 #: small default English stop-word list (the demo's 746-entry Chinese list,
@@ -36,16 +36,15 @@ LANG_MARKERS = {
 LANG_PRIORITY = ("en", "es", "fr", "de")  # deterministic argmax tie-break
 
 
-def tokens(col: Column | str, pattern: str = TOKEN_SPLIT_PATTERN) -> Column:
+def tokens(col: Column | str) -> Column:
     """Lowercase + regex-split tokenizer returning array<string> with empty
     tokens removed. The pluggable seam replacing the demo's ansj flatMap
     (KWD:47-58). No lambda, so it stays inside whole-stage codegen."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.array_remove(F.split(F.lower(c), pattern), "")
+    return F.array_remove(F.split(F.lower(c), TOKEN_SPLIT_PATTERN), "")
 
 
 def tokenize(df: DataFrame, id_col: str, text_col: str,
-             pattern: str = TOKEN_SPLIT_PATTERN,
              tokenizer=None) -> DataFrame:
     """Explode documents to (id, pos, word) — one row per token occurrence.
 
@@ -54,7 +53,7 @@ def tokenize(df: DataFrame, id_col: str, text_col: str,
     result for dictionary segmentation; default is the regex tokenizer.
     """
     tok = (tokenizer(F.col(text_col)) if tokenizer is not None
-           else tokens(text_col, pattern))
+           else tokens(text_col))
     return df.select(
         F.col(id_col).cast("string").alias("doc"),
         F.posexplode(tok).alias("pos", "word"),
@@ -63,7 +62,6 @@ def tokenize(df: DataFrame, id_col: str, text_col: str,
 
 def term_counts(df: DataFrame, id_col: str, text_col: str,
                 stopwords: Sequence[str] | DataFrame | None = DEFAULT_STOPWORDS,
-                pattern: str = TOKEN_SPLIT_PATTERN,
                 tokenizer=None) -> DataFrame:
     """Term-frequency COO matrix (y=doc, x=word, value=count) feeding
     CosineAnalyser — the KWD pipeline (tokenize -> stop-filter -> A5 count).
@@ -73,7 +71,7 @@ def term_counts(df: DataFrame, id_col: str, text_col: str,
     driver-side collectAsList, KWD:43). ``tokenizer`` plugs a custom
     Column->Column tokenizer through to :func:`tokenize`.
     """
-    toks = tokenize(df, id_col, text_col, pattern, tokenizer)
+    toks = tokenize(df, id_col, text_col, tokenizer)
     if isinstance(stopwords, DataFrame):
         sw = stopwords.select(F.col(stopwords.columns[0]).alias("word"))
         toks = toks.join(F.broadcast(sw), "word", "left_anti")
@@ -85,9 +83,9 @@ def term_counts(df: DataFrame, id_col: str, text_col: str,
     )
 
 
-def token_count(col: Column | str, pattern: str = TOKEN_SPLIT_PATTERN) -> Column:
+def token_count(col: Column | str) -> Column:
     """Number of tokens in a text column."""
-    return F.size(tokens(col, pattern))
+    return F.size(tokens(col))
 
 
 #: CJK codepoint ranges: Han unified, hiragana/katakana, hangul syllables.
@@ -160,8 +158,7 @@ def _series_pandas_udf(fn, return_type: str):
     return pandas_udf(return_type)(fn)
 
 
-def dict_tokenizer(vocab, max_word_len: int | None = None,
-                   stopwords=None):
+def dict_tokenizer(vocab, stopwords=None):
     """Dictionary-based CJK segmentation with NO external dependency:
     forward maximum matching (FMM) over a caller-supplied vocabulary, as an
     Arrow-batched pandas_udf (Column -> Column(array<string>)).
@@ -189,7 +186,7 @@ def dict_tokenizer(vocab, max_word_len: int | None = None,
 
     words = frozenset(w for w in vocab if w)
     stops = frozenset(stopwords or ())
-    maxlen = max_word_len or (max(map(len, words)) if words else 1)
+    maxlen = max(map(len, words)) if words else 1
     # \uXXXX escapes parse identically in Python re and Java regex, so the
     # shared CJK_RUN_PATTERN constant is reused verbatim
     run_re = re.compile(r"[a-z0-9]+|" + CJK_RUN_PATTERN)
@@ -300,18 +297,17 @@ def with_token_arrays(df: DataFrame, text_col: str, *names: str) -> DataFrame:
             .drop("_arrays"))
 
 
-def quality_exprs(text_col: str,
-                  stopwords: Sequence[str] = DEFAULT_STOPWORDS,
-                  ) -> dict[str, Column]:
+def quality_exprs(text_col: str) -> dict[str, Column]:
     """The six quality-metric Columns keyed by output name — importable so
     composite pipelines (operators.pipeline.curate_documents) can evaluate
     them inline in ONE scan instead of joining per-feature outputs.
 
     The tokens are the :data:`TOKS` array of :func:`with_token_arrays`;
-    ``text_col`` feeds only the character counts."""
+    ``text_col`` feeds only the character counts; ``stopword_ratio``
+    counts :data:`DEFAULT_STOPWORDS`."""
     tok = F.col(TOKS)
     text = F.col(text_col)
-    sw = F.array(*[F.lit(w) for w in stopwords])
+    sw = F.array(*[F.lit(w) for w in DEFAULT_STOPWORDS])
     n_tokens = F.size(tok)
     n_chars = F.length(text)
     n_stop = F.size(F.filter(tok, lambda t: F.array_contains(sw, t)))
@@ -336,15 +332,14 @@ def quality_exprs(text_col: str,
     }
 
 
-def quality_features(df: DataFrame, id_col: str, text_col: str,
-                     stopwords: Sequence[str] = DEFAULT_STOPWORDS) -> DataFrame:
+def quality_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document quality metrics for pipeline filtering:
 
     n_chars, n_tokens, avg_token_len, stopword_ratio, digit_ratio,
     punct_ratio — all as JVM-side expressions over one pass, tokenizing
     each document once.
     """
-    q = quality_exprs(text_col, stopwords)
+    q = quality_exprs(text_col)
     return with_token_arrays(df, text_col, TOKS).select(
         F.col(id_col).alias("doc_id"),
         *[c.alias(name) for name, c in q.items()],
@@ -409,8 +404,7 @@ def fingerprint(col: Column | str) -> Column:
     return F.md5(normalize_text(col))
 
 
-def collision_key(col: Column | str,
-                  pattern: str = TOKEN_SPLIT_PATTERN) -> Column:
+def collision_key(col: Column | str) -> Column:
     """OpenRefine-style clustering key: the document's DISTINCT tokens,
     sorted and re-joined. Token order, repetition, punctuation, and case
     all normalize away, so reordered/reworded-but-same-bag-of-words
@@ -419,13 +413,12 @@ def collision_key(col: Column | str,
 
     DuckDB twin: ``array_to_string(list_sort(list_distinct(toks)), ' ')``.
     """
-    return F.array_join(F.array_sort(F.array_distinct(tokens(col, pattern))),
+    return F.array_join(F.array_sort(F.array_distinct(tokens(col))),
                         " ")
 
 
 def winnow_fingerprints(df: DataFrame, id_col: str, text_col: str,
-                        k: int = 5, w: int = 4,
-                        pattern: str = TOKEN_SPLIT_PATTERN) -> DataFrame:
+                        k: int = 5, w: int = 4) -> DataFrame:
     """Winnowing fingerprints (Schleimer et al., "Winnowing: Local
     Algorithms for Document Fingerprinting", SIGMOD'03): hash every token
     k-gram, then keep the minimum hash of each sliding window of ``w``
@@ -450,7 +443,7 @@ def winnow_fingerprints(df: DataFrame, id_col: str, text_col: str,
     # column first keeps it a single evaluation (CollapseProject declines
     # to re-inline a non-cheap alias referenced more than once).
     tok_df = df.select(F.col(id_col).cast("long").alias("doc"),
-                       tokens(text_col, pattern).alias("toks"))
+                       tokens(text_col).alias("toks"))
     grams = tok_df.select(
         "doc",
         F.when(

@@ -7,10 +7,10 @@ feature-extraction runs as **Arrow-batched Pandas iterators** via
 ``mapInPandas`` so bytes cross the JVM<->Python boundary once per batch,
 never per row.
 
-The actual media decode is STUBBED (image/audio libs are not in this
-container): ``decode_image_stub`` raises ``NotImplementedError`` when a real
-decoder is requested, and otherwise computes deterministic fake features
-(payload length, first-byte, byte-sum mod) so the Spark-side plumbing —
+Raw RGB24 rasters and s16le PCM decode for real, with numpy only
+(``decode_rgb_features``, ``decode_pcm_features``); compressed formats have
+no decoder here. ``extract_features`` computes stub features of any payload
+(byte length, first byte, byte sum mod 997), so the Spark-side plumbing —
 schema, batching, partition shape — is real and testable end to end.
 """
 
@@ -41,17 +41,10 @@ def with_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def extract_features(df: DataFrame, real_decoder: bool = False) -> DataFrame:
-    """Deterministic per-payload features via mapInPandas (Arrow batches).
-
-    ``real_decoder=True`` is the seam where PIL/librosa/ffmpeg would plug
-    in; unavailable in this environment -> NotImplementedError (checked at
-    plan construction, not inside executors, so it fails fast).
-    """
-    if real_decoder:
-        raise NotImplementedError(
-            "media decoders (PIL/librosa/ffmpeg) are not installed in this "
-            "environment; stub features only")
+def extract_features(df: DataFrame) -> DataFrame:
+    """Deterministic stub features of each payload via mapInPandas (Arrow
+    batches): byte length, first byte (NULL when empty) and byte sum mod
+    997. No media is decoded."""
 
     def batches(it: Iterator) -> Iterator:
         import pandas as pd
@@ -185,15 +178,13 @@ def resize_rgb_nearest(df: DataFrame, width: int, height: int,
 
 def synthesize_rgb_payload_grouped(df: DataFrame, id_col: str,
                                    group_mod: int = 400,
-                                   delta_mod: int = 5,
-                                   delta_step: int = 8,
                                    width: int = 18,
                                    height: int = 16) -> DataFrame:
     """Deterministic raw-RGB24 payloads with PLANTED near-dup groups
     (test fixture for perceptual dedup): every doc in the same
     ``doc_id % group_mod`` class gets the SAME group-seeded base raster
     (pixels in [0, 200)) plus a per-doc uniform brightness shift
-    ``(doc_id // group_mod) % delta_mod * delta_step`` (≤ 32 — never
+    ``(doc_id // group_mod) % 5 * 8`` (≤ 32 — never
     clips, so gradients are preserved EXACTLY). A gradient-based
     perceptual hash must therefore bucket exactly by the id arithmetic —
     which is what lets a SQL oracle predict the dedup output without
@@ -214,7 +205,7 @@ def synthesize_rgb_payload_grouped(df: DataFrame, id_col: str,
                     base = rng.integers(0, 200, size=w * h * 3,
                                         dtype=np.uint8)
                     bases[g] = base
-                d = (int(doc_id) // group_mod) % delta_mod * delta_step
+                d = (int(doc_id) // group_mod) % 5 * 8
                 payloads.append((base + np.uint8(d)).tobytes())
             yield pd.DataFrame({"doc_id": pdf["_id"].astype("int64"),
                                 "payload": payloads})
@@ -292,6 +283,9 @@ def payload_metadata(df: DataFrame) -> DataFrame:
     )
 
 
+#: sample rate of the synthesized PCM payloads, in Hz
+PCM_SAMPLE_RATE = 16000
+
 PCM_FEATURE_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType(), False),
     T.StructField("n_samples", T.LongType(), False),
@@ -303,17 +297,17 @@ PCM_FEATURE_SCHEMA = T.StructType([
 
 
 def synthesize_pcm_payload(df: DataFrame, id_col: str,
-                           n_samples: int = 1600,
-                           sample_rate: int = 16000) -> DataFrame:
+                           n_samples: int = 1600) -> DataFrame:
     """Deterministic 16-bit mono PCM payloads (test fixture): a doc-seeded
-    sine + noise mix, little-endian int16 — the ffmpeg ``s16le`` layout.
+    sine + noise mix at :data:`PCM_SAMPLE_RATE`, little-endian int16 — the
+    ffmpeg ``s16le`` layout.
     Real pipelines read these bytes from ``binaryFile``/parquet."""
     n = int(n_samples)
 
     def batches(it: Iterator) -> Iterator:
         import numpy as np
         import pandas as pd
-        t = np.arange(n) / float(sample_rate)
+        t = np.arange(n) / float(PCM_SAMPLE_RATE)
         for pdf in it:
             payloads = []
             for doc_id in pdf["_id"]:
@@ -330,19 +324,17 @@ def synthesize_pcm_payload(df: DataFrame, id_col: str,
     return (df.select(F.col(id_col).cast("long").alias("_id"))
             .mapInPandas(batches, "doc_id long, payload binary")
             .withColumn("mime", F.lit("audio/x-raw-s16le"))
-            .withColumn("sample_rate", F.lit(int(sample_rate))))
+            .withColumn("sample_rate", F.lit(PCM_SAMPLE_RATE)))
 
 
 def synthesize_pcm_payload_grouped(df: DataFrame, id_col: str,
                                    group_mod: int = 400,
-                                   gain_mod: int = 4,
-                                   n_samples: int = 1600,
-                                   sample_rate: int = 16000) -> DataFrame:
+                                   n_samples: int = 1600) -> DataFrame:
     """Deterministic s16le PCM payloads with PLANTED near-dup groups
     (test fixture for perceptual audio dedup): every doc in the same
     ``doc_id % group_mod`` class gets the SAME group-seeded base signal
     (int16 samples in [-8000, 8000)) times a per-doc INTEGER gain
-    ``(doc_id // group_mod) % gain_mod + 1`` (≤ 4 — |sample| stays under
+    ``(doc_id // group_mod) % 4 + 1`` (≤ 4 — |sample| stays under
     32000, so the scaling is exact int16, no clip, no rounding). An
     energy-comparison fingerprint is provably gain-invariant on these
     (energies scale by exactly gain²), so it must bucket exactly by the
@@ -364,7 +356,7 @@ def synthesize_pcm_payload_grouped(df: DataFrame, id_col: str,
                     base = rng.integers(-8000, 8000, size=n,
                                         dtype=np.int16)
                     bases[g] = base
-                gain = (int(doc_id) // group_mod) % gain_mod + 1
+                gain = (int(doc_id) // group_mod) % 4 + 1
                 payloads.append(
                     (base * np.int16(gain)).astype("<i2").tobytes())
             yield pd.DataFrame({"doc_id": pdf["_id"].astype("int64"),
@@ -373,7 +365,7 @@ def synthesize_pcm_payload_grouped(df: DataFrame, id_col: str,
     return (df.select(F.col(id_col).cast("long").alias("_id"))
             .mapInPandas(batches, "doc_id long, payload binary")
             .withColumn("mime", F.lit("audio/x-raw-s16le"))
-            .withColumn("sample_rate", F.lit(int(sample_rate))))
+            .withColumn("sample_rate", F.lit(PCM_SAMPLE_RATE)))
 
 
 def pcm_energy_fingerprint(df: DataFrame, n_frames: int = 64,
@@ -422,7 +414,8 @@ def pcm_energy_fingerprint(df: DataFrame, n_frames: int = 64,
             T.StructField("afp", T.StringType(), False)]))
 
 
-def decode_pcm_features(df: DataFrame, sample_rate: int = 16000) -> DataFrame:
+def decode_pcm_features(df: DataFrame,
+                        sample_rate: int = PCM_SAMPLE_RATE) -> DataFrame:
     """REAL decode of raw s16le PCM audio (numpy frombuffer — no external
     decoder): duration, RMS / peak amplitude (normalized to [-1, 1]) and
     zero-crossing rate per payload, Arrow-batched. Compressed codecs

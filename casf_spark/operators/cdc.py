@@ -22,17 +22,16 @@ from pyspark.sql import functions as F
 
 
 def cdc_snapshot(changelog: DataFrame, key_cols: Sequence[str],
-                 version_cols: Sequence[str], op_col: str,
-                 delete_op: str = "d") -> DataFrame:
+                 version_cols: Sequence[str], op_col: str) -> DataFrame:
     """Latest-change-wins snapshot.
 
     ``version_cols`` MUST be a total order per key (e.g. commit ts +
     sequence) — the winner under ties is the struct-max over the whole
     row, i.e. arbitrary-but-deterministic column ordering, which is
     rarely what a changelog means. ``op_col`` holds the operation,
-    ``delete_op`` marking deletes; a NULL op is treated as an upsert
+    ``"d"`` marking deletes; a NULL op is treated as an upsert
     (Debezium-style changelogs use NULL/absent op for snapshot reads —
-    and the naive ``op != delete_op`` filter would NULL-out such rows
+    and the naive ``op != 'd'`` filter would NULL-out such rows
     and silently drop them). Returns the surviving rows (all changelog
     columns — callers project).
     """
@@ -45,7 +44,7 @@ def cdc_snapshot(changelog: DataFrame, key_cols: Sequence[str],
               .agg(F.max(payload).alias("_w"))
               .select(F.col("_w._row.*")))
     return latest.where(
-        F.coalesce(F.col(op_col) != delete_op, F.lit(True)))
+        F.coalesce(F.col(op_col) != "d", F.lit(True)))
 
 
 def scd2_history(changelog: DataFrame, key_cols: Sequence[str],

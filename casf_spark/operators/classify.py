@@ -7,7 +7,7 @@ fastText- or NB-style linear model on labeled text and keep documents
 the model scores well). The reference corpus has no learned component —
 this module supplies the classical counterpart: binary multinomial NB
 over the same tokenizer the rest of the engine uses
-(functions/text.py:22 TOKEN_SPLIT_PATTERN), trained and applied entirely
+(``functions.text.tokens``), trained and applied entirely
 as DataFrame plans.
 
 Cross-engine determinism (the dedup_pagerank / rrf_fuse lesson applied
@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from casf_spark.functions.text import TOKEN_SPLIT_PATTERN, tokenize
+from casf_spark.functions.text import tokenize
 
 __all__ = ["nb_train", "nb_score", "nb_cv_folds", "nb_train_multi",
            "nb_score_multi", "calibration_report",
@@ -51,19 +51,21 @@ __all__ = ["nb_train", "nb_score", "nb_cv_folds", "nb_train_multi",
 PRIOR_TERM = ""
 
 _SCALE_U = 1_000_000  # integer micro-units for log-likelihood ratios
+#: calibration buckets: |score_u| bands this wide, the last open-ended
+CALIB_STEP_U = 250_000
+CALIB_BUCKETS = 5
 
 
-def _round_half_up_u(col, scale_u: int = _SCALE_U):
+def _round_half_up_u(col):
     """floor(x * scale + 0.5) — round-half-up to integer units; identical
     semantics in Spark and DuckDB for negative values too (half rounds
     toward +inf on both engines)."""
-    return F.floor(col * F.lit(float(scale_u)) + F.lit(0.5)).cast("long")
+    return F.floor(col * F.lit(float(_SCALE_U)) + F.lit(0.5)).cast("long")
 
 
 def nb_train(docs: DataFrame, id_col: str, text_col: str,
              label_col: str, positive,
-             vocab_size: int = 5000,
-             pattern: str = TOKEN_SPLIT_PATTERN) -> DataFrame:
+             vocab_size: int = 5000) -> DataFrame:
     """Train binary multinomial NB -> model DataFrame ``(term, lr_u)``.
 
     ``lr_u`` is the integer micro-unit log-likelihood ratio
@@ -81,7 +83,7 @@ def nb_train(docs: DataFrame, id_col: str, text_col: str,
         F.when(F.col(label_col).isNull(), F.lit(None))
         .otherwise((F.col(label_col) == F.lit(positive)).cast("int"))
         .alias("y")).where(F.col("y").isNotNull())
-    toks = (tokenize(docs, id_col, text_col, pattern)
+    toks = (tokenize(docs, id_col, text_col)
             .select("doc", "word")
             .join(lab, "doc"))
     tc = (toks.groupBy(F.col("word").alias("term"))
@@ -122,8 +124,7 @@ def nb_train(docs: DataFrame, id_col: str, text_col: str,
 
 
 def nb_score(docs: DataFrame, model: DataFrame, id_col: str,
-             text_col: str,
-             pattern: str = TOKEN_SPLIT_PATTERN) -> DataFrame:
+             text_col: str) -> DataFrame:
     """Score every document with a trained NB model ->
     ``(doc, n_vocab_tokens, score_u, log_odds, pred_pos)``.
 
@@ -141,7 +142,7 @@ def nb_score(docs: DataFrame, model: DataFrame, id_col: str,
     term_rows = model.where(F.col("term") != F.lit(PRIOR_TERM))
     prior = (model.where(F.col("term") == F.lit(PRIOR_TERM))
              .select(F.col("lr_u").alias("prior_u")))
-    toks = tokenize(docs, id_col, text_col, pattern).select("doc", "word")
+    toks = tokenize(docs, id_col, text_col).select("doc", "word")
     hit = (toks.join(F.broadcast(term_rows),
                      toks.word == term_rows.term)
            .groupBy("doc")
@@ -163,9 +164,7 @@ def nb_score(docs: DataFrame, model: DataFrame, id_col: str,
                 (F.col("score_u") >= 0).alias("pred_pos")))
 
 
-def calibration_report(scored: DataFrame, label_col: str = "y",
-                       n_buckets: int = 5,
-                       step_u: int = 250_000) -> DataFrame:
+def calibration_report(scored: DataFrame, label_col: str = "y") -> DataFrame:
     """Reliability / calibration report for NB scores -> one row per
     confidence bucket ``(bucket, n, mean_abs_logodds, conf, acc, gap,
     ece)`` — the check a pipeline owner runs before TRUSTING a learned
@@ -175,7 +174,8 @@ def calibration_report(scored: DataFrame, label_col: str = "y",
 
     ``scored`` is :func:`nb_score` output joined with an integer truth
     column ``label_col`` (1 = positive). Buckets are |score_u| bands of
-    ``step_u`` micro-units (top bucket open-ended) — bucketing on the
+    :data:`CALIB_STEP_U` micro-units, :data:`CALIB_BUCKETS` of them (top
+    bucket open-ended) — bucketing on the
     INTEGER score, never on a transcendental, so bucket membership is
     engine-exact by construction. Per bucket:
 
@@ -191,12 +191,12 @@ def calibration_report(scored: DataFrame, label_col: str = "y",
       weighted sum, so engines sum identical integers), 6dp.
 
     Scale shape: one map-combined aggregation keyed by bucket (≤
-    ``n_buckets`` groups), then arithmetic on the bucket table with a
+    :data:`CALIB_BUCKETS` groups), then arithmetic on the bucket table with a
     1-row broadcast for the ECE denominator — the corpus is touched
     once, nothing corpus-sized shuffles.
     """
-    b = F.least(F.floor(F.abs(F.col("score_u")) / F.lit(step_u)),
-                F.lit(n_buckets - 1)).cast("long")
+    b = F.least(F.floor(F.abs(F.col("score_u")) / F.lit(CALIB_STEP_U)),
+                F.lit(CALIB_BUCKETS - 1)).cast("long")
     agg = (scored
            .select(b.alias("bucket"),
                    F.abs(F.col("score_u")).alias("abs_u"),
@@ -303,8 +303,7 @@ def platt_grid_fit(scored: DataFrame, label_col: str = "y",
 
 
 def nb_train_multi(docs: DataFrame, id_col: str, text_col: str,
-                   label_col: str, vocab_size: int = 5000,
-                   pattern: str = TOKEN_SPLIT_PATTERN) -> DataFrame:
+                   label_col: str, vocab_size: int = 5000) -> DataFrame:
     """Train MULTI-class multinomial NB -> model ``(label, term, ll_u)``
     — the language-ID / domain-ID generalization of :func:`nb_train`
     (CCNet trains exactly this shape per language). ``ll_u`` is the
@@ -329,7 +328,7 @@ def nb_train_multi(docs: DataFrame, id_col: str, text_col: str,
     lab = docs.select(F.col(id_col).cast("string").alias("doc"),
                       F.col(label_col).alias("label")) \
         .where(F.col("label").isNotNull())
-    toks = (tokenize(docs, id_col, text_col, pattern)
+    toks = (tokenize(docs, id_col, text_col)
             .select("doc", "word").join(lab, "doc"))
     tc = (toks.groupBy("label", F.col("word").alias("term"))
           .agg(F.count(F.lit(1)).cast("double").alias("c")))
@@ -362,8 +361,7 @@ def nb_train_multi(docs: DataFrame, id_col: str, text_col: str,
 
 
 def nb_score_multi(docs: DataFrame, model: DataFrame, id_col: str,
-                   text_col: str,
-                   pattern: str = TOKEN_SPLIT_PATTERN) -> DataFrame:
+                   text_col: str) -> DataFrame:
     """Classify every document with a :func:`nb_train_multi` model ->
     ``(doc, pred_label, best_u, margin_u)``: per-label integer score
     ``prior_u + sum of ll_u over the doc's vocabulary-token
@@ -386,7 +384,7 @@ def nb_score_multi(docs: DataFrame, model: DataFrame, id_col: str,
         .select("label", "term", "ll_u")
     priors = model.where(F.col("term") == PRIOR_TERM) \
         .select("label", F.col("ll_u").alias("prior_u"))
-    toks = tokenize(docs, id_col, text_col, pattern).select("doc", "word")
+    toks = tokenize(docs, id_col, text_col).select("doc", "word")
     hit = (toks.join(F.broadcast(terms),
                      toks["word"] == terms["term"])
            .groupBy("doc", "label")
@@ -416,8 +414,7 @@ def nb_score_multi(docs: DataFrame, model: DataFrame, id_col: str,
 
 def nb_cv_folds(docs: DataFrame, id_col: str, text_col: str,
                 label_col: str, positive, n_folds: int = 5,
-                vocab_size: int = 5000,
-                pattern: str = TOKEN_SPLIT_PATTERN) -> DataFrame:
+                vocab_size: int = 5000) -> DataFrame:
     """k-fold cross-validation of the binary NB classifier in TWO
     corpus passes instead of 2k — output-identical to looping
     :func:`nb_train` + :func:`nb_score` over the hash folds
@@ -468,7 +465,7 @@ def nb_cv_folds(docs: DataFrame, id_col: str, text_col: str,
                        F.when(F.col(label_col).isNull(), F.lit(None))
                        .otherwise((F.col(label_col) == F.lit(positive))
                                   .cast("int")).alias("y"))
-    toks = tokenize(docs, id_col, text_col, pattern).select("doc", "word")
+    toks = tokenize(docs, id_col, text_col).select("doc", "word")
     # pass 1: (fold, term) training-count table (train rows only)
     lab = base.where(F.col("y").isNotNull())
     ftc = (toks.join(lab, "doc")

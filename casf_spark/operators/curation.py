@@ -128,35 +128,31 @@ PII_PATTERNS: dict[str, str] = {
 _REDACT_ORDER = ("email", "phone", "ipv4")
 
 
-def _scrub_expr(text_col: str | Column, token: str) -> Column:
-    scrubbed = F.col(text_col) if isinstance(text_col, str) else text_col
-    for name in _REDACT_ORDER:
-        scrubbed = F.regexp_replace(scrubbed, PII_PATTERNS[name], token)
-    return scrubbed
-
-
-def pii_scrub_report(df: DataFrame, id_col: str, text_col: str,
-                     token: str = "<PII>") -> DataFrame:
+def pii_scrub_report(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Counts + scrubbed text in ONE projection:
-    (doc, n_email, n_phone, n_ipv4, redacted).
+    (doc, n_email, n_phone, n_ipv4, redacted), each match replaced by
+    ``<PII>``.
 
     The audit-trail shape pipelines persist — what was found and the text
     with it removed — in one scan of the corpus.
     """
+    scrubbed = F.col(text_col)
+    for name in _REDACT_ORDER:
+        scrubbed = F.regexp_replace(scrubbed, PII_PATTERNS[name], "<PII>")
     return df.select(
         F.col(id_col).cast("long").alias("doc"),
         *[F.regexp_count(F.col(text_col), F.lit(p)).cast("long")
           .alias(f"n_{name}") for name, p in PII_PATTERNS.items()],
-        _scrub_expr(text_col, token).alias("redacted"))
+        scrubbed.alias("redacted"))
 
 
 # ------------------------------------------------------------ decontamination
 
 def contamination_flags(docs: DataFrame, benchmark: DataFrame,
                         id_col: str, text_col: str,
-                        n: int = 13, min_hits: int = 1) -> DataFrame:
-    """Test-set decontamination: corpus docs sharing >= ``min_hits``
-    distinct word n-grams with the benchmark corpus -> (doc, n_hits).
+                        n: int = 13) -> DataFrame:
+    """Test-set decontamination: corpus docs sharing at least one
+    distinct word n-gram with the benchmark corpus -> (doc, n_hits).
 
     The GPT-3 appendix-C rule (13-gram collision) with n configurable —
     short synthetic corpora want smaller n.
@@ -178,7 +174,7 @@ def contamination_flags(docs: DataFrame, benchmark: DataFrame,
     return (d.join(F.broadcast(b), "g")
             .groupBy("doc")
             .agg(F.countDistinct("g").alias("n_hits"))
-            .where(F.col("n_hits") >= min_hits))
+            .where(F.col("n_hits") >= 1))
 
 
 # ------------------------------------------------------------------- packing
@@ -421,16 +417,16 @@ def budget_select(df: DataFrame, id_col: str, tokens_col: str,
 
 
 def stratified_sample(df: DataFrame, key: Column | str, strata_col: str,
-                      rates: dict[str, float],
-                      default_rate: float = 0.0) -> DataFrame:
+                      rates: dict[str, float]) -> DataFrame:
     """Deterministic per-stratum sampling: keep a row iff its md5-derived
     key fraction < the rate configured for its stratum (domain/language
-    rebalancing with rerun- and engine-stable membership).
+    rebalancing with rerun- and engine-stable membership); a stratum
+    missing from ``rates`` keeps nothing.
 
     Narrow filter, no shuffle; Catalyst pushes it into the scan. DuckDB
     twin: CASE over strata + the documented ``hash_fraction`` expression.
     """
-    rate = F.lit(float(default_rate))
+    rate = F.lit(0.0)
     for k, v in sorted(rates.items()):
         rate = F.when(F.col(strata_col) == k, F.lit(float(v))).otherwise(rate)
     return df.where(hash_fraction(key) < rate)
@@ -1520,8 +1516,8 @@ def boilerplate_lines(lines: DataFrame, group_col: str, doc_col: str,
 
 def contamination_flags_bloom(docs: DataFrame, benchmark: DataFrame,
                               id_col: str, text_col: str, n: int = 13,
-                              min_hits: int = 1, m_bits: int = 1 << 20,
-                              k: int = 5, seed: int = 7) -> DataFrame:
+                              m_bits: int = 1 << 20,
+                              k: int = 5) -> DataFrame:
     """Bloom-gated test-set decontamination — OUTPUT-IDENTICAL to
     :func:`contamination_flags` (pinned by a differential test), but
     the corpus-side gram stream is pre-filtered MAP-ONLY through a
@@ -1543,9 +1539,9 @@ def contamination_flags_bloom(docs: DataFrame, benchmark: DataFrame,
     d = _shingles(docs, id_col, text_col, n, distinct=False)
     b = _shingles(benchmark, id_col, text_col, n, distinct=True) \
         .select("shingle").distinct()
-    filt = bloom_build(b, F.col("shingle"), m_bits=m_bits, k=k, seed=seed)
+    filt = bloom_build(b, F.col("shingle"), m_bits=m_bits, k=k)
     probed = bloom_probe(d, F.col("shingle"), filt, m_bits, k,
-                         seed=seed, out_col="__ct_maybe")
+                         out_col="__ct_maybe")
     surv = probed.where(F.col("__ct_maybe")).drop("__ct_maybe")
     # exact rescue: survivors are contamination-sized, so this join
     # never sees corpus-scale input on either side (b is the benchmark
@@ -1553,7 +1549,7 @@ def contamination_flags_bloom(docs: DataFrame, benchmark: DataFrame,
     return (surv.join(b, "shingle")
             .groupBy("doc")
             .agg(F.countDistinct("shingle").alias("n_hits"))
-            .where(F.col("n_hits") >= min_hits))
+            .where(F.col("n_hits") >= 1))
 
 
 def quantile_normalize(df: DataFrame, group_col: str, doc_col: str,

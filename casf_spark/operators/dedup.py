@@ -169,6 +169,15 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     return schemas.conform(out, schemas.JACCARD_PAIR)
 
 
+#: MinHash banding that incremental_dedup and the streaming near-dedup
+#: index use: shingle size, signature length, bands, hash seed (the
+#: minhash_lsh_pairs defaults)
+MINHASH_N = 2
+MINHASH_HASHES = 12
+MINHASH_BANDS = 4
+MINHASH_SEED = 42
+
+
 def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
                        n: int = 2, num_hashes: int = 12,
                        seed: int = 42) -> DataFrame:
@@ -227,8 +236,8 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
 
 
 def minhash_lsh_star_edges(df: DataFrame, id_col: str, text_col: str,
-                           n: int = 2, num_hashes: int = 12, bands: int = 4,
-                           seed: int = 42) -> DataFrame:
+                           n: int = 2, num_hashes: int = 12,
+                           bands: int = 4) -> DataFrame:
     """Star-contracted MinHash candidate edges for clustering: per (band,
     bucket) with >= 2 docs, one edge doc -> min(doc in bucket) instead of
     the bucket's full pairwise clique.
@@ -241,7 +250,8 @@ def minhash_lsh_star_edges(df: DataFrame, id_col: str, text_col: str,
     >=2 bucket == docs in >=1 candidate pair). Output (doc0, doc1),
     doc0 > doc1.
     """
-    banded = _band_buckets(df, id_col, text_col, n, num_hashes, bands, seed)
+    banded = _band_buckets(df, id_col, text_col, n, num_hashes, bands,
+                           MINHASH_SEED)
     keys = _band_keys(num_hashes, bands)
     mins = (banded.groupBy(*keys)
             .agg(F.min("doc").alias("mdoc"),
@@ -415,9 +425,7 @@ def collision_clusters(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def incremental_dedup(new: DataFrame, history: DataFrame,
-                      id_col: str, text_col: str,
-                      n: int = 2, num_hashes: int = 12, bands: int = 4,
-                      seed: int = 42) -> DataFrame:
+                      id_col: str, text_col: str) -> DataFrame:
     """Dedup a NEW batch against a historical corpus -> (doc, status) for
     every new doc: ``exact_dup`` (content fingerprint already in history),
     ``near_dup`` (shares a MinHash band bucket with a history doc), or
@@ -434,8 +442,10 @@ def incremental_dedup(new: DataFrame, history: DataFrame,
     - the collision sets broadcast back onto the batch for labeling.
 
     Same filter-then-reduce contract as ``curation.contamination_flags``.
-    Band parameters mirror :func:`minhash_lsh_pairs`; exact-dup precedence
-    over near-dup (an exact copy also collides in every band).
+    Banding is :func:`minhash_lsh_pairs`' default (:data:`MINHASH_N`,
+    :data:`MINHASH_HASHES`, :data:`MINHASH_BANDS`, :data:`MINHASH_SEED`);
+    exact-dup precedence over near-dup (an exact copy also collides in
+    every band).
     """
     nf = new.select(F.col(id_col).cast("long").alias("doc"),
                     TX.fingerprint(text_col).alias("fp"))
@@ -443,11 +453,10 @@ def incremental_dedup(new: DataFrame, history: DataFrame,
     hit_fp = (hf.join(F.broadcast(nf.select("fp").distinct()), "fp")
               .select("fp").distinct())
 
-    keys = _band_keys(num_hashes, bands)
-    nb = _band_buckets(new, id_col, text_col, n, num_hashes, bands, seed)
-    hb = (_band_buckets(history, id_col, text_col, n, num_hashes, bands,
-                        seed)
-          .select(*keys))
+    band = (MINHASH_N, MINHASH_HASHES, MINHASH_BANDS, MINHASH_SEED)
+    keys = _band_keys(MINHASH_HASHES, MINHASH_BANDS)
+    nb = _band_buckets(new, id_col, text_col, *band)
+    hb = _band_buckets(history, id_col, text_col, *band).select(*keys)
     hit_bb = (hb.join(F.broadcast(nb.select(*keys).distinct()), keys)
               .select(*keys).distinct())
     near_docs = (nb.join(F.broadcast(hit_bb), keys)
@@ -692,9 +701,14 @@ def _union_find_single_task(edges: DataFrame) -> DataFrame:
             .mapInPandas(uf, "doc_id long, cluster_id long"))
 
 
+#: pointer-jumping rounds connected_components runs before it fails
+CC_MAX_ROUNDS = 25
+#: connected_components runs its convergence probe every this many rounds
+CC_PROBE_EVERY = 2
+
+
 def connected_components(pairs: DataFrame, id0: str = "doc0",
-                         id1: str = "doc1", max_iter: int = 25,
-                         probe_every: int = 2,
+                         id1: str = "doc1",
                          small_graph_edges: int = 10_000_000) -> DataFrame:
     """Cluster near-duplicate pairs into connected components — the step
     that turns any pair generator above (MinHash, SimHash, Jaccard, winnow)
@@ -722,8 +736,9 @@ def connected_components(pairs: DataFrame, id0: str = "doc0",
     where cluster_id = min doc_id of its component. Docs with no pairs are
     absent (they are their own singleton cluster by definition).
 
-    ``probe_every``: run the driver-side has-any-change convergence count
-    only every N rounds. Each probe is a full Spark job over the label
+    :data:`CC_PROBE_EVERY`: the driver-side has-any-change convergence
+    count runs only every 2nd round, and the loop fails after
+    :data:`CC_MAX_ROUNDS`. Each probe is a full Spark job over the label
     table; on graphs needing ~14 rounds the probes were ~30% of wall time
     at sf0.1. Probing every 2nd round costs at most one extra (cheap,
     already-converged) round in exchange for half the probe jobs.
@@ -787,7 +802,7 @@ def connected_components(pairs: DataFrame, id0: str = "doc0",
               .select(F.col("src").alias("node"), "label")
               .localCheckpoint())
     edges.unpersist()
-    for it in range(max_iter):
+    for it in range(CC_MAX_ROUNDS):
         nbr = (
             edges_by_dst.join(
                 rp(labels.select(F.col("node").alias("dst"),
@@ -818,7 +833,8 @@ def connected_components(pairs: DataFrame, id0: str = "doc0",
                             F.coalesce("plabel", "label")).alias("label"))
             .localCheckpoint()
         )
-        if it % probe_every == probe_every - 1 or it == max_iter - 1:
+        if (it % CC_PROBE_EVERY == CC_PROBE_EVERY - 1
+                or it == CC_MAX_ROUNDS - 1):
             changed = (
                 jumped.join(labels.withColumnRenamed("label", "old"),
                             "node")
@@ -837,10 +853,11 @@ def connected_components(pairs: DataFrame, id0: str = "doc0",
         # group). Same loud-failure contract as kcore's cap check.
         if changed != 0:
             raise RuntimeError(
-                f"connected_components: not converged after {max_iter} "
-                f"pointer-jumping rounds (the last probe still saw "
-                f"label changes) — raise max_iter; diameter shrinks "
-                f"~2x per round, so log2(diameter) rounds suffice")
+                f"connected_components: not converged after "
+                f"{CC_MAX_ROUNDS} pointer-jumping rounds (the last probe "
+                f"still saw label changes); diameter shrinks ~2x per "
+                f"round, so CC_MAX_ROUNDS covers graphs of diameter up "
+                f"to ~2**{CC_MAX_ROUNDS}")
     out = labels.select(F.col("node").alias("doc_id"),
                         F.col("label").alias("cluster_id"))
     return schemas.conform(out, schemas.CLUSTER_MEMBER)
@@ -1502,7 +1519,7 @@ def label_propagation(pairs: DataFrame, seeds: DataFrame,
 
 def minhash_pair_weights(df: DataFrame, id_col: str, text_col: str,
                          n: int = 2, num_hashes: int = 12,
-                         bands: int = 4, seed: int = 42) -> DataFrame:
+                         bands: int = 4) -> DataFrame:
     """MinHash candidate pairs WITH an integer similarity weight ->
     (doc0, doc1, w): w = the number of agreeing signature components
     (0..num_hashes; >= num_hashes/bands by construction, since
@@ -1519,7 +1536,8 @@ def minhash_pair_weights(df: DataFrame, id_col: str, text_col: str,
     joins — it previously ran twice (once inside the banding pipeline,
     once for the weights).
     """
-    sig = minhash_signatures(df, id_col, text_col, n, num_hashes, seed)
+    sig = minhash_signatures(df, id_col, text_col, n, num_hashes,
+                             MINHASH_SEED)
     sig = sig.localCheckpoint()  # one signature pass feeds all consumers
     banded = _band_buckets_from_sig(sig, num_hashes, bands)
     keys = _band_keys(num_hashes, bands)
@@ -1542,12 +1560,11 @@ def minhash_pair_weights(df: DataFrame, id_col: str, text_col: str,
 
 
 def first_stage_attribution(df: DataFrame, stage_cols: list[str],
-                            out_col: str = "first_stage",
-                            kept_label: str = "kept") -> DataFrame:
+                            out_col: str = "first_stage") -> DataFrame:
     """Waterfall attribution combinator: given one boolean flag column
     per dedup stage (in LADDER ORDER — the order the pipeline runs
     them), label each row with the FIRST stage whose rule caught it,
-    or ``kept_label`` when none did — the standard pipeline-debugging
+    or ``"kept"`` when none did — the standard pipeline-debugging
     artifact ("how much does each stage remove, net of the stages
     before it"). Pure expression work; conservation (kept + removed ==
     corpus) holds by construction."""
@@ -1556,16 +1573,15 @@ def first_stage_attribution(df: DataFrame, stage_cols: list[str],
         cond = F.coalesce(F.col(c), F.lit(False))
         expr = F.when(cond, F.lit(c)) if expr is None else \
             expr.when(cond, F.lit(c))
-    expr = F.lit(kept_label) if expr is None else \
-        expr.otherwise(F.lit(kept_label))
+    expr = F.lit("kept") if expr is None else \
+        expr.otherwise(F.lit("kept"))
     return df.withColumn(out_col, expr)
 
 
 def minhash_eval_report(df: DataFrame, id_col: str, text_col: str,
                         n: int = 2, num_hashes: int = 12, bands: int = 4,
                         threshold: float = 0.5,
-                        sample_size: int = 100,
-                        seed: int = 42) -> DataFrame:
+                        sample_size: int = 100) -> DataFrame:
     """Measured MinHash-banding quality — recall/precision of the
     candidate generator against EXACT n-gram Jaccard ground truth on a
     bounded deterministic sample (the ``sample_size`` docs with the
@@ -1593,7 +1609,7 @@ def minhash_eval_report(df: DataFrame, id_col: str, text_col: str,
              .select("doc0", "doc1", F.lit(1).alias("in_truth")))
     cand = (minhash_lsh_pairs(sample, "doc_id", "text", n=n,
                               num_hashes=num_hashes, bands=bands,
-                              seed=seed)
+                              seed=MINHASH_SEED)
             .select("doc0", "doc1", F.lit(1).alias("in_cand")))
     j = truth.join(cand, ["doc0", "doc1"], "full")
     agg = j.agg(

@@ -96,7 +96,7 @@ def gram_matrix(df: DataFrame, vec_col: str = "embedding",
 
 
 def power_iteration(df: DataFrame, vec_col: str = "embedding",
-                    n_iter: int = 8, dim: int | None = None) -> DataFrame:
+                    n_iter: int = 8) -> DataFrame:
     """Dominant eigenvector of the (uncentered) Gram matrix X'X via power
     iteration: v <- normalize(G v), `n_iter` rounds from the all-ones
     start, against the one-pass distributed Gram. Deterministic: fixed
@@ -106,7 +106,7 @@ def power_iteration(df: DataFrame, vec_col: str = "embedding",
     Returns a D-row DataFrame (pos INT, loading DOUBLE rounded 6dp).
     """
     spark = df.sparkSession
-    g = gram_matrix(df, vec_col, dim)
+    g = gram_matrix(df, vec_col)
     d = g.shape[0]
     import numpy as np
 
@@ -124,8 +124,8 @@ def power_iteration(df: DataFrame, vec_col: str = "embedding",
 
 
 def power_iteration_report(df: DataFrame, vec_col: str = "embedding",
-                           n_iter: int = 8, dim: int | None = None,
-                           resid_tol: float = 0.2) -> DataFrame:
+                           n_iter: int = 8,
+                           dim: int | None = None) -> DataFrame:
     """Power-iteration CONTRACT row — the oracle-checkable face of
     :func:`power_iteration`. The 8 chained float reductions cannot be
     replayed bit-stably in SQL, but the mathematical invariants of a
@@ -137,7 +137,7 @@ def power_iteration_report(df: DataFrame, vec_col: str = "embedding",
     - ``lambda_ge_mean``: Rayleigh quotient v'Gv >= trace(G)/D — true of
       the dominant eigenpair of any PSD Gram, so a quantizer/matvec bug
       that converges to a sub-dominant direction may flip it;
-    - ``resid_bounded``: ||Gv - lambda v|| / lambda <= resid_tol. The
+    - ``resid_bounded``: ||Gv - lambda v|| / lambda <= 0.2. The
       synthetic embedding corpus is near-ISOTROPIC (eigengap ratio 0.984
       at sf0.01), so power iteration converges at ~0.984^k — residual
       measures 0.067 after 8 rounds and cannot be driven tight; the 0.2
@@ -163,7 +163,7 @@ def power_iteration_report(df: DataFrame, vec_col: str = "embedding",
         [("power_iter_top1", d, int(n_rows),
           bool(abs(float(np.linalg.norm(v)) - 1.0) < 1e-9),
           bool(lam >= trace / d - 1e-6 * abs(trace)),
-          bool(resid <= resid_tol))],
+          bool(resid <= 0.2))],
         "metric STRING, dim INT, n_rows BIGINT, unit_norm BOOLEAN, "
         "lambda_ge_mean BOOLEAN, resid_bounded BOOLEAN")
 

@@ -24,8 +24,6 @@ for the entire curation decision.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -34,20 +32,13 @@ from casf_spark.operators.sampling import assign_splits
 
 
 def curate_documents(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text",
-                     min_tokens: int = 20,
-                     max_stopword_ratio: float = 0.15,
-                     max_digit_ratio: float = 0.3,
-                     keep_langs: Sequence[str] = ("en",),
-                     splits: Sequence[tuple[str, float]] = (
-                         ("train", 0.98), ("val", 0.01), ("test", 0.01)),
-                     ) -> DataFrame:
+                     text_col: str = "text") -> DataFrame:
     """Filter → dedup → split in one declarative plan.
 
-    Keeps documents with >= min_tokens tokens, stopword/digit ratios under
-    the caps, and a predicted language in ``keep_langs``; among surviving
-    exact duplicates keeps the min-id copy; labels the keepers with a
-    deterministic split. Output: (doc_id, n_tokens, pred_lang, split).
+    Keeps English documents with >= 20 tokens, a stopword ratio <= 0.15
+    and a digit ratio <= 0.3; among surviving exact duplicates keeps the
+    min-id copy; labels the keepers with a deterministic 98/1/1
+    train/val/test split. Output: (doc_id, n_tokens, pred_lang, split).
 
     Each document is tokenized once and its features are evaluated once.
     The keep predicate is folded into the fingerprint aggregation: a
@@ -65,10 +56,10 @@ def curate_documents(docs: DataFrame, id_col: str = "doc_id",
         TX.lang_pred_expr().alias("pred_lang"),
         TX.fingerprint(text_col).alias("fp"),
     )
-    keep = ((F.col("n_tokens") >= min_tokens)
-            & (F.col("stopword_ratio") <= max_stopword_ratio)
-            & (F.col("digit_ratio") <= max_digit_ratio)
-            & F.col("pred_lang").isin(list(keep_langs)))
+    keep = ((F.col("n_tokens") >= 20)
+            & (F.col("stopword_ratio") <= 0.15)
+            & (F.col("digit_ratio") <= 0.3)
+            & F.col("pred_lang").isin(["en"]))
     # struct-argmin: the keeper row (min doc_id per fingerprint) comes out
     # of ONE aggregation — exact duplicates share identical text, hence
     # identical features, so carrying them through the min-struct is
@@ -83,5 +74,6 @@ def curate_documents(docs: DataFrame, id_col: str = "doc_id",
              .select(F.col("_w.doc_id").alias("doc_id"),
                      F.col("_w.n_tokens").alias("n_tokens"),
                      F.col("_w.pred_lang").alias("pred_lang")))
-    out = assign_splits(first, F.col("doc_id").cast("string"), list(splits))
+    out = assign_splits(first, F.col("doc_id").cast("string"),
+                        [("train", 0.98), ("val", 0.01), ("test", 0.01)])
     return out.select("doc_id", "n_tokens", "pred_lang", "split")

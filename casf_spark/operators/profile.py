@@ -257,14 +257,14 @@ def clustering_agreement(labels: DataFrame, a_col: str,
 
 
 #: integer inverse-CDF thresholds for a Poisson(1) draw from a 60-bit
-#: uniform hash: draw = #(thresholds the hash is >=), capped at len().
+#: uniform hash: draw = #(thresholds the hash is >=), capped at 6.
 #: Computed once in plain Python (exact ints) so both engines compare
 #: INTEGERS — no float CDF boundary can ever split them.
-def _poisson1_thresholds(cap: int = 6) -> list[int]:
+def _poisson1_thresholds() -> list[int]:
     import math
 
     acc, fact, thresholds = 0.0, 1.0, []
-    for k in range(cap):
+    for k in range(6):
         fact = fact * k if k else 1.0
         acc += math.exp(-1.0) / fact
         thresholds.append(min(int(acc * (1 << 60)), (1 << 60) - 1))
@@ -362,6 +362,10 @@ def cluster_silhouette(emb: DataFrame, id_col: str = "vec_id",
     the oracle twin's inner-join spelling, which drops the row
     entirely). A corpus smaller than ``n_clusters`` degrades the same
     way (fewer than 2 actual centroids), so it raises too.
+
+    A NULL vector raises (a NULL centroid on the driver, any other one
+    when its distances run): its NULL distance would sort first in the
+    argmin and pull every vector into the NULL centroid's cluster.
     """
     from casf_spark.functions import vectors as V
     from casf_spark.functions.hashing import det_centroids
@@ -383,12 +387,18 @@ def cluster_silhouette(emb: DataFrame, id_col: str = "vec_id",
             f"cluster_silhouette: corpus yields {len(cent_rows)} "
             f"centroid(s); need >= 2 (corpus smaller than n_clusters "
             f"degrades the same way as n_clusters=1)")
+    null_vec = (f"cluster_silhouette: NULL vector in {vec_col!r}; drop or "
+                f"impute it before clustering")
+    if any(r.cemb is None for r in cent_rows):
+        raise ValueError(null_vec)
     cent = emb.sparkSession.createDataFrame(cent_rows, cent.schema)
     corp = emb.select(F.col(id_col).alias("id"),
                       F.col(vec_col).alias("v"))
     diff = F.zip_with(V.as_double("v"), V.as_double("cemb"),
                       lambda a, b: (a - b) * (a - b))
-    d = F.round(F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x), 6)
+    d = F.when(F.col("v").isNull(), F.raise_error(F.lit(null_vec))) \
+        .otherwise(F.round(F.aggregate(diff, F.lit(0.0),
+                                       lambda acc, x: acc + x), 6))
     ad = corp.crossJoin(F.broadcast(cent)).select(
         "id", F.col("cid"), d.alias("d"))
     ranked = F.array_sort(F.collect_list(F.struct("d", "cid")))

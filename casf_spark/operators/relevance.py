@@ -40,7 +40,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from casf_spark.functions.text import TOKEN_SPLIT_PATTERN, tokenize
+from casf_spark.functions.text import tokenize, tokens
 from casf_spark.functions import vectors as V
 from casf_spark.operators import similarity as _sim
 
@@ -50,11 +50,16 @@ __all__ = ["tfidf_terms", "bm25_rank", "tfidf_rank", "knn_classify",
            "negative_sampling_table", "negative_draws", "skipgram_cooc",
            "keyness_terms", "heldout_interpolated_logprob"]
 
+#: BM25 term-saturation and length-normalization constants
+BM25_K1 = 1.2
+BM25_B = 0.75
+#: integer units per 1.0 of a reciprocal-rank term (nano-units)
+RRF_SCALE_U = 1e9
 
-def _doc_term_counts(docs: DataFrame, id_col: str, text_col: str,
-                     pattern: str = TOKEN_SPLIT_PATTERN) -> DataFrame:
+
+def _doc_term_counts(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc, term, tf) — one aggregation over exploded tokens."""
-    return (tokenize(docs, id_col, text_col, pattern)
+    return (tokenize(docs, id_col, text_col)
             .groupBy(F.col("doc").cast("long").alias("doc"),
                      F.col("word").alias("term"))
             .agg(F.count(F.lit(1)).cast("long").alias("tf")))
@@ -67,18 +72,16 @@ def _corpus_size(docs: DataFrame, id_col: str) -> DataFrame:
 
 
 def tfidf_terms(docs: DataFrame, id_col: str, text_col: str,
-                top_k: int = 5,
-                pattern: str = TOKEN_SPLIT_PATTERN,
-                round_to: int = 6) -> DataFrame:
+                top_k: int = 5) -> DataFrame:
     """Top-``top_k`` TF-IDF keywords per document ->
     (doc, term, tf, tfidf, rank).
 
     ``idf = ln((N + 1) / (df + 1)) + 1`` (the smoothed variant — never
     zero, never divides by zero), ``tfidf = tf * idf`` rounded to
-    ``round_to`` so rank order is engine-stable. Rank ties break on term
+    6 places so rank order is engine-stable. Rank ties break on term
     ascending.
     """
-    tf = _doc_term_counts(docs, id_col, text_col, pattern)
+    tf = _doc_term_counts(docs, id_col, text_col)
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = _corpus_size(docs, id_col)
     scored = (tf.join(dfreq, "term")
@@ -88,7 +91,7 @@ def tfidf_terms(docs: DataFrame, id_col: str, text_col: str,
                   F.round(
                       F.col("tf")
                       * (F.log((F.col("n_docs") + 1) / (F.col("df") + 1)) + 1),
-                      round_to).alias("tfidf")))
+                      6).alias("tfidf")))
     # grouped partial top-k: per-doc in-memory sort of its term list, no
     # global window. struct sort is lexicographic -> (-tfidf, term) gives
     # (tfidf desc, term asc).
@@ -110,21 +113,19 @@ def tfidf_terms(docs: DataFrame, id_col: str, text_col: str,
 
 def bm25_rank(docs: DataFrame, query_terms: Sequence[str],
               id_col: str, text_col: str,
-              k1: float = 1.2, b: float = 0.75, top_n: int = 20,
-              pattern: str = TOKEN_SPLIT_PATTERN,
-              round_to: int = 6) -> DataFrame:
+              top_n: int = 20) -> DataFrame:
     """BM25-ranked documents for a bag-of-words query ->
     (doc, score, n_hit_terms), top ``top_n`` by (score desc, doc asc).
 
     Robertson/Sparck-Jones idf: ``ln(1 + (N - df + 0.5) / (df + 0.5))``;
     per-term contribution ``idf * tf * (k1+1) / (tf + k1 * (1 - b +
-    b * dl / avgdl))``. Doc length = token occurrences under the same
-    tokenizer.
+    b * dl / avgdl))`` with :data:`BM25_K1` and :data:`BM25_B`. Doc length
+    = token occurrences under the same tokenizer.
     """
     terms = sorted({t.lower() for t in query_terms})
     if not terms:
         raise ValueError("query_terms must be non-empty")
-    toks = tokenize(docs, id_col, text_col, pattern) \
+    toks = tokenize(docs, id_col, text_col) \
         .select(F.col("doc").cast("long").alias("doc"), "word")
     dl = toks.groupBy("doc").agg(F.count(F.lit(1)).alias("dl"))
     stats = (dl.crossJoin(F.broadcast(_corpus_size(docs, id_col)))
@@ -144,11 +145,12 @@ def bm25_rank(docs: DataFrame, query_terms: Sequence[str],
                   "doc", "term",
                   (F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5)
                          / (F.col("df") + 0.5))
-                   * F.col("tf") * (k1 + 1.0)
-                   / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl")
-                                          / F.col("avgdl")))).alias("c")))
+                   * F.col("tf") * (BM25_K1 + 1.0)
+                   / (F.col("tf") + BM25_K1 * (1.0 - BM25_B + BM25_B
+                                               * F.col("dl")
+                                               / F.col("avgdl")))).alias("c")))
     ranked = (scored.groupBy("doc")
-              .agg(F.round(F.sum("c"), round_to).alias("score"),
+              .agg(F.round(F.sum("c"), 6).alias("score"),
                    F.count(F.lit(1)).cast("long").alias("n_hit_terms")))
     # sort+limit compiles to TakeOrderedAndProject (partial per-partition
     # top-n) — not a global sort
@@ -156,9 +158,7 @@ def bm25_rank(docs: DataFrame, query_terms: Sequence[str],
 
 
 def tfidf_rank(docs: DataFrame, query_terms: Sequence[str],
-               id_col: str, text_col: str, top_n: int = 20,
-               pattern: str = TOKEN_SPLIT_PATTERN,
-               round_to: int = 6) -> DataFrame:
+               id_col: str, text_col: str, top_n: int = 20) -> DataFrame:
     """TF-IDF-ranked documents for a bag-of-words query ->
     (doc, score, n_hit_terms), top ``top_n`` by (score desc, doc asc) —
     the length-unnormalized lexical baseline next to ``bm25_rank`` (and
@@ -166,7 +166,7 @@ def tfidf_rank(docs: DataFrame, query_terms: Sequence[str],
 
     ``score(d) = sum over query terms of tf(t, d) * idf(t)`` with the
     same smoothed ``idf = ln((N + 1) / (df + 1)) + 1`` as
-    ``tfidf_terms``, rounded to ``round_to`` so rank order is
+    ``tfidf_terms``, rounded to 6 places so rank order is
     engine-stable. df counts documents containing the term among the
     HIT set (same convention as ``bm25_rank``'s query-side df).
 
@@ -178,7 +178,7 @@ def tfidf_rank(docs: DataFrame, query_terms: Sequence[str],
     terms = sorted({t.lower() for t in query_terms})
     if not terms:
         raise ValueError("query_terms must be non-empty")
-    toks = tokenize(docs, id_col, text_col, pattern) \
+    toks = tokenize(docs, id_col, text_col) \
         .select(F.col("doc").cast("long").alias("doc"), "word")
     hits = (toks.where(F.col("word").isin(terms))
             .groupBy("doc", F.col("word").alias("term"))
@@ -194,15 +194,13 @@ def tfidf_rank(docs: DataFrame, query_terms: Sequence[str],
                    * (F.log((F.col("n_docs") + 1) / (F.col("df") + 1))
                       + 1)).alias("c")))
     ranked = (scored.groupBy("doc")
-              .agg(F.round(F.sum("c"), round_to).alias("score"),
+              .agg(F.round(F.sum("c"), 6).alias("score"),
                    F.count(F.lit(1)).cast("long").alias("n_hit_terms")))
     return ranked.orderBy(F.desc("score"), F.asc("doc")).limit(top_n)
 
 
 def collocation_pmi(docs: DataFrame, id_col: str, text_col: str,
-                    min_count: int = 5, top_n: int = 20,
-                    pattern: str = TOKEN_SPLIT_PATTERN,
-                    round_to: int = 6) -> DataFrame:
+                    min_count: int = 5, top_n: int = 20) -> DataFrame:
     """Top-``top_n`` adjacent-bigram collocations by pointwise mutual
     information -> (w1, w2, c_ab, pmi) — the word2phrase / phrase-mining
     step that runs before tokenizer training (Mikolov et al. 2013 learn
@@ -222,9 +220,7 @@ def collocation_pmi(docs: DataFrame, id_col: str, text_col: str,
     (vocabulary-sized); N1/N2 are 1-row aggregates broadcast back; the
     final cut is TakeOrderedAndProject.
     """
-    from casf_spark.functions.text import tokens as _tokens
-
-    a = _tokens(F.col(text_col), pattern)
+    a = tokens(F.col(text_col))
     pairs = (docs
              .select(F.explode(F.arrays_zip(
                  F.slice(a, 1, F.greatest(F.size(a) - 1, F.lit(0)))
@@ -234,7 +230,7 @@ def collocation_pmi(docs: DataFrame, id_col: str, text_col: str,
              .select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2")))
     c_ab = (pairs.groupBy("w1", "w2")
             .agg(F.count(F.lit(1)).alias("c_ab")))
-    toks = tokenize(docs, id_col, text_col, pattern)
+    toks = tokenize(docs, id_col, text_col)
     c_w = toks.groupBy("word").agg(F.count(F.lit(1)).alias("c_w"))
     n1 = c_w.agg(F.sum("c_w").cast("double").alias("n1"))
     n2 = c_ab.agg(F.sum("c_ab").cast("double").alias("n2"))
@@ -250,15 +246,13 @@ def collocation_pmi(docs: DataFrame, id_col: str, text_col: str,
                   F.round(F.log((F.col("c_ab") / F.col("n2"))
                                 / ((F.col("c_a") / F.col("n1"))
                                    * (F.col("c_b") / F.col("n1")))),
-                          round_to).alias("pmi")))
+                          6).alias("pmi")))
     return scored.orderBy(F.desc("pmi"), F.asc("w1"), F.asc("w2")) \
         .limit(top_n)
 
 
 def vocab_coverage(docs: DataFrame, id_col: str, text_col: str,
-                   top_n: int = 20,
-                   pattern: str = TOKEN_SPLIT_PATTERN,
-                   round_to: int = 6) -> DataFrame:
+                   top_n: int = 20) -> DataFrame:
     """Top-``top_n`` vocabulary with cumulative corpus coverage ->
     (rank, term, cnt, cum_share): the tokenizer-prep report ("how much of
     the corpus do the first N vocabulary entries explain").
@@ -269,7 +263,7 @@ def vocab_coverage(docs: DataFrame, id_col: str, text_col: str,
     runs over the ≤ ``top_n`` surviving rows only. Total token count is a
     1-row aggregate broadcast back.
     """
-    toks = tokenize(docs, id_col, text_col, pattern)
+    toks = tokenize(docs, id_col, text_col)
     tc = toks.groupBy(F.col("word").alias("term")) \
         .agg(F.count(F.lit(1)).alias("cnt"))
     total = tc.agg(F.sum("cnt").alias("tot"))
@@ -281,13 +275,11 @@ def vocab_coverage(docs: DataFrame, id_col: str, text_col: str,
                 w.rowsBetween(Window.unboundedPreceding, 0)))
             .crossJoin(F.broadcast(total))
             .select("rank", "term", "cnt",
-                    F.round(F.col("cum") / F.col("tot"), round_to)
+                    F.round(F.col("cum") / F.col("tot"), 6)
                     .alias("cum_share")))
 
 
-def unigram_logprob(docs: DataFrame, id_col: str, text_col: str,
-                    pattern: str = TOKEN_SPLIT_PATTERN,
-                    round_to: int = 6) -> DataFrame:
+def unigram_logprob(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document average negative unigram log-likelihood under the
     corpus's own unigram distribution -> (doc, n_tokens, avg_neg_logprob).
 
@@ -302,7 +294,7 @@ def unigram_logprob(docs: DataFrame, id_col: str, text_col: str,
     without the broadcast would Zipf-skew the shuffle (the most common
     word's occurrences all land on one reducer).
     """
-    toks = tokenize(docs, id_col, text_col, pattern) \
+    toks = tokenize(docs, id_col, text_col) \
         .select(F.col("doc").cast("long").alias("doc"), "word")
     tc = toks.groupBy("word").agg(F.count(F.lit(1)).alias("wc"))
     total = tc.agg(F.sum("wc").alias("tot"))
@@ -312,12 +304,10 @@ def unigram_logprob(docs: DataFrame, id_col: str, text_col: str,
             .groupBy("doc")
             .agg(F.count(F.lit(1)).cast("long").alias("n_tokens"),
                  F.round(-F.avg(F.log(F.col("wc") / F.col("tot"))),
-                         round_to).alias("avg_neg_logprob")))
+                         6).alias("avg_neg_logprob")))
 
 
-def bigram_logprob(docs: DataFrame, id_col: str, text_col: str,
-                   pattern: str = TOKEN_SPLIT_PATTERN,
-                   round_to: int = 6) -> DataFrame:
+def bigram_logprob(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document average negative BIGRAM log-likelihood under the
     corpus's own add-one-smoothed Markov model ->
     (doc, n_bigrams, avg_neg_logprob).
@@ -334,7 +324,7 @@ def bigram_logprob(docs: DataFrame, id_col: str, text_col: str,
     bigrams like "of the"); AQE skew-join or ``operators.skew.salted_join``
     is the mitigation, as elsewhere.
     """
-    toks = tokenize(docs, id_col, text_col, pattern) \
+    toks = tokenize(docs, id_col, text_col) \
         .select(F.col("doc").cast("long").alias("doc"), "pos", "word")
     nxt = toks.select("doc", (F.col("pos") + 1).alias("pos"),
                       F.col("word").alias("prev"))
@@ -353,14 +343,13 @@ def bigram_logprob(docs: DataFrame, id_col: str, text_col: str,
             .agg(F.count(F.lit(1)).cast("long").alias("n_bigrams"),
                  F.round(-F.avg(F.log((F.col("bc") + 1)
                                       / (F.col("uc") + F.col("v")))),
-                         round_to).alias("avg_neg_logprob")))
+                         6).alias("avg_neg_logprob")))
 
 
 def label_centroid_outliers(emb: DataFrame, k: int = 10,
                             id_col: str = "vec_id",
                             vec_col: str = "embedding",
-                            label_col: str = "label",
-                            round_to: int = 6) -> DataFrame:
+                            label_col: str = "label") -> DataFrame:
     """Per label, the ``k`` vectors FURTHEST from their own label's mean
     vector -> (label, vec_id, cos_centroid, rank) — the mislabeled-data /
     outlier sweep over an embedded, labeled corpus.
@@ -383,7 +372,7 @@ def label_centroid_outliers(emb: DataFrame, k: int = 10,
                          V.as_double(vec_col).alias("v"))
               .join(F.broadcast(cent), "label")
               .select("label", "vec_id",
-                      F.round(V.cosine(F.col("v"), F.col("cvec")), round_to)
+                      F.round(V.cosine(F.col("v"), F.col("cvec")), 6)
                       .alias("cos_centroid")))
     w = Window.partitionBy("label").orderBy(F.asc("cos_centroid"),
                                             F.asc("vec_id"))
@@ -477,7 +466,6 @@ def hard_negative_mine(corpus: DataFrame, queries: DataFrame,
 
 def rrf_fuse(legs: Sequence[DataFrame], id_col: str = "item_id",
              rank_col: str = "rank", k: int = 60, top_n: int = 20,
-             scale_u: int = 1_000_000_000,
              weights: Sequence[float] | None = None) -> DataFrame:
     """Reciprocal-rank fusion (Cormack, Clarke & Buettcher 2009) over any
     number of ranked retrieval legs -> (item_id, n_legs, rrf_score):
@@ -490,7 +478,7 @@ def rrf_fuse(legs: Sequence[DataFrame], id_col: str = "item_id",
     modality is known to be stronger for the workload.
 
     Engine-stable arithmetic: each leg's reciprocal is folded to integer
-    NANO-units (round-half-up of ``scale_u / (k + rank)``) before the
+    NANO-units (round-half-up of ``1e9 / (k + rank)``) before the
     sum — integer sums are order-independent, so a 3+-leg fusion can
     never drift between engines the way a float sum of rounded terms can
     (the dedup_pagerank round-7 lesson). The emitted score divides the
@@ -513,7 +501,7 @@ def rrf_fuse(legs: Sequence[DataFrame], id_col: str = "item_id",
         # order-independent too
         t = leg.select(
             F.col(id_col).cast("long").alias("item_id"),
-            F.floor(F.lit(float(w)) * F.lit(float(scale_u))
+            F.floor(F.lit(float(w)) * F.lit(RRF_SCALE_U)
                     / (F.lit(k) + F.col(rank_col))
                     + F.lit(0.5)).cast("long").alias("term_u"))
         u = t if u is None else u.unionByName(t)
@@ -522,21 +510,20 @@ def rrf_fuse(legs: Sequence[DataFrame], id_col: str = "item_id",
                   F.count(F.lit(1)).cast("long").alias("n_legs")))
     out = fused.select(
         "item_id", "n_legs",
-        F.round(F.col("score_u") / F.lit(float(scale_u)), 6)
+        F.round(F.col("score_u") / F.lit(RRF_SCALE_U), 6)
         .alias("rrf_score"))
     return out.orderBy(F.desc("rrf_score"), F.asc("item_id")).limit(top_n)
 
 
 def negative_sampling_table(docs: DataFrame, id_col: str, text_col: str,
-                            vocab_size: int = 128,
-                            power: float = 0.75) -> DataFrame:
+                            vocab_size: int = 128) -> DataFrame:
     """word2vec negative-sampling distribution (Mikolov et al. 2013):
-    the top ``vocab_size`` words by count, weighted ``count^power``
-    (0.75 flattens Zipf so rare words get sampled at all), laid out as
+    the top ``vocab_size`` words by count, weighted ``count^0.75``
+    (the power flattens Zipf so rare words get sampled at all), laid out as
     INTEGER micro-unit cumulative ranges ``[lo_u, hi_u)`` — the
     artifact a skip-gram trainer draws negatives from.
 
-    Weights fold to integers immediately (floor(cnt^power * 1e6 + .5))
+    Weights fold to integers immediately (floor(cnt^0.75 * 1e6 + .5))
     so the cumulative layout and every downstream draw are engine-exact
     BIGINT arithmetic; the cumulative window runs over the
     ``vocab_size``-bounded table only (the cap is the word2vec norm —
@@ -550,7 +537,7 @@ def negative_sampling_table(docs: DataFrame, id_col: str, text_col: str,
     top = (toks.groupBy("word")
            .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
            .orderBy(F.desc("cnt"), F.asc("word")).limit(vocab_size))
-    w_u = F.floor(F.pow(F.col("cnt").cast("double"), F.lit(power))
+    w_u = F.floor(F.pow(F.col("cnt").cast("double"), F.lit(0.75))
                   * F.lit(1_000_000.0) + F.lit(0.5)).cast("long")
     win = (Window.orderBy(F.desc("cnt"), F.asc("word"))
            .rowsBetween(Window.unboundedPreceding, 0))
@@ -627,9 +614,7 @@ def skipgram_cooc(docs: DataFrame, id_col: str, text_col: str,
     """
     if window < 1:
         raise ValueError("skipgram_cooc: window must be >= 1")
-    from casf_spark.functions.text import tokens as _tokens
-
-    toks = F.coalesce(_tokens(F.coalesce(F.col(text_col), F.lit(""))),
+    toks = F.coalesce(tokens(F.coalesce(F.col(text_col), F.lit(""))),
                       F.array())
     base = docs.select(toks.alias("__sg_toks"))
     n = F.size("__sg_toks")
@@ -790,7 +775,6 @@ def _lm_score_joins(pairs: DataFrame, legs, n_salt: int) -> DataFrame:
 def heldout_interpolated_logprob(train: DataFrame, score: DataFrame,
                                  id_col: str, text_col: str,
                                  lam: float = 0.75,
-                                 pattern: str = TOKEN_SPLIT_PATTERN,
                                  n_salt: int = 0) -> DataFrame:
     """Held-out Jelinek–Mercer interpolated LM scoring — the closest
     exact-arithmetic stand-in for the CCNet/KenLM perplexity filter
@@ -827,7 +811,7 @@ def heldout_interpolated_logprob(train: DataFrame, score: DataFrame,
     # leg only keeps every token finite while it has weight
     if not 0.0 <= lam < 1.0:
         raise ValueError(f"lam must be in [0, 1), got {lam}")
-    tt = tokenize(train, id_col, text_col, pattern) \
+    tt = tokenize(train, id_col, text_col) \
         .select(F.col("doc").cast("long").alias("doc"), "pos", "word")
     nxt = tt.select("doc", (F.col("pos") + 1).alias("pos"),
                     F.col("word").alias("prev"))
@@ -842,7 +826,7 @@ def heldout_interpolated_logprob(train: DataFrame, score: DataFrame,
     tot = tt.agg(F.count(F.lit(1)).cast("double").alias("n"),
                  F.countDistinct("word").cast("double").alias("v"))
 
-    st = tokenize(score, id_col, text_col, pattern) \
+    st = tokenize(score, id_col, text_col) \
         .select(F.col("doc").cast("long").alias("doc"), "pos", "word")
     sprev = st.select("doc", (F.col("pos") + 1).alias("pos"),
                       F.col("word").alias("prev"))

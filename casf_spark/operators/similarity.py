@@ -121,11 +121,13 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                .where(F.col("rank") <= k), schemas.ANN_TOPK)
 
 
+#: most vectors in one blocked_gemm_pairs block
+GEMM_MAX_BLOCK_ROWS = 32768
+
+
 def blocked_gemm_pairs(df: DataFrame, id_col: str = "vec_id",
                        vec_col: str = "embedding",
-                       threshold: float = 0.95,
-                       num_blocks: int | None = None,
-                       max_block_rows: int = 32768) -> DataFrame:
+                       threshold: float = 0.95) -> DataFrame:
     """All-pairs cosine >= threshold via DISTRIBUTED block-pair GEMM —
     exact, with no driver-side collect at any corpus size.
 
@@ -133,7 +135,7 @@ def blocked_gemm_pairs(df: DataFrame, id_col: str = "vec_id",
     times, tagged with the block-pair group it participates in (upper
     triangle: B(B+1)/2 groups), and each group's two sub-blocks meet in one
     applyInPandas task that runs the chunked numpy matmul. Per-task memory
-    is bounded by 2*max_block_rows vectors + one chunk of the similarity
+    is bounded by 2*GEMM_MAX_BLOCK_ROWS vectors + one chunk of the similarity
     matrix; shuffle volume is O(n*B) rows. B is sized from a measured count
     (the same measure-then-pick strategy as dedup.connected_components), so
     small corpora get a handful of parallel tasks and a 100 TB corpus gets
@@ -143,12 +145,10 @@ def blocked_gemm_pairs(df: DataFrame, id_col: str = "vec_id",
     """
     import numpy as np
 
-    if num_blocks is None:
-        n = df.count()
-        # at least 4 blocks (10 parallel block-pairs) once there's any real
-        # data; beyond that, scale so a block never exceeds max_block_rows
-        num_blocks = max(4, -(-n // max_block_rows))
-    B = num_blocks
+    n = df.count()
+    # at least 4 blocks (10 parallel block-pairs) once there's any real
+    # data; beyond that, scale so a block never exceeds GEMM_MAX_BLOCK_ROWS
+    B = max(4, -(-n // GEMM_MAX_BLOCK_ROWS))
 
     base = df.select(
         F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v"),
@@ -402,9 +402,9 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
 
 
 def lsh_topk(df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
-             k: int = 10, num_planes: int = 8, seed: int = 42) -> DataFrame:
+             k: int = 10, num_planes: int = 8) -> DataFrame:
     """Approximate top-k neighbors per vector from LSH candidates."""
-    cand = lsh_candidates(df, id_col, vec_col, num_planes, seed)
+    cand = lsh_candidates(df, id_col, vec_col, num_planes)
     sym = cand.select(F.col("id0").alias("id"), F.col("id1").alias("neighbor_id"),
                       "cos_sim").unionByName(
         cand.select(F.col("id1").alias("id"), F.col("id0").alias("neighbor_id"),
@@ -432,14 +432,22 @@ def ivf_topk_det(corpus: DataFrame, queries: DataFrame, k: int = 10,
     reproducible in the DuckDB oracle (SQL-expressible argmin) — this is
     the oracle-checked twin of :func:`ivf_topk`. Centroids broadcast (a
     ``n_centroids``-row cross join); corpus shuffles once on bucket id.
+
+    A NULL corpus or query vector (centroids included) raises when its
+    distances run: its NULL distance would order first in the argmin
+    and pull every vector into the NULL centroid's bucket.
     """
     cent = det_centroids(corpus, id_col, vec_col, n_centroids)
+    null_vec = F.raise_error(F.lit(
+        f"ivf_topk_det: NULL vector in {vec_col!r}; drop or impute it "
+        f"before indexing"))
 
     def sq_dist(a, b):
-        return F.aggregate(
-            F.zip_with(V.as_double(a), V.as_double(b),
-                       lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, x: acc + x)
+        return F.when(F.col(a).isNull() | F.col(b).isNull(), null_vec) \
+            .otherwise(F.aggregate(
+                F.zip_with(V.as_double(a), V.as_double(b),
+                           lambda x, y: (x - y) * (x - y)),
+                F.lit(0.0), lambda acc, x: acc + x))
 
     corp = corpus.select(F.col(id_col).cast("long").alias("neighbor_id"),
                          F.col(vec_col).alias("cv"))

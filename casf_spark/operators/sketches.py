@@ -135,6 +135,9 @@ BLOOM_WORD_BITS = 63
 #: loudly instead of silently building an un-broadcastable filter.
 MAX_BLOOM_BITS = 1 << 27
 
+#: seed of the Bloom filter's position hashes (build and probe agree)
+BLOOM_SEED = 7
+
 
 def _check_bloom_args(m_bits: int, k: int) -> None:
     if not 0 < m_bits <= MAX_BLOOM_BITS:
@@ -144,8 +147,7 @@ def _check_bloom_args(m_bits: int, k: int) -> None:
         raise ValueError(f"k must be in (0, 16], got {k}")
 
 
-def bloom_build(df: DataFrame, key_col, m_bits: int, k: int,
-                seed: int = 7) -> DataFrame:
+def bloom_build(df: DataFrame, key_col, m_bits: int, k: int) -> DataFrame:
     """Distributed Bloom-filter construction over a key column ->
     ``(word_idx long, bits long)``: the non-zero words of an ``m_bits``
     bitmap with ``k`` set positions per key.
@@ -167,7 +169,7 @@ def bloom_build(df: DataFrame, key_col, m_bits: int, k: int,
     _check_bloom_args(m_bits, k)
     h = hashing.md5_long(key_col)
     pos = F.explode(F.array(*hashing.position_exprs(h, k, m_bits,
-                                                    seed=seed)))
+                                                    seed=BLOOM_SEED)))
     # a NULL key hashes to NULL positions — drop them (an absent key
     # can never probe true, and NULL word rows would be dead weight)
     cells = df.select(pos.alias("__bloom_pos")) \
@@ -184,7 +186,7 @@ def bloom_build(df: DataFrame, key_col, m_bits: int, k: int,
 
 
 def bloom_probe(df: DataFrame, key_col, filter_words: DataFrame,
-                m_bits: int, k: int, seed: int = 7,
+                m_bits: int, k: int,
                 out_col: str = "maybe_seen") -> DataFrame:
     """Probe a built Bloom filter: adds boolean ``out_col`` — true iff
     ALL ``k`` positions of the key are set (i.e. "possibly in the
@@ -208,7 +210,7 @@ def bloom_probe(df: DataFrame, key_col, filter_words: DataFrame,
     probe = df
     hit_cols = []
     for i, pos in enumerate(hashing.position_exprs(h, k, m_bits,
-                                                   seed=seed)):
+                                                   seed=BLOOM_SEED)):
         probe = (probe
                  .withColumn(f"__bloom_w{i}",
                              (pos / F.lit(BLOOM_WORD_BITS)).cast("long"))
@@ -238,6 +240,9 @@ def bloom_probe(df: DataFrame, key_col, filter_words: DataFrame,
 #: depth x width cap keeping the sketch a broadcastable side table.
 MAX_CMS_CELLS = 1 << 22
 
+#: seed of the Count-Min row hashes (build and estimate agree)
+CMS_SEED = 11
+
 
 def _check_cms_args(width: int, depth: int) -> None:
     if width <= 0 or depth <= 0 or width * depth > MAX_CMS_CELLS:
@@ -245,8 +250,8 @@ def _check_cms_args(width: int, depth: int) -> None:
                          f"{MAX_CMS_CELLS}, got {width}x{depth}")
 
 
-def cms_build(items: DataFrame, item_col: str, width: int, depth: int,
-              seed: int = 11) -> DataFrame:
+def cms_build(items: DataFrame, item_col: str, width: int,
+              depth: int) -> DataFrame:
     """Count-Min sketch construction (Cormode & Muthukrishnan 2005) ->
     the non-zero cells ``(row_idx int, col_idx long, cnt long)`` of a
     ``depth x width`` counter table.
@@ -265,7 +270,7 @@ def cms_build(items: DataFrame, item_col: str, width: int, depth: int,
     """
     _check_cms_args(width, depth)
     h = hashing.md5_long(F.col(item_col))
-    cols = hashing.position_exprs(h, depth, width, seed=seed)
+    cols = hashing.position_exprs(h, depth, width, seed=CMS_SEED)
     cells = items.select(F.explode(F.array(*[
         F.struct(F.lit(r).cast("int").alias("row_idx"),
                  c.alias("col_idx"))
@@ -277,7 +282,7 @@ def cms_build(items: DataFrame, item_col: str, width: int, depth: int,
 
 
 def cms_estimate(queries: DataFrame, item_col: str, cms: DataFrame,
-                 width: int, depth: int, seed: int = 11,
+                 width: int, depth: int,
                  out_col: str = "cms_est") -> DataFrame:
     """Point-query a built sketch: adds ``out_col`` = min over rows of
     the queried item's cell — the classic CM estimate, >= the true
@@ -310,7 +315,7 @@ def cms_estimate(queries: DataFrame, item_col: str, cms: DataFrame,
     probe = queries
     cnt_cols = []
     for r, pos in enumerate(hashing.position_exprs(h, depth, width,
-                                                   seed=seed)):
+                                                   seed=CMS_SEED)):
         probe = probe.withColumn(f"__cms_c{r}", pos)
         side = F.broadcast(
             cms.where(F.col("row_idx") == r)

@@ -22,12 +22,11 @@ __all__ = ["near_dedup_replay_batches", "bloom_dedup_replay_batches",
 
 def near_dedup_replay_batches(batches: list[tuple[int, DataFrame]],
                               id_col: str = "doc_id",
-                              text_col: str = "text",
-                              n: int = 2, num_hashes: int = 12,
-                              bands: int = 4, seed: int = 42) -> DataFrame:
+                              text_col: str = "text") -> DataFrame:
     """Near-duplicate dedup of ordered ``(batch_id, docs_df)`` batches
-    against a MinHash band-bucket index of all earlier batches; returns
-    the end state (doc, batch_id, fp) of every surviving document.
+    against a MinHash band-bucket index of all earlier batches (the
+    ``operators.dedup.MINHASH_*`` banding); returns the end state
+    (doc, batch_id, fp) of every surviving document.
 
     Per batch:
       * within-batch exact dedup: min (doc, text) struct per content
@@ -40,9 +39,9 @@ def near_dedup_replay_batches(batches: list[tuple[int, DataFrame]],
         uses);
       * survivors' buckets (and only theirs) extend the index.
     """
-    from casf_spark.operators.dedup import _band_buckets, _band_keys
+    from casf_spark.operators import dedup as D
 
-    keys = _band_keys(num_hashes, bands)
+    keys = D._band_keys(D.MINHASH_HASHES, D.MINHASH_BANDS)
     index: DataFrame | None = None
     outs: list[DataFrame] = []
     for batch_id, batch_df in sorted(batches, key=lambda p: p[0]):
@@ -54,8 +53,9 @@ def near_dedup_replay_batches(batches: list[tuple[int, DataFrame]],
                 .agg(F.min(F.struct("doc", "text")).alias("_w"))
                 .select("fp", F.col("_w.doc").alias("doc"),
                         F.col("_w.text").alias("text")))
-        nb = _band_buckets(keep.select("doc", "text"), "doc", "text",
-                           n, num_hashes, bands, seed).localCheckpoint()
+        nb = D._band_buckets(keep.select("doc", "text"), "doc", "text",
+                             D.MINHASH_N, D.MINHASH_HASHES, D.MINHASH_BANDS,
+                             D.MINHASH_SEED).localCheckpoint()
         drop = None
         if index is not None:
             hit = (index.join(
@@ -130,8 +130,7 @@ def bloom_dedup_replay_batches(batches: list[tuple[int, DataFrame]],
 
 def cms_replay_batches(batches: list, queries_df: DataFrame,
                        item_col: str = "item", text_col: str = "text",
-                       width: int = 256, depth: int = 4,
-                       seed: int = 11) -> DataFrame:
+                       width: int = 256, depth: int = 4) -> DataFrame:
     """Count-Min over ordered batches: per-batch ``depth x width``
     sketches merged by cell-wise sum, then point-queried. Because counter
     sums commute, the merged sketch is BIT-IDENTICAL to one built over
@@ -145,12 +144,12 @@ def cms_replay_batches(batches: list, queries_df: DataFrame,
         toks = df.select(
             F.explode(TX.tokens(F.coalesce(F.col(text_col), F.lit(""))))
             .alias("item"))
-        c = cms_build(toks, "item", width=width, depth=depth, seed=seed)
+        c = cms_build(toks, "item", width=width, depth=depth)
         acc = c if acc is None else acc.unionByName(c)
     if acc is None:
         raise ValueError("cms_replay_batches: no batches")
     merged = (acc.groupBy("row_idx", "col_idx")
               .agg(F.sum("cnt").cast("long").alias("cnt")))
     return cms_estimate(queries_df, item_col, merged,
-                        width=width, depth=depth, seed=seed)
+                        width=width, depth=depth)
 

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from casf_spark.operators import similarity as SIM
@@ -71,6 +72,18 @@ def test_ivf_det_more_probes_no_worse(spark, sf_dir):
     full = {r.query_id: r.cos_sim
             for r in SIM.ivf_topk_det(emb, q, k=1, n_probes=8).collect()}
     assert all(full[k] >= two[k] for k in two)
+
+
+@pytest.mark.parametrize("null_id", [1, 0])
+def test_ivf_det_refuses_null_vector(spark, null_id):
+    """Rows 0..4 in md5 order 4, 1, 2, 0, 3; at k=2 the centroids are 4
+    and 1. A NULL vector raises whether it is a centroid (1) or not (0),
+    instead of its NULL distance ordering first in the argmin."""
+    df = spark.createDataFrame(
+        [(i, None if i == null_id else [float(i), 1.0]) for i in range(5)],
+        "vec_id long, embedding array<double>")
+    with pytest.raises(Exception, match="NULL vector in 'embedding'"):
+        SIM.ivf_topk_det(df, df, k=2, n_centroids=2, n_probes=1).collect()
 
 
 def test_ivf_pq_recall_and_determinism(spark, sf_dir):

@@ -31,11 +31,6 @@ def test_extract_features_deterministic(spark, payloads):
     assert a[3][2] is None                    # empty payload -> null first byte
 
 
-def test_real_decoder_gate(spark, payloads):
-    with pytest.raises(NotImplementedError):
-        MM.extract_features(payloads, real_decoder=True)
-
-
 def test_rgb_decode_hand_computed(spark):
     """A real 2x1 rgb24 raster with known pixels decodes to exact channel
     means — this is a working decoder, not the stub path."""

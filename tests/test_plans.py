@@ -312,14 +312,32 @@ def test_runtime_bloom_filter_injection(spark, sf_dir):
             conf.set(k, v)
 
 
+def _call_args(plan: str, start: int) -> list[str]:
+    """The arguments of the call whose ``(`` ends just before ``start``,
+    split on the commas at its own parenthesis depth."""
+    args, depth = [], 0
+    for i in range(start, len(plan)):
+        if plan[i] == "(":
+            depth += 1
+        elif plan[i] == ")" and depth:
+            depth -= 1
+        elif plan[i] in ",)" and not depth:
+            args.append(plan[start:i].strip())
+            if plan[i] == ")":
+                return args
+            start = i + 1
+    raise AssertionError(f"unclosed call in {plan}")
+
+
 def _split_patterns(df) -> Counter:
     """Regex pattern -> number of calls in the physical plan that cut a
     string into an array on it (``split`` or ``regexp_extract_all``)."""
     plan = explain_str(df, "simple")
-    pats = re.findall(
-        r"(?:split|regexp_extract_all)\(.*?, (.+?), (?:-1|0)\)", plan)
-    assert len(pats) == (plan.count("split(")
-                         + plan.count("regexp_extract_all(")), plan
+    pats = []
+    for m in re.finditer(r"(?:split|regexp_extract_all)\(", plan):
+        args = _call_args(plan, m.end())
+        assert len(args) == 3 and args[2] in ("-1", "0"), (args, plan)
+        pats.append(args[1])
     return Counter(pats)
 
 
@@ -339,6 +357,12 @@ _DOC_FEATURES = {
     # Generate)
     "c4_line_filter": (lambda d: c4_line_filter(d, "doc_id", "text"),
                        "passes_c4", {r"\s+": 1, _LINE: 1}),
+    # a nested first argument, for the parser; a bare projection, so its
+    # filter reads doc_id (one on lines would be inlined into the Filter)
+    "nonempty_lines_nested": (
+        lambda d: d.select("doc_id", TX.nonempty_lines(
+            F.coalesce(F.col("text"), F.lit(""))).alias("lines")),
+        "doc_id > 0", {_LINE: 1}),
 }
 
 

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import pytest
+
 from casf_spark.operators.profile import profile
 
 
@@ -251,6 +253,21 @@ def test_cluster_silhouette_separated_vs_mixed(spark):
     assert sum(r.n_docs for r in got) == 40
     best = max(r.mean_sil for r in got)
     assert best > 0.9, got
+
+
+@pytest.mark.parametrize("null_id", [1, 0])
+def test_cluster_silhouette_refuses_null_vector(spark, null_id):
+    """Rows 0..4 in md5 order 4, 1, 2, 0, 3; at k=2 the centroids are 4
+    and 1. A NULL centroid (1) raises on the driver and any other NULL
+    vector (0) when the distances run; left in, the NULL centroid took
+    all 5 vectors into one cluster with mean_sil 0.0."""
+    from casf_spark.operators.profile import cluster_silhouette
+
+    df = spark.createDataFrame(
+        [(i, None if i == null_id else [float(i), 1.0]) for i in range(5)],
+        "vec_id long, embedding array<double>")
+    with pytest.raises(Exception, match="NULL vector in 'embedding'"):
+        cluster_silhouette(df, "vec_id", "embedding", n_clusters=2).collect()
 
 
 def test_cluster_silhouette_degenerate_raises(spark):
