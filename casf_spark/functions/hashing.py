@@ -42,7 +42,7 @@ def det_centroids(df: DataFrame, id_col: str, vec_col: str,
             .orderBy("ck", "cid").limit(k).drop("ck"))
 
 
-def _lcg_params(n: int, seed: int = 42) -> list[tuple[int, int]]:
+def _lcg_params(n: int, seed: int) -> list[tuple[int, int]]:
     """n fixed (a, b) universal-hash parameter pairs from a tiny LCG —
     deterministic constants, no runtime randomness."""
     state = seed
@@ -56,7 +56,7 @@ def _lcg_params(n: int, seed: int = 42) -> list[tuple[int, int]]:
     return out
 
 
-def minhash_exprs(hash_col: Column, num_hashes: int, seed: int = 42) -> list[Column]:
+def minhash_exprs(hash_col: Column, num_hashes: int, seed: int) -> list[Column]:
     """``num_hashes`` universal-hash remixes of a 60-bit hash column:
     ``(a_i * (H % P) + b_i) % P`` (unaliased — callers alias/aggregate).
     Same formula is emitted verbatim into the DuckDB oracle SQL."""
@@ -67,7 +67,7 @@ def minhash_exprs(hash_col: Column, num_hashes: int, seed: int = 42) -> list[Col
     ]
 
 
-def minhash_sql_exprs(hash_sql: str, num_hashes: int, seed: int = 42) -> list[str]:
+def minhash_sql_exprs(hash_sql: str, num_hashes: int, seed: int) -> list[str]:
     """DuckDB-side twins of :func:`minhash_exprs` (same constants)."""
     return [
         f"(({a} * (({hash_sql}) % {MIX_PRIME}) + {b}) % {MIX_PRIME})"
@@ -76,7 +76,7 @@ def minhash_sql_exprs(hash_sql: str, num_hashes: int, seed: int = 42) -> list[st
 
 
 def position_exprs(hash_col: Column, k: int, modulus: int,
-                   seed: int = 7) -> list[Column]:
+                   seed: int) -> list[Column]:
     """``k`` table positions in ``[0, modulus)`` for a 60-bit hash column
     — the universal-hash remix reduced mod the table size. Shared by the
     Bloom-filter and Count-Min operators (:mod:`..operators.sketches`);
@@ -87,7 +87,7 @@ def position_exprs(hash_col: Column, k: int, modulus: int,
 
 
 def position_sql_exprs(hash_sql: str, k: int, modulus: int,
-                       seed: int = 7) -> list[str]:
+                       seed: int) -> list[str]:
     """DuckDB-side twins of :func:`position_exprs` (same constants)."""
     return [f"({e} % {modulus})"
             for e in minhash_sql_exprs(hash_sql, k, seed=seed)]

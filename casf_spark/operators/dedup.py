@@ -169,18 +169,19 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     return schemas.conform(out, schemas.JACCARD_PAIR)
 
 
-#: MinHash banding that incremental_dedup and the streaming near-dedup
-#: index use: shingle size, signature length, bands, hash seed (the
-#: minhash_lsh_pairs defaults)
+#: default MinHash banding (shingle size, signature length, bands) of
+#: the MinHash operators; incremental_dedup and the streaming near-dedup
+#: index always use it
 MINHASH_N = 2
 MINHASH_HASHES = 12
 MINHASH_BANDS = 4
+#: seed of every MinHash signature's universal-hash remixes
 MINHASH_SEED = 42
 
 
 def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
-                       n: int = 2, num_hashes: int = 12,
-                       seed: int = 42) -> DataFrame:
+                       n: int = MINHASH_N,
+                       num_hashes: int = MINHASH_HASHES) -> DataFrame:
     """Wide MinHash signatures: (doc, mh_0 .. mh_{num_hashes-1}).
 
     One hash-aggregation computes all ``num_hashes`` MINs per document in a
@@ -189,7 +190,7 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
     """
     sh = _shingles(df, id_col, text_col, n, distinct=False)  # MIN is dup-safe
     hashed = sh.select("doc", md5_long("shingle").alias("h"))
-    remixes = minhash_exprs(F.col("h"), num_hashes, seed)
+    remixes = minhash_exprs(F.col("h"), num_hashes, MINHASH_SEED)
     return hashed.groupBy("doc").agg(
         *[F.min(e).alias(f"mh_{i}") for i, e in enumerate(remixes)])
 
@@ -212,8 +213,8 @@ def _check_banding(num_hashes: int, bands: int) -> None:
 
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
-                      n: int = 2, num_hashes: int = 12, bands: int = 4,
-                      seed: int = 42) -> DataFrame:
+                      n: int = MINHASH_N, num_hashes: int = MINHASH_HASHES,
+                      bands: int = MINHASH_BANDS) -> DataFrame:
     """Candidate near-duplicate pairs via MinHash banding.
 
     Signatures split into ``bands`` bands of ``num_hashes // bands`` values;
@@ -222,7 +223,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     — the textbook LSH trade (prob of candidacy = 1-(1-s^r)^b).
     Output: (doc0, doc1) canonical, distinct.
     """
-    banded = _band_buckets(df, id_col, text_col, n, num_hashes, bands, seed)
+    banded = _band_buckets(df, id_col, text_col, n, num_hashes, bands)
     keys = _band_keys(num_hashes, bands)
     a = banded.select(F.col("doc").alias("doc0"), *keys)
     b = banded.select(F.col("doc").alias("doc1"), *keys)
@@ -236,8 +237,9 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
 
 
 def minhash_lsh_star_edges(df: DataFrame, id_col: str, text_col: str,
-                           n: int = 2, num_hashes: int = 12,
-                           bands: int = 4) -> DataFrame:
+                           n: int = MINHASH_N,
+                           num_hashes: int = MINHASH_HASHES,
+                           bands: int = MINHASH_BANDS) -> DataFrame:
     """Star-contracted MinHash candidate edges for clustering: per (band,
     bucket) with >= 2 docs, one edge doc -> min(doc in bucket) instead of
     the bucket's full pairwise clique.
@@ -250,8 +252,7 @@ def minhash_lsh_star_edges(df: DataFrame, id_col: str, text_col: str,
     >=2 bucket == docs in >=1 candidate pair). Output (doc0, doc1),
     doc0 > doc1.
     """
-    banded = _band_buckets(df, id_col, text_col, n, num_hashes, bands,
-                           MINHASH_SEED)
+    banded = _band_buckets(df, id_col, text_col, n, num_hashes, bands)
     keys = _band_keys(num_hashes, bands)
     mins = (banded.groupBy(*keys)
             .agg(F.min("doc").alias("mdoc"),
@@ -443,7 +444,7 @@ def incremental_dedup(new: DataFrame, history: DataFrame,
 
     Same filter-then-reduce contract as ``curation.contamination_flags``.
     Banding is :func:`minhash_lsh_pairs`' default (:data:`MINHASH_N`,
-    :data:`MINHASH_HASHES`, :data:`MINHASH_BANDS`, :data:`MINHASH_SEED`);
+    :data:`MINHASH_HASHES`, :data:`MINHASH_BANDS`);
     exact-dup precedence over near-dup (an exact copy also collides in
     every band).
     """
@@ -453,7 +454,7 @@ def incremental_dedup(new: DataFrame, history: DataFrame,
     hit_fp = (hf.join(F.broadcast(nf.select("fp").distinct()), "fp")
               .select("fp").distinct())
 
-    band = (MINHASH_N, MINHASH_HASHES, MINHASH_BANDS, MINHASH_SEED)
+    band = (MINHASH_N, MINHASH_HASHES, MINHASH_BANDS)
     keys = _band_keys(MINHASH_HASHES, MINHASH_BANDS)
     nb = _band_buckets(new, id_col, text_col, *band)
     hb = _band_buckets(history, id_col, text_col, *band).select(*keys)
@@ -478,8 +479,7 @@ def _band_keys(num_hashes: int, bands: int) -> list[str]:
 
 
 def _band_buckets(df: DataFrame, id_col: str, text_col: str,
-                  n: int, num_hashes: int, bands: int,
-                  seed: int) -> DataFrame:
+                  n: int, num_hashes: int, bands: int) -> DataFrame:
     """(doc, band, k0..k{r-1}) MinHash band buckets — the banding half
     of :func:`minhash_lsh_pairs`, shared with :func:`incremental_dedup`
     and the streaming near-dedup index.
@@ -492,7 +492,7 @@ def _band_buckets(df: DataFrame, id_col: str, text_col: str,
     separator, so string equality was exactly componentwise equality).
     """
     _check_banding(num_hashes, bands)
-    sig = minhash_signatures(df, id_col, text_col, n, num_hashes, seed)
+    sig = minhash_signatures(df, id_col, text_col, n, num_hashes)
     return _band_buckets_from_sig(sig, num_hashes, bands)
 
 
@@ -1518,8 +1518,8 @@ def label_propagation(pairs: DataFrame, seeds: DataFrame,
 
 
 def minhash_pair_weights(df: DataFrame, id_col: str, text_col: str,
-                         n: int = 2, num_hashes: int = 12,
-                         bands: int = 4) -> DataFrame:
+                         n: int = MINHASH_N, num_hashes: int = MINHASH_HASHES,
+                         bands: int = MINHASH_BANDS) -> DataFrame:
     """MinHash candidate pairs WITH an integer similarity weight ->
     (doc0, doc1, w): w = the number of agreeing signature components
     (0..num_hashes; >= num_hashes/bands by construction, since
@@ -1536,8 +1536,7 @@ def minhash_pair_weights(df: DataFrame, id_col: str, text_col: str,
     joins — it previously ran twice (once inside the banding pipeline,
     once for the weights).
     """
-    sig = minhash_signatures(df, id_col, text_col, n, num_hashes,
-                             MINHASH_SEED)
+    sig = minhash_signatures(df, id_col, text_col, n, num_hashes)
     sig = sig.localCheckpoint()  # one signature pass feeds all consumers
     banded = _band_buckets_from_sig(sig, num_hashes, bands)
     keys = _band_keys(num_hashes, bands)
@@ -1579,8 +1578,8 @@ def first_stage_attribution(df: DataFrame, stage_cols: list[str],
 
 
 def minhash_eval_report(df: DataFrame, id_col: str, text_col: str,
-                        n: int = 2, num_hashes: int = 12, bands: int = 4,
-                        threshold: float = 0.5,
+                        n: int = MINHASH_N, num_hashes: int = MINHASH_HASHES,
+                        bands: int = MINHASH_BANDS, threshold: float = 0.5,
                         sample_size: int = 100) -> DataFrame:
     """Measured MinHash-banding quality — recall/precision of the
     candidate generator against EXACT n-gram Jaccard ground truth on a
@@ -1608,8 +1607,7 @@ def minhash_eval_report(df: DataFrame, id_col: str, text_col: str,
                                  threshold=threshold)
              .select("doc0", "doc1", F.lit(1).alias("in_truth")))
     cand = (minhash_lsh_pairs(sample, "doc_id", "text", n=n,
-                              num_hashes=num_hashes, bands=bands,
-                              seed=MINHASH_SEED)
+                              num_hashes=num_hashes, bands=bands)
             .select("doc0", "doc1", F.lit(1).alias("in_cand")))
     j = truth.join(cand, ["doc0", "doc1"], "full")
     agg = j.agg(

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from casf_spark.functions import text as TX
 from casf_spark.functions.hashing import minhash_sql_exprs
+from casf_spark.operators.dedup import MINHASH_SEED
 from casf_spark.operators import urls as URL
 
 STOPWORDS = list(TX.DEFAULT_STOPWORDS)
@@ -158,7 +159,7 @@ def _minhash_cte() -> str:
     """WITH-body fragment ending in a ``mh_cand(doc0, doc1)`` CTE of MinHash
     banding candidate pairs (doc0 > doc1 numerically)."""
     hash_sql = "CAST('0x' || substr(md5(shingle), 1, 15) AS BIGINT)"
-    exprs = minhash_sql_exprs(hash_sql, 12)
+    exprs = minhash_sql_exprs(hash_sql, 12, MINHASH_SEED)
     mins = ",\n         ".join(
         f"MIN({e}) AS mh_{i}" for i, e in enumerate(exprs))
     bands = []

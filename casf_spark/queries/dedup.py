@@ -149,11 +149,12 @@ def _bloom_oracle() -> str:
     packing) from the history side, probes the planted batch with k
     word-table joins, and recomputes exact membership independently."""
     from casf_spark.functions.hashing import position_sql_exprs
+    from casf_spark.operators.sketches import BLOOM_SEED
 
     norm = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
     norm_b = "trim(regexp_replace(lower(b.text), '\\s+', ' ', 'g'))"
     h = f"CAST('0x' || substr(md5({norm}), 1, 15) AS BIGINT)"
-    pos = position_sql_exprs(h, BLOOM_K, BLOOM_M)
+    pos = position_sql_exprs(h, BLOOM_K, BLOOM_M, seed=BLOOM_SEED)
     hpos = "\nUNION ALL\n".join(f"SELECT {p} AS p FROM hist" for p in pos)
     bcols = ",\n         ".join(f"{p} AS p{i}" for i, p in enumerate(pos))
     joins = "\n".join(f"LEFT JOIN words w{i} ON w{i}.w = b.p{i} // 63"
@@ -190,7 +191,7 @@ def _incremental_oracle(batch: str = "src19") -> str:
     but with `source` carried through so the batch/history split can be
     expressed; exact-dup (fingerprint) takes precedence over near-dup."""
     hash_sql = "CAST('0x' || substr(md5(shingle), 1, 15) AS BIGINT)"
-    exprs = minhash_sql_exprs(hash_sql, 12)
+    exprs = minhash_sql_exprs(hash_sql, 12, DD.MINHASH_SEED)
     mins = ",\n         ".join(
         f"MIN({e}) AS mh_{i}" for i, e in enumerate(exprs))
     bands = []
@@ -237,7 +238,7 @@ def _minhash_eval_oracle(threshold: float = 0.5,
     ground truth within it, the same banding candidates over it, and the
     one-row recall/precision rollup with vacuous-1.0 guards."""
     hash_sql = "CAST('0x' || substr(md5(shingle), 1, 15) AS BIGINT)"
-    exprs = minhash_sql_exprs(hash_sql, 12)
+    exprs = minhash_sql_exprs(hash_sql, 12, DD.MINHASH_SEED)
     mins = ",\n         ".join(
         f"MIN({e}) AS mh_{i}" for i, e in enumerate(exprs))
     bands = []

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from casf_spark.functions import text as TX
 from casf_spark.functions.hashing import minhash_sql_exprs
+from casf_spark.operators.dedup import MINHASH_SEED
 from casf_spark.sources.tables import load_table
 from casf_spark.queries._common import BLOOM_K, BLOOM_M, _TOKS
 from casf_spark.queries._registry import query
@@ -22,7 +23,7 @@ def _stream_near_dedup_oracle() -> str:
     no shingles hence no buckets on either engine — only exact dedup can
     drop them, matching _band_buckets' inner-explode semantics."""
     hash_sql = "CAST('0x' || substr(md5(shingle), 1, 15) AS BIGINT)"
-    exprs = minhash_sql_exprs(hash_sql, 12)
+    exprs = minhash_sql_exprs(hash_sql, 12, MINHASH_SEED)
     mins = ",\n         ".join(
         f"MIN({e}) AS mh_{i}" for i, e in enumerate(exprs))
     bands = []
@@ -79,10 +80,11 @@ def _stream_bloom_oracle() -> str:
     from the fingerprint's own md5 prefix (the same bytes Spark's
     md5_long(normalize_text) reads)."""
     from casf_spark.functions.hashing import position_sql_exprs
+    from casf_spark.operators.sketches import BLOOM_SEED
 
     norm = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
     h = "CAST('0x' || substr(fp, 1, 15) AS BIGINT)"
-    pos = position_sql_exprs(h, BLOOM_K, BLOOM_M)
+    pos = position_sql_exprs(h, BLOOM_K, BLOOM_M, seed=BLOOM_SEED)
     hpos = "\nUNION ALL\n".join(f"SELECT {p} AS p FROM k0" for p in pos)
     bcols = ",\n         ".join(f"{p} AS p{i}" for i, p in enumerate(pos))
     joins = "\n".join(f"LEFT JOIN words w{i} ON w{i}.w = b.p{i} // 63"
@@ -118,9 +120,10 @@ def _cms_stream_oracle() -> str:
     equal to the Spark side's merged per-batch sketches by counter-sum
     commutativity (the mergeability property IS the contract)."""
     from casf_spark.functions.hashing import position_sql_exprs
+    from casf_spark.operators.sketches import CMS_SEED
 
     h = "CAST('0x' || substr(md5(item), 1, 15) AS BIGINT)"
-    pos = position_sql_exprs(h, 4, 256, seed=11)
+    pos = position_sql_exprs(h, 4, 256, seed=CMS_SEED)
     cells = "\nUNION ALL\n".join(
         f"SELECT {r} AS row_idx, {p} AS col_idx FROM t"
         for r, p in enumerate(pos))

@@ -28,9 +28,10 @@ def _cms_oracle() -> str:
     (same constants, same md5-derived columns), point-queried for the
     same deterministic top-20."""
     from casf_spark.functions.hashing import position_sql_exprs
+    from casf_spark.operators.sketches import CMS_SEED
 
     h = "CAST('0x' || substr(md5(item), 1, 15) AS BIGINT)"
-    pos = position_sql_exprs(h, CMS_D, CMS_W, seed=11)
+    pos = position_sql_exprs(h, CMS_D, CMS_W, seed=CMS_SEED)
     cells = "\nUNION ALL\n".join(
         f"SELECT {r} AS row_idx, {p} AS col_idx FROM t"
         for r, p in enumerate(pos))

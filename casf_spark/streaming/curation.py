@@ -54,8 +54,8 @@ def near_dedup_replay_batches(batches: list[tuple[int, DataFrame]],
                 .select("fp", F.col("_w.doc").alias("doc"),
                         F.col("_w.text").alias("text")))
         nb = D._band_buckets(keep.select("doc", "text"), "doc", "text",
-                             D.MINHASH_N, D.MINHASH_HASHES, D.MINHASH_BANDS,
-                             D.MINHASH_SEED).localCheckpoint()
+                             D.MINHASH_N, D.MINHASH_HASHES,
+                             D.MINHASH_BANDS).localCheckpoint()
         drop = None
         if index is not None:
             hit = (index.join(
